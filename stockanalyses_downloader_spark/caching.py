@@ -37,15 +37,13 @@ many models outside the harness should wrap each fit in
 distinct input plan.
 
 Not tracked here: ``localCheckpoint`` frames (graph.py's iterative
-connected components, kmeans' per-iteration barrier). Those HOLD the
-result data (checkpoint truncates lineage — unpersisting one before
-the caller consumes it would lose the frame), so their lifetime is
-correctly tied to the result DataFrame's lifetime: Spark's
-ContextCleaner frees the blocks when the frame is garbage-collected.
-The superseded per-iteration checkpoints inside those loops are
-already freed eagerly by the loop itself where safe (the in-plan
-kmeans fallback's per-round ``cent.unpersist()`` of its own superseded
-centroid frame — never the shared input projection; see above).
+connected components, both variants). Those HOLD the result data
+(checkpoint truncates lineage — unpersisting one before the caller
+consumes it would lose the frame), so their lifetime is correctly
+tied to the result DataFrame's lifetime: Spark's ContextCleaner frees
+the blocks when the frame is garbage-collected. k-means needs neither:
+its Lloyd rounds carry the k×d centroids as driver rows, so no
+per-round frame is persisted or checkpointed.
 """
 
 from __future__ import annotations

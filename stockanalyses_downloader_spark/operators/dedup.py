@@ -289,34 +289,20 @@ def _with_toks(docs: DataFrame, text_col: str) -> DataFrame:
     return docs.withColumn("__toks", _norm_toks(F.col(text_col)))
 
 
-def with_shingles(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
-    return (_with_toks(docs, text_col)
-            .withColumn("shingles", _shingles_from_toks(F.col("__toks"), n))
-            .drop("__toks"))
-
-
 def md5_h31(col):
     """Portable 31-bit hash: first 8 hex chars of md5 as a long,
     shifted to 31 bits — the cm_bucket/pyds scheme, reproducible in
     DuckDB as CAST('0x'||substring(md5(x),1,8) AS BIGINT) >> 1. The
-    engine-portable twin of the xxhash64 base hash, used wherever a
-    hash value must survive a cross-engine value-hash compare."""
+    MinHash tier's only hash family (signatures and verify sets), so
+    every value it produces survives a cross-engine value-hash
+    compare."""
     return F.shiftrightunsigned(
         F.conv(F.substring(F.md5(col.cast("binary")), 1, 8), 16, 10)
         .cast("long"), 1)
 
 
-def with_hashed_shingles(docs: DataFrame, text_col: str = "text",
-                         n: int = 3, portable: bool = False) -> DataFrame:
-    """Shingle set as distinct int64 hashes: set operations on 8-byte
-    ints instead of ~20-byte strings (the Jaccard hot path is dominated
-    by string hashing/compares). A pairwise Jaccard computed on hashes
-    equals the string-set Jaccard unless xxhash64 collides within one
-    pair's union (~n²/2^65 per pair — negligible). ``portable=True``
-    swaps in the 31-bit md5-prefix family (collision odds ~n²/2^32 per
-    pair — still negligible at shingle-set sizes) so the resulting
-    Jaccard is DuckDB-recomputable bit for bit."""
-    hasher = md5_h31 if portable else F.xxhash64
+def _hash_shingles(docs: DataFrame, text_col: str, n: int,
+                   hasher) -> DataFrame:
     return (_with_toks(docs, text_col)
             .withColumn(
                 "shingles",
@@ -324,6 +310,26 @@ def with_hashed_shingles(docs: DataFrame, text_col: str = "text",
                     _shingles_from_toks(F.col("__toks"), n),
                     lambda s: hasher(s))))
             .drop("__toks"))
+
+
+def with_hashed_shingles(docs: DataFrame, text_col: str = "text",
+                         n: int = 3) -> DataFrame:
+    """Shingle set as distinct xxhash64 values: set operations on
+    8-byte ints instead of ~20-byte strings (the Jaccard hot path is
+    dominated by string hashing/compares). A pairwise Jaccard computed
+    on hashes equals the string-set Jaccard unless xxhash64 collides
+    within one pair's union (~n²/2^65 per pair — negligible). The
+    exact-Jaccard family (ngram_jaccard_pairs, the prefix-filter
+    join)."""
+    return _hash_shingles(docs, text_col, n, F.xxhash64)
+
+
+def _md5_shingles(docs: DataFrame, text_col: str, n: int) -> DataFrame:
+    """The MinHash verify's shingle sets, on the md5_h31 family
+    (collision odds ~n²/2^32 per pair — negligible at shingle-set
+    sizes) so the verified Jaccard is DuckDB-recomputable bit for
+    bit."""
+    return _hash_shingles(docs, text_col, n, md5_h31)
 
 
 def exact_dedup(df: DataFrame, keys: list[str]) -> DataFrame:
@@ -334,15 +340,15 @@ def exact_dedup(df: DataFrame, keys: list[str]) -> DataFrame:
 def ngram_jaccard_pairs(docs: DataFrame, block_cols: list[str],
                         n: int = 3, threshold: float = 0.5,
                         id_col: str = "doc_id",
-                        hashed: bool = False,
                         max_block_size: int | None = None) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs within blocks.
 
     Self-join on the blocking key (id < id kills mirror pairs), then
     set intersection/union sizes. The block join is the only shuffle;
-    block sizes bound the quadratic term. ``hashed=True`` runs the set
-    math on int64 shingle hashes — same result modulo a ~2^-65
-    per-pair collision chance, several times faster.
+    block sizes bound the quadratic term. The set math runs on
+    xxhash64 shingle hashes (with_hashed_shingles) — the string-set
+    result modulo a ~2^-65 per-pair collision chance, several times
+    faster.
 
     Two guards against the quadratic term:
 
@@ -357,14 +363,14 @@ def ngram_jaccard_pairs(docs: DataFrame, block_cols: list[str],
       instead of O(block^2). This is the 100 TB switch: one hot
       (lang, source) block of 10^9 docs must never hit the self-join.
       Pairs from routed blocks carry LSH's estimate-verified exact
-      jaccard (same verify expression) and form WITHIN blocks only
-      (the block key rides in the band bucket — r10), so downstream
-      semantics match the exact path modulo LSH recall. Setting it
+      jaccard (same verify expression, over md5_h31 shingle sets)
+      and form WITHIN blocks only (the block key rides in the band
+      bucket — r10), so downstream semantics match the exact path
+      modulo LSH recall and hash collisions. Setting it
       makes construction EAGER by one deliberate metadata-plane job
       (a column-pruned block-count aggregate deciding the routing);
       when no block is hot the LSH subtree isn't even planned.
     """
-    make = with_hashed_shingles if hashed else with_shingles
     base = spread(docs)
     lsh = None
     if max_block_size is not None:
@@ -406,7 +412,8 @@ def ngram_jaccard_pairs(docs: DataFrame, block_cols: list[str],
         lsh = lsh.join(docs.select(F.col(id_col).alias("id_a"), *block_cols),
                        "id_a")
         lsh = lsh.select(*block_cols, "id_a", "id_b", "jaccard")
-    s = make(base, "text", n).select(id_col, *block_cols, "shingles")
+    s = with_hashed_shingles(base, "text", n).select(
+        id_col, *block_cols, "shingles")
     pre = s.withColumn("__nsh", F.size("shingles"))
     a = pre.select(*block_cols, F.col(id_col).alias("id_a"),
                    F.col("shingles").alias("sh_a"),
@@ -430,36 +437,28 @@ def ngram_jaccard_pairs(docs: DataFrame, block_cols: list[str],
 
 def minhash_signatures(docs: DataFrame, n_hashes: int = 64,
                        id_col: str = "doc_id", text_col: str = "text",
-                       n: int = 3, portable: bool = False) -> DataFrame:
+                       n: int = 3) -> DataFrame:
     """MinHash signature per doc: explode the shingle stream to
-    (doc_id, 31-bit base hash) rows, then reduce with one hash
+    (doc_id, md5_h31 base hash) rows, then reduce with one hash
     aggregate computing all ``n_hashes`` permutation minimums as
-    separate codegen'd ``min()`` columns.
+    separate codegen'd ``min()`` columns. The md5-prefix base hash
+    makes the signature values themselves — and every stage above
+    them — DuckDB-recomputable (the minhash_near_dups oracle).
 
     Why explode+agg and not a higher-order fold over the shingle
     array: F.aggregate/zip_with evaluate interpreted, outside
     whole-stage codegen — the fold variant measured ~4s at sf0.1 where
     this shape runs in well under 1s. Map-side partial aggregation
     means the shuffle carries one n_hashes-wide row per doc per map
-    partition, so at 100 TB the explode never hits the wire. Output is
-    bit-identical to the fold (min is duplicate-insensitive; same
-    universal-hash family) — pinned by the vectorized-parity test.
+    partition, so at 100 TB the explode never hits the wire.
 
-    Docs too short to shingle produce no exploded rows and drop out,
-    same contract as before.
-
-    ``portable=True`` swaps the 31-bit base hash to the md5-prefix
-    family (md5_h31) so the signature values themselves — and every
-    stage above them — are DuckDB-recomputable (the minhash_near_dups
-    oracle)."""
+    Docs too short to shingle produce no exploded rows and drop out."""
     params = _mh_params(n_hashes)
-    base = (md5_h31(F.col("gram")) if portable
-            else F.shiftrightunsigned(F.xxhash64("gram"), 33))
     ex = (_with_toks(spread(docs), text_col)
           .select(id_col,
                   F.explode(_shingles_from_toks(F.col("__toks"), n))
                   .alias("gram"))
-          .select(id_col, base.alias("h31")))
+          .select(id_col, md5_h31(F.col("gram")).alias("h31")))
     mins = [F.min((F.col("h31") * F.lit(a) + F.lit(b)) % F.lit(_MH_PRIME))
              .alias(f"__m{j}")
             for j, (a, b) in enumerate(params)]
@@ -469,52 +468,9 @@ def minhash_signatures(docs: DataFrame, n_hashes: int = 64,
                      .alias("signature")))
 
 
-def minhash_signatures_vectorized(docs: DataFrame, n_hashes: int = 64,
-                                  id_col: str = "doc_id") -> DataFrame:
-    """Arrow-vectorized signature build: same universal-hash family and
-    bit-identical output as :func:`minhash_signatures` (asserted in
-    tests), computed in numpy via mapInPandas.
-
-    Why it exists: Spark's higher-order array functions (aggregate/
-    transform/zip_with) evaluate interpreted, outside whole-stage
-    codegen, so numpy CAN beat them — but only when the per-row work
-    amortizes the Arrow transfer. Measured on the fixture (~50 shingles
-    x 64 perms/doc) the JVM fold wins (1.1 s vs 2.1 s at sf0.1); for
-    book-length documents the balance flips. The JVM fold stays the
-    default (zero-Python plans); this is the measured alternative, kept
-    because the comparison itself is the lesson."""
-    import numpy as np
-    import pandas as pd
-
-    params = _mh_params(n_hashes)
-    a = np.array([p[0] for p in params], dtype=np.int64)
-    b = np.array([p[1] for p in params], dtype=np.int64)
-    shingleable = F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+")) >= 3
-    hashed = with_hashed_shingles(spread(docs).filter(shingleable))
-    base = hashed.select(
-        id_col,
-        F.transform("shingles", lambda h: F.shiftrightunsigned(h, 33))
-         .alias("base31"))
-
-    def _sign(batches):
-        for pdf in batches:
-            sigs = []
-            for arr in pdf["base31"]:
-                h = np.asarray(arr, dtype=np.int64)
-                # (n_shingles x n_hashes); products < 2^62, exact int64
-                sigs.append(((h[:, None] * a[None, :] + b[None, :])
-                             % _MH_PRIME).min(axis=0))
-            yield pd.DataFrame({id_col: pdf[id_col],
-                                "signature": [s.tolist() for s in sigs]})
-
-    out_schema = f"{id_col} long, signature array<long>"
-    return base.mapInPandas(_sign, out_schema)
-
-
 def minhash_lsh_pairs(docs: DataFrame, n_hashes: int = 64, bands: int = 16,
                       threshold: float = 0.5, id_col: str = "doc_id",
                       text_col: str = "text", n: int = 3,
-                      portable: bool = False,
                       bucket_cols: tuple[str, ...] = ()) -> DataFrame:
     """X2: banded-LSH candidate generation + exact Jaccard verification.
 
@@ -522,12 +478,11 @@ def minhash_lsh_pairs(docs: DataFrame, n_hashes: int = 64, bands: int = 16,
     hash collides. Explode bands (16 rows/doc), groupBy-join on
     (band_id, band_hash), verify candidates exactly.
 
-    ``portable=True`` makes every stage DuckDB-recomputable: md5-based
-    signature values, the RAW comma-joined band string as the bucket
-    key (identical collisions by construction — no hash at all), and
-    the md5-31-bit shingle family for the exact verify. The bucket key
-    widens from 8 bytes to ~4 numbers' text, a bounded constant per
-    signature row.
+    Every stage is DuckDB-recomputable: md5-based signature values,
+    the RAW comma-joined band string as the bucket key (identical
+    collisions by construction — no hash at all; ~4 numbers' text, a
+    bounded constant per signature row), and the md5-31-bit shingle
+    family for the exact verify.
 
     ``bucket_cols`` (r10): extra doc columns appended to the band
     bucket key, so candidates only form WITHIN equal values — the
@@ -553,8 +508,7 @@ def minhash_lsh_pairs(docs: DataFrame, n_hashes: int = 64, bands: int = 16,
     # pair expansion saves one exchange but runs 1.4x SLOWER at sf0.1 —
     # the in-bucket combination expansion is interpreted higher-order
     # code, while the self-join stays in codegen. Join wins.)
-    banded = _banded_signatures(
-        docs, n_hashes, bands, id_col, text_col, n, portable)
+    banded = _banded_signatures(docs, n_hashes, bands, id_col, text_col, n)
     if bucket_cols:
         banded = banded.join(docs.select(id_col, *bucket_cols), id_col)
     key = ["band_id", "band_hash", *bucket_cols]
@@ -577,8 +531,8 @@ def minhash_lsh_pairs(docs: DataFrame, n_hashes: int = 64, bands: int = 16,
     cand_ids = (cand.select(F.col("id_a").alias(id_col))
                 .union(cand.select(F.col("id_b").alias(id_col))).distinct())
     involved = docs.join(cand_ids, id_col, "left_semi")
-    sh = with_hashed_shingles(spread(involved), text_col, n,
-                              portable=portable).select(id_col, "shingles")
+    sh = _md5_shingles(spread(involved), text_col, n).select(
+        id_col, "shingles")
     cand = (cand
             .join(sh.select(F.col(id_col).alias("id_a"),
                             F.col("shingles").alias("sh_a")), "id_a")
@@ -604,20 +558,18 @@ def minhash_lsh_pairs(docs: DataFrame, n_hashes: int = 64, bands: int = 16,
 # tier; this is its near-dup sibling.
 
 def _banded_signatures(docs: DataFrame, n_hashes: int, bands: int,
-                       id_col: str, text_col: str, n: int,
-                       portable: bool) -> DataFrame:
+                       id_col: str, text_col: str, n: int) -> DataFrame:
     """(id, band_id, band_hash) — the banding stage of
     minhash_lsh_pairs, factored so the at-rest index and the one-shot
-    join share it verbatim (the parity pin depends on that)."""
+    join share it verbatim (the parity pin depends on that). The band
+    key is the raw comma-joined signature slice."""
     r = n_hashes // bands
-    sigs = minhash_signatures(docs, n_hashes, id_col, text_col, n,
-                              portable=portable)
+    sigs = minhash_signatures(docs, n_hashes, id_col, text_col, n)
 
     def band_key(b):
-        joined = F.concat_ws(
+        return F.concat_ws(
             ",", F.transform(F.slice("signature", b * r + 1, r),
                              lambda v: v.cast("string")))
-        return joined if portable else F.xxhash64(joined)
 
     banded = sigs.select(
         id_col,
@@ -629,25 +581,45 @@ def _banded_signatures(docs: DataFrame, n_hashes: int, bands: int,
     return banded.select(id_col, "band.band_id", "band.band_hash")
 
 
+_MH_FAMILY = "md5_h31"
+
+
+def _minhash_index_meta(spark, path: str) -> dict:
+    """The stored geometry, refusing an index built on another hash
+    family: its bands and shingle sets could never collide with or
+    verify against this tier's values, so mixing them would silently
+    return no pairs. Indexes written before the family column existed
+    record ``portable`` instead (true = md5_h31, false = xxhash64)."""
+    meta = spark.read.parquet(f"{path}/meta").collect()[0].asDict()
+    family = meta.get("hash_family") or (
+        _MH_FAMILY if meta.get("portable") else "xxhash64")
+    if family != _MH_FAMILY:
+        raise ValueError(
+            f"MinHash index at {path} uses hash family {family!r}; "
+            f"this engine reads only {_MH_FAMILY!r} — rebuild it with "
+            "save_minhash_index")
+    return meta
+
+
 def save_minhash_index(docs: DataFrame, path: str, n_hashes: int = 64,
                        bands: int = 16, id_col: str = "doc_id",
-                       text_col: str = "text", n: int = 3,
-                       portable: bool = False) -> None:
+                       text_col: str = "text", n: int = 3) -> None:
     """Materialize the near-dup index AT REST: ``{path}/bands``
-    (id, band_id, band_hash), ``{path}/shingles`` (id, hashed shingle
-    set — what the exact-Jaccard verify needs, so probe never touches
-    corpus TEXT), and ``{path}/meta`` (the geometry — probes read it,
-    so a caller cannot silently mismatch hash family or banding)."""
+    (id, band_id, band_hash), ``{path}/shingles`` (id, md5_h31
+    shingle set — what the exact-Jaccard verify needs, so probe never
+    touches corpus TEXT), and ``{path}/meta`` (geometry and hash
+    family — appends and probes read it, so a caller cannot silently
+    mismatch hash family or banding)."""
     spark = docs.sparkSession
-    _banded_signatures(docs, n_hashes, bands, id_col, text_col, n,
-                       portable) \
+    _banded_signatures(docs, n_hashes, bands, id_col, text_col, n) \
         .write.mode("overwrite").parquet(f"{path}/bands")
-    with_hashed_shingles(docs, text_col, n, portable=portable) \
+    _md5_shingles(docs, text_col, n) \
         .select(id_col, "shingles") \
         .write.mode("overwrite").parquet(f"{path}/shingles")
     (spark.createDataFrame(
-        [(n_hashes, bands, n, portable, id_col)],
-        "n_hashes int, bands int, n int, portable boolean, id_col string")
+        [(n_hashes, bands, n, _MH_FAMILY, id_col)],
+        "n_hashes int, bands int, n int, hash_family string, "
+        "id_col string")
      .coalesce(1).write.mode("overwrite").parquet(f"{path}/meta"))
 
 
@@ -657,13 +629,11 @@ def append_to_minhash_index(spark, path: str, new_docs: DataFrame,
     STORED geometry and append — today's ingest becomes probe-visible
     without touching the existing index files. Caller owns id
     uniqueness across appends (same contract as append_to_ivf_index)."""
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
+    meta = _minhash_index_meta(spark, path)
     _banded_signatures(new_docs, meta["n_hashes"], meta["bands"],
-                       meta["id_col"], text_col, meta["n"],
-                       meta["portable"]) \
+                       meta["id_col"], text_col, meta["n"]) \
         .write.mode("append").parquet(f"{path}/bands")
-    with_hashed_shingles(new_docs, text_col, meta["n"],
-                         portable=meta["portable"]) \
+    _md5_shingles(new_docs, text_col, meta["n"]) \
         .select(meta["id_col"], "shingles") \
         .write.mode("append").parquet(f"{path}/shingles")
 
@@ -684,11 +654,11 @@ def probe_minhash_index(spark, path: str, new_docs: DataFrame,
     with a stored id, the DELTA's shingles win deterministically
     (the re-ingested text is treated as the current version); the
     self-pair is excluded as always."""
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
+    meta = _minhash_index_meta(spark, path)
     id_col = meta["id_col"]
     new_banded = tracked_persist(_banded_signatures(
         new_docs, meta["n_hashes"], meta["bands"], id_col, text_col,
-        meta["n"], meta["portable"]))
+        meta["n"]))
     stored = spark.read.parquet(f"{path}/bands")
     nb = new_banded.select(F.col(id_col).alias("new_id"),
                            "band_id", "band_hash")
@@ -707,8 +677,7 @@ def probe_minhash_index(spark, path: str, new_docs: DataFrame,
     cand_ids = (cand.select(F.col("id_a").alias(id_col))
                 .union(cand.select(F.col("id_b").alias(id_col)))
                 .distinct())
-    new_sh = with_hashed_shingles(new_docs, text_col, meta["n"],
-                                  portable=meta["portable"]) \
+    new_sh = _md5_shingles(new_docs, text_col, meta["n"]) \
         .select(id_col, "shingles")
     old_sh = spark.read.parquet(f"{path}/shingles")
     # delta shingles take precedence on id collision (deterministic;
@@ -731,30 +700,24 @@ def probe_minhash_index(spark, path: str, new_docs: DataFrame,
 
 
 def simhash64(docs: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text", portable: bool = False) -> DataFrame:
+              text_col: str = "text") -> DataFrame:
     """64-bit SimHash per doc: sign-sum of token-hash bits. Explode +
     two-level aggregate keeps it a plain shuffle on doc_id.
 
-    ``portable=True`` draws the 64 bits from the two 32-bit md5-prefix
-    halves (hi = hex chars 1-8, lo = 9-16) instead of xxhash64 — the
-    same engine-portable family as cm_bucket, so the fingerprints
-    (and everything derived from them) are DuckDB-recomputable."""
+    The 64 bits come from the two 32-bit md5-prefix halves (hi = hex
+    chars 1-8, lo = 9-16) — the same engine-portable family as
+    cm_bucket, so the fingerprints (and everything derived from them)
+    are DuckDB-recomputable."""
     toks = spread(docs).select(
         id_col, F.explode(F.split(F.lower(F.trim(F.col(text_col))),
                                   r"\s+")).alias("tok"))
-    if portable:
-        md = F.md5(F.col("tok").cast("binary"))
-        hi = F.conv(F.substring(md, 1, 8), 16, 10).cast("long")
-        lo = F.conv(F.substring(md, 9, 8), 16, 10).cast("long")
+    md = F.md5(F.col("tok").cast("binary"))
+    hi = F.conv(F.substring(md, 1, 8), 16, 10).cast("long")
+    lo = F.conv(F.substring(md, 9, 8), 16, 10).cast("long")
 
-        def bit(i):
-            return (F.shiftrightunsigned(lo, i) % 2 if i < 32
-                    else F.shiftrightunsigned(hi, i - 32) % 2)
-    else:
-        h = F.xxhash64("tok")
-
-        def bit(i):
-            return F.shiftrightunsigned(h, i) % 2
+    def bit(i):
+        return (F.shiftrightunsigned(lo, i) % 2 if i < 32
+                else F.shiftrightunsigned(hi, i - 32) % 2)
     bit_votes = [F.sum(bit(i) * 2 - 1).alias(f"b{i}") for i in range(64)]
     votes = toks.groupBy(id_col).agg(*bit_votes)
     sim = F.lit(0).cast("long")
@@ -767,8 +730,7 @@ def simhash64(docs: DataFrame, id_col: str = "doc_id",
 
 def simhash_near_pairs(docs: DataFrame, max_hamming: int = 8,
                        id_col: str = "doc_id",
-                       max_bucket_size: int | None = None,
-                       portable: bool = False) -> DataFrame:
+                       max_bucket_size: int | None = None) -> DataFrame:
     """SimHash near-dup pairs: band the 64 bits into ``max_hamming+1``
     near-equal chunks, bucket-join on any shared chunk, verify exact
     hamming via bit_count.
@@ -810,7 +772,7 @@ def simhash_near_pairs(docs: DataFrame, max_hamming: int = 8,
     # membership feeds the candidate stage (distinct) and the two
     # expansion joins; signature-width persist, same rationale as the
     # minhash banding persist above.
-    sh = tracked_persist(simhash64(docs, id_col, portable=portable))
+    sh = tracked_persist(simhash64(docs, id_col))
     fps = sh.select("simhash").distinct()
     chunks = fps.select(
         "simhash",
@@ -901,7 +863,7 @@ def jaccard_pairs_prefix_filter(docs: DataFrame, n: int = 3,
     # across the exchange boundary). Shingles are empty exactly when
     # the normalized text has < n words (word_shingles' CASE guard),
     # so filter on that — one cheap split per row wherever Catalyst
-    # pushes it. Same idiom as minhash_signatures_np's `shingleable`.
+    # pushes it.
     has_grams = (F.size(F.split(F.lower(F.trim(F.col(text_col))),
                                 r"\s+")) >= n)
     s = (with_hashed_shingles(spread(docs).filter(has_grams), text_col, n)

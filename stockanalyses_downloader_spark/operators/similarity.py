@@ -171,259 +171,123 @@ def hard_negative_topk_ivf(embeddings: DataFrame, anchor_ids: list[int],
                   .filter(F.col("rank") <= k))
 
 
-def farthest_point_rows(e: DataFrame, k: int,
-                        id_col: str = "vec_id") -> list:
-    """Deterministic farthest-point init: seed with the md5-draw
-    minimum, then greedily add the vector whose MAXIMUM cosine
-    similarity to the already-chosen set is smallest (ties by id).
-    Every step is exact arithmetic — sequential-fold dots, IEEE
-    division, argmin with an id tiebreak — so a DuckDB oracle could
-    replay the selection bit-for-bit.
-
-    MEASURED NEGATIVE RESULT (r9, VERDICT r8 #2's first candidate):
-    on the sf0.001 fixture this init trains to trained-IVF recall@10
-    0.72-0.74 — WORSE than the plain md5 draw's 0.76 — because pure
-    farthest-point seeds on outliers, which 3 Lloyd rounds cannot
-    repair (the same reason kmeans++ randomizes D²-weighted instead
-    of taking the argmax). Kept as an available ``init`` mode with
-    this caveat; the fix that measured best is restart selection
-    (kmeans_centroids_best_of below — the scikit-learn n_init rule),
-    which the portable PQ tier uses.
-
-    Scale shape: k-1 rounds, each ONE corpus scan (the chosen set is
-    embedded as literal vectors — no join, no shuffle) reduced by a
-    1-row TakeOrdered; the rounds' results are model-sized driver
-    rows (the whitelisted collect class). ``e`` must carry (id_col,
-    v, norm); returns the k chosen Rows in selection order."""
-    from .sampling import hash_key
-    first = (e.orderBy(hash_key(F.col(id_col)), F.col(id_col))
-             .select(id_col, "v", "norm").first())
-    chosen = [first]
-    for _ in range(1, k):
-        sims = [dot(F.col("v"), F.lit([float(x) for x in r["v"]]))
-                / (F.col("norm") * F.lit(float(r["norm"])))
-                for r in chosen]
-        mx = F.greatest(*sims) if len(sims) > 1 else sims[0]
-        nxt = (e.filter(~F.col(id_col).isin([r[id_col] for r in chosen]))
-               .select(id_col, "v", "norm", mx.alias("__mx"))
-               .orderBy(F.col("__mx").asc(), F.col(id_col))
-               .limit(1).select(id_col, "v", "norm").first())
-        if nxt is None:      # corpus smaller than k: stop early
-            break
-        chosen.append(nxt)
-    return chosen
-
-
-def _farthest_point_centroids(e: DataFrame, k: int,
-                              id_col: str = "vec_id") -> DataFrame:
-    """farthest_point_rows as a (centroid_id, cv, cnorm) frame —
-    centroid_id is the SELECTION order (the oracle numbers them the
-    same way)."""
-    rows = farthest_point_rows(e, k, id_col)
-    return e.sparkSession.createDataFrame(
-        [(i, [float(x) for x in r["v"]], float(r["norm"]))
-         for i, r in enumerate(rows)],
-        "centroid_id int, cv array<double>, cnorm double")
-
-
 def kmeans_centroids(embeddings: DataFrame, k: int = 16, n_iter: int = 4,
                      id_col: str = "vec_id",
                      vec_col: str = "embedding",
                      portable: bool = False,
-                     init: str = "sample",
                      init_salt: str = "") -> DataFrame:
     """Lloyd's k-means, DataFrame-native: cosine assignment against
     broadcast centroids (one scan per iteration), centroid update as
     an element-wise mean via posexplode + DECIMAL accumulation
     (partitioning-independent, same trick as label_centroid_components)
-    — the trained upgrade of ivf_topk's sampled centroids.
-
-    Iterative-algorithm structure mirrors graph.connected_components:
-    per-iteration persist + materialize cuts the lineage so plans
-    don't stack. Empty clusters keep their previous centroid.
+    — the trained upgrade of ivf_topk's sampled centroids. Empty
+    clusters keep their previous centroid.
     Returns (centroid_id, cv array<double>, cnorm).
 
-    ``init="sample"`` (default) seeds from a hash-ordered TakeOrdered
-    draw (``init_salt`` varies the draw — the restart lever);
-    ``init="farthest"`` runs the deterministic farthest-point
-    selection — see farthest_point_rows' measured caveat (it seeds on
-    outliers and measured WORSE than the draw; prefer
-    kmeans_centroids_best_of for draw-proofing). Both are exact
-    arithmetic in portable mode, so both oracle."""
-    if init not in ("sample", "farthest"):
-        raise ValueError(f"init must be sample|farthest, got {init!r}")
-    if init == "farthest" and init_salt:
-        # loud, not silent (ADVICE r9): the farthest-point selection is
-        # deterministic — it has no draw to salt, so best-of-N restarts
-        # composed over it would train N identical models and the
-        # caller's restart diversity would be an illusion.
-        raise ValueError(
-            "init='farthest' is deterministic and ignores init_salt; "
-            "use init='sample' for salted restarts "
-            "(kmeans_centroids_best_of)")
+    Init seeds from a hash-ordered TakeOrdered draw (``init_salt``
+    varies the draw — the restart lever of kmeans_centroids_best_of).
+    Every step is exact arithmetic in portable mode, so a DuckDB
+    oracle replays the whole fit."""
     spark = embeddings.sparkSession
     e = embeddings.select(id_col, as_double(F.col(vec_col)).alias("v"))
     e = tracked_persist(e.withColumn("norm", l2_norm(F.col("v"))))
     schema = "centroid_id int, cv array<double>, cnorm double"
-    if init == "farthest":
-        cent_rows = [(i, [float(x) for x in r["v"]], float(r["norm"]))
-                     for i, r in enumerate(farthest_point_rows(e, k,
-                                                              id_col))]
+    # init selection is a distributed TakeOrdered (orderBy+limit)
+    # collected as k model-sized driver rows (the whitelisted collect
+    # class); centroid ids are the collect order, i.e. the (hash, id)
+    # ordering. portable=True draws the ordering from the md5-prefix
+    # family so a DuckDB oracle can replay the whole training loop
+    # (every later step — assignment argmax, DECIMAL-exact means — is
+    # already engine-portable); xxhash64 stays the production default.
+    if portable:
+        from .sampling import hash_key
+        order_expr = hash_key(F.col(id_col), init_salt)
+    elif init_salt:
+        order_expr = F.xxhash64(F.lit(init_salt), F.col(id_col))
     else:
-        # init selection is a distributed TakeOrdered (orderBy+limit)
-        # collected as k model-sized driver rows (the whitelisted
-        # collect class — same as _farthest_point_centroids); ids are
-        # the collect order, which IS the (hash, id) ordering the old
-        # k-row row_number window assigned. portable=True draws the
-        # ordering from the md5-prefix family so a DuckDB oracle can
-        # replay the whole training loop (every later step —
-        # assignment argmax, DECIMAL-exact means — is already
-        # engine-portable); xxhash64 stays the production default.
-        if portable:
-            from .sampling import hash_key
-            order_expr = hash_key(F.col(id_col), init_salt)
-        elif init_salt:
-            order_expr = F.xxhash64(F.lit(init_salt), F.col(id_col))
-        else:
-            order_expr = F.xxhash64(F.col(id_col))
-        cent_rows = [(i, [float(x) for x in r["v"]], float(r["norm"]))
-                     for i, r in enumerate(
-                         e.orderBy(order_expr, F.col(id_col)).limit(k)
-                          .select("v", "norm").collect())]
-    d = len(cent_rows[0][1]) if cent_rows else 0
-    # r13 optimization round: the Lloyd loop runs through MODEL-SIZED
-    # driver rows (k×d floats — the same whitelisted collect class as
-    # farthest-point init) instead of per-round persisted frames. Each
-    # round is then ONE job — a k-group wide aggregate collapsing the
-    # old posexplode + (centroid, pos) shuffle + collect_list shuffle +
-    # keep-previous broadcast join + persist/count barrier — and every
-    # consumer's plan sees a flat literal centroid table instead of a
-    # 3-deep InMemoryRelation stack (the warm trained-IVF plan rendered
-    # 10k lines / 616 Exchange occurrences before). The keep-previous
-    # rule for empty clusters becomes a dict default. Arithmetic is
-    # unchanged: same per-element DECIMAL(30,15) sums (exact, so
-    # regrouping by centroid instead of (centroid, pos) cannot change
-    # them), same double division by the cluster count, same l2_norm
-    # fold — the oracle hash certifies identity. Guarded by a k×d
-    # bound: past ~2^20 model floats (×n_iter round trips) the old
-    # in-plan merge is the scale-correct shape, so huge-k callers keep
-    # it (`_kmeans_centroids_inplan`).
-    if d and k * d <= (1 << 20):
-        import math
-        carr_schema = ("__cents array<struct<centroid_id:int,"
-                       "cv:array<double>,cnorm:double>>")
-        for _ in range(n_iter):
-            # assignment against the same broadcast __cents array
-            # nearest_centroid builds — but the one-row frame is
-            # assembled driver-side as a LocalRelation, so the
-            # broadcast build is a driver-local executeCollect with no
-            # aggregate job per round (the per-row argmax fold is the
-            # broadcast-column shape that measured fastest; an inline
-            # literal-array expression measured 2-5x WORSE and wildly
-            # dispersed)
-            carr_df = spark.createDataFrame(
-                [([tuple(r) for r in cent_rows],)], carr_schema)
-            best = F.array_max(F.transform(
-                F.col("__cents"),
-                lambda c: F.struct(
-                    (dot(F.col("v"), c["cv"])
-                     / (F.col("norm") * c["cnorm"])).alias("csim"),
-                    (-c["centroid_id"]).alias("negid"))))
-            assigned = (e.crossJoin(F.broadcast(carr_df))
-                        .select("v", (-best["negid"]).cast("int")
-                                .alias("centroid_id")))
-            # same exact per-(centroid, pos) DECIMAL means as the
-            # in-plan loop; the k×d mean rows are model-sized, so the
-            # array assembly and the l2 norm fold move to the driver
-            # (Python float ops are the same IEEE doubles evaluated in
-            # the same left-to-right order as the old in-plan
-            # F.aggregate fold — bit-identical, oracle-pinned)
-            #
-            # MEASURED NEGATIVE (r14, VERDICT r13 #3's "collapse the
-            # posexplode means into one wide aggregate" experiment):
-            # a k-group aggregate with d sum/count column pairs (d=64
-            # ⇒ 128 agg expressions) REGRESSED the cell 3.56 → 6.78 s
-            # — per-round plan analysis + codegen compilation of the
-            # wide aggregate (~1 s/round, isolated A/B: 0.43 s
-            # posexplode vs 0.96-1.26 s wide on the same assignment
-            # frame) swamps the explode's row blowup at any
-            # model-sized k·d, and the blowup's map-side agg already
-            # keeps the shuffle at k·d rows per partition. The
-            # explode shape stays.
-            pe = assigned.select(
-                "centroid_id", F.posexplode("v").alias("pos", "x"))
-            means = (pe.groupBy("centroid_id", "pos")
-                     .agg((F.sum(F.col("x").cast("decimal(30,15)"))
-                           .cast("double") / F.count("*")).alias("c")))
-            got: dict[int, list] = {}
-            for r in means.collect():
-                got.setdefault(r["centroid_id"], []).append(
-                    (r["pos"], r["c"]))
-            new_rows = []
-            for cid, cv, cn in cent_rows:
-                if cid in got:
-                    nv = [c for _, c in sorted(got[cid])]
-                    acc = 0.0
-                    for x in nv:
-                        acc += x * x
-                    new_rows.append((cid, nv, math.sqrt(acc)))
-                else:           # empty cluster: keep previous centroid
-                    new_rows.append((cid, cv, cn))
-            cent_rows = new_rows
-        # Deliberately NOT unpersisted (r13 optimization round):
-        # CacheManager dedups cache entries by canonicalized plan, so
-        # an unpersist here DROPS the caller's entry too whenever the
-        # caller persisted the same (id, v, norm) projection —
-        # ivf_topk_pq/pca_ivf_topk persist `base` before training and
-        # were left running their whole lists/probes/codes build
-        # uncached; the trained ivf_topk serve half re-scanned parquet
-        # and re-materialized the projection the fit had just built;
-        # best-of-N restarts re-materialized it per candidate. The
-        # frame stays in the tracked registry, so the harness
-        # release_tracked() frees it exactly like every other
-        # query-path persist.
-        return spark.createDataFrame(cent_rows, schema)
-    cent = tracked_persist(spark.createDataFrame(cent_rows, schema))
-    cent.count()
-    return _kmeans_centroids_inplan(e, cent, n_iter, id_col)
-
-
-def _kmeans_centroids_inplan(e: DataFrame, cent: DataFrame, n_iter: int,
-                             id_col: str) -> DataFrame:
-    """The pre-r13 per-round in-plan Lloyd loop (posexplode means +
-    keep-previous merge join, per-round persist barrier) — kept for
-    huge-k models whose k×d rows are not driver-sized. ``e`` must be a
-    persisted (id, v, norm) frame; it stays persisted (tracked, so the
-    harness releases it) — an unpersist here would also drop any
-    caller-owned cache entry for the same canonicalized plan (the
-    ivf_topk_pq ``base`` steal; see kmeans_centroids)."""
+        order_expr = F.xxhash64(F.col(id_col))
+    cent_rows = [(i, [float(x) for x in r["v"]], float(r["norm"]))
+                 for i, r in enumerate(
+                     e.orderBy(order_expr, F.col(id_col)).limit(k)
+                      .select("v", "norm").collect())]
+    # The Lloyd loop runs through MODEL-SIZED driver rows (k×d floats):
+    # each round is ONE job, and every consumer's plan sees a flat
+    # literal centroid table instead of a stack of per-round persisted
+    # frames (that shape rendered the warm trained-IVF plan at 10k
+    # lines / 616 Exchanges, r13). Empty clusters keep their previous
+    # centroid via the dict default. Per-element DECIMAL(30,15) sums
+    # are exact, so grouping cannot change them; the oracle hash
+    # certifies the whole fit.
+    import math
+    carr_schema = ("__cents array<struct<centroid_id:int,"
+                   "cv:array<double>,cnorm:double>>")
     for _ in range(n_iter):
-        # map-only argmax assignment (r9, nearest_centroid): the
-        # windowed rank-1 paid a k×-corpus exchange per Lloyd round
-        assigned = nearest_centroid(e, cent).select(id_col, "v",
-                                                    "centroid_id")
+        # assignment against the same broadcast __cents array
+        # nearest_centroid builds — but the one-row frame is assembled
+        # driver-side as a LocalRelation, so the broadcast build is a
+        # driver-local executeCollect with no aggregate job per round
+        # (the per-row argmax fold is the broadcast-column shape that
+        # measured fastest; an inline literal-array expression
+        # measured 2-5x WORSE and wildly dispersed)
+        carr_df = spark.createDataFrame(
+            [([tuple(r) for r in cent_rows],)], carr_schema)
+        best = F.array_max(F.transform(
+            F.col("__cents"),
+            lambda c: F.struct(
+                (dot(F.col("v"), c["cv"])
+                 / (F.col("norm") * c["cnorm"])).alias("csim"),
+                (-c["centroid_id"]).alias("negid"))))
+        assigned = (e.crossJoin(F.broadcast(carr_df))
+                    .select("v", (-best["negid"]).cast("int")
+                            .alias("centroid_id")))
+        # exact per-(centroid, pos) DECIMAL means; the k×d mean rows
+        # are model-sized, so the array assembly and the l2 norm fold
+        # run on the driver (Python float ops are the same IEEE
+        # doubles evaluated in the same left-to-right order as an
+        # in-plan F.aggregate fold — bit-identical, oracle-pinned)
+        #
+        # MEASURED NEGATIVE (r14, VERDICT r13 #3's "collapse the
+        # posexplode means into one wide aggregate" experiment): a
+        # k-group aggregate with d sum/count column pairs (d=64 ⇒ 128
+        # agg expressions) REGRESSED the cell 3.56 → 6.78 s — per-round
+        # plan analysis + codegen compilation of the wide aggregate
+        # (~1 s/round, isolated A/B: 0.43 s posexplode vs 0.96-1.26 s
+        # wide on the same assignment frame) swamps the explode's row
+        # blowup at any model-sized k·d, and the blowup's map-side agg
+        # already keeps the shuffle at k·d rows per partition. The
+        # explode shape stays.
         pe = assigned.select(
             "centroid_id", F.posexplode("v").alias("pos", "x"))
         means = (pe.groupBy("centroid_id", "pos")
                  .agg((F.sum(F.col("x").cast("decimal(30,15)"))
                        .cast("double") / F.count("*")).alias("c")))
-        newc = (means.groupBy("centroid_id")
-                .agg(F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                    lambda s: s["c"]).alias("cv")))
-        newc = newc.withColumn("cnorm", l2_norm(F.col("cv")))
-        merged = (cent.select("centroid_id",
-                              F.col("cv").alias("__old_cv"),
-                              F.col("cnorm").alias("__old_n"))
-                  .join(newc, "centroid_id", "left")
-                  .select("centroid_id",
-                          F.coalesce("cv", "__old_cv").alias("cv"),
-                          F.coalesce("cnorm", "__old_n").alias("cnorm")))
-        merged = tracked_persist(merged)
-        merged.count()
-        cent.unpersist()
-        cent = merged
-    return cent
+        got: dict[int, list] = {}
+        for r in means.collect():
+            got.setdefault(r["centroid_id"], []).append(
+                (r["pos"], r["c"]))
+        new_rows = []
+        for cid, cv, cn in cent_rows:
+            if cid in got:
+                nv = [c for _, c in sorted(got[cid])]
+                acc = 0.0
+                for x in nv:
+                    acc += x * x
+                new_rows.append((cid, nv, math.sqrt(acc)))
+            else:               # empty cluster: keep previous centroid
+                new_rows.append((cid, cv, cn))
+        cent_rows = new_rows
+    # Deliberately NOT unpersisted (r13 optimization round):
+    # CacheManager dedups cache entries by canonicalized plan, so an
+    # unpersist here DROPS the caller's entry too whenever the caller
+    # persisted the same (id, v, norm) projection — ivf_topk_pq/
+    # pca_ivf_topk persist `base` before training and were left
+    # running their whole lists/probes/codes build uncached; the
+    # trained ivf_topk serve half re-scanned parquet and
+    # re-materialized the projection the fit had just built; best-of-N
+    # restarts re-materialized it per candidate. The frame stays in
+    # the tracked registry, so the harness release_tracked() frees it
+    # exactly like every other query-path persist.
+    return spark.createDataFrame(cent_rows, schema)
 
 
 def kmeans_centroids_best_of(embeddings: DataFrame, k: int = 16,
@@ -444,8 +308,8 @@ def kmeans_centroids_best_of(embeddings: DataFrame, k: int = 16,
     fixture the portable md5 draw trains to recall@10 0.76 where the
     xxhash64 draw reaches 0.84 — pure draw luck, and each draw's
     Lloyd run converges to its own local optimum (5 or 8 rounds: still
-    0.76). The r8-suggested farthest-point init measured WORSE (0.72
-    vs 0.76): it seeds on outliers, which 3 rounds can't repair.
+    0.76). A farthest-point init measured WORSE (0.72 vs 0.76): it
+    seeds on outliers, which 3 rounds can't repair.
     Restart selection is the standard, scale-honest answer — at
     100 TB the fit runs on a corpus sample, so 3× a sample-sized
     training loop is noise while serving is untouched. Measured
@@ -1088,7 +952,6 @@ def ivf_topk_pq(embeddings: DataFrame, query_ids: list[int], k: int = 10,
                 residual: bool = True,
                 rotate: bool = True,
                 portable: bool = False,
-                coarse_init: str = "sample",
                 coarse_restarts: int = 1) -> DataFrame:
     """IVF with PRODUCT-QUANTIZED inverted lists + asymmetric distance
     (ADC) scoring + exact float rerank — the standard 100 TB ANN
@@ -1157,8 +1020,7 @@ def ivf_topk_pq(embeddings: DataFrame, query_ids: list[int], k: int = 10,
     else:
         cent = kmeans_centroids(embeddings, k=n_centroids,
                                 n_iter=coarse_iters, id_col=id_col,
-                                vec_col=vec_col, portable=portable,
-                                init=coarse_init)
+                                vec_col=vec_col, portable=portable)
     lists, probes = _ivf_lists_probes(
         base, cent, query_ids, k, n_probe, probe_oversample, id_col, [])
 

@@ -681,7 +681,7 @@ FROM rankedpq WHERE rank <= {k}""")
 def ngram_jaccard_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     return dedup.ngram_jaccard_pairs(d, block_cols=["lang", "source"],
-                                     n=3, threshold=0.3, hashed=True)
+                                     n=3, threshold=0.3)
 
 
 _JACCARD_SQL = r"""
@@ -724,7 +724,7 @@ def near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     pairs = dedup.ngram_jaccard_pairs(d, block_cols=["lang", "source"],
-                                      n=3, threshold=0.3, hashed=True)
+                                      n=3, threshold=0.3)
     return graph.dedup_keepers(d, pairs.select("id_a", "id_b"))
 
 
@@ -758,21 +758,21 @@ def near_dup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     pairs = dedup.ngram_jaccard_pairs(d, block_cols=["lang", "source"],
-                                      n=3, threshold=0.3, hashed=True)
+                                      n=3, threshold=0.3)
     return graph.dedup_keepers(d, pairs.select("id_a", "id_b"),
                                algorithm="star")
 
 
 def minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup pairs, fully DuckDB-oracled (r6): the
-    portable mode keys the signature on the md5-prefix 31-bit family
+    MinHash tier keys the signature on the md5-prefix 31-bit family
     (cm_bucket's scheme), buckets on the raw comma-joined band string,
     and verifies on md5-hashed shingle sets — so the oracle recomputes
     signatures, banding, candidate generation AND the exact-Jaccard
     verify from the parquet alone. Same LCG permutation parameters on
     both sides (_mh_params is the shared source of truth)."""
     d = load_table(spark, sf_dir, "documents")
-    return dedup.minhash_lsh_pairs(d, threshold=0.3, portable=True)
+    return dedup.minhash_lsh_pairs(d, threshold=0.3)
 
 
 def _minhash_near_dups_sql(n_hashes: int = 64, bands: int = 16,
@@ -831,15 +831,15 @@ SELECT id_a, id_b, jaccard FROM verified WHERE jaccard >= {threshold}
 
 
 def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash hamming-ball pairs, fully DuckDB-oracled (r6): the
-    portable mode draws the 64 fingerprint bits from the two 32-bit
+    """SimHash hamming-ball pairs, fully DuckDB-oracled (r6): simhash64
+    draws the 64 fingerprint bits from the two 32-bit
     md5-prefix halves, so the oracle recomputes fingerprints,
     pigeonhole chunk banding, candidate pairs AND the bit_count
     hamming verify from the parquet alone — the third hash-family
     tier (after count-min and MinHash) whose internals themselves
     hash-match."""
     d = load_table(spark, sf_dir, "documents")
-    return dedup.simhash_near_pairs(d, max_hamming=12, portable=True)
+    return dedup.simhash_near_pairs(d, max_hamming=12)
 
 
 def _simhash_near_pairs_sql(max_hamming: int = 12) -> str:
@@ -1611,7 +1611,7 @@ def leakage_report(d: DataFrame) -> DataFrame:
     from ..operators import sampling
 
     pairs = dedup.ngram_jaccard_pairs(d, block_cols=["lang", "source"],
-                                      n=3, threshold=0.3, hashed=True)
+                                      n=3, threshold=0.3)
     splits = sampling.assign_splits(d.select("doc_id"), key="doc_id") \
                      .select("doc_id", "split")
     sa = splits.select(F.col("doc_id").alias("id_a"),
@@ -1662,7 +1662,7 @@ def split_leakage_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     pairs = dedup.ngram_jaccard_pairs(d, block_cols=["lang", "source"],
-                                      n=3, threshold=0.3, hashed=True)
+                                      n=3, threshold=0.3)
     splits = sampling.assign_splits(d.select("doc_id"), key="doc_id") \
                      .select("doc_id", "split")
     sa = splits.select(F.col("doc_id").alias("id_a"),
@@ -1737,7 +1737,7 @@ def near_dup_edit_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded edit-distance pass confirms)."""
     d = load_table(spark, sf_dir, "documents")
     pairs = dedup.ngram_jaccard_pairs(d, block_cols=["lang", "source"],
-                                      n=3, threshold=0.3, hashed=True)
+                                      n=3, threshold=0.3)
     prefix = F.substring(F.col("text"), 1, 200)
     ta = d.select(F.col("doc_id").alias("id_a"), prefix.alias("txt_a"))
     tb = d.select(F.col("doc_id").alias("id_b"), prefix.alias("txt_b"))

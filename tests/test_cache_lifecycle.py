@@ -103,7 +103,10 @@ def _sweep_names() -> list[str]:
         "bigram_kn_probs", "embedding_covariance",
         "user_profile_merged", "tick_rolling_indicators",
     ]
-    keep = [n for n in keep if n in allq]
+    # a renamed representative must fail loudly, not drop out of the
+    # sweep
+    missing = sorted(set(keep) - set(allq))
+    assert not missing, f"sweep representatives not in registry: {missing}"
     # checkpointing representatives: every checkpoint SITE (CC loop,
     # star CC, BPE vocab rounds, DSIR model, grouped DSIR, linkage CC)
     # exercised through its cheapest query; the expensive composites

@@ -87,7 +87,9 @@ def test_signlsh_recall_vs_bruteforce(spark):
 
 def test_minhash_finds_planted_near_dups(spark):
     """Plant near-identical copies (one token appended) of 20 docs;
-    banded MinHash must surface every planted pair."""
+    banded MinHash — md5_h31 signatures, raw band strings, md5 verify
+    sets, the oracled minhash_near_dups pipeline — must surface every
+    planted pair."""
     d = load_table(spark, SF, "documents").limit(20)
     copies = d.select((F.col("doc_id") + 1_000_000).alias("doc_id"),
                       F.concat("text", F.lit(" zz")).alias("text"),
@@ -98,28 +100,6 @@ def test_minhash_finds_planted_near_dups(spark):
     expected = {(r["doc_id"], r["doc_id"] + 1_000_000) for r in d.collect()}
     missing = expected - found
     assert not missing, f"planted near-dups missed: {missing}"
-
-
-def test_minhash_portable_mode_planted_dups_and_pair_parity(spark):
-    """The md5-portable LSH pipeline (the oracled minhash_near_dups
-    path) still surfaces every planted near-dup, and on this corpus
-    finds the SAME pair set as the xxhash64 default — the hash family
-    changes bucket assignments, not which high-Jaccard pairs survive
-    the exact verify."""
-    d = load_table(spark, SF, "documents").limit(20)
-    copies = d.select((F.col("doc_id") + 1_000_000).alias("doc_id"),
-                      F.concat("text", F.lit(" zz")).alias("text"),
-                      "lang", "source", "n_chars")
-    corpus = d.unionByName(copies)
-    portable = {(r["id_a"], r["id_b"]) for r in
-                dedup.minhash_lsh_pairs(corpus, threshold=0.5,
-                                        portable=True).collect()}
-    default = {(r["id_a"], r["id_b"]) for r in
-               dedup.minhash_lsh_pairs(corpus, threshold=0.5).collect()}
-    expected = {(r["doc_id"], r["doc_id"] + 1_000_000) for r in d.collect()}
-    assert expected - portable == set(), (
-        f"portable LSH missed planted dups: {expected - portable}")
-    assert portable == default
 
 
 def test_minhash_index_probe_matches_one_shot(spark, tmp_path):
@@ -171,6 +151,8 @@ def test_minhash_index_probe_matches_one_shot(spark, tmp_path):
 
 
 def test_simhash_planted_near_dups(spark):
+    """The md5 hi/lo fingerprint family (the oracled simhash_near_pairs
+    path) finds the planted near-dups."""
     d = load_table(spark, SF, "documents").limit(20)
     copies = d.select((F.col("doc_id") + 1_000_000).alias("doc_id"),
                       F.concat("text", F.lit(" zz")).alias("text"),
@@ -181,24 +163,6 @@ def test_simhash_planted_near_dups(spark):
     expected = {(r["doc_id"], r["doc_id"] + 1_000_000) for r in d.collect()}
     assert len(expected & found) >= int(0.9 * len(expected)), (
         f"simhash missed too many planted dups: {len(expected & found)}/20")
-
-
-def test_simhash_portable_mode_planted_dups(spark):
-    """The md5-portable fingerprint family (the oracled
-    simhash_near_pairs path) keeps the planted-dup detection power of
-    the xxhash64 default — the pigeonhole candidate guarantee is
-    hash-family-independent, only the specific fingerprints change."""
-    d = load_table(spark, SF, "documents").limit(20)
-    copies = d.select((F.col("doc_id") + 1_000_000).alias("doc_id"),
-                      F.concat("text", F.lit(" zz")).alias("text"),
-                      "lang", "source", "n_chars")
-    corpus = d.unionByName(copies)
-    pairs = dedup.simhash_near_pairs(corpus, max_hamming=6,
-                                     portable=True)
-    found = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-    expected = {(r["doc_id"], r["doc_id"] + 1_000_000) for r in d.collect()}
-    assert len(expected & found) >= int(0.9 * len(expected)), (
-        f"portable simhash missed planted dups: {len(expected & found)}/20")
 
 
 def test_dedup_idempotence(spark):
@@ -474,7 +438,7 @@ def test_ngram_hot_block_routes_to_lsh(spark, monkeypatch):
                     "n_chars"))
     corpus = hot.unionByName(cold)
     out = dedup.ngram_jaccard_pairs(corpus, ["lang", "source"], threshold=0.3,
-                                    hashed=True, max_block_size=50)
+                                    max_block_size=50)
     out.collect()
     assert routed["ids"] == {r["doc_id"] for r in hot.collect()}
 
@@ -493,10 +457,10 @@ def test_no_hot_blocks_skips_lsh_subtree(spark, monkeypatch):
     monkeypatch.setattr(dedup, "minhash_lsh_pairs", spy)
     d = load_table(spark, SF, "documents").limit(80)
     routed = dedup.ngram_jaccard_pairs(d, ["lang", "source"],
-                                       threshold=0.3, hashed=True,
+                                       threshold=0.3,
                                        max_block_size=10_000)
     exact = dedup.ngram_jaccard_pairs(d, ["lang", "source"],
-                                      threshold=0.3, hashed=True)
+                                      threshold=0.3)
     assert called["n"] == 0
     assert ({(r["id_a"], r["id_b"], round(r["jaccard"], 9))
              for r in routed.collect()}
@@ -529,7 +493,7 @@ def test_routed_lsh_pairs_stay_within_block(spark):
     corpus = hot_a.unionByName(twins_a).unionByName(twins_b) \
                   .unionByName(block_b_fill)
     out = dedup.ngram_jaccard_pairs(corpus, ["lang", "source"],
-                                    threshold=0.5, hashed=True,
+                                    threshold=0.5,
                                     max_block_size=50)
     pairs = {(r["id_a"], r["id_b"]) for r in out.collect()}
     base_ids = [r["doc_id"] for r in d.collect()]
@@ -557,10 +521,10 @@ def test_ngram_prefilter_preserves_exactness(spark):
     d = load_table(spark, SF, "documents").limit(60)
     strict = {(r["id_a"], r["id_b"]): r["jaccard"]
               for r in dedup.ngram_jaccard_pairs(
-                  d, ["lang"], threshold=0.3, hashed=True).collect()}
+                  d, ["lang"], threshold=0.3).collect()}
     loose = {(r["id_a"], r["id_b"]): r["jaccard"]
              for r in dedup.ngram_jaccard_pairs(
-                 d, ["lang"], threshold=0.0, hashed=True).collect()
+                 d, ["lang"], threshold=0.0).collect()
              if r["jaccard"] >= 0.3}
     assert strict == loose
 
@@ -779,17 +743,6 @@ def test_range_join_bucket_cap_guard(spark):
         guarded.collect()
 
 
-def test_vectorized_minhash_matches_jvm(spark):
-    """The Arrow/numpy signature path is bit-identical to the JVM
-    higher-order-function fold (same universal-hash family)."""
-    d = load_table(spark, SF, "documents").limit(100)
-    jvm = {r["doc_id"]: tuple(r["signature"])
-           for r in dedup.minhash_signatures(d).collect()}
-    vec = {r["doc_id"]: tuple(r["signature"])
-           for r in dedup.minhash_signatures_vectorized(d).collect()}
-    assert jvm == vec and len(jvm) == 100
-
-
 def test_curation_reason_codes_all_fire(spark):
     """Every curation rule fires somewhere at sf0.1 (the generator
     plants canonical dups only there), keep == no-reasons, and the
@@ -922,45 +875,6 @@ def test_quantization_error_bound(spark):
     assert rows.lo >= 0 and rows.hi <= 255
 
 
-def test_farthest_point_init_contract(spark):
-    """farthest_point_rows: k distinct rows, seeded at the md5-draw
-    minimum, deterministic across calls, and each later pick is the
-    exact argmin of max-cosine-to-chosen (verified against a numpy
-    replay). The init is kept as a documented measured-worse
-    alternative (see its docstring) — the contract test pins that the
-    selection itself is what it claims."""
-    import numpy as np
-
-    from stockanalyses_downloader_spark.operators.sampling import hash_key
-    e0 = load_table(spark, SF, "embeddings").limit(40)
-    e = e0.select("vec_id", similarity.as_double(F.col("embedding"))
-                  .alias("v"))
-    e = e.withColumn("norm", similarity.l2_norm(F.col("v")))
-    rows = similarity.farthest_point_rows(e, 5)
-    again = similarity.farthest_point_rows(e, 5)
-    assert [r["vec_id"] for r in rows] == [r["vec_id"] for r in again]
-    assert len({r["vec_id"] for r in rows}) == 5
-    seed = e.orderBy(hash_key(F.col("vec_id")), F.col("vec_id")) \
-            .first()["vec_id"]
-    assert rows[0]["vec_id"] == seed
-    # numpy replay of the greedy selection
-    data = {r["vec_id"]: np.array(r["v"]) for r in e.collect()}
-    chosen = [rows[0]["vec_id"]]
-    for step in range(1, 5):
-        best = None
-        for vid in sorted(data):
-            if vid in chosen:
-                continue
-            mx = max(float(data[vid] @ data[c])
-                     / (np.linalg.norm(data[vid]) * np.linalg.norm(data[c]))
-                     for c in chosen)
-            if best is None or mx < best[0] or (mx == best[0]
-                                                and vid < best[1]):
-                best = (mx, vid)
-        chosen.append(best[1])
-        assert rows[step]["vec_id"] == best[1], f"step {step}"
-
-
 def test_kmeans_best_of_picks_max_objective(spark):
     """kmeans_centroids_best_of returns the restart whose DECIMAL
     within-cluster-similarity objective is highest — verified by
@@ -1063,17 +977,6 @@ def test_map_only_assignment_matches_windowed_rank1(spark):
           for r in twin_c.collect()}
     assert gc == tc
     assert all(c != 2 for (v, s), c in gc.items() if s == 0)
-
-
-def test_kmeans_farthest_rejects_init_salt(spark):
-    """init='farthest' is deterministic: passing init_salt must raise
-    (ADVICE r9 — silently ignoring it would let best-of-N train N
-    identical restarts)."""
-    import pytest
-    e = load_table(spark, SF, "embeddings").limit(16)
-    with pytest.raises(ValueError, match="farthest"):
-        similarity.kmeans_centroids(e, k=4, n_iter=1,
-                                    init="farthest", init_salt="|r1")
 
 
 def test_quantized_ivf_recall(spark):
@@ -2030,8 +1933,7 @@ def test_prefix_filter_join_catches_cross_block_dups(spark):
     corpus = d.unionByName(twin)
 
     blocked = dedup.ngram_jaccard_pairs(
-        corpus, block_cols=["lang", "source"], n=3, threshold=0.5,
-        hashed=True)
+        corpus, block_cols=["lang", "source"], n=3, threshold=0.5)
     assert blocked.filter(F.col("id_b") == 5_000_000).count() == 0
 
     global_pairs = dedup.jaccard_pairs_prefix_filter(
@@ -2409,6 +2311,52 @@ def test_minhash_probe_id_collision_prefers_delta(spark, tmp_path):
     # B vs B+' share all but the boundary shingles -> jaccard well
     # above the threshold; A vs B' would share zero shingles
     assert got[(1, 900001)] >= 0.5
+
+
+def test_minhash_index_rejects_foreign_hash_family(spark, tmp_path):
+    """The index meta records its hash family, and append/probe refuse
+    an index built on another one — its bands could never collide with
+    md5_h31 bands, so mixing would silently find no pairs. Covers both
+    meta layouts: an explicit ``hash_family`` column and the older
+    ``portable`` flag (false = xxhash64 family: rejected; true = the
+    md5_h31 family: still readable)."""
+    import pytest
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta eta theta",
+          "en", "s1", 40)],
+        "doc_id long, text string, lang string, source string, n_chars int")
+    twin = docs.select((F.col("doc_id") + 1).alias("doc_id"),
+                       F.concat("text", F.lit(" zz")).alias("text"),
+                       "lang", "source", "n_chars")
+    path = str(tmp_path / "mh_family")
+    dedup.save_minhash_index(docs, path)
+    assert spark.read.parquet(f"{path}/meta").first()["hash_family"] \
+        == "md5_h31"
+
+    def write_meta(rows, schema):
+        (spark.createDataFrame(rows, schema)
+         .write.mode("overwrite").parquet(f"{path}/meta"))
+
+    for rows, schema in (
+            ([(64, 16, 3, False, "doc_id")],
+             "n_hashes int, bands int, n int, portable boolean, "
+             "id_col string"),
+            ([(64, 16, 3, "xxhash64", "doc_id")],
+             "n_hashes int, bands int, n int, hash_family string, "
+             "id_col string")):
+        write_meta(rows, schema)
+        with pytest.raises(ValueError, match="xxhash64"):
+            dedup.append_to_minhash_index(spark, path, twin)
+        with pytest.raises(ValueError, match="xxhash64"):
+            dedup.probe_minhash_index(spark, path, twin, threshold=0.5)
+
+    write_meta([(64, 16, 3, True, "doc_id")],
+               "n_hashes int, bands int, n int, portable boolean, "
+               "id_col string")
+    got = {(r["id_a"], r["id_b"]) for r in
+           dedup.probe_minhash_index(spark, path, twin,
+                                     threshold=0.5).collect()}
+    assert got == {(1, 2)}
 
 
 def test_hard_negative_contract(spark):

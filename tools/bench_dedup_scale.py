@@ -16,6 +16,10 @@ number is stage-count floor, not throughput. Measured (local[32]):
     10      50,000   250,589         14.0 s  3,577
     30      150,000  2,405,204       39.7 s  3,781
 
+That table predates the single hash family: it ran the xxhash64
+signatures. minhash_lsh_pairs now always hashes with md5_h31, which
+PERF.md puts at ~0.2-0.5 s more at 1x.
+
 Usage:
 
     python tools/bench_dedup_scale.py            # 1x 10x 30x

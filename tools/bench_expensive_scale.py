@@ -466,7 +466,7 @@ def bench_ngram_exact_t03(spark, factor: int) -> dict:
     n = corpus.count()
     t0 = time.perf_counter()
     pairs = dedup.ngram_jaccard_pairs(corpus, ["lang", "source"], n=3,
-                                      threshold=0.3, hashed=True)
+                                      threshold=0.3)
     n_out = pairs.count()
     return {"query": "ngram_jaccard_near_dups[exact@t0.3]",
             "factor": factor, "rows_in": n, "rows_out": n_out,
@@ -486,7 +486,7 @@ def bench_ngram_routed(spark, factor: int) -> dict:
     n = corpus.count()
     t0 = time.perf_counter()
     pairs = dedup.ngram_jaccard_pairs(corpus, ["lang", "source"], n=3,
-                                      threshold=0.3, hashed=True,
+                                      threshold=0.3,
                                       max_block_size=2000)
     n_out = pairs.count()
     return {"query": "ngram_jaccard_near_dups[routed@2000]",

@@ -72,7 +72,7 @@ def main() -> None:
             t0 = time.perf_counter()
             pairs = dedup.ngram_jaccard_pairs(
                 corpus, block_cols=["lang", "source"],
-                n=3, threshold=0.3, hashed=True)
+                n=3, threshold=0.3)
             n_pairs = pairs.count()
             wall = round(time.perf_counter() - t0, 2)
             stages = [s for s in stage_metrics(spark)

@@ -1,9 +1,11 @@
 #!/usr/bin/env python3
-"""Capture `.explain("formatted")` for bench queries into plans/r14/.
+"""Capture `.explain("formatted")` for bench queries into plans/TAG/.
 
 Usage:
-    python tools/opt_plans_r14.py before [query ...]
-    python tools/opt_plans_r14.py after  [query ...]
+    python tools/opt_plans.py TAG before [query ...]
+    python tools/opt_plans.py TAG after  [query ...]
+
+Each plan lands in ``plans/TAG/<query>_<before|after>.txt``.
 
 With no query names, captures every query the bench times (HEADLINE +
 EXTENDED). Plans are compiled at $SPARK_GRAFT_SF_DIR (default sf0.1);
@@ -28,20 +30,20 @@ from stockanalyses_downloader_spark.session import (DEFAULT_SF_DIR,  # noqa: E40
 
 
 def main() -> None:
-    if len(sys.argv) < 2 or sys.argv[1] not in ("before", "after"):
-        print("usage: opt_plans_r14.py before|after [query ...]",
+    if len(sys.argv) < 3 or sys.argv[2] not in ("before", "after"):
+        print("usage: opt_plans.py TAG before|after [query ...]",
               file=sys.stderr)
         sys.exit(2)
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    tag, suffix = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:]
     if not names:
         import bench
         names = bench.HEADLINE + bench.EXTENDED
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
     out_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r14")
+        os.path.abspath(__file__))), "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_session("opt-plans-r14")
+    spark = get_session(f"opt-plans-{tag}")
     spark.catalog.clearCache()  # plans must not absorb prior cached subtrees
     registry = all_queries()
     for name in names:
