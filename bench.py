@@ -258,8 +258,8 @@ def main() -> None:
     n_iter = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "3")))
     # An EXPLICIT iteration pin is a debugging/subset contract (the
     # smoke test pins 2 and asserts exactly 2 warm runs land in the
-    # record); the loaded-headline oversampling rule below applies
-    # only to default-config runs — i.e. the driver's.
+    # record); the adaptive oversampling rules below apply only to
+    # default-config runs.
     iters_pinned = "SPARK_GRAFT_BENCH_ITERS" in os.environ
     # Adaptive dispersion control (VERDICT r9 #2): a 3-sample median of
     # a >2 s query with >10 % warm spread is exactly the telemetry that
@@ -308,7 +308,12 @@ def main() -> None:
         try:
             for _ in range(1 + n_iter):     # first run = cold
                 one_run()
-            while (len(runs) - 1) < max_iters:
+            # a pinned-iteration (subset/debug) run opts out of every
+            # adaptive oversampling rule below — determinism over
+            # dispersion there: the smoke test saw n_iter 4 on a
+            # pinned-2 run under decaying load (sub-2 s cells, r14) and
+            # n_iter 3 once a loaded machine pushed a cell past 2 s
+            while not iters_pinned and (len(runs) - 1) < max_iters:
                 warm = runs[1:]
                 # r14 (VERDICT r13 #7): the headline cells run FIRST,
                 # exactly when a loaded start hurts most (the r13
@@ -317,8 +322,7 @@ def main() -> None:
                 # HEADLINE cell keeps sampling to >=5 warm runs before
                 # any stop rule applies — additions-only: extra
                 # samples, never fewer; idle runs are unchanged.
-                if (loaded and not iters_pinned
-                        and name in HEADLINE and len(warm) < 5):
+                if loaded and name in HEADLINE and len(warm) < 5:
                     one_run()
                     continue
                 med = statistics.median(warm)
@@ -332,11 +336,7 @@ def main() -> None:
                 tail = warm[-3:]
                 if (max(tail) - min(tail)) <= 0.10 * med:
                     break
-                # a pinned-iteration (subset/debug) run opts out of
-                # load-adaptive oversampling entirely — determinism
-                # over dispersion there (r14; the smoke test observed
-                # n_iter 4 on a pinned-2 run under decaying load)
-                if med <= 2.0 and (not loaded or iters_pinned):
+                if med <= 2.0 and not loaded:
                     break
                 one_run()
         except Exception as exc:  # noqa: BLE001

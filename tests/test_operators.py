@@ -102,6 +102,31 @@ def test_minhash_finds_planted_near_dups(spark):
     assert not missing, f"planted near-dups missed: {missing}"
 
 
+def test_minhash_portable_mode_planted_dups_and_pair_parity(spark):
+    """The engine-portable md5 LSH pipeline (the oracled
+    minhash_near_dups path, formerly selected by ``portable=True`` and
+    now the only family) surfaces every planted near-dup, and on this
+    corpus finds the SAME pairs, with the same Jaccard, as the exact
+    global prefix-filter join — the band hashing only picks
+    candidates, it does not change which high-Jaccard pairs survive
+    the exact verify."""
+    d = load_table(spark, SF, "documents").limit(20)
+    copies = d.select((F.col("doc_id") + 1_000_000).alias("doc_id"),
+                      F.concat("text", F.lit(" zz")).alias("text"),
+                      "lang", "source", "n_chars")
+    corpus = d.unionByName(copies)
+    lsh = {(r["id_a"], r["id_b"]): r["jaccard"] for r in
+           dedup.minhash_lsh_pairs(corpus, threshold=0.5).collect()}
+    exact = {(r["id_a"], r["id_b"]): r["jaccard"] for r in
+             dedup.jaccard_pairs_prefix_filter(corpus,
+                                               threshold=0.5).collect()}
+    expected = {(r["doc_id"], r["doc_id"] + 1_000_000) for r in d.collect()}
+    assert expected - set(lsh) == set(), (
+        f"portable LSH missed planted dups: {expected - set(lsh)}")
+    assert set(lsh) == set(exact)
+    assert all(math.isclose(lsh[p], exact[p], abs_tol=1e-9) for p in lsh)
+
+
 def test_minhash_index_probe_matches_one_shot(spark, tmp_path):
     """At-rest near-dup index (r6): build on the corpus, probe a delta
     containing near-dup copies of corpus docs AND of each other. Pins:
@@ -163,6 +188,42 @@ def test_simhash_planted_near_dups(spark):
     expected = {(r["doc_id"], r["doc_id"] + 1_000_000) for r in d.collect()}
     assert len(expected & found) >= int(0.9 * len(expected)), (
         f"simhash missed too many planted dups: {len(expected & found)}/20")
+
+
+def test_simhash_portable_mode_planted_dups(spark):
+    """The md5 hi/lo fingerprint family (formerly selected by
+    ``portable=True``, now the only one) is engine-portable: every
+    fingerprint equals a pure-Python hashlib recomputation (token =
+    whitespace split of the lower-cased trimmed text; bit i of the
+    md5-prefix value votes +1/-1; a bit is set iff its vote sum > 0),
+    and the planted near-dups keep their detection power."""
+    import hashlib
+    import re
+    d = load_table(spark, SF, "documents").limit(20)
+    copies = d.select((F.col("doc_id") + 1_000_000).alias("doc_id"),
+                      F.concat("text", F.lit(" zz")).alias("text"),
+                      "lang", "source", "n_chars")
+    corpus = d.unionByName(copies)
+
+    def py_simhash(text):
+        votes = [0] * 64
+        for tok in re.split(r"\s+", text.strip().lower()):
+            h = hashlib.md5(tok.encode()).hexdigest()
+            v = (int(h[0:8], 16) << 32) | int(h[8:16], 16)
+            for b in range(64):
+                votes[b] += 1 if (v >> b) & 1 else -1
+        return sum(1 << b for b in range(64) if votes[b] > 0)
+
+    texts = {r["doc_id"]: r["text"] for r in corpus.collect()}
+    sims = {r["doc_id"]: r["simhash"] & ((1 << 64) - 1)
+            for r in dedup.simhash64(corpus).collect()}
+    assert sims == {k: py_simhash(t) for k, t in texts.items()}
+
+    pairs = dedup.simhash_near_pairs(corpus, max_hamming=6)
+    found = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
+    expected = {(r["doc_id"], r["doc_id"] + 1_000_000) for r in d.collect()}
+    assert len(expected & found) >= int(0.9 * len(expected)), (
+        f"portable simhash missed planted dups: {len(expected & found)}/20")
 
 
 def test_dedup_idempotence(spark):
