@@ -271,16 +271,6 @@ def _shingles_from_toks(toks, n: int):
         F.when(F.size(toks) >= n, grams).otherwise(F.array().cast("array<string>")))
 
 
-def word_shingles(col, n: int = 3):
-    """Column-level shingle expression. NOTE the per-row cost caveat
-    on _shingles_from_toks: this inline form re-evaluates the split
-    per shingle position (lambda-internal subtrees are outside
-    subexpression elimination). Fine for one-off column use; the
-    DataFrame-level builders below hoist the split into a real
-    column — prefer them on corpus-wide paths."""
-    return _shingles_from_toks(_norm_toks(col), n)
-
-
 def _with_toks(docs: DataFrame, text_col: str) -> DataFrame:
     """Bind the normalized token array as a real column. Catalyst's
     CollapseProject will NOT inline a non-cheap alias referenced more
@@ -861,7 +851,7 @@ def jaccard_pairs_prefix_filter(docs: DataFrame, n: int = 3,
     # blown corpus; 2x CPU waste at ANY width, since the pushed copy
     # can't share subexpressions with the post-exchange projection
     # across the exchange boundary). Shingles are empty exactly when
-    # the normalized text has < n words (word_shingles' CASE guard),
+    # the normalized text has < n words (_shingles_from_toks' guard),
     # so filter on that — one cheap split per row wherever Catalyst
     # pushes it.
     has_grams = (F.size(F.split(F.lower(F.trim(F.col(text_col))),

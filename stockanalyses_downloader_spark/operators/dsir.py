@@ -15,11 +15,14 @@ Spark-first shape, and why it holds at 100 TB:
 - Features are word unigrams + bigrams hashed into ``n_buckets``
   (default 4096) via the repo's md5-prefix family — the model is a
   BOUNDED bucket table regardless of vocabulary size (the hashing
-  trick, same contract as the count-min/HLL grids), built in one
-  corpus scan with a groupBy(bucket) count.
+  trick, same contract as the count-min/HLL grids).
+- Single pass: ONE gram explode over the whole corpus (target and
+  raw together) is aggregated to per-(doc, bucket) occurrence counts
+  (doc_gram_bucket_counts). The fit re-aggregates those counts by
+  bucket, split by a target predicate; scoring reads the same frame.
 - The per-bucket log-likelihood-ratio table is model-sized and
-  broadcast; per-doc scoring is one explode + broadcast join +
-  groupBy(doc) mean — a single shuffle keyed by doc_id, no iteration.
+  broadcast; per-doc scoring is one broadcast join + groupBy(doc)
+  mean — a single shuffle keyed by doc_id, no iteration.
 - Selection is a count + a rounded-score rank: deterministic,
   reproducible, and resumable (the kept set is a pure function of the
   corpus and the constants).
@@ -65,21 +68,17 @@ def hashed_gram_buckets(docs: DataFrame, id_col: str = "doc_id",
     """One row per unigram/bigram OCCURRENCE: (id_col, *carry_cols,
     bucket). Tokens are lowercased whitespace words; bigrams are
     adjacent pairs joined by one space (zip_with over two slices —
-    JVM-side, no UDF). NULL text is coalesced to '' first so
-    NULL-text docs emit the same single ''-unigram an empty doc does
-    — every doc scores (ADVICE r8: size(split(NULL))=-1 would
-    otherwise silently drop them from scoring AND from dsir_select's
-    denominator). ``carry_cols`` rides extra doc attributes (e.g. the
-    source for the per-group model) through the explode so grouped
-    scoring never needs a grams⋈docs re-join.
+    JVM-side, no UDF). NULL text is coalesced to '' first, so a
+    NULL-text doc emits the single ''-unigram an empty doc does and
+    still scores (size(split(NULL)) = -1 would drop it from scoring
+    AND from dsir_select's denominator). ``carry_cols`` rides extra
+    doc attributes (e.g. the source) through the explode.
 
-    spread() first (r11 — the VERDICT r10 rollout): the gram explode
-    amplifies every doc by its token count ×2 (unigrams + bigrams)
-    and feeds the bucket hashing — per-row CPU work that would
-    otherwise run at the width of a narrow upstream (single-file
-    fixture scan, coalesced stage output, broadcast-enriched frame).
-    Its pre-fix 30× cell carried the 42–52 s variance band PERF.md
-    §r10 traced to the starved token stream."""
+    spread() first: the explode amplifies every doc by ~2x its token
+    count and feeds the md5 hashing — per-row CPU that would otherwise
+    run at the width of a narrow upstream (single-file scan, coalesced
+    stage output; PERF.md §r10 traced a 42–52 s 30x variance band to
+    that starved token stream)."""
     docs = spread(docs)
     keys = [id_col, *carry_cols]
     ts = F.split(F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))),
@@ -98,123 +97,40 @@ def hashed_gram_buckets(docs: DataFrame, id_col: str = "doc_id",
             .select(*keys, _bucket(F.col("g"), n_buckets).alias("bucket")))
 
 
-def dsir_bucket_llr(target_grams: DataFrame, raw_grams: DataFrame,
+def dsir_bucket_llr(occ: DataFrame, target_pred: Column,
                     n_buckets: int = N_BUCKETS,
                     alpha: float = ALPHA) -> DataFrame:
     """Per-bucket log-likelihood ratio ln(p_target / p_raw) with
-    additive smoothing — the DSIR importance model. Output (bucket,
-    n_target, n_raw, llr): n_buckets rows, broadcast-sized by
-    construction. Buckets unseen in BOTH corpora still get a row
-    (llr from the smoothing alone) so scoring never drops a feature."""
-    tc = target_grams.groupBy("bucket").agg(F.count("*").alias("n_target"))
-    rc = raw_grams.groupBy("bucket").agg(F.count("*").alias("n_raw"))
-    spark = target_grams.sparkSession
-    grid = spark.range(n_buckets).select(F.col("id").cast("int")
-                                         .alias("bucket"))
-    joined = (grid.join(tc, "bucket", "left").join(rc, "bucket", "left")
-              .select("bucket",
-                      F.coalesce("n_target", F.lit(0)).alias("n_target"),
-                      F.coalesce("n_raw", F.lit(0)).alias("n_raw"))
-              # the model is n_buckets rows; checkpointing it makes
-              # each corpus scan exactly ONCE (the frame is read twice
-              # below — totals + ratios) and keeps every downstream
-              # plan flat (kmeans/bpe rationale)
-              .localCheckpoint(eager=True))
-    # corpus totals are the SUMS of the already-aggregated bucket
-    # counts — computed from the model-sized checkpoint (broadcast
-    # 1-row crossJoin), not by re-counting the gram frames
-    tot = joined.agg(F.sum("n_target").alias("__tt"),
-                     F.sum("n_raw").alias("__rt"))
-    pt = ((F.col("n_target") + F.lit(alpha))
-          / (F.col("__tt") + F.lit(alpha * n_buckets)))
-    pr = ((F.col("n_raw") + F.lit(alpha))
-          / (F.col("__rt") + F.lit(alpha * n_buckets)))
-    return (joined.crossJoin(F.broadcast(tot))
-            .select("bucket", "n_target", "n_raw",
-                    (F.log(pt) - F.log(pr)).alias("llr")))
-
-
-def dsir_bucket_llr_by_group(target_grams: DataFrame,
-                             raw_grams: DataFrame,
-                             group_col: str = "source",
-                             n_buckets: int = N_BUCKETS,
-                             alpha: float = ALPHA) -> DataFrame:
-    """Domain-conditional DSIR model (VERDICT r8 #3): one LLR table
-    per raw GROUP (source/shard) against the SHARED target
-    distribution — llr_g = ln(p_target / p_raw_g), where p_raw_g is
-    the proposal distribution fitted WITHIN group g. This is what the
-    Xie et al. recipe becomes on a multi-domain corpus: a gram that is
-    merely common in one source stops inflating (or deflating) scores
-    in every other source, so selection within each domain ranks
-    against that domain's own background.
-
-    ``raw_grams`` must carry ``group_col`` (hashed_gram_buckets'
-    ``carry_cols``). Output (group_col, bucket, n_target, n_raw, llr):
-    n_groups × n_buckets rows — still broadcast-sized for any real
-    source count (1,000 sources × 4096 buckets ≈ 4M rows of ints),
-    and both corpora are still scanned exactly once (the two bucket
-    aggregates are checkpointed model-sized tables; grid, totals and
-    ratios all derive from the checkpoints)."""
-    tc = (target_grams.groupBy("bucket")
-          .agg(F.count("*").alias("n_target"))
-          .localCheckpoint(eager=True))
-    rc = (raw_grams.groupBy(group_col, "bucket")
-          .agg(F.count("*").alias("n_raw"))
-          .localCheckpoint(eager=True))
-    spark = target_grams.sparkSession
-    buckets = spark.range(n_buckets).select(F.col("id").cast("int")
-                                            .alias("bucket"))
-    # groups come from the checkpointed aggregate, not a raw rescan;
-    # the grid crossJoin is model-sized on both sides
-    grid = rc.select(group_col).distinct().crossJoin(buckets)
-    tot_t = tc.agg(F.sum("n_target").alias("__tt"))
-    tot_r = rc.groupBy(group_col).agg(F.sum("n_raw").alias("__rt"))
-    pt = ((F.col("n_target") + F.lit(alpha))
-          / (F.col("__tt") + F.lit(alpha * n_buckets)))
-    pr = ((F.col("n_raw") + F.lit(alpha))
-          / (F.col("__rt") + F.lit(alpha * n_buckets)))
-    return (grid.join(tc, "bucket", "left")
-            .join(rc, [group_col, "bucket"], "left")
-            .select(group_col, "bucket",
-                    F.coalesce("n_target", F.lit(0)).alias("n_target"),
-                    F.coalesce("n_raw", F.lit(0)).alias("n_raw"))
-            .crossJoin(F.broadcast(tot_t))
-            .join(F.broadcast(tot_r), group_col)
-            .select(group_col, "bucket", "n_target", "n_raw",
-                    (F.log(pt) - F.log(pr)).alias("llr")))
-
-
-def dsir_bucket_llr_fused(grams: DataFrame, target_pred: Column,
-                          n_buckets: int = N_BUCKETS,
-                          alpha: float = ALPHA,
-                          weight_col: str | None = None) -> DataFrame:
-    """dsir_bucket_llr from ONE gram frame covering BOTH corpora
-    (r13 optimization round): ``target_pred`` marks the target rows,
-    and a single groupBy(bucket) computes n_target and n_raw together
-    — one corpus-explode job instead of separate target/raw subtrees,
-    with the same exact counts (the corpora partition the frame, so
-    conditional sums equal the per-side counts). Same smoothing, same
-    IEEE divisions, same output schema as dsir_bucket_llr.
-
-    ``weight_col`` (r14): the input may be PRE-AGGREGATED occurrence
-    counts (doc_gram_bucket_counts) instead of raw occurrences — the
-    per-bucket totals are then sums of the exact integer counts,
-    which equal the raw counts exactly, so every LLR double is
-    identical."""
-    w = F.lit(1) if weight_col is None else F.col(weight_col)
-    cnt = (grams.groupBy("bucket")
+    additive smoothing — the DSIR importance model — fitted from ONE
+    occurrence-count frame (doc_gram_bucket_counts) covering BOTH
+    corpora: ``target_pred`` marks the target rows, and a single
+    groupBy(bucket) sums n_occ into n_target and n_raw together (the
+    corpora partition the frame, so the conditional sums are the
+    exact per-side counts). Output (bucket, n_target, n_raw, llr):
+    n_buckets rows, broadcast-sized by construction. Buckets unseen in
+    BOTH corpora still get a row (llr from the smoothing alone) so
+    scoring never drops a feature."""
+    w = F.col("n_occ")
+    cnt = (occ.groupBy("bucket")
            .agg(F.sum(F.when(target_pred, w).otherwise(F.lit(0)))
                 .alias("n_target"),
                 F.sum(F.when(target_pred, F.lit(0)).otherwise(w))
                 .alias("n_raw")))
-    spark = grams.sparkSession
+    spark = occ.sparkSession
     grid = spark.range(n_buckets).select(F.col("id").cast("int")
                                          .alias("bucket"))
     joined = (grid.join(cnt, "bucket", "left")
               .select("bucket",
                       F.coalesce("n_target", F.lit(0)).alias("n_target"),
                       F.coalesce("n_raw", F.lit(0)).alias("n_raw"))
+              # the model is n_buckets rows; checkpointing it reads the
+              # corpus frame exactly ONCE (the model is read twice
+              # below — totals + ratios) and keeps every downstream
+              # plan flat (kmeans/bpe rationale)
               .localCheckpoint(eager=True))
+    # corpus totals are the SUMS of the already-aggregated bucket
+    # counts — computed from the model-sized checkpoint (broadcast
+    # 1-row crossJoin), not by re-counting the corpus
     tot = joined.agg(F.sum("n_target").alias("__tt"),
                      F.sum("n_raw").alias("__rt"))
     pt = ((F.col("n_target") + F.lit(alpha))
@@ -226,35 +142,37 @@ def dsir_bucket_llr_fused(grams: DataFrame, target_pred: Column,
                     (F.log(pt) - F.log(pr)).alias("llr")))
 
 
-def dsir_bucket_llr_by_group_fused(grams: DataFrame, target_pred: Column,
-                                   group_col: str = "source",
-                                   n_buckets: int = N_BUCKETS,
-                                   alpha: float = ALPHA,
-                                   weight_col: str | None = None
-                                   ) -> DataFrame:
-    """dsir_bucket_llr_by_group from ONE gram frame covering both
-    corpora (r13 optimization round): a single groupBy(group, bucket)
-    count feeds the pooled target distribution (sum over target
-    groups) AND every raw group's proposal — one corpus-explode job
-    and one model-sized checkpoint where the split form ran two of
-    each. Counts are exact integers either way, so the LLR doubles
-    are identical. ``grams`` must carry ``group_col``;
-    ``target_pred`` must be a predicate over it.
+def dsir_bucket_llr_by_group(occ: DataFrame, target_pred: Column,
+                             group_col: str = "source",
+                             n_buckets: int = N_BUCKETS,
+                             alpha: float = ALPHA) -> DataFrame:
+    """Domain-conditional DSIR model: one LLR table per raw GROUP
+    (source/shard) against the SHARED target distribution — llr_g =
+    ln(p_target / p_raw_g), p_raw_g fitted WITHIN group g — so a gram
+    merely common in one source stops distorting scores in every
+    other source, and selection within each domain ranks against that
+    domain's own background.
 
-    ``weight_col`` (r14): accept PRE-AGGREGATED occurrence counts
-    (doc_gram_bucket_counts) — per-(group, bucket) totals become sums
-    of exact integer counts, equal to the raw counts exactly."""
-    w = F.count("*") if weight_col is None else F.sum(weight_col)
-    cnt = (grams.groupBy(group_col, "bucket")
-           .agg(w.alias("__c"))
+    Same single-frame fit as dsir_bucket_llr: one groupBy(group,
+    bucket) sum over doc_gram_bucket_counts (``group_col`` carried),
+    checkpointed model-sized, feeds the pooled target distribution
+    (the groups ``target_pred`` marks) AND every raw group's proposal.
+    ``target_pred`` must be a predicate over ``group_col``. Output
+    (group_col, bucket, n_target, n_raw, llr): raw groups × n_buckets
+    rows, broadcast-sized for any real source count (1,000 sources ×
+    4096 buckets ≈ 4M rows of ints)."""
+    cnt = (occ.groupBy(group_col, "bucket")
+           .agg(F.sum("n_occ").alias("__c"))
            .localCheckpoint(eager=True))
     tc = (cnt.filter(target_pred).groupBy("bucket")
           .agg(F.sum("__c").alias("n_target")))
     rc = (cnt.filter(~target_pred)
           .select(group_col, "bucket", F.col("__c").alias("n_raw")))
-    spark = grams.sparkSession
+    spark = occ.sparkSession
     buckets = spark.range(n_buckets).select(F.col("id").cast("int")
                                             .alias("bucket"))
+    # groups come from the checkpointed aggregate, not a corpus
+    # rescan; the grid crossJoin is model-sized on both sides
     grid = rc.select(group_col).distinct().crossJoin(buckets)
     tot_t = tc.agg(F.sum("n_target").alias("__tt"))
     tot_r = rc.groupBy(group_col).agg(F.sum("n_raw").alias("__rt"))
@@ -278,12 +196,12 @@ def doc_gram_bucket_counts(docs: DataFrame, id_col: str = "doc_id",
                            n_buckets: int = N_BUCKETS,
                            carry_cols: tuple = ()) -> DataFrame:
     """hashed_gram_buckets aggregated to (id_col, *carry_cols, bucket,
-    n_occ) — the single-pass seam (r14, VERDICT r13 #5): ONE corpus
-    gram explode feeds BOTH the model fit (re-aggregate n_occ over
-    docs: sums of exact counts are the exact counts) and per-doc
-    scoring (weighted mean over the doc's buckets), so a fit+score
-    pipeline that persists this frame scans and hashes the corpus
-    once instead of once per half. The aggregate's map side runs at
+    n_occ) — the input of both fits and both ``_from_occ`` scorers:
+    ONE corpus gram explode feeds BOTH the model fit (re-aggregate
+    n_occ over docs: sums of exact counts are the exact counts) and
+    per-doc scoring (weighted mean over the doc's buckets), so a
+    fit+score pipeline that persists this frame scans and hashes the
+    corpus once. The aggregate's map side runs at
     full gram width but ships one row per (doc, bucket) — bounded by
     min(doc grams, n_buckets) per doc at any corpus size."""
     grams = hashed_gram_buckets(docs, id_col, text_col, n_buckets,
@@ -292,38 +210,21 @@ def doc_gram_bucket_counts(docs: DataFrame, id_col: str = "doc_id",
             .agg(F.count("*").alias("n_occ")))
 
 
-def dsir_scores_by_group(docs: DataFrame, llr_by_group: DataFrame,
-                         group_col: str = "source",
-                         id_col: str = "doc_id", text_col: str = "text",
-                         n_buckets: int = N_BUCKETS) -> DataFrame:
-    """Score each doc against ITS OWN group's LLR model: mean llr_g
-    over the doc's hashed-gram occurrences, rounded to 5 decimals LAST
-    (dsir_scores' determinism protocol). The group rides the explode
-    (carry_cols) and the model join is a broadcast on (group, bucket)
-    — still one doc-keyed shuffle, no grams⋈docs re-join. Output
-    (id_col, group_col, n_grams, score)."""
-    grams = hashed_gram_buckets(docs, id_col, text_col, n_buckets,
-                                carry_cols=(group_col,))
-    model = F.broadcast(llr_by_group.select(group_col, "bucket", "llr"))
-    return (grams.join(model, [group_col, "bucket"])
-            .groupBy(id_col, group_col)
-            .agg(F.count("*").alias("n_grams"),
-                 F.round(F.avg("llr"), 5).alias("score")))
-
-
 def dsir_scores_by_group_from_occ(occ: DataFrame,
                                   llr_by_group: DataFrame,
                                   group_col: str = "source",
                                   id_col: str = "doc_id") -> DataFrame:
-    """dsir_scores_by_group from the PRE-AGGREGATED occurrence counts
-    (doc_gram_bucket_counts) instead of a fresh gram explode — the
-    scoring half of the r14 single-pass pipeline. n_grams is the sum
-    of exact integer counts (= the occurrence count exactly); the
-    mean LLR becomes the weighted form Σ(llr·n_occ)/Σ(n_occ), whose
-    double differs from per-occurrence repeated addition only at the
-    summation-order ulp level the round-5-last protocol already
-    absorbs (the same argument that lets the two engines' ln()/sum
-    orders differ). Output (id_col, group_col, n_grams, score)."""
+    """Score each doc against ITS OWN group's LLR model
+    (dsir_bucket_llr_by_group) from the pre-aggregated occurrence
+    counts (doc_gram_bucket_counts carrying ``group_col``); the model
+    join is a broadcast on (group, bucket), one doc-keyed shuffle.
+    n_grams is the sum of exact integer counts (= the occurrence
+    count exactly); the mean LLR is the weighted form
+    Σ(llr·n_occ)/Σ(n_occ), whose double differs from per-occurrence
+    repeated addition (dsir_scores) only at the summation-order ulp
+    level the round-5-last protocol already absorbs (the same
+    argument that lets the two engines' ln()/sum orders differ).
+    Output (id_col, group_col, n_grams, score)."""
     model = F.broadcast(llr_by_group.select(group_col, "bucket", "llr"))
     return (occ.join(model, [group_col, "bucket"])
             .groupBy(id_col, group_col)

@@ -89,7 +89,7 @@ def char_grams_col(text: Column, n: int = NB_N) -> Column:
     doc. Fine for one-off column use; corpus-wide explodes use
     with_char_grams, which hoists the normalized string into a real
     column (r13, same lambda-recompute class as dedup's
-    word_shingles)."""
+    _shingles_from_toks)."""
     c = F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
     ln = F.length(c)
     return F.when(ln >= n,

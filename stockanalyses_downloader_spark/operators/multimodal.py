@@ -446,7 +446,7 @@ def payload_cdc_chunks(assets: DataFrame, window: int = 16,
     # sliding-window scan inside ``cuts`` re-ran once per CHUNK
     # (O(len²/mean_chunk) md5 windows per asset). A non-cheap alias
     # referenced more than once survives CollapseProject, so the cut
-    # scan runs once per row (the word_shingles/char_grams
+    # scan runs once per row (the shingle/char_grams
     # lambda-recompute class).
     bounds = F.col("__bounds")
     chunks = F.transform(

@@ -171,10 +171,7 @@ def hdr_build(values: DataFrame, value_col: str,
     """Histogram grid (o, c): at most m*64 rows no matter the corpus
     size. Merging two grids is UNION ALL + groupBy-sum — same
     re-aggregation contract as countmin_merge."""
-    return (values
-            .filter(F.floor(F.col(value_col) * HDR_SCALE) >= 1)
-            .select(hdr_bucket(F.col(value_col), m).alias("o"))
-            .groupBy("o").agg(F.count("*").alias("c")))
+    return hdr_build_grouped(values, [], value_col, m)
 
 
 def hdr_merge(*grids: DataFrame) -> DataFrame:

@@ -89,7 +89,7 @@ def chunk_documents(docs: DataFrame, window: int = 64, stride: int = 48,
         raise ValueError(f"need 0 < stride <= window, got {stride}/{window}")
     # tokens BOUND as a real column (r13): inline, the lambda's slice
     # re-evaluated the split once per CHUNK (lambda bodies sit outside
-    # runtime subexpression elimination — the word_shingles /
+    # runtime subexpression elimination — the shingle /
     # char_grams lambda-recompute class); a non-cheap alias referenced
     # more than once survives CollapseProject, so the split runs once
     # per row

@@ -554,10 +554,16 @@ GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_linestatus), ())
 
 
 def lineitem_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS via Spark SQL (same Catalyst Expand
-    operator as rollup/cube; one shuffle for all three groupings)."""
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_GSETS_SQL)
+    """Explicit GROUPING SETS (same Catalyst Expand operator as
+    rollup/cube; one shuffle for all three groupings). Built on the
+    DataFrame, not a temp view, so concurrent runs share no catalog
+    state; the optimized plan equals that of the oracle SQL."""
+    li = _t(spark, sf_dir, "lineitem")
+    return (li.groupingSets([["l_returnflag", "l_linestatus"],
+                             ["l_linestatus"], []],
+                            "l_returnflag", "l_linestatus")
+            .agg(dsum(F.col("l_quantity")).alias("sum_qty"),
+                 F.count("*").alias("n_items")))
 
 
 # --- ranking window family -------------------------------------------------

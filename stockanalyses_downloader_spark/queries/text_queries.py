@@ -3236,17 +3236,16 @@ def dsir_selection_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import dsir
     d = _docs(spark, sf_dir)
     is_target = F.col("source").isin(list(_DSIR_TARGET_SOURCES))
-    # single corpus gram pass (r14, VERDICT r13 #5): the explode is
-    # aggregated once to (doc, source, bucket, n_occ) and PERSISTED;
-    # the fit's model-sized checkpoint materializes that cache as a
-    # side effect, and scoring reads it back instead of re-running
-    # the split+md5 explode (the r13 shape's second corpus pass).
-    # Fit counts are sums of exact integers (identical LLR doubles);
-    # the scoring mean moves to its weighted form, absorbed by the
-    # round-5-last protocol (see dsir_scores_from_occ).
+    # single corpus gram pass: the explode is aggregated once to
+    # (doc, source, bucket, n_occ) and PERSISTED; the fit's
+    # model-sized checkpoint materializes that cache as a side
+    # effect, and scoring reads it back instead of re-running the
+    # split+md5 explode. Fit counts are sums of exact integers; the
+    # scoring mean is the weighted form, absorbed by the round-5-last
+    # protocol (see dsir_scores_from_occ).
     occ = tracked_persist(
         dsir.doc_gram_bucket_counts(d, carry_cols=("source",)))
-    llr = dsir.dsir_bucket_llr_fused(occ, is_target, weight_col="n_occ")
+    llr = dsir.dsir_bucket_llr(occ, is_target)
     scored = (dsir.dsir_scores_from_occ(occ.filter(~is_target), llr)
               .join(d.select("doc_id", "source"), "doc_id"))
     sel = dsir.dsir_select(scored, _DSIR_KEEP_FRACTION, ["source"])
@@ -3334,17 +3333,14 @@ def dsir_selection_by_source(spark: SparkSession,
     from ..operators import dsir
     d = _docs(spark, sf_dir)
     is_target = F.col("source").isin(list(_DSIR_TARGET_SOURCES))
-    # single corpus gram pass (r14, VERDICT r13 #5): one explode,
-    # aggregated to (doc, source, bucket, n_occ) and persisted; the
-    # grouped fit's checkpoint materializes the cache, scoring reads
-    # it back — the r13 shape re-exploded the raw corpus for scoring.
-    # Fit counts stay exact (sums of integer counts); the scoring
-    # mean moves to its weighted form under the round-5-last protocol
-    # (see dsir_scores_by_group_from_occ).
+    # single corpus gram pass, as in dsir_selection_report: one
+    # explode, aggregated to (doc, source, bucket, n_occ) and
+    # persisted; the grouped fit's checkpoint materializes the cache
+    # and scoring reads it back (see dsir_scores_by_group_from_occ).
     occ = tracked_persist(
         dsir.doc_gram_bucket_counts(d, carry_cols=("source",)))
-    llr = dsir.dsir_bucket_llr_by_group_fused(
-        occ, is_target, group_col="source", weight_col="n_occ")
+    llr = dsir.dsir_bucket_llr_by_group(occ, is_target,
+                                        group_col="source")
     scored = dsir.dsir_scores_by_group_from_occ(
         occ.filter(~is_target), llr, group_col="source")
     sel = dsir.dsir_select(scored, _DSIR_KEEP_FRACTION, ["source"])

@@ -18,7 +18,6 @@ driver.
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
 from typing import Callable, Iterator, Optional
@@ -182,33 +181,6 @@ def publish_with_outcomes(messages: DataFrame,
             client.close()
 
     return messages.mapInPandas(_publish, f"{id_col} long, publish_ok boolean")
-
-
-def write_partitioned(df: DataFrame, path: str,
-                      partition_cols: list[str],
-                      mode: str = "overwrite") -> None:
-    """Storage-layout sink: directory-partitioned parquet so downstream
-    scans prune partitions (the 100 TB layout — e.g. candles by
-    bucket date, messages by exchange/date). Readers filtering on the
-    partition columns never touch excluded directories."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def write_bucketed(df: DataFrame, table: str, bucket_col: str,
-                   n_buckets: int = 16, sort_col: str | None = None,
-                   mode: str = "overwrite") -> None:
-    """Bucketed table sink: pre-shuffles data into ``n_buckets`` hash
-    buckets on the join/agg key so later equi-joins and aggregations on
-    that key are exchange-free (both sides read co-located buckets).
-
-    This is the 100 TB fact-⋈-fact answer: pay the shuffle once at
-    write time, never again per query. Requires saveAsTable (bucket
-    metadata lives in the catalog)."""
-    writer = (df.write.mode(mode).format("parquet")
-              .bucketBy(n_buckets, bucket_col))
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    writer.saveAsTable(table)
 
 
 def parquet_sink(df: DataFrame, path: str, checkpoint: str,

@@ -16,6 +16,19 @@ def _docs(spark, rows):
                                        "text string")
 
 
+def _occ(target, raw, n_buckets=dsir.N_BUCKETS):
+    """One corpus frame (target + raw) as per-(doc, source, bucket)
+    occurrence counts, the input every DSIR fit reads; the target rows
+    are the ones whose source is "t"."""
+    return dsir.doc_gram_bucket_counts(target.unionByName(raw),
+                                       n_buckets=n_buckets,
+                                       carry_cols=("source",))
+
+
+def _is_target():
+    return F.col("source") == "t"
+
+
 def test_target_like_docs_score_higher(spark):
     target = _docs(spark, [
         (1, "t", "alpha beta gamma delta alpha beta"),
@@ -26,8 +39,7 @@ def test_target_like_docs_score_higher(spark):
         (11, "r", "zonk quux blarg frobnicate wibble"),  # off-target
         (12, "r", "alpha beta zonk quux"),            # mixed
     ])
-    llr = dsir.dsir_bucket_llr(dsir.hashed_gram_buckets(target),
-                               dsir.hashed_gram_buckets(raw))
+    llr = dsir.dsir_bucket_llr(_occ(target, raw), _is_target())
     got = {r["doc_id"]: r["score"] for r in
            dsir.dsir_scores(raw, llr).collect()}
     assert got[10] > got[12] > got[11]
@@ -69,8 +81,7 @@ def test_null_text_docs_score_like_empty(spark):
     target = _docs(spark, [(1, "t", "alpha beta")])
     raw = _docs(spark, [(10, "r", None), (11, "r", ""), (12, "r", "   "),
                         (13, "r", "alpha beta")])
-    llr = dsir.dsir_bucket_llr(dsir.hashed_gram_buckets(target),
-                               dsir.hashed_gram_buckets(raw))
+    llr = dsir.dsir_bucket_llr(_occ(target, raw), _is_target())
     got = {r["doc_id"]: (r["n_grams"], r["score"]) for r in
            dsir.dsir_scores(raw, llr).collect()}
     assert set(got) == {10, 11, 12, 13}          # nobody dropped
@@ -95,11 +106,10 @@ def test_per_source_model_selects_differently_from_pooled(spark):
         (20, "B", "bobcat"), (21, "B", "bobcat"),
         (22, "B", "bobcat"), (23, "B", "aardvark"),
     ])
-    tg = dsir.hashed_gram_buckets(target)
-    rg = dsir.hashed_gram_buckets(raw)
+    occ = _occ(target, raw)
     # pooled: raw counts are g1 x4 == g2 x4, target prefers g1
     # => within A the g1-docs outrank doc 11; keep floor(4*.25)=1 => 10
-    pooled = dsir.dsir_scores(raw, dsir.dsir_bucket_llr(tg, rg))
+    pooled = dsir.dsir_scores(raw, dsir.dsir_bucket_llr(occ, _is_target()))
     pooled = pooled.join(raw.select("doc_id", "source"), "doc_id")
     kept_pooled = {r["doc_id"] for r in
                    dsir.dsir_select(pooled, 0.25, ["source"]).collect()
@@ -107,9 +117,9 @@ def test_per_source_model_selects_differently_from_pooled(spark):
     assert kept_pooled == {10}
     # per-source: inside A, p_rawA(g1)=3/4 >> p_target(g1) => llr_A(g1)
     # < 0 < llr_A(g2); the rare-in-A g2 doc wins the same slot
-    rg_src = dsir.hashed_gram_buckets(raw, carry_cols=("source",))
-    by_src = dsir.dsir_scores_by_group(
-        raw, dsir.dsir_bucket_llr_by_group(tg, rg_src))
+    by_src = dsir.dsir_scores_by_group_from_occ(
+        occ.filter(~_is_target()),
+        dsir.dsir_bucket_llr_by_group(occ, _is_target()))
     kept_by_src = {r["doc_id"] for r in
                    dsir.dsir_select(by_src, 0.25, ["source"]).collect()
                    if r["kept"] and r["source"] == "A"}
@@ -122,10 +132,8 @@ def test_grouped_model_is_groups_x_buckets(spark):
     target = _docs(spark, [(1, "t", "a b c")])
     raw = _docs(spark, [(2, "A", "x y"), (3, "B", "p q"),
                         (4, "C", "r s")])
-    llr = dsir.dsir_bucket_llr_by_group(
-        dsir.hashed_gram_buckets(target),
-        dsir.hashed_gram_buckets(raw, carry_cols=("source",)),
-        n_buckets=32)
+    llr = dsir.dsir_bucket_llr_by_group(_occ(target, raw, n_buckets=32),
+                                        _is_target(), n_buckets=32)
     assert llr.count() == 3 * 32
     assert llr.filter(F.col("llr").isNull()).count() == 0
 
@@ -136,8 +144,7 @@ def test_llr_model_is_bucket_bounded(spark):
     corpus size."""
     target = _docs(spark, [(1, "t", "a b c d e f g h i j")])
     raw = _docs(spark, [(2, "r", "k l m n o p q r s t u v w x y z")])
-    llr = dsir.dsir_bucket_llr(dsir.hashed_gram_buckets(target),
-                               dsir.hashed_gram_buckets(raw),
-                               n_buckets=64)
+    llr = dsir.dsir_bucket_llr(_occ(target, raw, n_buckets=64),
+                               _is_target(), n_buckets=64)
     assert llr.count() == 64
     assert llr.filter(F.col("llr").isNull()).count() == 0

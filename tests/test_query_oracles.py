@@ -17,6 +17,7 @@ model memos (e.g. the BPE merge cache) tolerate double-compute."""
 
 from __future__ import annotations
 
+import hashlib
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
@@ -61,6 +62,15 @@ def _run_batch(spark, sf_dir, names):
 @pytest.mark.parametrize("group", range(_N_GROUPS))
 def test_query_vs_oracle(spark, sf_dir, group):
     _run_batch(spark, sf_dir, _NAMES[group::_N_GROUPS])
+
+
+def test_registry_order_is_pinned():
+    """The driver reads the first 50 registry names as its correctness
+    window, so the order of all 190 names is part of the contract."""
+    names = list(all_queries())
+    assert len(names) == 190
+    assert hashlib.sha256("\n".join(names).encode()).hexdigest() == (
+        "24c9ccaee48a5d0594da328285e470e88e9e07f6f7171935bee9d9f4d8dddbc9")
 
 
 def test_entry_smoke(spark):

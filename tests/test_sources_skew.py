@@ -6,7 +6,8 @@ from pyspark.sql import functions as F
 
 from stockanalyses_downloader_spark.operators import skew
 from stockanalyses_downloader_spark.queries.helpers import dsum
-from stockanalyses_downloader_spark.sources import jobs_feed, synthetic
+from stockanalyses_downloader_spark.sources import (bucketing, jobs_feed,
+                                                    synthetic)
 from stockanalyses_downloader_spark.streaming import sinks
 
 SF = "/root/testdata/sf0.001"
@@ -78,7 +79,7 @@ def test_write_partitioned_prunes(spark, tmp_path):
 
     t = pipeline.validate_http(synthetic.ticks(spark, SF))
     path = str(tmp_path / "by_exchange")
-    sinks.write_partitioned(t, path, ["exchange"])
+    bucketing.write_partitioned(t, path, ["exchange"])
 
     import os
     assert sorted(d for d in os.listdir(path) if d.startswith("exchange=")) == \
@@ -100,8 +101,10 @@ def test_bucketed_join_is_exchange_free(spark, tmp_path):
     spark.sql("DROP TABLE IF EXISTS b_customer")
     orders = load_table(spark, SF, "orders")
     customer = load_table(spark, SF, "customer")
-    sinks.write_bucketed(orders, "b_orders", "o_custkey", 8)
-    sinks.write_bucketed(customer, "b_customer", "c_custkey", 8)
+    bucketing.write_bucketed(orders, "b_orders", ["o_custkey"],
+                             n_buckets=8)
+    bucketing.write_bucketed(customer, "b_customer", ["c_custkey"],
+                             n_buckets=8)
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:

@@ -247,11 +247,23 @@ def test_stateful_idle_state_eviction(spark, tmp_path):
             # assertions need and stop the query then: a WRONG result
             # (e.g. state survived eviction -> n_ticks 7) never
             # satisfies the predicate, so failure still surfaces —
-            # after the same 120 s ceiling as before.
+            # after the same 120 s ceiling as before. Once it matches,
+            # let one more micro-batch complete AFTER the batch that
+            # wrote the matching rows, so a late wrong update (e.g.
+            # ('aaa', 7)) lands in the sink before the stop.
+            def last_batch():
+                return (q.lastProgress or {}).get("batchId", -1)
+
             deadline = time.time() + 120
             while q.isActive and time.time() < deadline:
                 if done(spark.sql(
                         f"SELECT pair, n_ticks FROM {name}").collect()):
+                    # the matching rows came from a batch no older
+                    # than last_batch() + 1; wait past it
+                    settled = last_batch() + 2
+                    while (q.isActive and time.time() < deadline
+                           and last_batch() < settled):
+                        time.sleep(0.2)
                     break
                 time.sleep(0.5)
         q.stop()
@@ -1083,8 +1095,9 @@ def test_streaming_dsir_scoring_matches_batch(spark, tmp_path):
         .write.parquet(src)
     raw = spark.read.parquet(src)
 
-    llr = dsir.dsir_bucket_llr(dsir.hashed_gram_buckets(target),
-                               dsir.hashed_gram_buckets(raw))
+    # one corpus frame; the target docs are the ids below 100
+    occ = dsir.doc_gram_bucket_counts(target.unionByName(raw))
+    llr = dsir.dsir_bucket_llr(occ, F.col("doc_id") < 100)
     llr = llr.localCheckpoint(eager=True)   # freeze the model
 
     batch = {(r["doc_id"], r["n_grams"], r["score"])

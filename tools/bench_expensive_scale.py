@@ -349,10 +349,13 @@ def bench_trained_ivf(spark, factor: int) -> dict:
 
 def bench_dsir(spark, factor: int) -> dict:
     """DSIR fit+score at a blown-up corpus (disjoint-block copies:
-    same target sources, factor-1x more raw docs to model and score).
-    The model is a fixed 4096-row grid whatever the corpus, so wall
-    must track the three corpus scans (target grams, raw grams, raw
-    scoring) — linear, never corpus^2."""
+    same target sources, factor-1x more raw docs to model and score),
+    in the registry query's single-pass shape: one corpus gram explode
+    aggregated to per-(doc, bucket) counts and persisted; the fit and
+    the scoring both read it. The model is a fixed 4096-row grid
+    whatever the corpus, so wall must track that one corpus pass —
+    linear, never corpus^2."""
+    from stockanalyses_downloader_spark.caching import tracked_persist
     from stockanalyses_downloader_spark.operators import dsir
     from stockanalyses_downloader_spark.queries.text_queries import (
         _DSIR_KEEP_FRACTION, _DSIR_TARGET_SOURCES)
@@ -360,10 +363,10 @@ def bench_dsir(spark, factor: int) -> dict:
     n = corpus.count()
     t0 = time.perf_counter()
     is_target = F.col("source").isin(list(_DSIR_TARGET_SOURCES))
-    target, raw = corpus.filter(is_target), corpus.filter(~is_target)
-    llr = dsir.dsir_bucket_llr(dsir.hashed_gram_buckets(target),
-                               dsir.hashed_gram_buckets(raw))
-    scored = (dsir.dsir_scores(raw, llr)
+    occ = tracked_persist(
+        dsir.doc_gram_bucket_counts(corpus, carry_cols=("source",)))
+    llr = dsir.dsir_bucket_llr(occ, is_target)
+    scored = (dsir.dsir_scores_from_occ(occ.filter(~is_target), llr)
               .join(corpus.select("doc_id", "source"), "doc_id"))
     out = dsir.dsir_select(scored, _DSIR_KEEP_FRACTION, ["source"])
     n_out = out.filter(F.col("kept")).count()
@@ -373,12 +376,14 @@ def bench_dsir(spark, factor: int) -> dict:
 
 
 def bench_dsir_by_source(spark, factor: int) -> dict:
-    """Domain-conditional DSIR at a blown-up corpus (r9): same
-    disjoint-block axis as bench_dsir, but the model is now
-    sources × 4096 rows — the copies ADD sources, so the model grows
-    with the blow-up factor while staying broadcast-sized (30x = ~90
-    sources = 368k small rows); scoring stays one doc-keyed shuffle.
-    Wall should track the gram scans, linear like the pooled curve."""
+    """Domain-conditional DSIR at a blown-up corpus: same
+    disjoint-block axis and single-pass shape as bench_dsir, but the
+    model is sources × 4096 rows — the copies ADD sources, so the
+    model grows with the blow-up factor while staying broadcast-sized
+    (30x = ~90 sources = 368k small rows); scoring stays one
+    doc-keyed shuffle. Wall should track the corpus gram pass, linear
+    like the pooled curve."""
+    from stockanalyses_downloader_spark.caching import tracked_persist
     from stockanalyses_downloader_spark.operators import dsir
     from stockanalyses_downloader_spark.queries.text_queries import (
         _DSIR_KEEP_FRACTION, _DSIR_TARGET_SOURCES)
@@ -386,12 +391,11 @@ def bench_dsir_by_source(spark, factor: int) -> dict:
     n = corpus.count()
     t0 = time.perf_counter()
     is_target = F.col("source").isin(list(_DSIR_TARGET_SOURCES))
-    target, raw = corpus.filter(is_target), corpus.filter(~is_target)
-    llr = dsir.dsir_bucket_llr_by_group(
-        dsir.hashed_gram_buckets(target),
-        dsir.hashed_gram_buckets(raw, carry_cols=("source",)),
-        group_col="source")
-    scored = dsir.dsir_scores_by_group(raw, llr, group_col="source")
+    occ = tracked_persist(
+        dsir.doc_gram_bucket_counts(corpus, carry_cols=("source",)))
+    llr = dsir.dsir_bucket_llr_by_group(occ, is_target, group_col="source")
+    scored = dsir.dsir_scores_by_group_from_occ(
+        occ.filter(~is_target), llr, group_col="source")
     out = dsir.dsir_select(scored, _DSIR_KEEP_FRACTION, ["source"])
     n_out = out.filter(F.col("kept")).count()
     return {"query": "dsir_selection_by_source", "factor": factor,
