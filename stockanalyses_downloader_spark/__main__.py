@@ -42,17 +42,6 @@ def main(argv: list[str] | None = None) -> int:
     parser.add_argument("--target-bytes", type=int,
                         default=128 * 1024 * 1024,
                         help="compaction bin target (default 128 MiB)")
-    parser.add_argument("--maintenance-swap", default="auto",
-                        choices=["auto", "exchange", "rename"],
-                        help="directory-swap strategy for --compact: "
-                             "auto = try atomic renameat2(RENAME_"
-                             "EXCHANGE), fall back to two renames; "
-                             "exchange = require the atomic exchange "
-                             "(fail where the kernel/fs/sandbox "
-                             "refuses it — guarantees readers never "
-                             "see the table path missing); rename = "
-                             "force the portable two-rename protocol "
-                             "(microseconds retryable ENOENT window)")
     parser.add_argument("--explain", action="store_true",
                         help="print the physical plan instead of running")
     parser.add_argument("-n", "--show-rows", type=int, default=20)
@@ -70,8 +59,7 @@ def main(argv: list[str] | None = None) -> int:
         spark = get_session("cli:compact")
         try:
             stats = compact_parquet(spark, args.compact,
-                                    target_bytes=args.target_bytes,
-                                    swap_mode=args.maintenance_swap)
+                                    target_bytes=args.target_bytes)
         except ValueError as exc:   # missing/empty table dir: same
             print(exc, file=sys.stderr)  # error surface as unknown -q
             return 2

@@ -21,23 +21,14 @@ Scale notes:
   from a thread pool (``parallelism``). Path-ordered packing
   preserves the rough temporal/clustering order streaming appends
   already have, so min/max pruning keeps working after compaction.
-- Crash safety is the repo's temp+rename protocol (forget.py,
-  ivm.py): all output lands in ``<path>.__tmp-<token>``, the swap is
-  two renames, and ``sweep_crash_artifacts`` restores a table whose
-  only copy is stranded in ``__old-*`` by a crash mid-swap.
+- Crash safety is the one table-swap module, ``sources.swap``: all
+  output lands in a staging dir that is swapped in atomically, and
+  ``sweep_crash_artifacts`` restores a table whose only copy a crash
+  stranded mid-swap. The only compaction-specific steps are the
+  planned-input manifest salvage and the late-append carry.
 
 The reference has no table-maintenance surface (it appends rows to a
 DB, main.py:436-470); this operator exists for the 100 TB mandate.
-
-Relation to ``sources.bucketing.compact_parquet`` (the older, simpler
-sibling): that one is a one-shot REWRITE — src -> dst copy through a
-full ``repartition(n)`` shuffle that round-robins rows for perfectly
-even output files (and destroys any clustering). This module is the
-MAINTENANCE path: in place, atomic, crash-recoverable, per-partition,
-shuffle-free (only multi-file bins are even read), order-preserving —
-what you run repeatedly against a live table. Use the bucketing one
-when you want a fresh evenly-sized copy (e.g. before publishing a
-snapshot); use this one to keep a growing table healthy.
 """
 
 from __future__ import annotations
@@ -51,6 +42,8 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
+
+from ..sources import swap
 
 
 @dataclass(frozen=True)
@@ -114,38 +107,23 @@ def _manifest_path(base: str, token: str) -> str:
 
 
 def sweep_crash_artifacts(path: str) -> None:
-    """Recover from a compaction (or any swap-protocol) crash: if the
-    table path is missing and an ``__old-*`` backup exists, restore
-    the backup — never delete the only surviving copy. Stale
-    ``__tmp-*``/``__old-*`` dirs are garbage-collected only when the
-    table path exists (same contract as forget.execute_forget's
-    sweep) — and BEFORE deleting one, any data file in it that is not
-    in that run's planned-input manifest is carried into the live
-    table (ADVICE r8): a crash between the swap and the late-append
-    carry strands a concurrent writer's COMMITTED file inside the
-    displaced dir, and deleting it unconditionally would lose
-    committed data. A stale dir that still CONTAINS its manifest is
-    pre-swap staging (compacted duplicates of live data) and is
-    deleted whole, never carried — carrying it would double rows."""
+    """Recover from a compaction (or any swap) crash with
+    ``swap.recover``: a table whose only copy is stranded in
+    ``__old-*`` is restored, and stale ``__tmp-*``/``__old-*`` dirs
+    are garbage-collected only when the table path exists. BEFORE a
+    stale dir is deleted, any data file in it that is not in that
+    run's planned-input manifest is carried into the live table
+    (ADVICE r8): a crash between the swap and the late-append carry
+    strands a concurrent writer's COMMITTED file inside the displaced
+    dir, and deleting it unconditionally would lose committed data.
+    A stale dir that still CONTAINS its manifest is pre-swap staging
+    (compacted duplicates of live data) and is deleted whole, never
+    carried — carrying it would double rows."""
     base = path.rstrip("/")
-    parent, name = os.path.dirname(base), os.path.basename(base)
-    if not os.path.isdir(parent or "."):
-        return
-    entries = [e for e in os.listdir(parent or ".")
-               if e.startswith((f"{name}.__tmp-", f"{name}.__old-"))]
-    if not os.path.exists(base):
-        olds = sorted(e for e in entries
-                      if e.startswith(f"{name}.__old-"))
-        if olds:
-            os.rename(os.path.join(parent, olds[0]), base)
-            entries.remove(olds[0])
-        else:
-            # no backup: leave __tmp-* alone (may be a complete copy)
-            return
     swept_tokens = set()
-    for entry in entries:
-        stale = os.path.join(parent, entry)
-        token = entry.rsplit("-", 1)[-1]
+
+    def salvage(stale: str) -> None:
+        token = stale.rsplit("-", 1)[-1]
         swept_tokens.add(token)
         manifest = _manifest_path(base, token)
         if (os.path.isfile(manifest)
@@ -158,7 +136,9 @@ def sweep_crash_artifacts(path: str) -> None:
             _carry_late_appends(stale, base, planned)
             with contextlib.suppress(FileNotFoundError):
                 os.remove(manifest)
-        shutil.rmtree(stale, ignore_errors=True)
+
+    if not swap.recover(base, salvage):
+        return
     # a crash between the displaced-dir rmtree and the manifest
     # cleanup leaves an orphan manifest in the live dir — harmless to
     # scans (underscore-hidden) but garbage. Only GC manifests whose
@@ -168,42 +148,11 @@ def sweep_crash_artifacts(path: str) -> None:
     # entry carries its token) — deleting it would make that otherwise
     # successful run fail its own post-swap cleanup, and worse, strand
     # its salvage breadcrumb if it crashes mid-swap.
-    if os.path.isdir(base):
-        for f in os.listdir(base):
-            if (f.startswith("_compaction-planned-")
-                    and f.rsplit("-", 1)[-1] in swept_tokens):
-                with contextlib.suppress(FileNotFoundError):
-                    os.remove(os.path.join(base, f))
-
-
-def _exchange_dirs(a: str, b: str) -> bool:
-    """Atomically SWAP two directories via Linux ``renameat2(...,
-    RENAME_EXCHANGE)`` — both paths exist before and after, so a
-    concurrent reader listing the table path can never observe it
-    missing (the two-rename fallback has an ENOENT window between its
-    renames). Returns False when the syscall/filesystem doesn't
-    support exchange (non-Linux, old kernel, some network mounts) —
-    callers fall back to the two-rename protocol."""
-    import ctypes
-    import ctypes.util
-    try:
-        libc = ctypes.CDLL(ctypes.util.find_library("c") or "libc.so.6",
-                           use_errno=True)
-        renameat2 = libc.renameat2
-    except (OSError, AttributeError):
-        return False
-    AT_FDCWD = -100
-    RENAME_EXCHANGE = 2
-    rc = renameat2(AT_FDCWD, os.fsencode(a), AT_FDCWD, os.fsencode(b),
-                   RENAME_EXCHANGE)
-    # ANY failure falls back to the always-safe two-rename protocol
-    # (ADVICE r8): seccomp-filtered and otherwise restricted
-    # environments commonly return EPERM/EACCES from blocked
-    # renameat2, and hard-failing there would break compact_parquet
-    # where the pre-r8 path worked fine. The expected capability
-    # errnos (EINVAL/ENOSYS/ENOTSUP/EXDEV) are the common case; the
-    # rest are merely unexpected, not unrecoverable.
-    return rc == 0
+    for f in os.listdir(base):
+        if (f.startswith("_compaction-planned-")
+                and f.rsplit("-", 1)[-1] in swept_tokens):
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(os.path.join(base, f))
 
 
 def _carry_late_appends(old_root: str, new_root: str,
@@ -278,8 +227,7 @@ _pre_swap_hook = None
 
 def compact_parquet(spark: SparkSession, path: str,
                     target_bytes: int = 128 * 1024 * 1024,
-                    parallelism: int = 4,
-                    swap_mode: str = "auto") -> dict[str, int]:
+                    parallelism: int = 4) -> dict[str, int]:
     """Compact a parquet directory to ~``target_bytes`` files.
 
     Single-file bins are NOT rewritten (their bytes are already
@@ -295,11 +243,11 @@ def compact_parquet(spark: SparkSession, path: str,
 
     * Reader: sees the OLD table or the NEW table, never a half-
       compacted mix — all rewrites land in a staging dir and become
-      visible through one directory swap. On Linux the swap is a
-      single atomic ``renameat2(RENAME_EXCHANGE)``, so the path never
-      even transiently disappears; on filesystems without exchange
-      the two-rename fallback has a microseconds ENOENT window a
-      reader must treat as retryable (the pre-r8 behavior). A reader
+      visible through one directory swap (``sources.swap``). On Linux
+      the swap is a single atomic ``renameat2(RENAME_EXCHANGE)``, so
+      the path never even transiently disappears; where exchange is
+      refused the two-rename fallback has a microseconds ENOENT
+      window a reader must treat as retryable. A reader
       holding open file handles keeps reading its snapshot either way
       (POSIX semantics).
     * Writer: a file COMMITTED into the table during the compaction
@@ -328,15 +276,6 @@ def compact_parquet(spark: SparkSession, path: str,
       unplanned (i.e. late-append) data file out of the stranded
       displaced dir into the live table before garbage-collecting it.
 
-    ``swap_mode`` pins the swap strategy explicitly (the CLI's
-    ``--maintenance-swap``): ``"auto"`` tries the atomic
-    ``renameat2(RENAME_EXCHANGE)`` and falls back to two renames;
-    ``"exchange"`` requires the atomic exchange (raises where the
-    kernel/filesystem/sandbox refuses it — for operators who need the
-    no-ENOENT-window reader guarantee); ``"rename"`` forces the
-    portable two-rename protocol (for filesystems where a failing
-    renameat2 probe itself is noisy, e.g. seccomp-audited hosts).
-
     Returns {"files_before", "files_after", "bins_rewritten",
     "bytes_total", "late_appends_carried"}. Idempotent AND cheap when
     idempotent: if no bin holds more than one file there is nothing to
@@ -346,9 +285,6 @@ def compact_parquet(spark: SparkSession, path: str,
     proportional to churn). Single-file bins that ride along a real
     rewrite are carried by hardlink when the filesystem allows it (the
     local analogue of a metadata-only move; falls back to copy)."""
-    if swap_mode not in ("auto", "exchange", "rename"):
-        raise ValueError(f"swap_mode must be auto|exchange|rename, "
-                         f"got {swap_mode!r}")
     sweep_crash_artifacts(path)
     base = path.rstrip("/")
     files = list_data_files(base)
@@ -373,8 +309,8 @@ def compact_parquet(spark: SparkSession, path: str,
                 "bins_rewritten": 0, "late_appends_carried": 0,
                 "bytes_total": sum(sz for _, sz in files)}
     planned = {os.path.relpath(f, base) for f, _sz in files}
-    token = uuid.uuid4().hex[:8]
-    tmp = f"{base}.__tmp-{token}"
+    tmp = swap.stage(base)
+    token = tmp.rsplit("-", 1)[-1]
     os.makedirs(tmp)
 
     def run_bin(rel: str, b: CompactionBin) -> None:
@@ -418,24 +354,10 @@ def compact_parquet(spark: SparkSession, path: str,
     # them from its first visible instant.
     carried = _pre_swap_carry(base, tmp, planned)
 
-    # Swap. Preferred: one atomic exchange (base <-> tmp) — readers
-    # never see the path missing; the displaced old content ends up
-    # AT the tmp path. Fallback: the two-rename protocol with its
-    # documented retryable ENOENT window.
-    if swap_mode != "rename" and _exchange_dirs(base, tmp):
-        displaced = tmp
-    elif swap_mode == "exchange":
-        raise OSError(
-            f"swap_mode='exchange' but renameat2(RENAME_EXCHANGE) is "
-            f"unavailable for {base!r}; rerun with auto or rename")
-    else:
-        old_dir = f"{base}.__old-{token}"
-        os.rename(base, old_dir)
-        os.rename(tmp, base)
-        displaced = old_dir
-    # anything committed between the pre-swap carry and the swap
-    carried += _carry_late_appends(displaced, base, planned)
-    shutil.rmtree(displaced, ignore_errors=True)
+    # Swap, then carry anything committed between the pre-swap carry
+    # and the swap out of the displaced copy before it is deleted.
+    carried += swap.swap_in(
+        base, tmp, lambda old: _carry_late_appends(old, base, planned))
     # missing_ok (ADVICE r9): a concurrent sweep_crash_artifacts run
     # may have GC'd this manifest already; the compaction itself
     # succeeded, so a vanished breadcrumb must not fail it.

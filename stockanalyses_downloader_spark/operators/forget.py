@@ -14,9 +14,9 @@ Design:
     request-sized, so every purge scan is one shuffle-free anti join
     per table — at 100 TB each table is read once, never joined
     against another fact table;
-  * execution reuses the repo's atomic temp+rename swap (ivm.py
-    protocol): a crashed purge leaves the OLD table intact — erasure
-    is re-runnable, never half-applied;
+  * execution uses the one table-swap module (``sources.swap``): a
+    crashed purge leaves the OLD table intact — erasure is
+    re-runnable, never half-applied;
   * downstream keyed views are not rewritten but fed DELETE TOMBSTONES
     (cdc.apply_changelog_versioned 'D' rows), so the CDC tier forgets
     through its own merge path — and a later replay of old upserts
@@ -34,9 +34,6 @@ pytest-verified.
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
 from dataclasses import dataclass
 from typing import Sequence
 
@@ -44,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..caching import tracked_persist
+from ..sources import swap
 
 
 @dataclass(frozen=True)
@@ -168,58 +166,30 @@ def tombstones(doomed_pks: DataFrame, key_col: str,
 
 def execute_forget(spark, table_paths: dict[str, str],
                    purged: dict[str, DataFrame]) -> None:
-    """Rewrite each purged table with the atomic temp+rename protocol
-    (ivm.py): readers never observe a half-erased table; a crash
-    leaves the old data and the erasure request simply re-runs
+    """Rewrite each purged table with the atomic swap of
+    ``sources.swap``: readers never observe a half-erased table; a
+    crash leaves the old data and the erasure request simply re-runs
     (purge is idempotent — anti join of already-absent keys).
 
     Two-phase: ALL tmp directories are written first, THEN the
-    renames happen. A depth>=2 cascade's purged frames lazily re-read
+    swaps happen. A depth>=2 cascade's purged frames lazily re-read
     ancestor tables (lineitem's doomed set derives from orders) —
     swapping orders before lineitem materializes would make lineitem
     re-derive its doomed keys from the already-purged orders (empty
     set → subjects' lineitems silently survive) or fail on deleted
     files. Materializing every purged frame against the ORIGINAL data
     before any directory moves closes that window."""
-    # Sweep stale artifacts from a previous crashed run. A crash
-    # between os.rename(path, old_dir) and os.rename(tmp, path)
-    # leaves the table's ONLY copy in __old-*: if path is missing,
-    # FIRST restore the matching __old-* back to path (never delete
-    # it — that would convert a recoverable crash into data loss).
-    # Only when path exists are leftover __tmp-*/__old-* dirs
-    # garbage, safe to remove before the idempotent re-run.
+    # Recover every table from a previous crashed run before anything
+    # reads it: a crash mid-swap leaves a table's ONLY copy in its
+    # swap backup, which must be restored, not swept.
     for path in table_paths.values():
-        base = path.rstrip("/")
-        parent, name = os.path.dirname(base), os.path.basename(base)
-        entries = [e for e in os.listdir(parent or ".")
-                   if e.startswith((f"{name}.__tmp-", f"{name}.__old-"))]
-        if not os.path.exists(base):
-            olds = sorted(e for e in entries
-                          if e.startswith(f"{name}.__old-"))
-            if olds:
-                os.rename(os.path.join(parent, olds[0]), base)
-                entries.remove(olds[0])
-            else:
-                # no backup to restore: leave any __tmp-* alone too
-                # (it may be a complete copy a human can salvage)
-                continue
-        for entry in entries:
-            shutil.rmtree(os.path.join(parent, entry),
-                          ignore_errors=True)
+        swap.recover(path)
     staged: list[tuple[str, str]] = []
     for name, path in table_paths.items():
         if name not in purged:      # sweep/recovery-only entry
             continue
-        token = uuid.uuid4().hex[:8]
-        tmp = f"{path.rstrip('/')}.__tmp-{token}"
+        tmp = swap.stage(path)
         purged[name].write.mode("overwrite").parquet(tmp)
         staged.append((path, tmp))
     for path, tmp in staged:
-        token = tmp.rsplit("-", 1)[1]
-        old_dir = f"{path.rstrip('/')}.__old-{token}"
-        if os.path.exists(path):
-            os.rename(path, old_dir)
-            os.rename(tmp, path)
-            shutil.rmtree(old_dir, ignore_errors=True)
-        else:
-            os.rename(tmp, path)
+        swap.swap_in(path, tmp)

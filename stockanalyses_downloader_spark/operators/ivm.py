@@ -30,12 +30,12 @@ buffers — this module just persists them between jobs.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources import swap
 
 _DEC = "decimal(30,10)"
 
@@ -90,25 +90,14 @@ def refresh_aggregate_table(spark: SparkSession, table_path: str,
                             ) -> None:
     """Fold one append-only ingest batch into the stored aggregate
     state: aggregate the batch, merge with the stored state (first
-    call seeds it), atomic temp+rename swap (same crash-safety
-    protocol as sinks.jobs_state_writeback — a reader never observes
-    a half-written table, a crashed refresh leaves the old state)."""
-    delta = agg_state(batch, group_cols, specs)
-    if os.path.exists(table_path):
-        old = spark.read.parquet(table_path)
-        merged = merge_state(old, delta, group_cols, specs)
-    else:
-        merged = delta
-    token = uuid.uuid4().hex[:8]
-    tmp = f"{table_path.rstrip('/')}.__tmp-{token}"
-    merged.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(table_path):
-        old_dir = f"{table_path.rstrip('/')}.__old-{token}"
-        os.rename(table_path, old_dir)
-        os.rename(tmp, table_path)
-        shutil.rmtree(old_dir, ignore_errors=True)
-    else:
-        os.rename(tmp, table_path)
+    call seeds it), atomic swap via ``sources.swap`` (a reader never
+    observes a half-written table, a crashed refresh leaves the old
+    state and the next refresh recovers it)."""
+    merged = delta = agg_state(batch, group_cols, specs)
+    if swap.recover(table_path):
+        merged = merge_state(spark.read.parquet(table_path), delta,
+                             group_cols, specs)
+    swap.replace_dir(table_path, merged.write.mode("overwrite").parquet)
 
 
 def finalize(state: DataFrame,
@@ -161,22 +150,17 @@ def refresh_groups(spark: SparkSession, table_path: str,
     recomputed = agg_state(
         source.join(F.broadcast(touched), list(group_cols), "semi"),
         group_cols, specs)
+    swap.recover(table_path)
     old = spark.read.parquet(table_path)
     kept = old.join(F.broadcast(touched), list(group_cols), "anti")
     merged = kept.unionByName(recomputed)
-    token = uuid.uuid4().hex[:8]
-    tmp = f"{table_path.rstrip('/')}.__tmp-{token}"
-    merged.write.mode("overwrite").parquet(tmp)
-    old_dir = f"{table_path.rstrip('/')}.__old-{token}"
-    os.rename(table_path, old_dir)
-    os.rename(tmp, table_path)
-    shutil.rmtree(old_dir, ignore_errors=True)
+    swap.replace_dir(table_path, merged.write.mode("overwrite").parquet)
 
 
 def _applied_batch_path(table_path: str) -> str:
     # underscore prefix: Spark's file listing ignores it, so the
     # marker can live INSIDE the table directory and ride the same
-    # atomic rename as the data — no window where state and marker
+    # atomic swap as the data — no window where state and marker
     # disagree
     return os.path.join(table_path, "_applied_batch.json")
 
@@ -200,34 +184,27 @@ def refresh_aggregate_table_once(spark: SparkSession, table_path: str,
     (foreachBatch replays the in-flight batch after crash recovery —
     additive state would DOUBLE-COUNT it; cf. the dedup the publish
     sink needs for the same reason): the applied batch id is written
-    inside the new table directory BEFORE the atomic rename, so
-    state and marker swap together — a crash at any point leaves
-    either the old table (marker says replay needed) or the new one
-    (marker says skip). Returns False when the batch was already
-    applied. Monotonic batch ids are Structured Streaming's
-    contract."""
+    inside the new table directory BEFORE the atomic swap, so state
+    and marker swap together — a crash at any point leaves either the
+    old table (marker says replay needed) or the new one (marker says
+    skip); a crash mid-swap is recovered before the marker is read.
+    Returns False when the batch was already applied. Monotonic batch
+    ids are Structured Streaming's contract."""
     import json
 
+    exists = swap.recover(table_path)
     if batch_id <= last_applied_batch(table_path):
         return False
-    delta = agg_state(batch, group_cols, specs)
-    if os.path.exists(table_path):
-        old = spark.read.parquet(table_path)
-        merged = merge_state(old, delta, group_cols, specs)
-    else:
-        merged = delta
-    token = uuid.uuid4().hex[:8]
-    tmp = f"{table_path.rstrip('/')}.__tmp-{token}"
-    merged.write.mode("overwrite").parquet(tmp)
-    with open(os.path.join(tmp, "_applied_batch.json"), "w") as fh:
-        json.dump({"batch_id": int(batch_id)}, fh)
-    if os.path.exists(table_path):
-        old_dir = f"{table_path.rstrip('/')}.__old-{token}"
-        os.rename(table_path, old_dir)
-        os.rename(tmp, table_path)
-        shutil.rmtree(old_dir, ignore_errors=True)
-    else:
-        os.rename(tmp, table_path)
+    merged = delta = agg_state(batch, group_cols, specs)
+    if exists:
+        merged = merge_state(spark.read.parquet(table_path), delta,
+                             group_cols, specs)
+
+    def write(tmp: str) -> None:
+        merged.write.mode("overwrite").parquet(tmp)
+        with open(_applied_batch_path(tmp), "w") as fh:
+            json.dump({"batch_id": int(batch_id)}, fh)
+    swap.replace_dir(table_path, write)
     return True
 
 

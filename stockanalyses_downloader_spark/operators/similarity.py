@@ -20,7 +20,6 @@ reproduces exactly with list_reduce.
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 
 from pyspark.sql import Column, DataFrame
@@ -28,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ..caching import tracked_persist
+from ..sources import swap
 
 
 def as_double(vec: Column) -> Column:
@@ -1176,7 +1176,7 @@ def append_to_ivf_index(spark, path: str, new_embeddings: DataFrame,
     lists = _assign_to_lists(new_embeddings, cent, id_col, vec_col)
     # Intent marker BEFORE the lists append (r7c review fix): a crash
     # between the append committing and the sizes swap completing
-    # leaves NO __tmp-/__old- artifact — the sizes table is intact but
+    # leaves NO swap artifact — the sizes table is intact but
     # silently stale against the lists. The marker makes that window
     # detectable: recovery rebuilds sizes from the lists (ground
     # truth) whenever a marker survives; it is removed only after the
@@ -1199,21 +1199,13 @@ def append_to_ivf_index(spark, path: str, new_embeddings: DataFrame,
 
 
 def _swap_in_list_sizes(sizes: DataFrame, path: str) -> None:
-    """Atomic replacement of {path}/list_sizes via the temp+rename
-    protocol (forget.py/ivm.py): a reader never observes a
-    half-written sizes table and a crash mid-swap never destroys the
-    only copy — a plain mode('overwrite') deletes the directory
-    BEFORE writing, so a crash there leaves the index's lists
-    appended but its sizes table gone (VERDICT r6 #4)."""
-    dest = f"{path}/list_sizes"
-    token = uuid.uuid4().hex[:8]
-    tmp = f"{dest}.__tmp-{token}"
-    sizes.coalesce(1).write.mode("overwrite").parquet(tmp)
-    old_dir = f"{dest}.__old-{token}"
-    if os.path.exists(dest):
-        os.rename(dest, old_dir)
-    os.rename(tmp, dest)
-    shutil.rmtree(old_dir, ignore_errors=True)
+    """Atomic replacement of {path}/list_sizes via ``sources.swap``: a
+    reader never observes a half-written sizes table and a crash
+    mid-swap never destroys the only copy — a plain mode('overwrite')
+    deletes the directory BEFORE writing, so a crash there leaves the
+    index's lists appended but its sizes table gone (VERDICT r6 #4)."""
+    swap.replace_dir(f"{path}/list_sizes",
+                     sizes.coalesce(1).write.mode("overwrite").parquet)
 
 
 def _recover_list_sizes(spark, path: str) -> None:
@@ -1226,22 +1218,19 @@ def _recover_list_sizes(spark, path: str) -> None:
     only on the rare recovery path), then swap it in atomically and
     sweep the stale artifacts."""
     dest = f"{path}/list_sizes"
-    parent, name = os.path.dirname(dest), os.path.basename(dest)
-    stale = [e for e in os.listdir(parent or ".")
-             if e.startswith((f"{name}.__tmp-", f"{name}.__old-"))]
     # a surviving intent marker = a prior append died AFTER its lists
     # append committed but BEFORE its sizes swap landed (no swap
     # artifact exists in that window; the sizes table is intact but
     # stale against the lists — r7c review fix)
     pending = [e for e in os.listdir(path)
                if e.startswith(".sizes-pending-")]
-    if not stale and not pending and os.path.exists(dest):
+    if (not swap.stale_artifacts(dest) and not pending
+            and os.path.exists(dest)):
         return
     rebuilt = (spark.read.parquet(f"{path}/lists")
                .groupBy("list_id").agg(F.count("*").alias("lsz")))
     _swap_in_list_sizes(rebuilt, path)
-    for e in stale:
-        shutil.rmtree(os.path.join(parent, e), ignore_errors=True)
+    swap.recover(dest)      # dest exists now: sweeps every artifact
     for e in pending:
         os.remove(os.path.join(path, e))
 

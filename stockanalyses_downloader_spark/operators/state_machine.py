@@ -27,8 +27,6 @@ from pyspark.sql import functions as F
 
 REQUESTED, CLAIMED, DOWNLOADED, PUBLISHED, ERROR = 1000, 1100, 1200, 1300, 1900
 
-_VALID = {REQUESTED, CLAIMED, DOWNLOADED, PUBLISHED, ERROR}
-
 
 def claim(jobs: DataFrame) -> DataFrame:
     """1000 -> 1100 for every actionable job in the batch (main.py:308)."""
@@ -65,9 +63,3 @@ def apply_outcomes(jobs: DataFrame, outcomes: DataFrame,
 def transition_counts(jobs: DataFrame) -> DataFrame:
     """Operational metric: jobs per action state."""
     return jobs.groupBy("action").agg(F.count("*").alias("n_jobs"))
-
-
-def assert_valid_actions(jobs: DataFrame) -> DataFrame:
-    """Constraint filter: rows whose action is outside the state machine
-    (dead-letter candidates)."""
-    return jobs.filter(~F.col("action").isin(*sorted(_VALID)))

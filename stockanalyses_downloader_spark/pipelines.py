@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from .dims.currency import currency_dim
 from .operators import pipeline, state_machine
-from .sources import ticker
+from .sources import swap, ticker
 from .streaming import sinks
 
 
@@ -230,17 +230,13 @@ def incremental_quality_refresh(spark: SparkSession, corpus: DataFrame,
           -> removed        -> dropped
           -> unchanged      -> carried over untouched
 
-    Crash safety: same temp-dir + rename swap as the streaming
-    writeback sinks. Returns telemetry counts (three model-sized
-    aggregate actions — documented driver work, the numbers every
-    incremental job logs).
+    Crash safety: same swap and recovery (``sources.swap``) as the
+    streaming writeback sinks. Returns telemetry counts (three
+    model-sized aggregate actions — documented driver work, the
+    numbers every incremental job logs).
 
     The scoring stage is quality_model with the frozen prior from
     text_queries by default — swap ``weights`` for a trained model."""
-    import os
-    import shutil
-    import uuid
-
     from .operators import quality_model as qm
 
     if weights is None:
@@ -248,15 +244,6 @@ def incremental_quality_refresh(spark: SparkSession, corpus: DataFrame,
 
     new = corpus.select("doc_id", "text",
                         F.md5("text").alias("digest"))
-    try:
-        stored = spark.read.parquet(results_path)
-        first_run = False
-    except Exception as exc:  # noqa: BLE001
-        if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" \
-                not in str(exc):
-            raise
-        stored = None
-        first_run = True
 
     def _score(docs_with_digest: DataFrame) -> DataFrame:
         # surface_features keeps only (doc_id, x); carry the digest
@@ -274,12 +261,13 @@ def incremental_quality_refresh(spark: SparkSession, corpus: DataFrame,
                         F.col("s.logit").alias("logit"),
                         F.col("s.prob").alias("prob")))
 
-    if first_run:
-        scored = _score(new)
-        scored.write.mode("overwrite").parquet(results_path)
+    if not swap.recover(results_path):
+        swap.replace_dir(results_path,
+                         _score(new).write.mode("overwrite").parquet)
         n = spark.read.parquet(results_path).count()
         return {"n_scored": n, "n_removed": 0, "n_carried": 0}
 
+    stored = spark.read.parquet(results_path)
     old_digests = stored.select("doc_id",
                                 F.col("digest").alias("old_digest"))
     joined = new.join(old_digests, "doc_id", "full_outer")
@@ -300,13 +288,7 @@ def incremental_quality_refresh(spark: SparkSession, corpus: DataFrame,
                .join(scored.select("doc_id"), "doc_id", "left_anti"))
     merged = carried.unionByName(scored)
 
-    token = uuid.uuid4().hex
-    tmp = f"{results_path.rstrip('/')}.__tmp-{token}"
-    old = f"{results_path.rstrip('/')}.__old-{token}"
-    merged.write.mode("overwrite").parquet(tmp)
-    os.rename(results_path, old)
-    os.rename(tmp, results_path)
-    shutil.rmtree(old, ignore_errors=True)
+    swap.replace_dir(results_path, merged.write.mode("overwrite").parquet)
     scored.unpersist()
     n_total = spark.read.parquet(results_path).count()
     return {"n_scored": n_scored, "n_removed": n_removed,

@@ -92,43 +92,6 @@ def write_partitioned(df: DataFrame, path: str,
     df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
 
 
-def compact_parquet(spark: SparkSession, src: str, dst: str,
-                    target_file_bytes: int = 128 * 1024 * 1024,
-                    mode: str = "overwrite") -> int:
-    """Small-files compaction — the maintenance job every streaming
-    ingest needs eventually: micro-batches write a file (or several)
-    per trigger, and a year of 30-second triggers is ~10^6 files
-    whose per-file open/footer/listing overhead dominates scan time
-    long before data volume does.
-
-    Sizing is from the SOURCE's actual bytes (Hadoop FileSystem
-    content summary — works on any supported filesystem, not just
-    local), one output file per `target_file_bytes` of input.
-    `repartition(n)` round-robins rows for even output sizes — this
-    is the one deliberate full shuffle in the module, PAID ONCE to
-    delete per-file overhead from every future scan (the same
-    write-time-vs-read-time trade as bucketing). Compacting into a
-    bucketed/partitioned layout instead is `write_bucketed` /
-    `write_partitioned` composed with this read.
-
-    For IN-PLACE maintenance of a live table (atomic swap, crash
-    recovery, per-hive-partition bins, no shuffle, clustering
-    preserved) use ``operators.compaction.compact_parquet`` — this
-    one is the publish-a-fresh-evenly-sized-copy tool.
-
-    Returns the number of output files requested."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(src)
-    fs = path.getFileSystem(hconf)
-    total_bytes = fs.getContentSummary(path).getLength()
-    n_files = max(1, -(-total_bytes // target_file_bytes))
-    (spark.read.parquet(src)
-     .repartition(int(n_files))
-     .write.mode(mode).parquet(dst))
-    return int(n_files)
-
-
 ZORDER_BITS = 16
 
 

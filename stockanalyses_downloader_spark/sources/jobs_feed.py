@@ -29,18 +29,6 @@ def read_jobs_json(spark: SparkSession, path: str) -> DataFrame:
         F.col("type_idtype").try_cast("int").alias("type_idtype"))
 
 
-def stream_jobs_json(spark: SparkSession, path: str) -> DataFrame:
-    """Streaming binding of the same feed (micro-batch = poll cycle)."""
-    raw = (spark.readStream.schema(
-        "downloader_jq_id long, action string, value string, type_idtype string")
-        .json(path))
-    return raw.select(
-        F.coalesce("downloader_jq_id", F.lit(0)).alias("downloader_jq_id"),
-        F.coalesce(F.col("action").try_cast("int"), F.lit(0)).alias("action"),
-        "value",
-        F.col("type_idtype").try_cast("int").alias("type_idtype"))
-
-
 def empty_jobs(spark: SparkSession) -> DataFrame:
     """The 'no job' sentinel response (downloader_jq_id == 0) as an
     empty typed frame."""

@@ -200,9 +200,9 @@ class MqPublishWriter:
     the DRIVER's commit() renames temps into place and writes the
     manifest. A failed/speculated task's temp is never renamed
     (abort() removes them), so retries can't double-publish — the
-    file-protocol version of K1's per-message broker acks, and
-    exactly the temp+rename discipline of streaming/sinks.py's
-    job-state writeback."""
+    file-protocol version of K1's per-message broker acks, and the
+    per-file form of the staged-write-then-swap discipline of
+    sources/swap.py."""
 
     def __init__(self, options):
         self.path = options.get("path")

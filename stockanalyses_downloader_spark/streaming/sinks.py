@@ -25,6 +25,8 @@ from typing import Callable, Iterator, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources import swap
+
 
 class MessageQueueClient:
     """Connector seam: open once per partition, publish per row."""
@@ -94,12 +96,6 @@ def dedup_for_effective_exactly_once(df: DataFrame, key_cols: list[str],
     return df.withWatermark(ts_col, watermark).dropDuplicates(key_cols)
 
 
-def _is_path_not_found(exc: Exception) -> bool:
-    msg = str(exc)
-    return ("PATH_NOT_FOUND" in msg or "Path does not exist" in msg
-            or "FileNotFoundException" in msg)
-
-
 def jobs_state_writeback(jobs_table_path: str, key: str = "downloader_jq_id"):
     """K2: per-micro-batch job-state upsert. The jobs table is control
     plane (rows = in-flight jobs, not fact data), so a read-merge-
@@ -107,41 +103,27 @@ def jobs_state_writeback(jobs_table_path: str, key: str = "downloader_jq_id"):
     ``MERGE`` keyed on the job id. Idempotent across batch replays:
     the merge keeps the latest action per key.
 
-    Crash safety: the merged table is fully written to a sibling temp
+    Crash safety: the merged table is fully written to a staging
     directory FIRST (reading the still-intact source — no
-    cache-eviction recompute hazard), then swapped in with directory
-    renames (atomic on a local/HDFS-style FS; on an object store this
-    protocol is exactly what a lakehouse table format replaces). Only
-    a genuinely-missing table path is treated as "first batch" —
-    any other read error propagates instead of silently truncating
+    cache-eviction recompute hazard), then swapped in by
+    ``sources.swap``. Each batch first recovers a table a crash left
+    mid-swap, so only a genuinely missing table is treated as "first
+    batch" — a read error propagates instead of silently truncating
     history to the current batch's keys."""
     def _writeback(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
         spark = batch_df.sparkSession
         updates = batch_df.select(key, "action").dropDuplicates([key])
-        try:
+        out = updates
+        if swap.recover(jobs_table_path):
             current = spark.read.parquet(jobs_table_path)
-        except Exception as exc:
-            if not _is_path_not_found(exc):
-                raise
-            updates.write.mode("overwrite").parquet(jobs_table_path)
-            return
-        merged = (current.join(updates.select(F.col(key),
-                                              F.col("action").alias("__new")),
-                               key, "left")
-                  .withColumn("action",
-                              F.coalesce(F.col("__new"), F.col("action")))
-                  .drop("__new"))
-        new_keys = updates.join(current.select(key), key, "left_anti")
-        out = merged.unionByName(new_keys, allowMissingColumns=True)
-        token = uuid.uuid4().hex
-        tmp = f"{jobs_table_path.rstrip('/')}.__tmp-{token}"
-        old = f"{jobs_table_path.rstrip('/')}.__old-{token}"
-        out.write.mode("overwrite").parquet(tmp)
-        os.rename(jobs_table_path, old)
-        os.rename(tmp, jobs_table_path)
-        shutil.rmtree(old, ignore_errors=True)
+            new = updates.select(key, F.col("action").alias("__new"))
+            merged = (current.join(new, key, "left")
+                      .withColumn("action",
+                                  F.coalesce(F.col("__new"), F.col("action")))
+                      .drop("__new"))
+            new_keys = updates.join(current.select(key), key, "left_anti")
+            out = merged.unionByName(new_keys, allowMissingColumns=True)
+        swap.replace_dir(jobs_table_path, out.write.mode("overwrite").parquet)
     return _writeback
 
 
@@ -209,35 +191,24 @@ def cdc_materialized_view(table_path: str, key: str,
     (it trusts its changelog as the final word — correct for the
     daily batch, wrong across micro-batches). Read the view with
     cdc.visible(spark.read.parquet(path)). Same crash-safety swap
-    protocol as jobs_state_writeback (temp dir + renames). Pinned in
+    and recovery as jobs_state_writeback (``sources.swap``). Pinned in
     tests/test_streaming.py::test_cdc_materialized_view_stream
     (out-of-order seq, delete-then-reinsert, full replay onto the
     already-materialized table)."""
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
         from ..operators import cdc
 
         spark = batch_df.sparkSession
-        try:
+        if swap.recover(table_path):
             base = spark.read.parquet(table_path) \
                 .select(key, *seq_cols, *payload_cols, "is_deleted")
-        except Exception as exc:
-            if not _is_path_not_found(exc):
-                raise
+        else:
             base = (batch_df.select(key, *seq_cols, *payload_cols)
                     .withColumn("is_deleted", F.lit(False))
                     .filter(F.lit(False)))
         merged = cdc.apply_changelog_versioned(
             base, batch_df, key, seq_cols, op_col, payload_cols)
-        token = uuid.uuid4().hex
-        tmp = f"{table_path.rstrip('/')}.__tmp-{token}"
-        old = f"{table_path.rstrip('/')}.__old-{token}"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(table_path):
-            os.rename(table_path, old)
-        os.rename(tmp, table_path)
-        shutil.rmtree(old, ignore_errors=True)
+        swap.replace_dir(table_path, merged.write.mode("overwrite").parquet)
     return _apply
 
 

@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import math
 import os
-from typing import Iterable
 
 import duckdb
 import pandas as pd
@@ -110,23 +109,3 @@ def _null(v):
     if pd.api.types.is_scalar(v) and pd.isna(v):
         return None
     return v
-
-
-def run_all_pairs(spark, queries: dict, oracles: dict, sf_dir: str,
-                  only: Iterable[str] | None = None) -> dict[str, str]:
-    """Run every queries()/oracle_sql() pair; return {name: 'ok'|error}."""
-    results = {}
-    for name, fn in queries.items():
-        if only and name not in only:
-            continue
-        try:
-            df = fn(spark, sf_dir)
-            if name in oracles:
-                assert_matches_oracle(df, oracles[name], sf_dir)
-                results[name] = "ok"
-            else:
-                df.limit(1).collect()
-                results[name] = "ok (rows-only)"
-        except Exception as exc:  # noqa: BLE001 - report, don't abort the sweep
-            results[name] = f"FAIL: {exc}"
-    return results

@@ -195,29 +195,6 @@ def test_orc_roundtrip_and_pushdown(spark, sf_dir, tmp_path):
     assert "o_orderkey" in seg and "EqualTo" in seg
 
 
-def test_compact_parquet_collapses_small_files(spark, tmp_path):
-    """40 micro-batch-sized files compact to the byte-sized target
-    count with zero row loss — and the compacted copy's scan reads
-    a fraction of the file count."""
-    src, dst = str(tmp_path / "small"), str(tmp_path / "compact")
-    for b in range(40):
-        spark.range(b * 100, (b + 1) * 100) \
-            .withColumn("payload", F.md5(F.col("id").cast("string"))) \
-            .coalesce(1).write.mode("append").parquet(src)
-    import glob
-    n_small = len(glob.glob(src + "/part-*"))
-    assert n_small >= 40
-
-    n_target = bucketing.compact_parquet(spark, src, dst,
-                                         target_file_bytes=64 * 1024)
-    n_out = len(glob.glob(dst + "/part-*"))
-    assert n_out <= n_target < n_small
-    a = spark.read.parquet(src)
-    b = spark.read.parquet(dst)
-    assert b.count() == a.count() == 4000
-    assert a.agg(F.sum("id")).first()[0] == b.agg(F.sum("id")).first()[0]
-
-
 def test_schema_evolution_merge_and_defaults(spark, tmp_path):
     """Schema evolution across parquet batches: day 2 adds a column;
     mergeSchema unifies the read, day-1 rows surface NULL for the

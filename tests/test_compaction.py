@@ -9,6 +9,7 @@ import shutil
 from pyspark.sql import functions as F
 
 from stockanalyses_downloader_spark.operators import compaction
+from stockanalyses_downloader_spark.sources import swap
 
 
 def _write_small_files(spark, path, n_rows=2000, n_files=20):
@@ -157,7 +158,7 @@ def test_exchange_dirs_swaps_atomically(tmp_path):
     os.makedirs(b)
     open(os.path.join(a, "was_a"), "w").close()
     open(os.path.join(b, "was_b"), "w").close()
-    if not compaction._exchange_dirs(a, b):
+    if not swap._exchange_dirs(a, b):
         pytest.skip("renameat2 RENAME_EXCHANGE unsupported here")
     assert os.path.exists(os.path.join(a, "was_b"))
     assert os.path.exists(os.path.join(b, "was_a"))
@@ -383,21 +384,22 @@ def test_exchange_dirs_returns_false_on_any_failure(tmp_path):
     b = str(tmp_path / "definitely-missing-b")
     # ENOENT is outside the old {EINVAL,ENOSYS,ENOTSUP,EXDEV} set and
     # used to raise; now every failure is a clean False
-    assert compaction._exchange_dirs(a, b) is False
+    assert swap._exchange_dirs(a, b) is False
 
 
-def test_swap_mode_rename_and_validation(spark, tmp_path):
+def test_swap_mode_rename_and_validation(spark, tmp_path, monkeypatch):
+    """Where renameat2(RENAME_EXCHANGE) is refused, the swap falls
+    back to two renames and compaction still preserves every row and
+    leaves no swap artifact behind."""
     path = str(tmp_path / "t")
     _write_small_files(spark, path, n_rows=500, n_files=6)
     before = _rows(spark, path)
+    monkeypatch.setattr(swap, "_exchange_dirs", lambda a, b: False)
     stats = compaction.compact_parquet(spark, path,
-                                       target_bytes=64 * 1024 * 1024,
-                                       swap_mode="rename")
+                                       target_bytes=64 * 1024 * 1024)
     assert stats["bins_rewritten"] >= 1
     assert _rows(spark, path) == before
-    import pytest
-    with pytest.raises(ValueError, match="swap_mode"):
-        compaction.compact_parquet(spark, path, swap_mode="bogus")
+    assert swap.stale_artifacts(path) == []
 
 
 def test_late_append_visible_from_first_post_swap_instant(spark, tmp_path):
