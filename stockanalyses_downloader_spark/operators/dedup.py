@@ -449,13 +449,15 @@ def minhash_signatures(docs: DataFrame, n_hashes: int = 64,
                   F.explode(_shingles_from_toks(F.col("__toks"), n))
                   .alias("gram"))
           .select(id_col, md5_h31(F.col("gram")).alias("h31")))
-    mins = [F.min((F.col("h31") * F.lit(a) + F.lit(b)) % F.lit(_MH_PRIME))
-             .alias(f"__m{j}")
+    # one parsed expression per column: the Column-API form costs ~9
+    # py4j round trips each (64 hashes: ~0.6 s of driver time per
+    # build). a, b and p all fit INT, so the SQL literals keep the
+    # types F.lit gave them and the plan is unchanged.
+    mins = [F.expr(f"min((h31 * {a} + {b}) % {_MH_PRIME}) AS __m{j}")
             for j, (a, b) in enumerate(params)]
+    sig = ", ".join(f"__m{j}" for j in range(n_hashes))
     return (ex.groupBy(id_col).agg(*mins)
-            .select(id_col,
-                    F.array(*[f"__m{j}" for j in range(n_hashes)])
-                     .alias("signature")))
+            .select(id_col, F.expr(f"array({sig}) AS signature")))
 
 
 def minhash_lsh_pairs(docs: DataFrame, n_hashes: int = 64, bands: int = 16,

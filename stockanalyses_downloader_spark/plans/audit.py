@@ -10,6 +10,7 @@ join over a shuffle) fails CI instead of surfacing as a cluster fire.
 
 from __future__ import annotations
 
+import hashlib
 import io
 import re
 from contextlib import redirect_stdout
@@ -157,3 +158,31 @@ def plan_report(df: DataFrame) -> dict[str, object]:
                                           if "PushedFilters" in ln),
         "cartesian": "CartesianProduct" in plan,
     }
+
+
+# Run-dependent parts of a plan's text: expression ids, the counter
+# suffix of lambda variable names, and the partition counts that follow
+# the core count (``spread()``'s repartition, ``spark.range``'s default
+# splits). Group 1 keeps the lambda variable's name.
+_PLAN_NOISE = re.compile(r"#\d+|(lambda [A-Za-z]\w*?_)\d+"
+                         r"|(?<=Repartition )\d+|(?<=splits=Some\()\d+")
+
+
+def masked_optimized_plan(df: DataFrame) -> str:
+    """The optimized logical plan of ``df``, every field printed, with
+    the run-dependent parts masked. Optimized from the analyzed plan
+    directly, without the cache substitution a query execution makes
+    first, so what other frames are persisted at the time (the
+    registry builds persist intermediates) does not change the text."""
+    qe = df._jdf.queryExecution()
+    optimizer = df.sparkSession._jsparkSession.sessionState().optimizer()
+    plan = optimizer.execute(qe.analyzed().clone())
+    text = plan.treeString(True, False, 2**31 - 1, False, False)
+    return _PLAN_NOISE.sub(lambda m: m.group(1) or "", text)
+
+
+def plan_digest(df: DataFrame) -> str:
+    """sha256 of ``masked_optimized_plan(df)``: the identity the
+    registry's plan gate compares (tests/plan_digests.json)."""
+    return hashlib.sha256(
+        masked_optimized_plan(df).encode("utf-8")).hexdigest()

@@ -82,29 +82,68 @@ MESSAGE = T.StructType(TICK_WSS.fields[1:] + [
 ])
 
 # --- driver test tables (/root/testdata/sf*/; see TESTDATA.md) --------------
+#
+# The parquet files' own schemas, as ``sources/tables.load_table``
+# reads them: every column nullable, as Spark reads any file source.
+# Timestamps are TIMESTAMP: the fixtures write them without a UTC
+# adjustment (Spark would infer TIMESTAMP_NTZ), the files Spark writes
+# are adjusted, and TIMESTAMP is the one type that reads both. With the
+# session pinned to UTC both read as the same instants.
+# tests/test_foundation.py pins each against the schema Spark infers
+# from the footers.
 
-EVENTS = T.StructType([
-    T.StructField("event_id", T.LongType(), False),
-    T.StructField("ts", T.TimestampType(), False),
-    T.StructField("user_id", T.LongType(), False),
-    T.StructField("event_type", T.StringType(), False),
-    T.StructField("value", T.DoubleType(), False),
-    T.StructField("props", T.StringType(), True),  # JSON string
-])
 
-DOCUMENTS = T.StructType([
-    T.StructField("doc_id", T.LongType(), False),
-    T.StructField("text", T.StringType(), True),
-    T.StructField("lang", T.StringType(), True),
-    T.StructField("source", T.StringType(), True),
-    T.StructField("n_chars", T.LongType(), True),
-])
+def _nullable(*fields: tuple[str, T.DataType]) -> T.StructType:
+    return T.StructType([T.StructField(n, t, True) for n, t in fields])
 
-EMBEDDINGS = T.StructType([
-    T.StructField("vec_id", T.LongType(), False),
-    T.StructField("embedding", T.ArrayType(T.FloatType()), True),
-    T.StructField("label", T.IntegerType(), True),
-])
+
+_LONG, _INT, _DOUBLE = T.LongType(), T.IntegerType(), T.DoubleType()
+_STR, _TS = T.StringType(), T.TimestampType()
+
+REGION = _nullable(("r_regionkey", _INT), ("r_name", _STR))
+
+NATION = _nullable(("n_nationkey", _INT), ("n_name", _STR),
+                   ("n_regionkey", _INT))
+
+CUSTOMER = _nullable(("c_custkey", _LONG), ("c_name", _STR),
+                     ("c_nationkey", _INT), ("c_acctbal", _DOUBLE),
+                     ("c_mktsegment", _STR))
+
+SUPPLIER = _nullable(("s_suppkey", _LONG), ("s_name", _STR),
+                     ("s_nationkey", _INT), ("s_acctbal", _DOUBLE))
+
+PART = _nullable(("p_partkey", _LONG), ("p_name", _STR), ("p_brand", _STR),
+                 ("p_type", _STR), ("p_size", _INT),
+                 ("p_retailprice", _DOUBLE))
+
+ORDERS = _nullable(("o_orderkey", _LONG), ("o_custkey", _LONG),
+                   ("o_orderstatus", _STR), ("o_totalprice", _DOUBLE),
+                   ("o_orderdate", _TS), ("o_orderpriority", _STR))
+
+LINEITEM = _nullable(("l_orderkey", _LONG), ("l_partkey", _LONG),
+                     ("l_suppkey", _LONG), ("l_linenumber", _INT),
+                     ("l_quantity", _DOUBLE), ("l_extendedprice", _DOUBLE),
+                     ("l_discount", _DOUBLE), ("l_tax", _DOUBLE),
+                     ("l_returnflag", _STR), ("l_linestatus", _STR),
+                     ("l_shipdate", _TS))
+
+EVENTS = _nullable(("event_id", _LONG), ("ts", _TS), ("user_id", _LONG),
+                   ("event_type", _STR), ("value", _DOUBLE),
+                   ("props", _STR))  # props: a JSON string
+
+DOCUMENTS = _nullable(("doc_id", _LONG), ("text", _STR), ("lang", _STR),
+                      ("source", _STR), ("n_chars", _LONG))
+
+EMBEDDINGS = _nullable(("vec_id", _LONG),
+                       ("embedding", T.ArrayType(T.FloatType())),
+                       ("label", _INT))
+
+TABLES = {
+    "region": REGION, "nation": NATION, "customer": CUSTOMER,
+    "supplier": SUPPLIER, "part": PART, "orders": ORDERS,
+    "lineitem": LINEITEM, "events": EVENTS, "documents": DOCUMENTS,
+    "embeddings": EMBEDDINGS,
+}
 
 #: multimodal asset table: opaque payload + typed metadata
 #: (engine extension — binary column plumbing for image/audio/video)

@@ -12,6 +12,17 @@ on a large cluster unchanged:
   DuckDB oracle, parquet footers, and executors in any locale.
 - Arrow enabled for the pandas interchange used by the vectorized UDF
   operators (similarity, multimodal).
+- A generated-class cache of 10000 entries
+  (``spark.sql.codegen.cache.maxEntries``, default 100). One pass of
+  the nine dedup/similarity queries compiles ~280 whole-stage classes
+  and the 190-entry registry ~3200, so at 100 entries the LRU evicts
+  every class before its next use and each warm pass recompiled them
+  all. The cap is set from the census in PERF.md ("Generated-class
+  cache"): about three times the registry's working set, for ~25 MB
+  more Metaspace and code heap. The conf is static: it takes effect
+  only when this factory starts the JVM's SQL context, and a session
+  built elsewhere (such as one handed to ``entry(spark)``) keeps its
+  own value.
 """
 
 from __future__ import annotations
@@ -43,6 +54,7 @@ def get_session(app_name: str = "stockanalyses_downloader_spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
+        .config("spark.sql.codegen.cache.maxEntries", "10000")
         # Runtime bloom-filter semi-join reduction: on a selective
         # fact⋈fact join the build side's keys prune the probe side's
         # SCAN before the shuffle — at 100 TB this is the difference

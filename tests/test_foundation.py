@@ -1,6 +1,10 @@
 from __future__ import annotations
 
+import os
+
+from conftest import SF_SMALL
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from stockanalyses_downloader_spark.config import (EngineConfig,
                                                    check_schema_version,
@@ -8,6 +12,7 @@ from stockanalyses_downloader_spark.config import (EngineConfig,
 from stockanalyses_downloader_spark.dims.currency import (currency_dim,
                                                           currency_rows,
                                                           currency_values_sql)
+from stockanalyses_downloader_spark.schemas import TABLES
 from stockanalyses_downloader_spark.sources.synthetic import (JOBS_SQL,
                                                               TICKS_SQL, jobs,
                                                               ticks)
@@ -37,6 +42,36 @@ def test_tables_load(spark, sf_dir):
     for name in TABLE_NAMES:
         df = load_table(spark, sf_dir, name)
         assert df.count() > 0, name
+
+
+def test_declared_schemas_match_footers(spark):
+    """load_table reads with the declared schemas; a column that the
+    files lack or type differently would read as nulls or fail late.
+    Pin each declared schema to the one Spark infers from the footers
+    of every fixture: the test corpus at three scales and the
+    benchmark's base tables. Inference reads footers only. Timestamps
+    written without a UTC adjustment infer as TIMESTAMP_NTZ and are
+    declared TIMESTAMP (see schemas.py)."""
+    testdata = os.path.dirname(SF_SMALL)
+    corpus = ("documents", "embeddings", "events")
+    fixtures = [(os.path.join(testdata, f"sf{sf}"), tuple(TABLES))
+                for sf in ("0.001", "0.01", "0.1")]
+    fixtures.append((os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "perfbench", "data"), corpus))
+
+    def declared_type(t):
+        return T.TimestampType() if isinstance(t, T.TimestampNTZType) else t
+
+    mismatched = {}
+    for sf_dir, names in fixtures:
+        for name in names:
+            path = os.path.join(sf_dir, f"{name}.parquet")
+            inferred = T.StructType([
+                T.StructField(f.name, declared_type(f.dataType), f.nullable)
+                for f in spark.read.parquet(path).schema])
+            if inferred != TABLES[name]:
+                mismatched[path] = inferred.simpleString()
+    assert not mismatched, mismatched
 
 
 def test_synthetic_ticks_match_oracle(spark, sf_dir):
