@@ -18,11 +18,11 @@ on a large cluster unchanged:
   and the 190-entry registry ~3200, so at 100 entries the LRU evicts
   every class before its next use and each warm pass recompiled them
   all. The cap is set from the census in PERF.md ("Generated-class
-  cache"): about three times the registry's working set, for ~25 MB
-  more Metaspace and code heap. The conf is static: it takes effect
-  only when this factory starts the JVM's SQL context, and a session
-  built elsewhere (such as one handed to ``entry(spark)``) keeps its
-  own value.
+  cache"): about three times the registry's working set, for 23 MB
+  more Metaspace and 21 MB more code heap after a warm registry sweep.
+  The conf is static: it takes effect only when this factory starts
+  the JVM's SQL context, and a session built elsewhere (such as one
+  handed to ``entry(spark)``) keeps its own value.
 """
 
 from __future__ import annotations
