@@ -2,52 +2,42 @@
 
 Several operators persist() mid-plan because one frame feeds multiple
 consumers (LSH bands feed both sides of a self-join; IVF lists feed
-the candidate side and the list-size aggregate). persist() is the
-right call DURING a query, but the handles outlive the query: a
-long-lived session sweeping the whole registry would accumulate
-cached blocks until LRU eviction churn sets in.
+the candidate side and the list-size aggregate). The handles outlive
+the query, so a long-lived session sweeping the registry would
+accumulate cached blocks until LRU eviction churn sets in. Every
+query-path persist goes through ``tracked_persist``. Releasing is safe
+once the consumer has collected or written the result: unpersist on a
+consumed frame only drops cache blocks, never data.
 
-Contract: operators route every query-path persist through
-``tracked_persist``; a harness that runs many queries in one session
-calls ``release_tracked()`` after materializing each query's result
-(bench.py does; the registry sweep test pins that the storage
-footprint returns to baseline). Releasing is safe once the consumer
-has collected/written the result — unpersist on a consumed frame
-only drops cache blocks, never data.
+Invariants:
 
-OWNERSHIP (ADVICE r4): the global registry is HARNESS-OWNED and
-single-threaded by contract — one driver thread builds, materializes,
-and releases queries in sequence. It is NOT thread-safe: concurrent
-query threads would interleave their persists in one list, and a
-``release_tracked()`` from one thread could unpersist frames another
-thread's running query still depends on (forcing mid-query recompute
-of multi-consumer frames). Library callers running queries
-concurrently, or embedding this engine where the global lifecycle is
-inconvenient, should wrap each query in ``tracked_scope()`` — it
-releases exactly the frames persisted inside its own block and leaves
-everything else alone. A caller that never releases at all simply
-leans on Spark's LRU cache eviction; correctness is unaffected, only
-cache residency. This matters most for ``similarity.kmeans_centroids``
-(ADVICE r13 low): since r13 it deliberately leaves its corpus-sized
-(id, v, norm) projection in the tracked registry (an internal
-unpersist would drop a caller's cache entry for the same canonicalized
-plan — the ivf_topk_pq ``base`` steal), so a library caller training
-many models outside the harness should wrap each fit in
-``tracked_scope()`` or accept one LRU-managed corpus projection per
-distinct input plan.
-
-Not tracked here: ``localCheckpoint`` frames (graph.py's iterative
-connected components, both variants). Those HOLD the result data
-(checkpoint truncates lineage — unpersisting one before the caller
-consumes it would lose the frame), so their lifetime is correctly
-tied to the result DataFrame's lifetime: Spark's ContextCleaner frees
-the blocks when the frame is garbage-collected. k-means needs neither:
-its Lloyd rounds carry the k×d centroids as driver rows, so no
-per-round frame is persisted or checkpointed.
+- The global registry belongs to the harness (bench, the registry
+  sweeps, perfbench): one driver thread builds, materializes and
+  releases queries in sequence, and ``release_tracked()`` unpersists
+  EVERY tracked frame, whichever thread persisted it.
+- ``tracked_scope()`` releases exactly the frames that its own thread
+  registered inside it (innermost scope only), removing them from the
+  registry by identity. Frames of other threads, and frames tracked
+  before the scope opened, stay persisted and tracked, so concurrent
+  queries may each run in their own scope as long as they share no
+  persisted frame.
+- ``similarity.kmeans_centroids`` leaves its corpus-sized
+  (id, v, norm) projection tracked instead of unpersisting it:
+  CacheManager keys cache entries by canonicalized plan, so an
+  internal unpersist would also drop a caller's entry for the same
+  projection (``ivf_topk_pq`` persists that ``base`` before training).
+  The projection goes with the next release; a library caller that
+  fits many models outside the harness wraps each fit in
+  ``tracked_scope()`` or leaves it to LRU eviction.
+- ``localCheckpoint`` frames (graph.py's iterative loops, the PQ
+  codebooks) are not tracked: they HOLD the result data, so their
+  blocks live as long as the result DataFrame and ContextCleaner frees
+  them when it is garbage-collected.
 """
 
 from __future__ import annotations
 
+import threading
 from contextlib import contextmanager
 from typing import Iterator
 
@@ -55,45 +45,58 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 _TRACKED: list[DataFrame] = []
+_LOCK = threading.Lock()
+_SCOPES = threading.local()     # .stack: this thread's open scope lists
+
+
+def _unpersist(frames: list[DataFrame]) -> int:
+    n = 0
+    for df in frames:
+        try:
+            df.unpersist(blocking=True)
+            n += 1
+        except Exception:  # noqa: BLE001 — session already stopped
+            pass
+    return n
 
 
 @contextmanager
 def tracked_scope() -> Iterator[None]:
     """Scope tracked persists to one query: on exit, unpersist ONLY
-    the frames ``tracked_persist`` registered inside the block (and
-    remove them from the global registry, releasing the Python refs so
-    ContextCleaner can reclaim the JVM-side blocks). Frames tracked
-    before or outside the scope are untouched — safe to nest and safe
-    next to a concurrently-running query that manages its own scope,
-    as long as the two queries don't share a persisted frame."""
-    start = len(_TRACKED)
+    the frames that ``tracked_persist`` registered from this thread
+    inside the block, and drop them from the global registry (releasing
+    the Python refs so ContextCleaner can reclaim the JVM-side blocks).
+    Nested scopes each release their own frames."""
+    stack = getattr(_SCOPES, "stack", None)
+    if stack is None:
+        stack = _SCOPES.stack = []
+    scoped: list[DataFrame] = []
+    stack.append(scoped)
     try:
         yield
     finally:
-        scoped = _TRACKED[start:]
-        del _TRACKED[start:]
-        for df in scoped:
-            try:
-                df.unpersist(blocking=True)
-            except Exception:  # noqa: BLE001 — session already stopped
-                pass
+        stack.pop()
+        mine = {id(df) for df in scoped}
+        with _LOCK:
+            _TRACKED[:] = [df for df in _TRACKED if id(df) not in mine]
+        _unpersist(scoped)
 
 
-def tracked_persist(df: DataFrame,
-                    level: StorageLevel = StorageLevel.MEMORY_AND_DISK
-                    ) -> DataFrame:
+def tracked_persist(df: DataFrame) -> DataFrame:
     """persist() with session-level lifetime tracking (see module
     docstring). Lazy, exactly like bare persist()."""
-    df = df.persist(level)
-    _TRACKED.append(df)
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    with _LOCK:
+        _TRACKED.append(df)
+    stack = getattr(_SCOPES, "stack", None)
+    if stack:
+        stack[-1].append(df)
     return df
 
 
-def tracked_persist_if_cold(df: DataFrame,
-                            level: StorageLevel =
-                            StorageLevel.MEMORY_AND_DISK) -> DataFrame:
-    """``tracked_persist`` that respects caller ownership (ADVICE r12
-    low): when the input is ALREADY persisted — at any storage level —
+def tracked_persist_if_cold(df: DataFrame) -> DataFrame:
+    """``tracked_persist`` that respects caller ownership: when the
+    input is ALREADY persisted — at any storage level —
     leave it alone. Two failure modes otherwise: ``persist()`` on a
     frame persisted at a different level raises
     'cannot change storage level', and entering a caller-persisted
@@ -106,28 +109,22 @@ def tracked_persist_if_cold(df: DataFrame,
     lvl = df.storageLevel
     if lvl.useMemory or lvl.useDisk or lvl.useOffHeap:
         return df
-    return tracked_persist(df, level)
+    return tracked_persist(df)
 
 
 def release_tracked() -> int:
-    """Unpersist every tracked frame. BLOCKING (r12): the async drop
-    left blocks visible in getPersistentRDDs for a beat after the
-    call, so "footprint returns to baseline after release" — the
-    contract the lifecycle sweep pins — was only eventually true and
-    flaked under suite load once the recompute-audit persists
-    multiplied the release count. The wait happens outside every
-    timed section (bench releases after the timer stops). Returns
-    how many were released. Idempotent; unpersisting an
-    already-unpersisted frame is a no-op in Spark."""
-    n = 0
-    while _TRACKED:
-        df = _TRACKED.pop()
-        try:
-            df.unpersist(blocking=True)
-            n += 1
-        except Exception:  # noqa: BLE001 — session already stopped
-            pass
-    return n
+    """Unpersist every tracked frame, from any thread. BLOCKING: an
+    async drop leaves blocks visible in getPersistentRDDs for a beat
+    after the call, so "footprint returns to baseline after release"
+    — the contract the lifecycle sweep pins — would only be eventually
+    true. The wait happens outside every timed section (bench releases
+    after the timer stops). Returns how many were released.
+    Idempotent; unpersisting an already-unpersisted frame is a no-op
+    in Spark."""
+    with _LOCK:
+        frames = _TRACKED[::-1]
+        _TRACKED.clear()
+    return _unpersist(frames)
 
 
 def release_all(spark) -> int:

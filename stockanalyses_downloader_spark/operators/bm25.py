@@ -46,9 +46,7 @@ def _tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
                           r"\s+")).alias("term"))
 
 
-def bm25_index(docs: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text") -> tuple[DataFrame, DataFrame,
-                                                DataFrame]:
+def bm25_index(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(tf, df, stats) index frames. One explode + one (doc, term)
     aggregate; df and doc lengths derive from tf without touching the
     corpus again. All three are incrementally maintainable: tf/df add
@@ -60,7 +58,7 @@ def bm25_index(docs: DataFrame, id_col: str = "doc_id",
     _tokens — bm25_topk tokenizes the model-sized QUERY frame through
     the same helper, and repartitioning a table that is immediately
     broadcast is a pure extra exchange."""
-    toks = _tokens(spread(docs), id_col, text_col)
+    toks = _tokens(spread(docs), "doc_id", "text")
     # tracked_persist (r12, the langid lesson generalized): tf0 is
     # the parent of EVERY index frame — dl, the dl-joined tf, df, and
     # stats all derive from it, and a consumer like bm25_topk holds
@@ -69,11 +67,11 @@ def bm25_index(docs: DataFrame, id_col: str = "doc_id",
     # bm25_search_topk plan carried SIX Generate explode nodes and
     # zero reused exchanges); persisted, the corpus is tokenized
     # exactly once per index build.
-    tf0 = tracked_persist(toks.groupBy(id_col, "term")
+    tf0 = tracked_persist(toks.groupBy("doc_id", "term")
                           .agg(F.count("*").alias("tf")))
-    dl = (tf0.groupBy(id_col)
+    dl = (tf0.groupBy("doc_id")
           .agg(F.sum("tf").alias("dl")))
-    tf = tf0.join(dl, id_col)
+    tf = tf0.join(dl, "doc_id")
     df = tf0.groupBy("term").agg(F.count("*").alias("df"))
     stats = dl.agg(
         F.count("*").alias("n_docs"),
@@ -82,8 +80,6 @@ def bm25_index(docs: DataFrame, id_col: str = "doc_id",
 
 
 def bm25_topk(docs: DataFrame, queries: DataFrame, k: int = 10,
-              id_col: str = "doc_id", text_col: str = "text",
-              k1: float = BM25_K1, b: float = BM25_B,
               round_scores: int | None = None) -> DataFrame:
     """Top-k docs per query: (query_id, doc_id, score, rank).
     ``queries`` is (query_id, qtext); repeated query terms count once
@@ -107,7 +103,7 @@ def bm25_topk(docs: DataFrame, queries: DataFrame, k: int = 10,
     at ANY corpus size; dl attaches after the term filter, so the
     per-doc-length join runs at hit width, not corpus width. Same df
     integers, same idf/norm doubles, same scores."""
-    toks = _tokens(spread(docs), id_col, text_col)
+    toks = _tokens(spread(docs), "doc_id", "text")
     # tf0 persisted exactly as in bm25_index (the r12 langid lesson):
     # it feeds dl, stats, and the hit-side probe in one plan.
     # r14 (VERDICT r13 #6, guide §2.4/§3.3): tf0 is repartitioned by
@@ -124,10 +120,10 @@ def bm25_topk(docs: DataFrame, queries: DataFrame, k: int = 10,
     # rows, after the map-side partial agg — never raw occurrences);
     # saved: the dl-side corpus exchange + the hit-side exchange +
     # the score aggregate's exchange on every search.
-    tf0 = tracked_persist(toks.groupBy(id_col, "term")
+    tf0 = tracked_persist(toks.groupBy("doc_id", "term")
                           .agg(F.count("*").alias("tf"))
-                          .repartition(id_col))
-    dl = tf0.groupBy(id_col).agg(F.sum("tf").alias("dl"))
+                          .repartition("doc_id"))
+    dl = tf0.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     stats = dl.agg(
         F.count("*").alias("n_docs"),
         (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"))
@@ -140,18 +136,19 @@ def bm25_topk(docs: DataFrame, queries: DataFrame, k: int = 10,
                 / (F.col("df") + F.lit(0.5)))
     norm = (F.col("tf")
             / (F.col("tf")
-               + F.lit(k1) * (F.lit(1.0 - b)
-                              + F.lit(b) * F.col("dl") / F.col("avgdl"))))
+               + F.lit(BM25_K1) * (F.lit(1.0 - BM25_B)
+                                   + F.lit(BM25_B) * F.col("dl")
+                                   / F.col("avgdl"))))
     scored = (hit0.join(F.broadcast(dfq), "term")
-              .join(dl, id_col)
+              .join(dl, "doc_id")
               .join(F.broadcast(qterms), "term")
               .crossJoin(F.broadcast(stats))
-              .groupBy("query_id", id_col)
+              .groupBy("query_id", "doc_id")
               .agg(F.sum(idf * norm).alias("score")))
     if round_scores is not None:
         scored = scored.withColumn("score",
                                    F.round("score", round_scores))
     w = (Window.partitionBy("query_id")
-         .orderBy(F.desc("score"), F.col(id_col)))
+         .orderBy(F.desc("score"), F.col("doc_id")))
     return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k))

@@ -36,13 +36,13 @@ from .dedup import spread
 BPE_PRETOKEN_RX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
-def pretoken_vocab(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def pretoken_vocab(docs: DataFrame) -> DataFrame:
     """Corpus -> (pretoken, n) word-count vocab. The ONLY corpus-wide
     scan in BPE training; shuffle key is the pretoken (bounded-width),
     map-side partial agg collapses repeats before the wire. spread()
     first (r11 rollout): the regex pretokenizer is the corpus-width
     CPU stage — a narrow upstream would serialize it."""
-    toks = F.regexp_extract_all(F.col(text_col), F.lit(BPE_PRETOKEN_RX), 0)
+    toks = F.regexp_extract_all(F.col("text"), F.lit(BPE_PRETOKEN_RX), 0)
     return (spread(docs).select(F.explode(toks).alias("pretoken"))
             .groupBy("pretoken").agg(F.count("*").alias("n")))
 
@@ -54,12 +54,11 @@ def _chars(col: Column) -> Column:
     return F.filter(F.split(col, ""), lambda c: c != "")
 
 
-def adjacent_pair_counts(vocab: DataFrame,
-                         syms_col: str = "syms") -> DataFrame:
+def adjacent_pair_counts(vocab: DataFrame) -> DataFrame:
     """One BPE counting round: corpus-weighted adjacent-pair counts
     over the vocab's symbol arrays. Output: (sym_left, sym_right,
     pair_count) — exactly the table the first merge is argmaxed from."""
-    syms = F.col(syms_col)
+    syms = F.col("syms")
     pairs = F.transform(
         F.sequence(F.lit(1), F.size(syms) - 1),
         lambda i: F.struct(F.element_at(syms, i).alias("sym_left"),
@@ -70,12 +69,11 @@ def adjacent_pair_counts(vocab: DataFrame,
             .agg(F.sum("n").alias("pair_count")))
 
 
-def first_round_pair_counts(docs: DataFrame,
-                            text_col: str = "text") -> DataFrame:
+def first_round_pair_counts(docs: DataFrame) -> DataFrame:
     """Round-1 pair counts straight from the corpus (the SQL-oracled
     face of the learner): character bigrams within pretokens, weighted
     by pretoken frequency."""
-    vocab = pretoken_vocab(docs, text_col)
+    vocab = pretoken_vocab(docs)
     return adjacent_pair_counts(
         vocab.withColumn("syms", _chars(F.col("pretoken"))))
 
@@ -100,8 +98,7 @@ def _merge_once(syms: Column, left: str, right: str) -> Column:
         ).otherwise(F.concat(acc, F.array(x))))
 
 
-def learn_bpe_merges(docs: DataFrame, n_merges: int,
-                     text_col: str = "text") -> DataFrame:
+def learn_bpe_merges(docs: DataFrame, n_merges: int) -> DataFrame:
     """Train ``n_merges`` BPE merges over the corpus. Returns the merge
     table as a DataFrame: (merge_rank, sym_left, sym_right, merged,
     pair_count) — merge_rank 0 is the first/most-frequent merge.
@@ -112,7 +109,7 @@ def learn_bpe_merges(docs: DataFrame, n_merges: int,
     driver-side artifact by nature (it IS the tokenizer model, a few
     hundred rows); training work stays distributed."""
     spark = docs.sparkSession
-    vocab = (pretoken_vocab(docs, text_col)
+    vocab = (pretoken_vocab(docs)
              .withColumn("syms", _chars(F.col("pretoken")))
              .select("syms", "n")
              .localCheckpoint(eager=True))
@@ -137,9 +134,8 @@ def learn_bpe_merges(docs: DataFrame, n_merges: int,
                 "merged string, pair_count long")
 
 
-def _encode_pretoken(merges: list[tuple[str, str]],
-                     pretoken: Column | None = None) -> Column:
-    """The BPE encode expression for one pretoken column: the literal
+def _encode_pretoken(merges: list[tuple[str, str]]) -> Column:
+    """The BPE encode expression for the ``pretoken`` column: the literal
     string-replace merge chain (fast path) with the per-row fold
     fallback — exactly the r13 tokenize_with_merges body, factored
     (r14) so the counts-only apply path shares it verbatim. Returns
@@ -163,7 +159,7 @@ def _encode_pretoken(merges: list[tuple[str, str]],
     characters — the pretoken regex admits any single non-alnum char)
     fall back per row to the fold chain, so equivalence is
     unconditional (pinned by the exhaustive replace-vs-fold test)."""
-    pre = F.col("pretoken") if pretoken is None else pretoken
+    pre = F.col("pretoken")
     D = "\x00"
     state = F.concat(F.lit(D * 2),
                      F.array_join(_chars(pre), D * 2),
@@ -179,9 +175,8 @@ def _encode_pretoken(merges: list[tuple[str, str]],
     return F.when(pre.contains(D), syms).otherwise(fast)
 
 
-def bpe_token_counts(docs: DataFrame, merges: list[tuple[str, str]],
-                     text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def bpe_token_counts(docs: DataFrame,
+                     merges: list[tuple[str, str]]) -> DataFrame:
     """Per-doc BPE token COUNTS under a learned merge table — the
     counts-only twin of tokenize_with_merges for consumers that never
     read the token arrays (doc_bpe_tokenization's budget output).
@@ -197,25 +192,24 @@ def bpe_token_counts(docs: DataFrame, merges: list[tuple[str, str]],
     n_bpe_tokens = Σ size(bpe) over the doc's pretokens = the size of
     the flattened encoding, exactly; empty/whitespace-only docs
     surface as 0 via the same left join (= size(empty array))."""
-    toks = F.regexp_extract_all(F.col(text_col), F.lit(BPE_PRETOKEN_RX), 0)
-    ex = spread(docs).select(id_col, F.explode(toks).alias("pretoken"))
+    toks = F.regexp_extract_all(F.col("text"), F.lit(BPE_PRETOKEN_RX), 0)
+    ex = spread(docs).select("doc_id", F.explode(toks).alias("pretoken"))
     encoded = (ex.select("pretoken").distinct()
                .withColumn("n_bpe",
                            F.size(_encode_pretoken(merges))))
     per_doc = (ex.join(encoded, "pretoken")
-               .groupBy(id_col)
+               .groupBy("doc_id")
                .agg(F.sum("n_bpe").alias("__n")))
-    return (docs.select(id_col).join(per_doc, id_col, "left")
+    return (docs.select("doc_id").join(per_doc, "doc_id", "left")
             .withColumn("n_bpe_tokens",
                         F.coalesce(F.col("__n"), F.lit(0)).cast("int"))
             .drop("__n"))
 
 
-def tokenize_with_merges(docs: DataFrame, merges: list[tuple[str, str]],
-                         text_col: str = "text",
-                         id_col: str = "doc_id") -> DataFrame:
+def tokenize_with_merges(docs: DataFrame,
+                         merges: list[tuple[str, str]]) -> DataFrame:
     """Apply a learned merge table: encode each doc's pretokens into
-    BPE tokens. Output: (id_col, tokens array<string>, n_bpe_tokens).
+    BPE tokens. Output: (doc_id, tokens array<string>, n_bpe_tokens).
 
     Memoized by pretoken: the merge chain (one fold expression per
     merge, applied in rank order — exactly the training-time greedy
@@ -224,16 +218,16 @@ def tokenize_with_merges(docs: DataFrame, merges: list[tuple[str, str]],
     per-doc order. At 100 TB the expensive chain touches the vocab,
     not the corpus; the fan-back join is pretoken-keyed (same shuffle
     width as the vocab build)."""
-    toks = F.regexp_extract_all(F.col(text_col), F.lit(BPE_PRETOKEN_RX), 0)
+    toks = F.regexp_extract_all(F.col("text"), F.lit(BPE_PRETOKEN_RX), 0)
     # spread() before the regex pretokenize + posexplode (r11): the
     # fan-back join keys on pretoken, so the corpus side's width here
     # is what the whole encode pipeline inherits
-    ex = spread(docs).select(id_col,
+    ex = spread(docs).select("doc_id",
                              F.posexplode(toks).alias("pos", "pretoken"))
     distinct_pre = ex.select("pretoken").distinct()
     encoded = distinct_pre.withColumn("bpe", _encode_pretoken(merges))
     joined = ex.join(encoded, "pretoken")
-    per_doc = (joined.groupBy(id_col)
+    per_doc = (joined.groupBy("doc_id")
                .agg(F.flatten(F.transform(
                    F.array_sort(F.collect_list(F.struct("pos", "bpe"))),
                    lambda s: s["bpe"])).alias("tokens")))
@@ -241,7 +235,7 @@ def tokenize_with_merges(docs: DataFrame, merges: list[tuple[str, str]],
     # pretokens (empty/whitespace-only) produces no exploded rows and
     # would silently vanish from the group-by — it must surface with
     # an empty encoding instead (ADVICE r4)
-    return (docs.select(id_col).join(per_doc, id_col, "left")
+    return (docs.select("doc_id").join(per_doc, "doc_id", "left")
             .withColumn("tokens",
                         F.coalesce("tokens",
                                    F.array().cast("array<string>")))

@@ -27,25 +27,24 @@ WEEK_US = 7 * 24 * 3600 * 1_000_000
 
 
 def ohlc_candles(ticks: DataFrame, key: str = "isin",
-                 width: str = "7 days", price: str = "last_price",
-                 ts: str = "ts", tiebreak: str = "tick_id") -> DataFrame:
+                 width: str = "7 days") -> DataFrame:
     """Tumbling OHLCV candles per key. Columns:
     key, bucket_start, open, high, low, close, volume, n_ticks."""
     # materialize the bucket as a column FIRST so the window and the
     # groupBy share one attribute -> Catalyst reuses a single shuffle
     # on (key, bucket) instead of re-exchanging per operator
-    ticks = ticks.withColumn("__w", F.window(ts, width))
+    ticks = ticks.withColumn("__w", F.window("ts", width))
     w = (Window.partitionBy(key, "__w")
-               .orderBy(ts, tiebreak)
+               .orderBy("ts", "tick_id")
                .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
     enriched = (ticks
-                .withColumn("__open", F.first(price).over(w))
-                .withColumn("__close", F.last(price).over(w)))
+                .withColumn("__open", F.first("last_price").over(w))
+                .withColumn("__close", F.last("last_price").over(w)))
     return (enriched
             .groupBy(key, "__w")
             .agg(F.min("__open").alias("open"),
-                 F.max(price).alias("high"),
-                 F.min(price).alias("low"),
+                 F.max("last_price").alias("high"),
+                 F.min("last_price").alias("low"),
                  F.min("__close").alias("close"),
                  F.sum(F.col("volume").cast("decimal(25,10)"))
                   .cast("double").alias("volume"),
@@ -54,27 +53,26 @@ def ohlc_candles(ticks: DataFrame, key: str = "isin",
                     "open", "high", "low", "close", "volume", "n_ticks"))
 
 
-def streaming_ohlc(ticks: DataFrame, key: str = "isin",
-                   width: str = "7 days", price: str = "last_price",
-                   ts: str = "ts", tiebreak: str = "tick_id",
+def streaming_ohlc(ticks: DataFrame,
                    watermark: str = "10 minutes") -> DataFrame:
-    """Streaming variant: watermark bounds candle state (ST5); open and
-    close use min_by/max_by over (event time, tiebreak) — window
+    """Streaming variant of ohlc_candles: 7-day candles per isin;
+    watermark bounds candle state (ST5); open and close use
+    min_by/max_by over (ts, tick_id) — window
     functions are not supported on streams, and the struct order key
     keeps results identical to the batch transform under duplicate
     timestamps. Volume sums in decimal (order-independent), so a
     replayed/re-partitioned stream emits bit-identical candles. Late
     ticks beyond the watermark drop."""
-    order_key = F.struct(ts, tiebreak)
+    order_key = F.struct("ts", "tick_id")
     return (ticks
-            .withWatermark(ts, watermark)
-            .groupBy(key, F.window(ts, width).alias("__w"))
-            .agg(F.min_by(price, order_key).alias("open"),
-                 F.max(price).alias("high"),
-                 F.min(price).alias("low"),
-                 F.max_by(price, order_key).alias("close"),
+            .withWatermark("ts", watermark)
+            .groupBy("isin", F.window("ts", "7 days").alias("__w"))
+            .agg(F.min_by("last_price", order_key).alias("open"),
+                 F.max("last_price").alias("high"),
+                 F.min("last_price").alias("low"),
+                 F.max_by("last_price", order_key).alias("close"),
                  F.sum(F.col("volume").cast("decimal(25,10)"))
                   .cast("double").alias("volume"),
                  F.count("*").alias("n_ticks"))
-            .select(key, F.col("__w.start").alias("bucket_start"),
+            .select("isin", F.col("__w.start").alias("bucket_start"),
                     "open", "high", "low", "close", "volume", "n_ticks"))

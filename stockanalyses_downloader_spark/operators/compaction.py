@@ -226,8 +226,7 @@ _pre_swap_hook = None
 
 
 def compact_parquet(spark: SparkSession, path: str,
-                    target_bytes: int = 128 * 1024 * 1024,
-                    parallelism: int = 4) -> dict[str, int]:
+                    target_bytes: int = 128 * 1024 * 1024) -> dict[str, int]:
     """Compact a parquet directory to ~``target_bytes`` files.
 
     Single-file bins are NOT rewritten (their bytes are already
@@ -333,7 +332,7 @@ def compact_parquet(spark: SparkSession, path: str,
         os.rename(os.path.join(stage, parts[0]), dest)
         shutil.rmtree(stage)
 
-    with ThreadPoolExecutor(max_workers=max(1, parallelism)) as pool:
+    with ThreadPoolExecutor(max_workers=4) as pool:
         # .result() re-raises the first failure: the swap below only
         # runs if every bin landed, so a failed rewrite leaves the
         # original table untouched (tmp is swept on the next run)

@@ -34,10 +34,15 @@ from ..caching import tracked_persist
 # degenerates to picking the same minimum element. LCG-generated,
 # stable across runs — the test contract needs reproducibility.
 _MH_PRIME = (1 << 31) - 1
+_MH_SEED = 1234567
+# LSH geometry of minhash_lsh_pairs and the at-rest index: 64 hashes
+# in 16 bands of 4 rows.
+MH_HASHES = 64
+MH_BANDS = 16
 
 
-def _mh_params(n: int, seed: int = 1234567) -> list[tuple[int, int]]:
-    state, out = seed, []
+def _mh_params(n: int) -> list[tuple[int, int]]:
+    state, out = _MH_SEED, []
     for _ in range(n):
         state = (1103515245 * state + 12345) % (1 << 31)
         a = state | 1
@@ -314,12 +319,12 @@ def with_hashed_shingles(docs: DataFrame, text_col: str = "text",
     return _hash_shingles(docs, text_col, n, F.xxhash64)
 
 
-def _md5_shingles(docs: DataFrame, text_col: str, n: int) -> DataFrame:
+def _md5_shingles(docs: DataFrame, n: int) -> DataFrame:
     """The MinHash verify's shingle sets, on the md5_h31 family
     (collision odds ~n²/2^32 per pair — negligible at shingle-set
     sizes) so the verified Jaccard is DuckDB-recomputable bit for
     bit."""
-    return _hash_shingles(docs, text_col, n, md5_h31)
+    return _hash_shingles(docs, "text", n, md5_h31)
 
 
 def exact_dedup(df: DataFrame, keys: list[str]) -> DataFrame:
@@ -329,7 +334,6 @@ def exact_dedup(df: DataFrame, keys: list[str]) -> DataFrame:
 
 def ngram_jaccard_pairs(docs: DataFrame, block_cols: list[str],
                         n: int = 3, threshold: float = 0.5,
-                        id_col: str = "doc_id",
                         max_block_size: int | None = None) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs within blocks.
 
@@ -396,19 +400,18 @@ def ngram_jaccard_pairs(docs: DataFrame, block_cols: list[str],
         # within a block, matching the exact path's contract — and the
         # id_a join-back for block labels is now provably consistent
         # (both ids share the block by construction)
-        lsh = minhash_lsh_pairs(hot_docs, threshold=threshold,
-                                id_col=id_col, n=n,
+        lsh = minhash_lsh_pairs(hot_docs, threshold=threshold, n=n,
                                 bucket_cols=tuple(block_cols))
-        lsh = lsh.join(docs.select(F.col(id_col).alias("id_a"), *block_cols),
-                       "id_a")
+        lsh = lsh.join(docs.select(F.col("doc_id").alias("id_a"),
+                                   *block_cols), "id_a")
         lsh = lsh.select(*block_cols, "id_a", "id_b", "jaccard")
-    s = with_hashed_shingles(base, "text", n).select(
-        id_col, *block_cols, "shingles")
+    s = with_hashed_shingles(base, n=n).select(
+        "doc_id", *block_cols, "shingles")
     pre = s.withColumn("__nsh", F.size("shingles"))
-    a = pre.select(*block_cols, F.col(id_col).alias("id_a"),
+    a = pre.select(*block_cols, F.col("doc_id").alias("id_a"),
                    F.col("shingles").alias("sh_a"),
                    F.col("__nsh").alias("__na"))
-    b = pre.select(*block_cols, F.col(id_col).alias("id_b"),
+    b = pre.select(*block_cols, F.col("doc_id").alias("id_b"),
                    F.col("shingles").alias("sh_b"),
                    F.col("__nsh").alias("__nb"))
     pairs = (a.join(b, block_cols)
@@ -460,9 +463,8 @@ def minhash_signatures(docs: DataFrame, n_hashes: int = 64,
             .select(id_col, F.expr(f"array({sig}) AS signature")))
 
 
-def minhash_lsh_pairs(docs: DataFrame, n_hashes: int = 64, bands: int = 16,
-                      threshold: float = 0.5, id_col: str = "doc_id",
-                      text_col: str = "text", n: int = 3,
+def minhash_lsh_pairs(docs: DataFrame,
+                      threshold: float = 0.5, n: int = 3,
                       bucket_cols: tuple[str, ...] = ()) -> DataFrame:
     """X2: banded-LSH candidate generation + exact Jaccard verification.
 
@@ -500,9 +502,9 @@ def minhash_lsh_pairs(docs: DataFrame, n_hashes: int = 64, bands: int = 16,
     # pair expansion saves one exchange but runs 1.4x SLOWER at sf0.1 —
     # the in-bucket combination expansion is interpreted higher-order
     # code, while the self-join stays in codegen. Join wins.)
-    banded = _banded_signatures(docs, n_hashes, bands, id_col, text_col, n)
+    banded = _banded_signatures(docs, MH_HASHES, MH_BANDS, "doc_id", n)
     if bucket_cols:
-        banded = banded.join(docs.select(id_col, *bucket_cols), id_col)
+        banded = banded.join(docs.select("doc_id", *bucket_cols), "doc_id")
     key = ["band_id", "band_hash", *bucket_cols]
     # r14 (guide §2.4 — two operations keyed the same way share one
     # exchange): repartition by the bucket key BEFORE the persist, so
@@ -512,23 +514,23 @@ def minhash_lsh_pairs(docs: DataFrame, n_hashes: int = 64, bands: int = 16,
     # One band-width exchange at materialization replaces two at join
     # time, at any corpus size.
     banded = tracked_persist(banded.repartition(*key))
-    a = banded.select(F.col(id_col).alias("id_a"), *key)
-    b = banded.select(F.col(id_col).alias("id_b"), *key)
+    a = banded.select(F.col("doc_id").alias("id_a"), *key)
+    b = banded.select(F.col("doc_id").alias("id_b"), *key)
     cand = tracked_persist(
         a.join(b, key)
          .filter(F.col("id_a") < F.col("id_b"))
          .select("id_a", "id_b").distinct())
     # verify only the docs that appear in candidate pairs: shingle
     # recomputation is proportional to candidates, not corpus
-    cand_ids = (cand.select(F.col("id_a").alias(id_col))
-                .union(cand.select(F.col("id_b").alias(id_col))).distinct())
-    involved = docs.join(cand_ids, id_col, "left_semi")
-    sh = _md5_shingles(spread(involved), text_col, n).select(
-        id_col, "shingles")
+    cand_ids = (cand.select(F.col("id_a").alias("doc_id"))
+                .union(cand.select(F.col("id_b").alias("doc_id"))).distinct())
+    involved = docs.join(cand_ids, "doc_id", "left_semi")
+    sh = _md5_shingles(spread(involved), n).select(
+        "doc_id", "shingles")
     cand = (cand
-            .join(sh.select(F.col(id_col).alias("id_a"),
+            .join(sh.select(F.col("doc_id").alias("id_a"),
                             F.col("shingles").alias("sh_a")), "id_a")
-            .join(sh.select(F.col(id_col).alias("id_b"),
+            .join(sh.select(F.col("doc_id").alias("id_b"),
                             F.col("shingles").alias("sh_b")), "id_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
@@ -550,13 +552,13 @@ def minhash_lsh_pairs(docs: DataFrame, n_hashes: int = 64, bands: int = 16,
 # tier; this is its near-dup sibling.
 
 def _banded_signatures(docs: DataFrame, n_hashes: int, bands: int,
-                       id_col: str, text_col: str, n: int) -> DataFrame:
+                       id_col: str, n: int) -> DataFrame:
     """(id, band_id, band_hash) — the banding stage of
     minhash_lsh_pairs, factored so the at-rest index and the one-shot
     join share it verbatim (the parity pin depends on that). The band
     key is the raw comma-joined signature slice."""
     r = n_hashes // bands
-    sigs = minhash_signatures(docs, n_hashes, id_col, text_col, n)
+    sigs = minhash_signatures(docs, n_hashes, id_col, n=n)
 
     def band_key(b):
         return F.concat_ws(
@@ -593,9 +595,7 @@ def _minhash_index_meta(spark, path: str) -> dict:
     return meta
 
 
-def save_minhash_index(docs: DataFrame, path: str, n_hashes: int = 64,
-                       bands: int = 16, id_col: str = "doc_id",
-                       text_col: str = "text", n: int = 3) -> None:
+def save_minhash_index(docs: DataFrame, path: str) -> None:
     """Materialize the near-dup index AT REST: ``{path}/bands``
     (id, band_id, band_hash), ``{path}/shingles`` (id, md5_h31
     shingle set — what the exact-Jaccard verify needs, so probe never
@@ -603,36 +603,34 @@ def save_minhash_index(docs: DataFrame, path: str, n_hashes: int = 64,
     family — appends and probes read it, so a caller cannot silently
     mismatch hash family or banding)."""
     spark = docs.sparkSession
-    _banded_signatures(docs, n_hashes, bands, id_col, text_col, n) \
+    _banded_signatures(docs, MH_HASHES, MH_BANDS, "doc_id", 3) \
         .write.mode("overwrite").parquet(f"{path}/bands")
-    _md5_shingles(docs, text_col, n) \
-        .select(id_col, "shingles") \
+    _md5_shingles(docs, 3) \
+        .select("doc_id", "shingles") \
         .write.mode("overwrite").parquet(f"{path}/shingles")
     (spark.createDataFrame(
-        [(n_hashes, bands, n, _MH_FAMILY, id_col)],
+        [(MH_HASHES, MH_BANDS, 3, _MH_FAMILY, "doc_id")],
         "n_hashes int, bands int, n int, hash_family string, "
         "id_col string")
      .coalesce(1).write.mode("overwrite").parquet(f"{path}/meta"))
 
 
-def append_to_minhash_index(spark, path: str, new_docs: DataFrame,
-                            text_col: str = "text") -> None:
+def append_to_minhash_index(spark, path: str, new_docs: DataFrame) -> None:
     """Incremental maintenance: band + shingle the delta under the
     STORED geometry and append — today's ingest becomes probe-visible
     without touching the existing index files. Caller owns id
     uniqueness across appends (same contract as append_to_ivf_index)."""
     meta = _minhash_index_meta(spark, path)
     _banded_signatures(new_docs, meta["n_hashes"], meta["bands"],
-                       meta["id_col"], text_col, meta["n"]) \
+                       meta["id_col"], meta["n"]) \
         .write.mode("append").parquet(f"{path}/bands")
-    _md5_shingles(new_docs, text_col, meta["n"]) \
+    _md5_shingles(new_docs, meta["n"]) \
         .select(meta["id_col"], "shingles") \
         .write.mode("append").parquet(f"{path}/shingles")
 
 
 def probe_minhash_index(spark, path: str, new_docs: DataFrame,
-                        threshold: float = 0.5,
-                        text_col: str = "text") -> DataFrame:
+                        threshold: float = 0.5) -> DataFrame:
     """Near-dup pairs INVOLVING the delta — new-vs-corpus (the delta's
     bands join the stored band table; the only corpus-sized work is
     that band join plus a shingle semi-join fetch for verified
@@ -649,8 +647,7 @@ def probe_minhash_index(spark, path: str, new_docs: DataFrame,
     meta = _minhash_index_meta(spark, path)
     id_col = meta["id_col"]
     new_banded = tracked_persist(_banded_signatures(
-        new_docs, meta["n_hashes"], meta["bands"], id_col, text_col,
-        meta["n"]))
+        new_docs, meta["n_hashes"], meta["bands"], id_col, meta["n"]))
     stored = spark.read.parquet(f"{path}/bands")
     nb = new_banded.select(F.col(id_col).alias("new_id"),
                            "band_id", "band_hash")
@@ -669,7 +666,7 @@ def probe_minhash_index(spark, path: str, new_docs: DataFrame,
     cand_ids = (cand.select(F.col("id_a").alias(id_col))
                 .union(cand.select(F.col("id_b").alias(id_col)))
                 .distinct())
-    new_sh = _md5_shingles(new_docs, text_col, meta["n"]) \
+    new_sh = _md5_shingles(new_docs, meta["n"]) \
         .select(id_col, "shingles")
     old_sh = spark.read.parquet(f"{path}/shingles")
     # delta shingles take precedence on id collision (deterministic;
@@ -691,8 +688,7 @@ def probe_minhash_index(spark, path: str, new_docs: DataFrame,
             .filter(F.col("jaccard") >= threshold))
 
 
-def simhash64(docs: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
+def simhash64(docs: DataFrame) -> DataFrame:
     """64-bit SimHash per doc: sign-sum of token-hash bits. Explode +
     two-level aggregate keeps it a plain shuffle on doc_id.
 
@@ -701,8 +697,8 @@ def simhash64(docs: DataFrame, id_col: str = "doc_id",
     cm_bucket, so the fingerprints (and everything derived from them)
     are DuckDB-recomputable."""
     toks = spread(docs).select(
-        id_col, F.explode(F.split(F.lower(F.trim(F.col(text_col))),
-                                  r"\s+")).alias("tok"))
+        "doc_id", F.explode(F.split(F.lower(F.trim(F.col("text"))),
+                                    r"\s+")).alias("tok"))
     md = F.md5(F.col("tok").cast("binary"))
     hi = F.conv(F.substring(md, 1, 8), 16, 10).cast("long")
     lo = F.conv(F.substring(md, 9, 8), 16, 10).cast("long")
@@ -711,17 +707,16 @@ def simhash64(docs: DataFrame, id_col: str = "doc_id",
         return (F.shiftrightunsigned(lo, i) % 2 if i < 32
                 else F.shiftrightunsigned(hi, i - 32) % 2)
     bit_votes = [F.sum(bit(i) * 2 - 1).alias(f"b{i}") for i in range(64)]
-    votes = toks.groupBy(id_col).agg(*bit_votes)
+    votes = toks.groupBy("doc_id").agg(*bit_votes)
     sim = F.lit(0).cast("long")
     for i in range(64):
         sim = sim + F.when(F.col(f"b{i}") > 0,
                            F.lit(1).cast("long") * (2 ** i if i < 63
                                                     else -(2 ** 63))).otherwise(0)
-    return votes.select(id_col, sim.alias("simhash"))
+    return votes.select("doc_id", sim.alias("simhash"))
 
 
 def simhash_near_pairs(docs: DataFrame, max_hamming: int = 8,
-                       id_col: str = "doc_id",
                        max_bucket_size: int | None = None) -> DataFrame:
     """SimHash near-dup pairs: band the 64 bits into ``max_hamming+1``
     near-equal chunks, bucket-join on any shared chunk, verify exact
@@ -764,7 +759,7 @@ def simhash_near_pairs(docs: DataFrame, max_hamming: int = 8,
     # membership feeds the candidate stage (distinct) and the two
     # expansion joins; signature-width persist, same rationale as the
     # minhash banding persist above.
-    sh = tracked_persist(simhash64(docs, id_col))
+    sh = tracked_persist(simhash64(docs))
     fps = sh.select("simhash").distinct()
     chunks = fps.select(
         "simhash",
@@ -791,14 +786,16 @@ def simhash_near_pairs(docs: DataFrame, max_hamming: int = 8,
                 .filter(F.col("hamming") <= max_hamming))
     # expand verified fingerprint pairs to doc pairs (cross members,
     # normalize id order — fingerprints differ so no self/mirror dups)
-    ma = sh.select(F.col("simhash").alias("sim_a"), F.col(id_col).alias("da"))
-    mb = sh.select(F.col("simhash").alias("sim_b"), F.col(id_col).alias("db"))
+    ma = sh.select(F.col("simhash").alias("sim_a"),
+                   F.col("doc_id").alias("da"))
+    mb = sh.select(F.col("simhash").alias("sim_b"),
+                   F.col("doc_id").alias("db"))
     cross = (fp_pairs.join(ma, "sim_a").join(mb, "sim_b")
              .select(F.least("da", "db").alias("id_a"),
                      F.greatest("da", "db").alias("id_b"), "hamming"))
     # same-fingerprint pairs are hamming 0 — always within radius
-    sa = sh.select("simhash", F.col(id_col).alias("id_a"))
-    sb = sh.select("simhash", F.col(id_col).alias("id_b"))
+    sa = sh.select("simhash", F.col("doc_id").alias("id_a"))
+    sb = sh.select("simhash", F.col("doc_id").alias("id_b"))
     same = (sa.join(sb, "simhash")
             .filter(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b", F.lit(0).alias("hamming")))
@@ -806,9 +803,7 @@ def simhash_near_pairs(docs: DataFrame, max_hamming: int = 8,
 
 
 def jaccard_pairs_prefix_filter(docs: DataFrame, n: int = 3,
-                                threshold: float = 0.5,
-                                id_col: str = "doc_id",
-                                text_col: str = "text") -> DataFrame:
+                                threshold: float = 0.5) -> DataFrame:
     """GLOBAL exact Jaccard join via prefix filtering (PPJoin-family,
     r5b) — the scalable all-corpus similarity join when there is no
     blocking key to hide behind (ngram_jaccard_pairs needs one; LSH
@@ -856,10 +851,10 @@ def jaccard_pairs_prefix_filter(docs: DataFrame, n: int = 3,
     # the normalized text has < n words (_shingles_from_toks' guard),
     # so filter on that — one cheap split per row wherever Catalyst
     # pushes it.
-    has_grams = (F.size(F.split(F.lower(F.trim(F.col(text_col))),
+    has_grams = (F.size(F.split(F.lower(F.trim(F.col("text"))),
                                 r"\s+")) >= n)
-    s = (with_hashed_shingles(spread(docs).filter(has_grams), text_col, n)
-         .select(id_col, "shingles"))
+    s = (with_hashed_shingles(spread(docs).filter(has_grams), n=n)
+         .select("doc_id", "shingles"))
     s = tracked_persist(s)
     # MEASURED NEGATIVE (r14): repartition("tok") to share one
     # exchange between the df-count aggregate and the ordering join
@@ -871,10 +866,10 @@ def jaccard_pairs_prefix_filter(docs: DataFrame, n: int = 3,
     # one. At vocabulary sizes past the broadcast budget AQE falls
     # back to a shuffle join by itself; pre-forcing it only helps
     # where it is already the plan.
-    tok = s.select(id_col, F.explode("shingles").alias("tok"))
+    tok = s.select("doc_id", F.explode("shingles").alias("tok"))
     df_counts = tok.groupBy("tok").agg(F.count("*").alias("df"))
     ordered = (tok.join(df_counts, "tok")
-               .groupBy(id_col)
+               .groupBy("doc_id")
                .agg(F.transform(
                    F.array_sort(F.collect_list(F.struct("df", "tok"))),
                    lambda x: x["tok"]).alias("toks")))
@@ -887,14 +882,14 @@ def jaccard_pairs_prefix_filter(docs: DataFrame, n: int = 3,
     # exchange-free. The old shape re-ran the posexplode per side and
     # exchanged the prefix stream twice (once per side) at any scale.
     prefixes = (ordered
-                .select(id_col, F.size("toks").alias("sz"),
+                .select("doc_id", F.size("toks").alias("sz"),
                         F.posexplode(F.slice("toks", 1, plen))
                         .alias("pos", "ptok"))
                 .repartition("ptok"))
-    a = prefixes.select(F.col(id_col).alias("id_a"), "ptok",
+    a = prefixes.select(F.col("doc_id").alias("id_a"), "ptok",
                         F.col("pos").alias("pos_a"),
                         F.col("sz").alias("sz_a"))
-    b = prefixes.select(F.col(id_col).alias("id_b"), "ptok",
+    b = prefixes.select(F.col("doc_id").alias("id_b"), "ptok",
                         F.col("pos").alias("pos_b"),
                         F.col("sz").alias("sz_b"))
     matches = (a.join(b, "ptok")
@@ -914,9 +909,9 @@ def jaccard_pairs_prefix_filter(docs: DataFrame, n: int = 3,
                  F.first("sz_b").alias("sz_b"))
             .filter(ubound >= required)
             .select("id_a", "id_b"))
-    sa = s.select(F.col(id_col).alias("id_a"),
+    sa = s.select(F.col("doc_id").alias("id_a"),
                   F.col("shingles").alias("sh_a"))
-    sb = s.select(F.col(id_col).alias("id_b"),
+    sb = s.select(F.col("doc_id").alias("id_b"),
                   F.col("shingles").alias("sh_b"))
     verified = (cand.join(sa, "id_a").join(sb, "id_b")
                 .select("id_a", "id_b",

@@ -61,11 +61,10 @@ def _bucket(col: Column, n_buckets: int) -> Column:
             % n_buckets).cast("int")
 
 
-def hashed_gram_buckets(docs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text",
+def hashed_gram_buckets(docs: DataFrame,
                         n_buckets: int = N_BUCKETS,
                         carry_cols: tuple = ()) -> DataFrame:
-    """One row per unigram/bigram OCCURRENCE: (id_col, *carry_cols,
+    """One row per unigram/bigram OCCURRENCE: (doc_id, *carry_cols,
     bucket). Tokens are lowercased whitespace words; bigrams are
     adjacent pairs joined by one space (zip_with over two slices —
     JVM-side, no UDF). NULL text is coalesced to '' first, so a
@@ -80,8 +79,8 @@ def hashed_gram_buckets(docs: DataFrame, id_col: str = "doc_id",
     stage output; PERF.md §r10 traced a 42–52 s 30x variance band to
     that starved token stream)."""
     docs = spread(docs)
-    keys = [id_col, *carry_cols]
-    ts = F.split(F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))),
+    keys = ["doc_id", *carry_cols]
+    ts = F.split(F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))),
                  r"\s+")
     t = (docs.select(*keys, ts.alias("ts"))
          .filter(F.size("ts") >= 1))
@@ -98,8 +97,7 @@ def hashed_gram_buckets(docs: DataFrame, id_col: str = "doc_id",
 
 
 def dsir_bucket_llr(occ: DataFrame, target_pred: Column,
-                    n_buckets: int = N_BUCKETS,
-                    alpha: float = ALPHA) -> DataFrame:
+                    n_buckets: int = N_BUCKETS) -> DataFrame:
     """Per-bucket log-likelihood ratio ln(p_target / p_raw) with
     additive smoothing — the DSIR importance model — fitted from ONE
     occurrence-count frame (doc_gram_bucket_counts) covering BOTH
@@ -133,10 +131,10 @@ def dsir_bucket_llr(occ: DataFrame, target_pred: Column,
     # 1-row crossJoin), not by re-counting the corpus
     tot = joined.agg(F.sum("n_target").alias("__tt"),
                      F.sum("n_raw").alias("__rt"))
-    pt = ((F.col("n_target") + F.lit(alpha))
-          / (F.col("__tt") + F.lit(alpha * n_buckets)))
-    pr = ((F.col("n_raw") + F.lit(alpha))
-          / (F.col("__rt") + F.lit(alpha * n_buckets)))
+    pt = ((F.col("n_target") + F.lit(ALPHA))
+          / (F.col("__tt") + F.lit(ALPHA * n_buckets)))
+    pr = ((F.col("n_raw") + F.lit(ALPHA))
+          / (F.col("__rt") + F.lit(ALPHA * n_buckets)))
     return (joined.crossJoin(F.broadcast(tot))
             .select("bucket", "n_target", "n_raw",
                     (F.log(pt) - F.log(pr)).alias("llr")))
@@ -144,8 +142,7 @@ def dsir_bucket_llr(occ: DataFrame, target_pred: Column,
 
 def dsir_bucket_llr_by_group(occ: DataFrame, target_pred: Column,
                              group_col: str = "source",
-                             n_buckets: int = N_BUCKETS,
-                             alpha: float = ALPHA) -> DataFrame:
+                             n_buckets: int = N_BUCKETS) -> DataFrame:
     """Domain-conditional DSIR model: one LLR table per raw GROUP
     (source/shard) against the SHARED target distribution — llr_g =
     ln(p_target / p_raw_g), p_raw_g fitted WITHIN group g — so a gram
@@ -176,10 +173,10 @@ def dsir_bucket_llr_by_group(occ: DataFrame, target_pred: Column,
     grid = rc.select(group_col).distinct().crossJoin(buckets)
     tot_t = tc.agg(F.sum("n_target").alias("__tt"))
     tot_r = rc.groupBy(group_col).agg(F.sum("n_raw").alias("__rt"))
-    pt = ((F.col("n_target") + F.lit(alpha))
-          / (F.col("__tt") + F.lit(alpha * n_buckets)))
-    pr = ((F.col("n_raw") + F.lit(alpha))
-          / (F.col("__rt") + F.lit(alpha * n_buckets)))
+    pt = ((F.col("n_target") + F.lit(ALPHA))
+          / (F.col("__tt") + F.lit(ALPHA * n_buckets)))
+    pr = ((F.col("n_raw") + F.lit(ALPHA))
+          / (F.col("__rt") + F.lit(ALPHA * n_buckets)))
     return (grid.join(tc, "bucket", "left")
             .join(rc, [group_col, "bucket"], "left")
             .select(group_col, "bucket",
@@ -191,11 +188,10 @@ def dsir_bucket_llr_by_group(occ: DataFrame, target_pred: Column,
                     (F.log(pt) - F.log(pr)).alias("llr")))
 
 
-def doc_gram_bucket_counts(docs: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text",
+def doc_gram_bucket_counts(docs: DataFrame,
                            n_buckets: int = N_BUCKETS,
                            carry_cols: tuple = ()) -> DataFrame:
-    """hashed_gram_buckets aggregated to (id_col, *carry_cols, bucket,
+    """hashed_gram_buckets aggregated to (doc_id, *carry_cols, bucket,
     n_occ) — the input of both fits and both ``_from_occ`` scorers:
     ONE corpus gram explode feeds BOTH the model fit (re-aggregate
     n_occ over docs: sums of exact counts are the exact counts) and
@@ -204,16 +200,14 @@ def doc_gram_bucket_counts(docs: DataFrame, id_col: str = "doc_id",
     corpus once. The aggregate's map side runs at
     full gram width but ships one row per (doc, bucket) — bounded by
     min(doc grams, n_buckets) per doc at any corpus size."""
-    grams = hashed_gram_buckets(docs, id_col, text_col, n_buckets,
-                                carry_cols)
-    return (grams.groupBy(id_col, *carry_cols, "bucket")
+    grams = hashed_gram_buckets(docs, n_buckets, carry_cols)
+    return (grams.groupBy("doc_id", *carry_cols, "bucket")
             .agg(F.count("*").alias("n_occ")))
 
 
 def dsir_scores_by_group_from_occ(occ: DataFrame,
                                   llr_by_group: DataFrame,
-                                  group_col: str = "source",
-                                  id_col: str = "doc_id") -> DataFrame:
+                                  group_col: str = "source") -> DataFrame:
     """Score each doc against ITS OWN group's LLR model
     (dsir_bucket_llr_by_group) from the pre-aggregated occurrence
     counts (doc_gram_bucket_counts carrying ``group_col``); the model
@@ -224,44 +218,40 @@ def dsir_scores_by_group_from_occ(occ: DataFrame,
     repeated addition (dsir_scores) only at the summation-order ulp
     level the round-5-last protocol already absorbs (the same
     argument that lets the two engines' ln()/sum orders differ).
-    Output (id_col, group_col, n_grams, score)."""
+    Output (doc_id, group_col, n_grams, score)."""
     model = F.broadcast(llr_by_group.select(group_col, "bucket", "llr"))
     return (occ.join(model, [group_col, "bucket"])
-            .groupBy(id_col, group_col)
+            .groupBy("doc_id", group_col)
             .agg(F.sum("n_occ").alias("n_grams"),
                  F.round(F.sum(F.col("llr") * F.col("n_occ"))
                          / F.sum("n_occ"), 5).alias("score")))
 
 
-def dsir_scores_from_occ(occ: DataFrame, llr: DataFrame,
-                         id_col: str = "doc_id") -> DataFrame:
+def dsir_scores_from_occ(occ: DataFrame, llr: DataFrame) -> DataFrame:
     """dsir_scores from pre-aggregated occurrence counts — pooled-
     model twin of dsir_scores_by_group_from_occ (same exactness and
-    round-5-last arguments). Output (id_col, n_grams, score)."""
+    round-5-last arguments). Output (doc_id, n_grams, score)."""
     return (occ.join(F.broadcast(llr.select("bucket", "llr")), "bucket")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.sum("n_occ").alias("n_grams"),
                  F.round(F.sum(F.col("llr") * F.col("n_occ"))
                          / F.sum("n_occ"), 5).alias("score")))
 
 
-def dsir_scores(docs: DataFrame, llr: DataFrame,
-                id_col: str = "doc_id", text_col: str = "text",
-                n_buckets: int = N_BUCKETS) -> DataFrame:
+def dsir_scores(docs: DataFrame, llr: DataFrame) -> DataFrame:
     """Score each doc: mean llr over its hashed-gram occurrences,
     rounded to 5 decimals LAST (the doc_kn_perplexity determinism
-    protocol). Output (id_col, n_grams, score). Docs with zero tokens
+    protocol). Output (doc_id, n_grams, score). Docs with zero tokens
     after trim still emit their unigram of '' — every doc scores."""
-    grams = hashed_gram_buckets(docs, id_col, text_col, n_buckets)
+    grams = hashed_gram_buckets(docs)
     return (grams.join(F.broadcast(llr.select("bucket", "llr")), "bucket")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.count("*").alias("n_grams"),
                  F.round(F.avg("llr"), 5).alias("score")))
 
 
 def dsir_select(scores: DataFrame, keep_fraction: float,
-                partition_cols: list[str],
-                id_col: str = "doc_id") -> DataFrame:
+                partition_cols: list[str]) -> DataFrame:
     """Keep the top ``keep_fraction`` of scored docs WITHIN each
     partition (shard/source) by (rounded score desc, id asc) — a
     deterministic in-plan rank against an in-plan per-partition
@@ -276,7 +266,7 @@ def dsir_select(scores: DataFrame, keep_fraction: float,
                          "sort at scale — select within shards)")
     pw = Window.partitionBy(*partition_cols)
     w = Window.partitionBy(*partition_cols).orderBy(
-        F.col("score").desc(), F.col(id_col))
+        F.col("score").desc(), F.col("doc_id"))
     n_keep = F.greatest(
         F.lit(1),
         F.floor(F.count("*").over(pw) * F.lit(keep_fraction))

@@ -148,8 +148,7 @@ def audit(tables: dict[str, DataFrame],
 
 
 def tombstones(doomed_pks: DataFrame, key_col: str,
-               seq_value, payload_cols: Sequence[str],
-               seq_type: str = "long") -> DataFrame:
+               seq_value, payload_cols: Sequence[str]) -> DataFrame:
     """DELETE changelog rows for the doomed keys, shaped for
     cdc.apply_changelog_versioned: (key, seq, op='D', NULL payload).
     Feeding these to the CDC tier makes every downstream keyed view
@@ -157,7 +156,7 @@ def tombstones(doomed_pks: DataFrame, key_col: str,
     blocks any replayed historical upsert from resurrecting the
     subject."""
     out = (doomed_pks.select(F.col(doomed_pks.columns[0]).alias(key_col))
-           .withColumn("seq", F.lit(seq_value).cast(seq_type))
+           .withColumn("seq", F.lit(seq_value).cast("long"))
            .withColumn("op", F.lit("D")))
     for p in payload_cols:
         out = out.withColumn(p, F.lit(None).cast("string"))

@@ -32,9 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def connected_components(edges: DataFrame, src: str = "id_a",
-                         dst: str = "id_b",
-                         max_iter: int = 50) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     """Component id (= min member id) per vertex appearing in
     ``edges``. Isolated vertices don't appear (no edges -> no dup
     group -> caller keeps the doc as its own keeper).
@@ -46,9 +44,9 @@ def connected_components(edges: DataFrame, src: str = "id_a",
     # Checkpointing truncates lineage each round, keeping plan size
     # O(1) in the iteration count. (On a real cluster with executor
     # churn, swap for reliable checkpoint() to a cluster-visible dir.)
-    sym = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-           .unionByName(edges.select(F.col(dst).alias("a"),
-                                     F.col(src).alias("b")))
+    sym = (edges.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
+           .unionByName(edges.select(F.col("id_b").alias("a"),
+                                     F.col("id_a").alias("b")))
            .distinct().localCheckpoint(eager=True))
     labels = (sym.select(F.col("a").alias("id")).distinct()
               .withColumn("component", F.col("id"))
@@ -137,8 +135,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
             .distinct())
 
 
-def connected_components_star(edges: DataFrame, src: str = "id_a",
-                              dst: str = "id_b",
+def connected_components_star(edges: DataFrame,
                               max_iter: int = 30) -> DataFrame:
     """Large-star/small-star connected components (Kiveris et al.
     SoCC'14): alternate the two rounds until the edge set is a stable
@@ -158,12 +155,12 @@ def connected_components_star(edges: DataFrame, src: str = "id_a",
     to ``connected_components``."""
     # localCheckpoint per round: same lineage-truncation requirement
     # as connected_components (see comment there).
-    cur = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    cur = (edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
            .filter(F.col("u") != F.col("v"))
            .distinct().localCheckpoint(eager=True))
     if cur.isEmpty():
-        return edges.select(F.col(src).alias("id"),
-                            F.col(src).alias("component")).limit(0)
+        return edges.select(F.col("id_a").alias("id"),
+                            F.col("id_a").alias("component")).limit(0)
     # One convergence job per round (r13 optimization round, guide
     # §1.2/§5): both edge sets are distinct by construction (each is a
     # .distinct() output), so set equality is one signed-count
@@ -197,28 +194,26 @@ def connected_components_star(edges: DataFrame, src: str = "id_a",
 
 
 def dedup_keepers(docs: DataFrame, pair_edges: DataFrame,
-                  id_col: str = "doc_id",
                   algorithm: str = "propagation") -> DataFrame:
     """Keeper assignment: every doc mapped to the id that survives
     dedup — the component min for docs in a near-dup group, itself
-    otherwise. Output: (id_col, keeper_id, is_kept).
+    otherwise. Output: (doc_id, keeper_id, is_kept).
 
     ``algorithm``: "propagation" (diameter-bound rounds; fastest on
     dense dup cliques) or "star" (O(log^2 n) rounds; safe for
     chain-heavy pair graphs)."""
     cc = {"propagation": connected_components,
           "star": connected_components_star}[algorithm]
-    comp = cc(pair_edges).withColumnRenamed("id", id_col)
-    out = (docs.select(id_col)
-           .join(comp, id_col, "left")
-           .select(id_col,
-                   F.coalesce("component", F.col(id_col))
+    comp = cc(pair_edges).withColumnRenamed("id", "doc_id")
+    out = (docs.select("doc_id")
+           .join(comp, "doc_id", "left")
+           .select("doc_id",
+                   F.coalesce("component", F.col("doc_id"))
                     .alias("keeper_id")))
-    return out.withColumn("is_kept", F.col(id_col) == F.col("keeper_id"))
+    return out.withColumn("is_kept", F.col("doc_id") == F.col("keeper_id"))
 
 
-def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
-             n_iter: int = 10, damping: float = 0.85) -> DataFrame:
+def pagerank(edges: DataFrame, n_iter: int = 10) -> DataFrame:
     """Distributed PageRank power iteration over an edge list —
     the centrality tier next to connected components (components say
     WHICH vertices belong together; rank says which vertices MATTER).
@@ -227,8 +222,8 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     each round, every vertex's rank splits evenly over its out-edges;
     vertices with NO out-edges (dangling) donate their rank to all N
     vertices uniformly; new_rank = (1-d)/N + d * (received +
-    dangling_mass/N). Total rank stays 1 every round (asserted in
-    tests against a pure-Python reference).
+    dangling_mass/N) with damping d = 0.85. Total rank stays 1 every
+    round (asserted in tests against a pure-Python reference).
 
     Scale shape: per round ONE shuffle (contribs join ranks on src,
     aggregate on dst) plus a 1-row dangling-mass aggregate that
@@ -243,12 +238,13 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     list (either side). Fixed n_iter (the production norm) rather
     than convergence polling keeps the job count bounded and
     deterministic."""
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    e = (edges.select(F.col("src").alias("src"), F.col("dst").alias("dst"))
          .distinct().localCheckpoint(eager=True))
     verts = (e.select(F.col("src").alias("vertex"))
              .unionByName(e.select(F.col("dst").alias("vertex")))
              .distinct().localCheckpoint(eager=True))
     n = verts.count()
+    d = 0.85    # damping
     outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
 
     ranks = verts.withColumn("rank", F.lit(1.0 / n))
@@ -269,9 +265,9 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
         ranks = (verts.join(contribs, "vertex", "left")
                  .crossJoin(F.broadcast(dangling))
                  .select("vertex",
-                         (F.lit((1.0 - damping) / n)
-                          + damping * (F.coalesce("received", F.lit(0.0))
-                                       + F.col("dmass") / n))
+                         (F.lit((1.0 - d) / n)
+                          + d * (F.coalesce("received", F.lit(0.0))
+                                 + F.col("dmass") / n))
                          .alias("rank"))
                  .localCheckpoint(eager=True))
     return ranks

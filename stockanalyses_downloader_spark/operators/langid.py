@@ -29,9 +29,8 @@ NB_N = 3          # character n-gram order
 NB_ALPHA = 1.0    # add-alpha smoothing
 
 
-def train_nb(docs: DataFrame, text_col: str = "text",
-             label_col: str = "lang", n: int = NB_N,
-             alpha: float = NB_ALPHA) -> tuple[DataFrame, DataFrame]:
+def train_nb(docs: DataFrame,
+             label_col: str = "lang") -> tuple[DataFrame, DataFrame]:
     """Fit the model. Returns (gram_logps, label_stats):
     gram_logps = (label, gram, logp); label_stats = (label,
     log_prior, log_unseen) where log_unseen is the smoothed
@@ -42,7 +41,7 @@ def train_nb(docs: DataFrame, text_col: str = "text",
     expression is per-row CPU over the whole corpus; a narrow
     upstream would serialize it. The doc-count aggregates below scan
     the unspread docs (column-pruned, no per-row text work)."""
-    g = (with_char_grams(spread(docs), text_col, n)
+    g = (with_char_grams(spread(docs))
          .select(F.col(label_col).alias("label"),
                  F.explode("__grams").alias("gram")))
     # tracked_persist (r12, found by the langid A/B re-measure): the
@@ -67,14 +66,14 @@ def train_nb(docs: DataFrame, text_col: str = "text",
     stats = (totals.crossJoin(F.broadcast(vocab))
              .join(priors, "label")
              .select("label", "total", "v", "log_prior",
-                     F.log(F.lit(alpha)
-                           / (F.col("total") + F.lit(alpha) * F.col("v")))
+                     F.log(F.lit(NB_ALPHA)
+                           / (F.col("total") + F.lit(NB_ALPHA) * F.col("v")))
                      .alias("log_unseen")))
     logps = (counts.join(F.broadcast(stats.select("label", "total", "v")),
                          "label")
              .select("label", "gram",
-                     F.log((F.col("c") + F.lit(alpha))
-                           / (F.col("total") + F.lit(alpha) * F.col("v")))
+                     F.log((F.col("c") + F.lit(NB_ALPHA))
+                           / (F.col("total") + F.lit(NB_ALPHA) * F.col("v")))
                      .alias("logp")))
     return logps, stats.select("label", "log_prior", "log_unseen")
 
@@ -120,13 +119,12 @@ def with_char_grams(docs: DataFrame, text_col: str = "text",
 
 
 def score_nb(docs: DataFrame, gram_logps: DataFrame,
-             label_stats: DataFrame, id_col: str = "doc_id",
-             text_col: str = "text", n: int = NB_N) -> DataFrame:
+             label_stats: DataFrame) -> DataFrame:
     """Per-doc argmax label. score(label) = log_prior + Σ over gram
     OCCURRENCES of (logp if the label has seen the gram, else that
     label's log_unseen) — algebraically identical to the r11 form
     log_prior + sum(seen logps) + (n_grams - n_seen) * log_unseen.
-    Deterministic argmax tie-break on label order. Output: (id_col,
+    Deterministic argmax tie-break on label order. Output: (doc_id,
     predicted_lang, best_logp).
 
     r12 shrink (VERDICT r11 #3 — the 131 s single-file-30× A/B cell):
@@ -155,7 +153,7 @@ def score_nb(docs: DataFrame, gram_logps: DataFrame,
                   for r in label_stats.collect())
     if not labs:
         return docs.select(
-            id_col, F.lit(None).cast("string").alias("predicted_lang"),
+            "doc_id", F.lit(None).cast("string").alias("predicted_lang"),
             F.lit(None).cast("double").alias("best_logp"))
     labels = [lb for lb, _, _ in labs]
     unseens = [u for _, _, u in labs]
@@ -183,12 +181,12 @@ def score_nb(docs: DataFrame, gram_logps: DataFrame,
     # spread() before the scoring explode (r11 rollout): the n-gram
     # expression is per-row CPU over the whole corpus; hoisted
     # normalization (r13) keeps the regex at one run per doc
-    g = (with_char_grams(spread(docs), text_col, n)
-         .select(id_col, F.explode("__grams").alias("gram")))
+    g = (with_char_grams(spread(docs))
+         .select("doc_id", F.explode("__grams").alias("gram")))
     unseen_vec = F.array(*[F.lit(u) for u in unseens])
     j = (g.join(F.broadcast(dense), "gram", "left")
-         .select(id_col, F.coalesce("__vec", unseen_vec).alias("__vec")))
-    sums = (j.groupBy(id_col)
+         .select("doc_id", F.coalesce("__vec", unseen_vec).alias("__vec")))
+    sums = (j.groupBy("doc_id")
             .agg(*[F.sum(F.element_at("__vec", i + 1)).alias(f"__s{i}")
                    for i in range(len(labs))]))
 
@@ -207,6 +205,6 @@ def score_nb(docs: DataFrame, gram_logps: DataFrame,
             (x["score"] > acc["score"])
             | ((x["score"] == acc["score"])
                & (x["label"] < acc["label"])), x).otherwise(acc))
-    return (docs.select(id_col).join(sums, id_col, "left")
-            .select(id_col, best["label"].alias("predicted_lang"),
+    return (docs.select("doc_id").join(sums, "doc_id", "left")
+            .select("doc_id", best["label"].alias("predicted_lang"),
                     best["score"].alias("best_logp")))

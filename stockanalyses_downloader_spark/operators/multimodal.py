@@ -368,18 +368,17 @@ def video_meta_real(assets: DataFrame) -> DataFrame:
     return spread(assets).mapInPandas(_extract, VIDEO_META_SCHEMA)
 
 
-def resize_stub(features: DataFrame, target_w: int = 224,
-                target_h: int = 224) -> DataFrame:
+def resize_stub(features: DataFrame) -> DataFrame:
     """Resize stage over extracted features: emits the letterboxed
     target geometry + scale factor. Pure column math (the pixel work
     would live in the decode UDF); deterministic so tests/oracles can
-    pin it."""
-    scale = F.least(F.lit(float(target_w)) / F.col("width"),
-                    F.lit(float(target_h)) / F.col("height"))
+    pin it. The target is 224 x 224."""
+    scale = F.least(F.lit(224.0) / F.col("width"),
+                    F.lit(224.0) / F.col("height"))
     return features.select(
         "asset_id", "modality",
-        F.lit(target_w).cast("int").alias("target_w"),
-        F.lit(target_h).cast("int").alias("target_h"),
+        F.lit(224).cast("int").alias("target_w"),
+        F.lit(224).cast("int").alias("target_h"),
         scale.alias("scale"),
         F.floor(F.col("width") * scale).cast("int").alias("scaled_w"),
         F.floor(F.col("height") * scale).cast("int").alias("scaled_h"))
@@ -410,16 +409,15 @@ def payload_chunk_fingerprints(assets: DataFrame,
             .select("asset_id", "c.chunk_id", "c.chunk_md5"))
 
 
-def payload_cdc_chunks(assets: DataFrame, window: int = 16,
-                       cut_prefix: str = "0") -> DataFrame:
+def payload_cdc_chunks(assets: DataFrame) -> DataFrame:
     """Content-defined chunking: cut AFTER byte position i (1-based,
-    ``window <= i < len``) whenever the md5 of the ``window``-byte
-    sliding window ending at i starts with ``cut_prefix``. Cut points
+    ``16 <= i < len``) whenever the md5 of the 16-byte sliding window
+    ending at i starts with ``0``. Cut points
     depend only on local content, so inserting/removing bytes near the
     head re-chunks only the neighborhood — the tail's chunk digests
     survive, which is exactly what aligned chunking loses (every
-    offset shifts). Mean chunk length ~= 16^len(cut_prefix) bytes
-    plus the window floor.
+    offset shifts). Mean chunk length ~= 16 bytes (one hex digit of
+    md5) plus the window floor.
 
     The predicate is per-position (no sequential state), so the whole
     chunking is one expression — transform/filter over a position
@@ -431,14 +429,14 @@ def payload_cdc_chunks(assets: DataFrame, window: int = 16,
     for the oracle.
 
     Output: (asset_id, chunk_seq, chunk_start, chunk_md5)."""
-    w = window
+    w = 16
     plen = F.length("payload")
     cuts = F.when(
         plen > w,
         F.filter(
             F.sequence(F.lit(w), plen - 1),
             lambda i: F.md5(F.col("payload").substr(i - (w - 1), F.lit(w)))
-                       .startswith(cut_prefix))
+                       .startswith("0"))
     ).otherwise(F.array().cast("array<int>"))
     # bounds BOUND as a real column (r13): the chunk lambda below
     # references it 4x via element_at, and lambda bodies sit outside
@@ -505,8 +503,8 @@ def frame_sample_plan(assets: DataFrame, every_ms: int = 1000) -> DataFrame:
                         F.lit(every_ms).cast("long"))).alias("frame_ts_ms")))
 
 
-def frame_sample_plan_real(assets: DataFrame, every_ms: int = 1000,
-                           max_frames: int = 100_000) -> DataFrame:
+def frame_sample_plan_real(assets: DataFrame,
+                           every_ms: int = 1000) -> DataFrame:
     """frame_sample_plan over the PARSED presentation clock (r7c):
     the fake byte_len duration is replaced by the mvhd duration_ms
     from video_meta_real, so the plan budgets frames against the
@@ -516,14 +514,14 @@ def frame_sample_plan_real(assets: DataFrame, every_ms: int = 1000,
     NULL duration and drop out — the dead-letter branch a curation
     pass routes, not frames to sample.
 
-    ``max_frames`` is the one-bad-asset guard: a parseable-but-insane
+    The 100,000-frame cap is the one-bad-asset guard: a parseable-but-insane
     clock (a corrupt 64-bit duration) would otherwise overflow the
     cast or explode a billions-long sequence and kill the whole job —
     the bound is checked on the DOUBLE before any cast, so no value
     can reach the overflow. Assets over the budget are excluded like
     any other corrupt metadata."""
     meta = video_meta_real(assets.filter(F.col("modality") == "video"))
-    bound = float(every_ms) * (max_frames - 1)
+    bound = float(every_ms) * (100_000 - 1)
     return (meta.filter(F.col("duration_ms").isNotNull()
                         & (F.col("duration_ms") <= F.lit(bound)))
             .select("asset_id",

@@ -41,8 +41,7 @@ from pyspark.sql import functions as F
 KN_DISCOUNT = 0.75
 
 
-def bigram_pairs(docs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
+def bigram_pairs(docs: DataFrame) -> DataFrame:
     """Adjacent lowercase whitespace-token pairs per doc: (id, w1,
     w2). Docs with < 2 tokens contribute nothing (no bigram exists).
 
@@ -59,8 +58,8 @@ def bigram_pairs(docs: DataFrame, id_col: str = "doc_id",
     transform is the corpus-width CPU stage every KN consumer sits
     on — a narrow upstream would serialize it."""
     from .dedup import spread
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    w = spread(docs).select(id_col, toks.alias("__ts"))
+    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    w = spread(docs).select("doc_id", toks.alias("__ts"))
     ts = F.col("__ts")
     grams = F.when(
         F.size(ts) >= 2,
@@ -69,8 +68,8 @@ def bigram_pairs(docs: DataFrame, id_col: str = "doc_id",
                         F.element_at(ts, i).alias("w1"),
                         F.element_at(ts, i + 1).alias("w2")))
     ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
-    return (w.select(id_col, F.explode(grams).alias("g"))
-            .select(id_col, "g.w1", "g.w2"))
+    return (w.select("doc_id", F.explode(grams).alias("g"))
+            .select("doc_id", "g.w1", "g.w2"))
 
 
 def kn_bigram_model(pairs: DataFrame,
@@ -104,24 +103,22 @@ def _p_kn(c12, discount: float):
     return observed + backoff
 
 
-def kn_observed_probs(docs: DataFrame, text_col: str = "text",
-                      discount: float = KN_DISCOUNT) -> DataFrame:
+def kn_observed_probs(docs: DataFrame) -> DataFrame:
     """Train on the corpus and emit every OBSERVED bigram's
     interpolated probability: (w1, w2, c12, p_kn). The unseen-pair
     mass is reachable through kn_score_pairs; the observed table is
     the hash-oracled artifact."""
     bg, ctx, cont, tot = kn_bigram_model(
-        bigram_pairs(docs, text_col=text_col))
+        bigram_pairs(docs))
     return (bg.join(ctx, "w1").join(cont, "w2")
             .crossJoin(F.broadcast(tot))
             .select("w1", "w2", F.col("c12").cast("long").alias("c12"),
-                    _p_kn(F.col("c12"), discount).alias("p_kn")))
+                    _p_kn(F.col("c12"), KN_DISCOUNT).alias("p_kn")))
 
 
 def kn_score_pairs(model: tuple[DataFrame, DataFrame, DataFrame,
                                 DataFrame],
-                   pairs: DataFrame,
-                   discount: float = KN_DISCOUNT) -> DataFrame:
+                   pairs: DataFrame) -> DataFrame:
     """Score arbitrary (w1, w2) pairs under the trained model —
     observed or UNSEEN (c12=0 -> pure backoff mass). Pairs whose w1
     was never a context or whose w2 was never a continuation get
@@ -138,5 +135,5 @@ def kn_score_pairs(model: tuple[DataFrame, DataFrame, DataFrame,
                     F.when(F.col("c1").isNotNull()
                            & F.col("n1bw").isNotNull(),
                            _p_kn(F.coalesce(F.col("c12"), F.lit(0)),
-                                 discount))
+                                 KN_DISCOUNT))
                     .alias("p_kn")))

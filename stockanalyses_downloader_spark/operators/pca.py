@@ -29,8 +29,7 @@ from .dedup import spread
 from .similarity import as_double
 
 
-def moment_grid(embeddings: DataFrame, group_cols: list[str],
-                vec_col: str = "embedding") -> DataFrame:
+def moment_grid(embeddings: DataFrame, group_cols: list[str]) -> DataFrame:
     """MERGEABLE per-(group, dimension) moment grid: (group_cols...,
     pos, n, sx, sxx) with DECIMAL(30,15)-accumulated sums — the
     sufficient statistics for means/variances/covariance diagonals
@@ -43,7 +42,7 @@ def moment_grid(embeddings: DataFrame, group_cols: list[str],
     corpus was split (pinned by the streaming merge test). Grid size:
     groups x d rows, model-sized by construction."""
     e = (embeddings.select(*group_cols,
-                           as_double(F.col(vec_col)).alias("v"))
+                           as_double(F.col("embedding")).alias("v"))
          .filter(F.size("v") >= 1))
     pe = e.select(*group_cols, F.posexplode("v").alias("pos", "x"))
     return (pe.groupBy(*group_cols, "pos")
@@ -133,8 +132,7 @@ def embedding_covariance(embeddings: DataFrame,
                     .alias("cov")))
 
 
-def pca_model(embeddings: DataFrame, k: int,
-              vec_col: str = "embedding"):
+def pca_model(embeddings: DataFrame, k: int):
     """Fit: collect the d×d covariance (model-sized), eigh in numpy,
     return (means: list[float], components: list[list[float]]) for the
     top-k components by eigenvalue. Component sign is normalized so
@@ -142,7 +140,7 @@ def pca_model(embeddings: DataFrame, k: int,
     arbitrary and the contract must be deterministic."""
     import numpy as np
 
-    rows = embedding_covariance(embeddings, vec_col).collect()
+    rows = embedding_covariance(embeddings).collect()
     if not rows:
         raise ValueError(
             "pca_model: no covariance rows — the embeddings frame is "
@@ -152,7 +150,7 @@ def pca_model(embeddings: DataFrame, k: int,
     for r in rows:
         cov[r["dim_i"], r["dim_j"]] = r["cov"]
         cov[r["dim_j"], r["dim_i"]] = r["cov"]
-    e = embeddings.select(as_double(F.col(vec_col)).alias("v"))
+    e = embeddings.select(as_double(F.col("embedding")).alias("v"))
     mu_rows = (e.select(F.posexplode("v").alias("pos", "x"))
                .groupBy("pos")
                .agg((F.sum(F.col("x").cast("decimal(30,15)")).cast("double")
@@ -224,13 +222,12 @@ def pca_rotation_balanced(embeddings: DataFrame, m: int,
 
 def project_embeddings(embeddings: DataFrame, means: list[float],
                        components: list[list[float]],
-                       id_col: str = "vec_id",
                        vec_col: str = "embedding") -> DataFrame:
-    """Transform: (id_col, proj array<double>) — proj[c] =
+    """Transform: (vec_id, proj array<double>) — proj[c] =
     dot(v - means, components[c]). The component/mean literals embed
     in the plan (broadcast-by-construction); the per-row work is one
     JVM fold per component over the centered vector."""
-    e = embeddings.select(id_col, as_double(F.col(vec_col)).alias("v"))
+    e = embeddings.select("vec_id", as_double(F.col(vec_col)).alias("v"))
     centered = F.zip_with("v", F.array(*[F.lit(m) for m in means]),
                           lambda x, m: x - m)
     e = e.withColumn("cv", centered)
@@ -240,25 +237,24 @@ def project_embeddings(embeddings: DataFrame, means: list[float],
                        lambda x, w: x * w),
             F.lit(0.0), lambda acc, t: acc + t).alias(f"p{c}")
         for c, comp in enumerate(components)]
-    return (e.select(id_col, *projs)
-            .select(id_col, F.array(*[f"p{c}" for c in
-                                      range(len(components))]).alias("proj")))
+    return (e.select("vec_id", *projs)
+            .select("vec_id",
+                    F.array(*[f"p{c}" for c in range(len(components))])
+                    .alias("proj")))
 
 
-def pca_ivf_topk(embeddings: DataFrame, query_ids: list[int], k: int = 10,
-                 pca_k: int = 24, n_centroids: int = 16, n_probe: int = 8,
-                 oversample: int = 5, id_col: str = "vec_id",
-                 vec_col: str = "embedding",
-                 probe_oversample: int = 4) -> DataFrame:
+def pca_ivf_topk(embeddings: DataFrame, query_ids: list[int],
+                 k: int = 10) -> DataFrame:
     """IVF candidate generation in PCA space, exact full-dimension
     rerank (VERDICT r4 #7) — the classic recall/cost trade: centroid
-    assignment, probing, and candidate scoring all run on k=pca_k
-    projections (2.7× narrower at d=64, pca_k=24 — proportionally
+    assignment, probing, and candidate scoring all run on 24 PCA
+    projections (2.7× narrower at d=64 — proportionally
     less dot-product work and wire per candidate; measured recall@10
     0.72/0.64 at sf0.001/sf0.01 vs untrained full-dim IVF's
     0.62/0.62 at the same probe depth — the projection even denoises
-    on this corpus), then only the k·oversample best per query fetch
-    their float vectors for exact cosine.
+    on this corpus), then only the k·5 best per query fetch their
+    float vectors for exact cosine. Lists: 16 sampled centroids, 8
+    probes.
 
     The fit is ``pca_model`` (distributed moments, driver-side d×d
     eigh — a model-sized action by nature, like kmeans' convergence
@@ -274,10 +270,11 @@ def pca_ivf_topk(embeddings: DataFrame, query_ids: list[int], k: int = 10,
                              as_double, dot, l2_norm)
     from ..caching import tracked_persist
 
-    means, comps = pca_model(embeddings, pca_k, vec_col)
+    means, comps = pca_model(embeddings, 24)
 
-    base = embeddings.select(id_col, as_double(F.col(vec_col)).alias("fv")) \
-                     .filter(F.size("fv") >= 1)
+    base = (embeddings.select("vec_id",
+                              as_double(F.col("embedding")).alias("fv"))
+            .filter(F.size("fv") >= 1))
     centered = F.zip_with("fv", F.array(*[F.lit(m) for m in means]),
                           lambda x, mu: x - mu)
     base = base.withColumn("cv0", centered)
@@ -291,23 +288,22 @@ def pca_ivf_topk(embeddings: DataFrame, query_ids: list[int], k: int = 10,
         base.withColumn("v", F.array(*projs))
             .withColumn("norm", l2_norm(F.col("v")))
             .withColumn("fnorm", l2_norm(F.col("fv")))
-            .select(id_col, "v", "norm", "fv", "fnorm"))
+            .select("vec_id", "v", "norm", "fv", "fnorm"))
 
     # lists/probes see ONLY the projected vectors (carry=[]): the
-    # whole point is pca_k-narrow inverted lists, so the d-dim floats
+    # whole point is 24-wide inverted lists, so the d-dim floats
     # must not ride through the assignment shuffle and the persisted
     # lists (review r5) — the rerank fetches them by id instead: the
     # query side from a broadcast-sized filtered lookup, the neighbor
-    # side for the O(k·oversample) shortlist only.
-    proj = e.select(id_col, "v", "norm")
-    cent = _sampled_centroids(proj, n_centroids, id_col)
-    lists, probes = _ivf_lists_probes(
-        proj, cent, query_ids, k, n_probe, probe_oversample, id_col, [])
+    # side for the O(k·5) shortlist only.
+    proj = e.select("vec_id", "v", "norm")
+    cent = _sampled_centroids(proj, 16)
+    lists, probes = _ivf_lists_probes(proj, cent, query_ids, k, 8, [])
 
-    q = probes.select(F.col(id_col).alias("query_id"),
+    q = probes.select(F.col("vec_id").alias("query_id"),
                       F.col("v").alias("qv"), F.col("norm").alias("qnorm"),
                       "list_id")
-    c = lists.select(F.col(id_col).alias("neighbor_id"),
+    c = lists.select(F.col("vec_id").alias("neighbor_id"),
                      F.col("v").alias("nv"), F.col("norm").alias("nnorm"),
                      "list_id")
     # broadcast the model-sized probes; no dedup — one list per
@@ -322,15 +318,15 @@ def pca_ivf_topk(embeddings: DataFrame, query_ids: list[int], k: int = 10,
     sw = Window.partitionBy("query_id").orderBy(
         F.col("approx_cos").desc(), F.col("neighbor_id"))
     shortlist = (approx.withColumn("__s", F.row_number().over(sw))
-                 .filter(F.col("__s") <= k * oversample))
+                 .filter(F.col("__s") <= k * 5))
 
-    qf = (e.filter(F.col(id_col).isin(query_ids))
-          .select(F.col(id_col).alias("query_id"),
+    qf = (e.filter(F.col("vec_id").isin(query_ids))
+          .select(F.col("vec_id").alias("query_id"),
                   F.col("fv").alias("qfv"),
                   F.col("fnorm").alias("qfnorm")))
-    nv = e.select(F.col(id_col).alias("neighbor_id"),
+    nv = e.select(F.col("vec_id").alias("neighbor_id"),
                   F.col("fv").alias("cfv"), F.col("fnorm").alias("cfnorm"))
-    # broadcast the O(k·oversample·queries) shortlist (guide §3): the
+    # broadcast the O(k·5·queries) shortlist (guide §3): the
     # full-dimension fetch is a model-sized id lookup against the
     # corpus — unhinted, the corpus gets exchanged by neighbor_id.
     exact = (F.broadcast(shortlist).join(nv, "neighbor_id")

@@ -34,13 +34,13 @@ def filter_actionable_jobs(df: DataFrame, rest_only: bool = False) -> DataFrame:
     return df.filter(actionable_job_condition(rest_only))
 
 
-def parse_job_value(df: DataFrame, value_col: str = "value") -> DataFrame:
+def parse_job_value(df: DataFrame) -> DataFrame:
     """P3: split ``"<exchange>#<isin>"`` into columns (main.py:278-280).
 
     Malformed values (no ``#``) yield a NULL isin, which the downstream
     inner dim-join drops — same net effect as the reference's KeyError
     path, but total instead of crashing."""
-    parts = F.split(F.col(value_col), "#")
+    parts = F.split(F.col("value"), "#")
     return (df
             .withColumn("exchange", parts.getItem(0))
             .withColumn("isin", F.when(F.size(parts) >= 2, parts.getItem(1))))
@@ -71,38 +71,26 @@ def resolve_isin(df: DataFrame, dim: DataFrame) -> DataFrame:
     return df.join(F.broadcast(dim), "pair", "inner")
 
 
-def validate_http(df: DataFrame, status_col: str = "status") -> DataFrame:
+def validate_http(df: DataFrame) -> DataFrame:
     """P2: keep successful responses (main.py:328)."""
-    return df.filter(F.col(status_col) == 200)
+    return df.filter(F.col("status") == 200)
 
 
-def dead_letter(df: DataFrame, status_col: str = "status") -> DataFrame:
+def dead_letter(df: DataFrame) -> DataFrame:
     """K5: the complement of validate_http — failed fetches routed to an
     error branch instead of a mail comment (main.py:343-345)."""
-    return df.filter(F.col(status_col) != 200)
+    return df.filter(F.col("status") != 200)
 
 
-def with_mid(df: DataFrame, bid: str = "bid", ask: str = "ask") -> DataFrame:
+def with_mid(df: DataFrame) -> DataFrame:
     """P8: the flagship derived column, mid = (bid+ask)/2 (main.py:414)."""
-    return df.withColumn("mid", (F.col(bid) + F.col(ask)) / 2)
+    return df.withColumn("mid", (F.col("bid") + F.col("ask")) / 2)
 
 
-def enrich(df: DataFrame, exchange: str | None = None,
-           isin: str | None = None) -> DataFrame:
-    """P10: stamp context fields onto every message (main.py:214-215).
-    When the pipeline already carries exchange/isin as join keys this is
-    a no-op; literals are for single-feed bindings."""
-    if exchange is not None:
-        df = df.withColumn("exchange", F.lit(exchange))
-    if isin is not None:
-        df = df.withColumn("isin", F.lit(isin))
-    return df
-
-
-def serialize_message(df: DataFrame, out_col: str = "message") -> DataFrame:
+def serialize_message(df: DataFrame) -> DataFrame:
     """P11: one JSON document per row, the reference's queue payload
     (main.py:217). ``to_json(struct(*))`` — JVM-side, no Python."""
-    return df.withColumn(out_col, F.to_json(F.struct(*df.columns)))
+    return df.withColumn("message", F.to_json(F.struct(*df.columns)))
 
 
 def project_wss_tick(raw: DataFrame) -> DataFrame:

@@ -31,9 +31,8 @@ FEATURE_NAMES = ["bias", "len_k", "alpha_frac", "digit_frac",
                  "mean_tok_len", "space_frac"]
 
 
-def surface_features(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
-    """(id_col, x array<double>): bias, capped length (kchars), alpha
+def surface_features(docs: DataFrame) -> DataFrame:
+    """(doc_id, x array<double>): bias, capped length (kchars), alpha
     fraction, digit fraction, mean token length (deca-chars), space
     fraction — all single-scan JVM expressions over the canonicalized
     text, each roughly unit-scaled so one learning rate fits all
@@ -59,7 +58,7 @@ def surface_features(docs: DataFrame, text_col: str = "text",
     still hash-match — pinned by the quality-model oracle tests."""
     from .dedup import spread
     docs = spread(docs)
-    c = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
+    c = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     ln = F.length(c).cast("double")
     safe = F.greatest(ln, F.lit(1.0))
     toks = F.split(c, " ")
@@ -80,7 +79,7 @@ def surface_features(docs: DataFrame, text_col: str = "text",
         tok_chars / ntok / 10.0,
         n_spaces / safe,
     )
-    return docs.select(id_col, x.alias("x"))
+    return docs.select("doc_id", x.alias("x"))
 
 
 def logit(x: Column, weights: list[float]) -> Column:
@@ -104,8 +103,7 @@ def logit(x: Column, weights: list[float]) -> Column:
 
 
 def train_logistic(features: DataFrame, label_col: str,
-                   n_iter: int = 20, lr: float = 1.0,
-                   x_col: str = "x") -> list[float]:
+                   n_iter: int = 20, lr: float = 1.0) -> list[float]:
     """Batch gradient descent on logistic loss: w <- w - lr * mean of
     (sigmoid(w·x) - y)·x. Returns the learned weights (model-sized,
     driver-held — like kmeans centroids before broadcast).
@@ -117,7 +115,7 @@ def train_logistic(features: DataFrame, label_col: str,
     bit-reproducible run to run and pinnable against a single-threaded
     numpy reference (tests/test_quality_model.py)."""
     d = features.select(
-        F.col(x_col).alias("x"),
+        F.col("x").alias("x"),
         F.col(label_col).cast("double").alias("y")).persist()
     n = d.count()   # one materialization; also the GD denominator
     w = [0.0] * len(FEATURE_NAMES)
@@ -139,16 +137,15 @@ def train_logistic(features: DataFrame, label_col: str,
     return w
 
 
-def score_with_weights(features: DataFrame, weights: list[float],
-                       id_col: str = "doc_id",
-                       x_col: str = "x") -> DataFrame:
-    """(id_col, logit double, prob double): apply a (learned or
+def score_with_weights(features: DataFrame,
+                       weights: list[float]) -> DataFrame:
+    """(doc_id, logit double, prob double): apply a (learned or
     pinned) weight vector in-plan. ``logit`` is the oracle-stable
     output (monotone in prob; exp's last ulp differs across libm
     implementations, plain folds don't)."""
-    z = logit(F.col(x_col), weights)
+    z = logit(F.col("x"), weights)
     return features.select(
-        id_col, z.alias("logit"),
+        "doc_id", z.alias("logit"),
         (F.lit(1.0) / (F.lit(1.0) + F.exp(-z))).alias("prob"))
 
 

@@ -44,40 +44,33 @@ def deterministic_sample(df: DataFrame, rate: float, key: str,
     return df.filter(hash_key(F.col(key), salt) < _threshold_hex(rate))
 
 
-def assign_splits(df: DataFrame, key: str,
-                  weights: dict[str, float] | None = None,
-                  salt: str = "",
-                  out_col: str = "split") -> DataFrame:
-    """Disjoint, exhaustive, deterministic split assignment
-    (train/val/test by default, 80/10/10). A key's split never
-    changes unless the salt does — the leakage guard."""
-    weights = weights or {"train": 0.8, "val": 0.1, "test": 0.1}
-    total = sum(weights.values())
-    if abs(total - 1.0) > 1e-9:
-        raise ValueError(f"weights must sum to 1, got {total}")
-    h = hash_key(F.col(key), salt)
-    names = list(weights)
+_SPLITS = (("train", 0.8), ("val", 0.1), ("test", 0.1))
+
+
+def assign_splits(df: DataFrame, key: str) -> DataFrame:
+    """Disjoint, exhaustive, deterministic split assignment:
+    train/val/test at 80/10/10 by the hash of ``key``. A key's split
+    never changes — the leakage guard."""
+    h = hash_key(F.col(key))
     cum = 0.0
     expr = None
-    for name in names[:-1]:
-        cum += weights[name]
+    for name, weight in _SPLITS[:-1]:
+        cum += weight
         branch = h < _threshold_hex(cum)
         expr = (F.when(branch, name) if expr is None
                 else expr.when(branch, name))
-    expr = (expr.otherwise(names[-1]) if expr is not None
-            else F.lit(names[-1]))
-    return df.withColumn(out_col, expr)
+    return df.withColumn("split", expr.otherwise(_SPLITS[-1][0]))
 
 
 def stratified_sample(df: DataFrame, stratum_col: str, n_per_stratum: int,
-                      key: str, salt: str = "") -> DataFrame:
+                      key: str) -> DataFrame:
     """Deterministic top-``n`` rows per stratum, chosen by hash order
     (i.e. a uniform without-replacement sample per class whose
     membership is run- and engine-stable). One shuffle on the
     stratum; the per-stratum top-n runs as a window group limit."""
     from pyspark.sql import Window
     w = (Window.partitionBy(stratum_col)
-         .orderBy(hash_key(F.col(key), salt), F.col(key)))
+         .orderBy(hash_key(F.col(key)), F.col(key)))
     return (df.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= n_per_stratum)
             .drop("__rn"))
@@ -96,8 +89,8 @@ def mixture_threshold_hex(rate: Column) -> Column:
                 F.lit(float(_HEX_SPACE - 1))).cast("long"))
 
 
-def temperature_mixture(df: DataFrame, domain_col: str, key: str,
-                        salt: str = "") -> DataFrame:
+def temperature_mixture(df: DataFrame, domain_col: str,
+                        key: str) -> DataFrame:
     """Temperature-based domain rebalancing (T=2, i.e. target share
     ∝ sqrt(n_domain) — the multilingual-corpus resampling rule): keep
     rate r_d = sqrt(n_min)/sqrt(n_d), so the smallest domain is kept
@@ -123,7 +116,7 @@ def temperature_mixture(df: DataFrame, domain_col: str, key: str,
              .withColumn("__thr", mixture_threshold_hex(F.col("keep_rate")))
              .drop("__n_min"))
     return (df.join(F.broadcast(rates), domain_col)
-            .filter(hash_key(F.col(key), salt) < F.col("__thr"))
+            .filter(hash_key(F.col(key)) < F.col("__thr"))
             .drop("__thr"))
 
 

@@ -29,6 +29,15 @@ from pyspark.sql import Window
 from ..caching import tracked_persist
 from ..sources import swap
 
+# IVF probing widens past n_probe until the probed lists hold at least
+# k * PROBE_OVERSAMPLE candidates (see ivf_topk).
+PROBE_OVERSAMPLE = 4
+# Sign-LSH: SIGN_PLANES hyperplanes drawn from _PLANE_SEED, banded into
+# SIGN_BANDS band keys.
+SIGN_PLANES = 16
+SIGN_BANDS = 4
+_PLANE_SEED = 42
+
 
 def as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
@@ -44,19 +53,19 @@ def l2_norm(vec: Column) -> Column:
     return F.sqrt(F.aggregate(vec, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def cosine_topk(embeddings: DataFrame, query_ids: list[int], k: int = 10,
-                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def cosine_topk(embeddings: DataFrame, query_ids: list[int],
+                k: int = 10) -> DataFrame:
     """Exact top-k cosine neighbors for each query id; queries are
     excluded from the candidate set. Output: query_id, neighbor_id,
     cosine, rank."""
-    e = embeddings.select(id_col, as_double(F.col(vec_col)).alias("v"))
+    e = embeddings.select("vec_id", as_double(F.col("embedding")).alias("v"))
     e = e.withColumn("norm", l2_norm(F.col("v")))
-    q = (e.filter(F.col(id_col).isin(query_ids))
-          .select(F.col(id_col).alias("query_id"), F.col("v").alias("qv"),
-                  F.col("norm").alias("qnorm")))
-    c = (e.filter(~F.col(id_col).isin(query_ids))
-          .select(F.col(id_col).alias("neighbor_id"), F.col("v").alias("cv"),
-                  F.col("norm").alias("cnorm")))
+    q = (e.filter(F.col("vec_id").isin(query_ids))
+          .select(F.col("vec_id").alias("query_id"),
+                  F.col("v").alias("qv"), F.col("norm").alias("qnorm")))
+    c = (e.filter(~F.col("vec_id").isin(query_ids))
+          .select(F.col("vec_id").alias("neighbor_id"),
+                  F.col("v").alias("cv"), F.col("norm").alias("cnorm")))
     scored = (c.crossJoin(F.broadcast(q))
                .select("query_id", "neighbor_id",
                        (dot(F.col("qv"), F.col("cv"))
@@ -68,9 +77,7 @@ def cosine_topk(embeddings: DataFrame, query_ids: list[int], k: int = 10,
 
 
 def hard_negative_topk(embeddings: DataFrame, anchor_ids: list[int],
-                       k: int = 10, dup_threshold: float = 0.95,
-                       id_col: str = "vec_id", vec_col: str = "embedding",
-                       label_col: str = "label") -> DataFrame:
+                       k: int = 10, dup_threshold: float = 0.95) -> DataFrame:
     """Hard-negative mining for contrastive / embedding training: for
     each anchor, the k most cosine-similar vectors carrying a
     DIFFERENT label — the negatives that actually move a contrastive
@@ -89,16 +96,16 @@ def hard_negative_topk(embeddings: DataFrame, anchor_ids: list[int],
 
     Output: anchor_id, anchor_label, neighbor_id, neighbor_label,
     cosine, rank."""
-    e = embeddings.select(id_col, label_col,
-                          as_double(F.col(vec_col)).alias("v"))
+    e = embeddings.select("vec_id", "label",
+                          as_double(F.col("embedding")).alias("v"))
     e = e.withColumn("norm", l2_norm(F.col("v")))
-    a = (e.filter(F.col(id_col).isin(anchor_ids))
-          .select(F.col(id_col).alias("anchor_id"),
-                  F.col(label_col).alias("anchor_label"),
+    a = (e.filter(F.col("vec_id").isin(anchor_ids))
+          .select(F.col("vec_id").alias("anchor_id"),
+                  F.col("label").alias("anchor_label"),
                   F.col("v").alias("av"), F.col("norm").alias("anorm")))
-    c = (e.filter(~F.col(id_col).isin(anchor_ids))
-          .select(F.col(id_col).alias("neighbor_id"),
-                  F.col(label_col).alias("neighbor_label"),
+    c = (e.filter(~F.col("vec_id").isin(anchor_ids))
+          .select(F.col("vec_id").alias("neighbor_id"),
+                  F.col("label").alias("neighbor_label"),
                   F.col("v").alias("cv"), F.col("norm").alias("cnorm")))
     scored = (c.crossJoin(F.broadcast(a))
                .filter(F.col("neighbor_label") != F.col("anchor_label"))
@@ -115,12 +122,8 @@ def hard_negative_topk(embeddings: DataFrame, anchor_ids: list[int],
 
 def hard_negative_topk_ivf(embeddings: DataFrame, anchor_ids: list[int],
                            k: int = 10, dup_threshold: float = 0.95,
-                           n_centroids: int = 16, n_probe: int = 8,
-                           id_col: str = "vec_id",
-                           vec_col: str = "embedding",
-                           label_col: str = "label",
-                           centroids: DataFrame | None = None,
-                           probe_oversample: int = 4) -> DataFrame:
+                           n_centroids: int = 16,
+                           n_probe: int = 8) -> DataFrame:
     """The 100 TB path for hard-negative mining: the same IVF
     partition/probe machinery as ivf_topk (inverted lists on a
     broadcast centroid set, adaptive probe depth), with the label
@@ -130,21 +133,17 @@ def hard_negative_topk_ivf(embeddings: DataFrame, anchor_ids: list[int],
     scan the brute variant pays. Same output shape as
     hard_negative_topk, which remains the recall oracle (floor pinned
     in tests)."""
-    e = embeddings.select(id_col, F.col(label_col).alias("__lbl"),
-                          as_double(F.col(vec_col)).alias("v"))
+    e = embeddings.select("vec_id", F.col("label").alias("__lbl"),
+                          as_double(F.col("embedding")).alias("v"))
     e = tracked_persist(e.withColumn("norm", l2_norm(F.col("v"))))
-    if centroids is None:
-        cent = _sampled_centroids(e, n_centroids, id_col)
-    else:
-        cent = centroids.select("centroid_id", "cv", "cnorm")
+    cent = _sampled_centroids(e, n_centroids)
     lists, probes = _ivf_lists_probes(
-        e, cent, anchor_ids, k, n_probe, probe_oversample, id_col,
-        ["__lbl"])
-    q = probes.select(F.col(id_col).alias("anchor_id"),
+        e, cent, anchor_ids, k, n_probe, ["__lbl"])
+    q = probes.select(F.col("vec_id").alias("anchor_id"),
                       F.col("__lbl").alias("anchor_label"),
                       F.col("v").alias("av"),
                       F.col("norm").alias("anorm"), "list_id")
-    c = lists.select(F.col(id_col).alias("neighbor_id"),
+    c = lists.select(F.col("vec_id").alias("neighbor_id"),
                      F.col("__lbl").alias("neighbor_label"),
                      F.col("v").alias("cv2"),
                      F.col("norm").alias("cnorm2"), "list_id")
@@ -172,7 +171,6 @@ def hard_negative_topk_ivf(embeddings: DataFrame, anchor_ids: list[int],
 
 
 def kmeans_centroids(embeddings: DataFrame, k: int = 16, n_iter: int = 4,
-                     id_col: str = "vec_id",
                      vec_col: str = "embedding",
                      portable: bool = False,
                      init_salt: str = "") -> DataFrame:
@@ -189,7 +187,7 @@ def kmeans_centroids(embeddings: DataFrame, k: int = 16, n_iter: int = 4,
     Every step is exact arithmetic in portable mode, so a DuckDB
     oracle replays the whole fit."""
     spark = embeddings.sparkSession
-    e = embeddings.select(id_col, as_double(F.col(vec_col)).alias("v"))
+    e = embeddings.select("vec_id", as_double(F.col(vec_col)).alias("v"))
     e = tracked_persist(e.withColumn("norm", l2_norm(F.col("v"))))
     schema = "centroid_id int, cv array<double>, cnorm double"
     # init selection is a distributed TakeOrdered (orderBy+limit)
@@ -201,14 +199,14 @@ def kmeans_centroids(embeddings: DataFrame, k: int = 16, n_iter: int = 4,
     # already engine-portable); xxhash64 stays the production default.
     if portable:
         from .sampling import hash_key
-        order_expr = hash_key(F.col(id_col), init_salt)
+        order_expr = hash_key(F.col("vec_id"), init_salt)
     elif init_salt:
-        order_expr = F.xxhash64(F.lit(init_salt), F.col(id_col))
+        order_expr = F.xxhash64(F.lit(init_salt), F.col("vec_id"))
     else:
-        order_expr = F.xxhash64(F.col(id_col))
+        order_expr = F.xxhash64(F.col("vec_id"))
     cent_rows = [(i, [float(x) for x in r["v"]], float(r["norm"]))
                  for i, r in enumerate(
-                     e.orderBy(order_expr, F.col(id_col)).limit(k)
+                     e.orderBy(order_expr, F.col("vec_id")).limit(k)
                       .select("v", "norm").collect())]
     # The Lloyd loop runs through MODEL-SIZED driver rows (k×d floats):
     # each round is ONE job, and every consumer's plan sees a flat
@@ -246,15 +244,15 @@ def kmeans_centroids(embeddings: DataFrame, k: int = 16, n_iter: int = 4,
         # doubles evaluated in the same left-to-right order as an
         # in-plan F.aggregate fold — bit-identical, oracle-pinned)
         #
-        # MEASURED NEGATIVE (r14, VERDICT r13 #3's "collapse the
-        # posexplode means into one wide aggregate" experiment): a
-        # k-group aggregate with d sum/count column pairs (d=64 ⇒ 128
-        # agg expressions) REGRESSED the cell 3.56 → 6.78 s — per-round
-        # plan analysis + codegen compilation of the wide aggregate
-        # (~1 s/round, isolated A/B: 0.43 s posexplode vs 0.96-1.26 s
-        # wide on the same assignment frame) swamps the explode's row
-        # blowup at any model-sized k·d, and the blowup's map-side agg
-        # already keeps the shuffle at k·d rows per partition. The
+        # MEASURED NEGATIVE: one k-group aggregate with d sum/count
+        # column pairs (d=64 gives 128 agg expressions) in place of the
+        # posexplode means took the cell from 3.56 to 6.78 s. Per Lloyd
+        # round on the sf0.1 embeddings (k=16, d=64) the wide aggregate
+        # costs 0.94-1.22 s against 0.30-0.37 s for posexplode, and it
+        # compiles 0 generated classes after the first round at either
+        # codegen cache size, so compilation is not the cost (PERF.md,
+        # "Generated-class cache"). The explode's map-side aggregate
+        # already keeps the shuffle at k*d rows per partition. The
         # explode shape stays.
         pe = assigned.select(
             "centroid_id", F.posexplode("v").alias("pos", "x"))
@@ -292,8 +290,6 @@ def kmeans_centroids(embeddings: DataFrame, k: int = 16, n_iter: int = 4,
 
 def kmeans_centroids_best_of(embeddings: DataFrame, k: int = 16,
                              n_iter: int = 4, restarts: int = 3,
-                             id_col: str = "vec_id",
-                             vec_col: str = "embedding",
                              portable: bool = False) -> DataFrame:
     """Multi-restart k-means (VERDICT r8 #2, the fix that MEASURED
     best): train ``restarts`` models from independently-salted init
@@ -318,11 +314,10 @@ def kmeans_centroids_best_of(embeddings: DataFrame, k: int = 16,
     small-fixture floor rises above 0.80 without touching the
     large-fixture regime's serving path."""
     salts = [""] + [f"|r{i}" for i in range(1, restarts)]
-    candidates = [kmeans_centroids(embeddings, k, n_iter, id_col,
-                                   vec_col, portable=portable,
-                                   init_salt=s)
+    candidates = [kmeans_centroids(embeddings, k, n_iter,
+                                   portable=portable, init_salt=s)
                   for s in salts]
-    e = embeddings.select(id_col, as_double(F.col(vec_col)).alias("v"))
+    e = embeddings.select("vec_id", as_double(F.col("embedding")).alias("v"))
     e = e.withColumn("norm", l2_norm(F.col("v")))
     objs = []
     for cent in candidates:
@@ -346,8 +341,7 @@ def kmeans_centroids_best_of(embeddings: DataFrame, k: int = 16,
     return candidates[best]
 
 
-def nearest_centroid(frame: DataFrame, cent: DataFrame,
-                     out_col: str = "centroid_id") -> DataFrame:
+def nearest_centroid(frame: DataFrame, cent: DataFrame) -> DataFrame:
     """Map-only nearest-centroid assignment (r9): ONE broadcast row
     carries the whole centroid table as an array; a per-row fold
     scores every centroid and ``array_max`` picks by (csim desc,
@@ -370,13 +364,12 @@ def nearest_centroid(frame: DataFrame, cent: DataFrame,
             .alias("csim"),
             (-c["centroid_id"]).alias("negid"))))
     return (frame.crossJoin(F.broadcast(carr))
-            .withColumn(out_col, (-best["negid"]).cast("int"))
+            .withColumn("centroid_id", (-best["negid"]).cast("int"))
             .drop("__cents"))
 
 
 def _ivf_lists_probes(e: DataFrame, cent: DataFrame, query_ids: list[int],
-                      k: int, n_probe: int, probe_oversample: int,
-                      id_col: str, carry: list[str]):
+                      k: int, n_probe: int, carry: list[str]):
     """Shared IVF partition/probe machinery (factored r5 — three
     variants repeated it verbatim): assign every non-query row to its
     nearest centroid ("v"/"norm" are the ASSIGNMENT vector and norm;
@@ -385,10 +378,10 @@ def _ivf_lists_probes(e: DataFrame, cent: DataFrame, query_ids: list[int],
     aggregate — one scan), and compute each query's probe set with
     the adaptive depth rule: keep probing down the centroid ranking
     past the n_probe floor while the lists probed so far hold fewer
-    than k * probe_oversample candidates (computed IN-PLAN from the
+    than k * PROBE_OVERSAMPLE candidates (computed IN-PLAN from the
     lists' own sizes via a broadcast n_centroids-row aggregate, so
     construction stays lazy). Returns (lists, probes), both shaped
-    (id_col, v, norm, *carry, list_id).
+    (vec_id, v, norm, *carry, list_id).
 
     r9: the LISTS side (corpus-sized, needs only the argmax) assigns
     via the map-only nearest_centroid — no k× row blowup, no
@@ -397,36 +390,37 @@ def _ivf_lists_probes(e: DataFrame, cent: DataFrame, query_ids: list[int],
     n_queries × k rows only."""
     def ranked(frame: DataFrame) -> DataFrame:
         scored = (frame.crossJoin(F.broadcast(cent))
-                  .select(frame[id_col], "v", "norm", *carry, "centroid_id",
+                  .select(frame["vec_id"], "v", "norm", *carry,
+                          "centroid_id",
                           (dot(F.col("v"), F.col("cv"))
                            / (F.col("norm") * F.col("cnorm"))).alias("csim")))
-        w = Window.partitionBy(id_col).orderBy(
+        w = Window.partitionBy("vec_id").orderBy(
             F.col("csim").desc(), F.col("centroid_id"))
         return scored.withColumn("__r", F.row_number().over(w))
 
     lists = tracked_persist(
-        nearest_centroid(e.filter(~F.col(id_col).isin(query_ids)), cent)
-        .select(id_col, "v", "norm", *carry,
+        nearest_centroid(e.filter(~F.col("vec_id").isin(query_ids)), cent)
+        .select("vec_id", "v", "norm", *carry,
                 F.col("centroid_id").alias("list_id")))
     list_sizes = (lists.groupBy("list_id")
                   .agg(F.count("*").alias("__lsz"))
                   .withColumnRenamed("list_id", "__sz_list"))
-    cum_w = (Window.partitionBy(id_col).orderBy("__r")
+    cum_w = (Window.partitionBy("vec_id").orderBy("__r")
              .rowsBetween(Window.unboundedPreceding, -1))
-    probes = (ranked(e.filter(F.col(id_col).isin(query_ids)))
+    probes = (ranked(e.filter(F.col("vec_id").isin(query_ids)))
               .join(F.broadcast(list_sizes),
                     F.col("centroid_id") == F.col("__sz_list"), "left")
               .withColumn("__sz", F.coalesce("__lsz", F.lit(0)))
               .withColumn("__cum",
                           F.coalesce(F.sum("__sz").over(cum_w), F.lit(0)))
               .filter((F.col("__r") <= n_probe)
-                      | (F.col("__cum") < k * probe_oversample))
-              .select(id_col, "v", "norm", *carry,
+                      | (F.col("__cum") < k * PROBE_OVERSAMPLE))
+              .select("vec_id", "v", "norm", *carry,
                       F.col("centroid_id").alias("list_id")))
     return lists, probes
 
 
-def _sampled_centroids(e: DataFrame, n_centroids: int, id_col: str,
+def _sampled_centroids(e: DataFrame, n_centroids: int,
                        portable: bool = False) -> DataFrame:
     """Deterministic pseudo-random corpus sample as centroids — a
     distributed TakeOrdered on a hash of the id; LAZY (no action at
@@ -437,20 +431,18 @@ def _sampled_centroids(e: DataFrame, n_centroids: int, id_col: str,
     tiers (xxhash64 stays the default)."""
     if portable:
         from .sampling import hash_key
-        order = hash_key(F.col(id_col))
+        order = hash_key(F.col("vec_id"))
     else:
-        order = F.xxhash64(F.col(id_col))
-    return (e.orderBy(order, F.col(id_col))
+        order = F.xxhash64(F.col("vec_id"))
+    return (e.orderBy(order, F.col("vec_id"))
             .limit(n_centroids)
-            .select(F.col(id_col).alias("centroid_id"),
+            .select(F.col("vec_id").alias("centroid_id"),
                     F.col("v").alias("cv"), F.col("norm").alias("cnorm")))
 
 
 def ivf_topk(embeddings: DataFrame, query_ids: list[int], k: int = 10,
              n_centroids: int = 16, n_probe: int = 8,
-             id_col: str = "vec_id", vec_col: str = "embedding",
              centroids: DataFrame | None = None,
-             probe_oversample: int = 4,
              portable: bool = False) -> DataFrame:
     """IVF-style approximate top-k: partition the corpus into inverted
     lists by nearest centroid, probe only the lists nearest each
@@ -467,11 +459,11 @@ def ivf_topk(embeddings: DataFrame, query_ids: list[int], k: int = 10,
     are corpus-size-blind — at small N (or with skewed lists) 4/16
     lists may hold fewer than k candidates and recall collapses. Each
     query therefore keeps probing down its centroid ranking until the
-    lists already probed hold >= k * probe_oversample candidates.
+    lists already probed hold >= k * PROBE_OVERSAMPLE candidates.
     The cumulative-coverage rule is computed IN-PLAN from the inverted
     lists' own sizes (an n_centroids-row broadcast aggregate), so
     construction stays lazy (no driver-side count); at 100 TB each
-    list dwarfs k * probe_oversample and the rule degenerates to
+    list dwarfs k * PROBE_OVERSAMPLE and the rule degenerates to
     exactly n_probe probes — it only ever widens tiny/skewed setups.
 
     The default n_probe=8 (half the default lists) reflects UNTRAINED
@@ -482,7 +474,7 @@ def ivf_topk(embeddings: DataFrame, query_ids: list[int], k: int = 10,
     sample+4 probes = 0.30). Pass ``centroids=kmeans_centroids(...)``
     and n_probe=4 for the production shape — trained centroids are
     what make a small probe fraction honest."""
-    e = embeddings.select(id_col, as_double(F.col(vec_col)).alias("v"))
+    e = embeddings.select("vec_id", as_double(F.col("embedding")).alias("v"))
     e = tracked_persist(e.withColumn("norm", l2_norm(F.col("v"))))
 
     # default centroids: deterministic lazy hash-sample (see
@@ -490,16 +482,16 @@ def ivf_topk(embeddings: DataFrame, query_ids: list[int], k: int = 10,
     # kmeans_centroids) for the trained variant; assignment/probe/
     # rerank are identical either way.
     if centroids is None:
-        cent = _sampled_centroids(e, n_centroids, id_col, portable)
+        cent = _sampled_centroids(e, n_centroids, portable)
     else:
         cent = centroids.select("centroid_id", "cv", "cnorm")
 
     lists, probes = _ivf_lists_probes(
-        e, cent, query_ids, k, n_probe, probe_oversample, id_col, [])
-    q = probes.select(F.col(id_col).alias("query_id"),
+        e, cent, query_ids, k, n_probe, [])
+    q = probes.select(F.col("vec_id").alias("query_id"),
                       F.col("v").alias("qv"), F.col("norm").alias("qnorm"),
                       "list_id")
-    c = lists.select(F.col(id_col).alias("neighbor_id"),
+    c = lists.select(F.col("vec_id").alias("neighbor_id"),
                      F.col("v").alias("cv2"), F.col("norm").alias("cnorm2"),
                      "list_id")
     # no dedup needed (r13 optimization round): every corpus vector
@@ -525,14 +517,15 @@ def ivf_topk(embeddings: DataFrame, query_ids: list[int], k: int = 10,
                   .filter(F.col("rank") <= k))
 
 
-def _plane_dot(v: Column, plane_id: int, seed: int = 42,
+def _plane_dot(v: Column, plane_id: int,
                portable: bool = False) -> Column:
     """Dot(v, r_plane) where the plane's i-th component is a
     deterministic pseudo-random double in [-1, 1) derived from
-    xxhash64(seed, plane_id, i) — or, with ``portable=True``, from the
-    24-bit md5 prefix of '{seed}|{plane_id}|{i}' (DuckDB-recomputable;
-    the sequential fold matches list_reduce's order, so even the sign
-    of a near-zero dot agrees bit-for-bit across engines).
+    xxhash64(_PLANE_SEED, plane_id, i) — or, with ``portable=True``,
+    from the 24-bit md5 prefix of '{_PLANE_SEED}|{plane_id}|{i}'
+    (DuckDB-recomputable; the sequential fold matches list_reduce's
+    order, so even the sign of a near-zero dot agrees bit-for-bit
+    across engines).
 
     The plane is generated IN-EXPRESSION via the index-aware transform
     lambda, so it adapts to the vector's dimensionality per row — no
@@ -541,24 +534,25 @@ def _plane_dot(v: Column, plane_id: int, seed: int = 42,
     if portable:
         def comp(i):
             h = F.md5(F.concat_ws(
-                "|", F.lit(str(seed)), F.lit(str(plane_id)),
+                "|", F.lit(str(_PLANE_SEED)), F.lit(str(plane_id)),
                 i.cast("string")).cast("binary"))
             return (F.conv(F.substring(h, 1, 6), 16, 10).cast("double")
                     / F.lit(float(1 << 24)) * 2.0 - 1.0)
     else:
         def comp(i):
-            return (F.shiftrightunsigned(
-                        F.xxhash64(F.lit(seed), F.lit(plane_id), i), 40)
+            h = F.xxhash64(F.lit(_PLANE_SEED), F.lit(plane_id), i)
+            return (F.shiftrightunsigned(h, 40)
                     .cast("double") / F.lit(float(1 << 24)) * 2.0 - 1.0)
     prods = F.transform(v, lambda x, i: x * comp(i))
     return F.aggregate(prods, F.lit(0.0), lambda acc, p: acc + p)
 
 
-def _band_structs(bits: Column, n_planes: int, n_bands: int) -> Column:
-    """Split a bit array into n_bands band-key structs."""
-    r = n_planes // n_bands
+def _band_structs(bits: Column) -> Column:
+    """Split the SIGN_PLANES sign bits into SIGN_BANDS band-key
+    structs."""
+    r = SIGN_PLANES // SIGN_BANDS
     return F.transform(
-        F.sequence(F.lit(0), F.lit(n_bands - 1)),
+        F.sequence(F.lit(0), F.lit(SIGN_BANDS - 1)),
         lambda b: F.struct(
             b.alias("band_id"),
             F.concat_ws("", F.transform(F.slice(bits, b * r + 1, r),
@@ -567,31 +561,32 @@ def _band_structs(bits: Column, n_planes: int, n_bands: int) -> Column:
 
 
 def signlsh_topk(embeddings: DataFrame, query_ids: list[int], k: int = 10,
-                 n_planes: int = 16, n_bands: int = 4,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
                  portable: bool = False) -> DataFrame:
     """Approximate top-k: random-hyperplane signature, banded buckets,
     exact cosine rerank within buckets.
 
-    n_planes=16 split into n_bands bands of 4 bits; a candidate shares
-    >=1 band with the query. Recall tested against cosine_topk.
+    SIGN_PLANES=16 sign bits split into SIGN_BANDS=4 bands of 4 bits;
+    a candidate shares >=1 band with the query. Recall tested against
+    cosine_topk.
     ``portable=True`` draws the hyperplanes from the md5-prefix family
     so the whole pipeline (planes, sign bits, banding, candidates,
     exact cosine rerank) is DuckDB-recomputable."""
-    e = embeddings.select(id_col, as_double(F.col(vec_col)).alias("v"))
+    e = embeddings.select("vec_id", as_double(F.col("embedding")).alias("v"))
     e = e.withColumn("norm", l2_norm(F.col("v")))
     bits = F.array(*[(_plane_dot(F.col("v"), j, portable=portable) >= 0)
-                     .cast("int") for j in range(n_planes)])
-    bands = _band_structs(bits, n_planes, n_bands)
-    sig = e.select(id_col, "v", "norm", F.explode(bands).alias("band")) \
-           .select(id_col, "v", "norm", "band.band_id", "band.band_key")
+                     .cast("int") for j in range(SIGN_PLANES)])
+    bands = _band_structs(bits)
+    sig = e.select("vec_id", "v", "norm", F.explode(bands).alias("band")) \
+           .select("vec_id", "v", "norm", "band.band_id", "band.band_key")
 
-    q = (sig.filter(F.col(id_col).isin(query_ids))
-            .select(F.col(id_col).alias("query_id"), F.col("v").alias("qv"),
-                    F.col("norm").alias("qnorm"), "band_id", "band_key"))
-    c = (sig.filter(~F.col(id_col).isin(query_ids))
-            .select(F.col(id_col).alias("neighbor_id"), F.col("v").alias("cv"),
-                    F.col("norm").alias("cnorm"), "band_id", "band_key"))
+    q = (sig.filter(F.col("vec_id").isin(query_ids))
+            .select(F.col("vec_id").alias("query_id"),
+                    F.col("v").alias("qv"), F.col("norm").alias("qnorm"),
+                    "band_id", "band_key"))
+    c = (sig.filter(~F.col("vec_id").isin(query_ids))
+            .select(F.col("vec_id").alias("neighbor_id"),
+                    F.col("v").alias("cv"), F.col("norm").alias("cnorm"),
+                    "band_id", "band_key"))
     # broadcast the query bands (n_queries × n_bands rows at any
     # corpus size — guide §3); the dedup STAYS: banding genuinely
     # produces the same (query, neighbor) pair from multiple bands.
@@ -609,10 +604,8 @@ def signlsh_topk(embeddings: DataFrame, query_ids: list[int], k: int = 10,
 
 
 def cosine_near_dup_pairs(embeddings: DataFrame, block_cols: list[str],
-                          threshold: float, id_col: str = "vec_id",
-                          vec_col: str = "embedding",
-                          max_block_size: int | None = None,
-                          n_planes: int = 16, n_bands: int = 4) -> DataFrame:
+                          threshold: float,
+                          max_block_size: int | None = None) -> DataFrame:
     """All pairs with cosine >= threshold, blocked on ``block_cols``.
 
     Exact within blocks (self-join + sequential-fold cosine — the
@@ -628,8 +621,8 @@ def cosine_near_dup_pairs(embeddings: DataFrame, block_cols: list[str],
     the sign-LSH subtree isn't even planned.
 
     Output: *block_cols, id_a, id_b, cosine."""
-    v = embeddings.select(*block_cols, id_col,
-                          as_double(F.col(vec_col)).alias("v"))
+    v = embeddings.select(*block_cols, "vec_id",
+                          as_double(F.col("embedding")).alias("v"))
     v = v.withColumn("norm", l2_norm(F.col("v")))
     if max_block_size is not None:
         # metadata-plane routing decision (r10, same as
@@ -647,17 +640,17 @@ def cosine_near_dup_pairs(embeddings: DataFrame, block_cols: list[str],
         hot = v.filter(F.col("__bn") > max_block_size).drop("__bn")
         v = v.filter(F.col("__bn") <= max_block_size).drop("__bn")
         bits = F.array(*[(_plane_dot(F.col("v"), j) >= 0).cast("int")
-                         for j in range(n_planes)])
-        banded = (hot.select(*block_cols, id_col, "v", "norm",
-                             F.explode(_band_structs(bits, n_planes, n_bands))
+                         for j in range(SIGN_PLANES)])
+        banded = (hot.select(*block_cols, "vec_id", "v", "norm",
+                             F.explode(_band_structs(bits))
                               .alias("band"))
-                  .select(*block_cols, id_col, "v", "norm",
+                  .select(*block_cols, "vec_id", "v", "norm",
                           "band.band_id", "band.band_key"))
         ha = banded.select(*block_cols, "band_id", "band_key",
-                           F.col(id_col).alias("id_a"),
+                           F.col("vec_id").alias("id_a"),
                            F.col("v").alias("va"), F.col("norm").alias("na"))
         hb = banded.select(*block_cols, "band_id", "band_key",
-                           F.col(id_col).alias("id_b"),
+                           F.col("vec_id").alias("id_b"),
                            F.col("v").alias("vb"), F.col("norm").alias("nb"))
         hot_pairs = (ha.join(hb, [*block_cols, "band_id", "band_key"])
                      .filter(F.col("id_a") < F.col("id_b"))
@@ -667,9 +660,9 @@ def cosine_near_dup_pairs(embeddings: DataFrame, block_cols: list[str],
                        (dot(F.col("va"), F.col("vb"))
                         / (F.col("na") * F.col("nb"))).alias("cosine"))
                    .filter(F.col("cosine") >= threshold))
-    a = v.select(*block_cols, F.col(id_col).alias("id_a"),
+    a = v.select(*block_cols, F.col("vec_id").alias("id_a"),
                  F.col("v").alias("va"), F.col("norm").alias("na"))
-    b = v.select(*block_cols, F.col(id_col).alias("id_b"),
+    b = v.select(*block_cols, F.col("vec_id").alias("id_b"),
                  F.col("v").alias("vb"), F.col("norm").alias("nb"))
     pairs = a.join(b, block_cols).filter(F.col("id_a") < F.col("id_b"))
     out = (pairs.select(*block_cols, "id_a", "id_b",
@@ -681,8 +674,7 @@ def cosine_near_dup_pairs(embeddings: DataFrame, block_cols: list[str],
     return out
 
 
-def dimension_ranges(embeddings: DataFrame,
-                     vec_col: str = "embedding") -> DataFrame:
+def dimension_ranges(embeddings: DataFrame) -> DataFrame:
     """Per-dimension (min, max) over the corpus as a single broadcast-
     sized row {mins: array, maxs: array} — the calibration pass of
     scalar quantization. posexplode + groupBy(pos) shuffles only
@@ -692,7 +684,7 @@ def dimension_ranges(embeddings: DataFrame,
     no decimal-accumulation trick needed (contrast the centroid
     mean)."""
     per_dim = (embeddings
-               .select(F.posexplode(as_double(F.col(vec_col)))
+               .select(F.posexplode(as_double(F.col("embedding")))
                        .alias("pos", "x"))
                .groupBy("pos")
                .agg(F.min("x").alias("mn"), F.max("x").alias("mx")))
@@ -705,8 +697,7 @@ def dimension_ranges(embeddings: DataFrame,
                     F.transform("mxs", lambda s: s["mx"]).alias("maxs")))
 
 
-def quantize_embeddings(embeddings: DataFrame, id_col: str = "vec_id",
-                        vec_col: str = "embedding") -> DataFrame:
+def quantize_embeddings(embeddings: DataFrame) -> DataFrame:
     """Scalar (per-dimension min/max) int8 quantization:
     code_i = round((x_i - min_i) / (max_i - min_i) * 255), clamped to
     [0, 255]; degenerate dims (min == max) code to 0. 4x memory cut
@@ -715,11 +706,11 @@ def quantize_embeddings(embeddings: DataFrame, id_col: str = "vec_id",
     for rerank. Reconstruction x'_i = min_i + code_i/255*(max_i-min_i)
     bounds per-dim error by half a step.
 
-    Output: (id_col, codes array<int>, recon array<double>). The
+    Output: (vec_id, v, codes array<int>, recon array<double>). The
     calibration row rides along as a broadcast cross join; quantization
     itself is a per-row linear scan."""
-    ranges = dimension_ranges(embeddings, vec_col)
-    v = embeddings.select(id_col, as_double(F.col(vec_col)).alias("v"))
+    ranges = dimension_ranges(embeddings)
+    v = embeddings.select("vec_id", as_double(F.col("embedding")).alias("v"))
     withr = v.crossJoin(F.broadcast(ranges))
     idx = F.sequence(F.lit(1), F.size("v"))
 
@@ -741,46 +732,41 @@ def quantize_embeddings(embeddings: DataFrame, id_col: str = "vec_id",
     coded = withr.withColumn("codes", F.transform(idx, code))
     return (coded
             .withColumn("recon", F.transform(idx, recon))
-            .select(id_col, "v", "codes", "recon"))
+            .select("vec_id", "v", "codes", "recon"))
 
 
 def ivf_topk_quantized(embeddings: DataFrame, query_ids: list[int],
-                       k: int = 10, n_centroids: int = 16,
-                       n_probe: int = 8, oversample: int = 3,
-                       id_col: str = "vec_id",
-                       vec_col: str = "embedding",
-                       probe_oversample: int = 4,
+                       k: int = 10,
                        portable: bool = False) -> DataFrame:
     """IVF with int8-quantized list storage: candidates inside the
     probed lists are first scored against the query on their
     RECONSTRUCTED (dequantized) vectors — the representation the
     inverted lists would actually hold at 100 TB, 4x smaller than
-    floats — then only the ``k * oversample`` best per query are
+    floats — then only the ``k * 3`` best per query are
     re-scored exactly on the float vectors. The expensive exact dot
     product runs on an O(k) shortlist instead of every probed
     candidate; the codes path touches all candidates but reads int8.
 
-    Same output contract as ivf_topk/cosine_topk:
-    (query_id, neighbor_id, cosine, rank) with EXACT cosines —
-    quantization only affects which candidates reach the shortlist
-    (recall pinned vs bruteforce in tests)."""
-    qz = quantize_embeddings(embeddings, id_col, vec_col)
-    e = (qz.select(id_col, "v", "recon")
+    Lists: 16 sampled centroids, 8 probes. Same output contract as
+    ivf_topk/cosine_topk: (query_id, neighbor_id, cosine, rank) with
+    EXACT cosines — quantization only affects which candidates reach
+    the shortlist (recall pinned vs bruteforce in tests)."""
+    qz = quantize_embeddings(embeddings)
+    e = (qz.select("vec_id", "v", "recon")
          .withColumn("norm", l2_norm(F.col("v")))
          .withColumn("rnorm", l2_norm(F.col("recon"))))
 
-    cent = _sampled_centroids(e, n_centroids, id_col, portable)
+    cent = _sampled_centroids(e, 16, portable)
 
     # same adaptive probe-depth rule as ivf_topk (see
     # _ivf_lists_probes): n_probe is a floor, widened in-plan until
-    # the probed lists hold k * probe_oversample candidates.
+    # the probed lists hold k * PROBE_OVERSAMPLE candidates.
     lists, probes = _ivf_lists_probes(
-        e, cent, query_ids, k, n_probe, probe_oversample, id_col,
-        ["recon", "rnorm"])
-    q = probes.select(F.col(id_col).alias("query_id"),
+        e, cent, query_ids, k, 8, ["recon", "rnorm"])
+    q = probes.select(F.col("vec_id").alias("query_id"),
                       F.col("v").alias("qv"), F.col("norm").alias("qnorm"),
                       "list_id")
-    c = lists.select(F.col(id_col).alias("neighbor_id"),
+    c = lists.select(F.col("vec_id").alias("neighbor_id"),
                      F.col("v").alias("xv"), F.col("norm").alias("xnorm"),
                      F.col("recon").alias("rv"), F.col("rnorm").alias("rn"),
                      "list_id")
@@ -796,7 +782,7 @@ def ivf_topk_quantized(embeddings: DataFrame, query_ids: list[int],
     sw = Window.partitionBy("query_id").orderBy(
         F.col("approx_cos").desc(), F.col("neighbor_id"))
     shortlist = (approx.withColumn("__s", F.row_number().over(sw))
-                 .filter(F.col("__s") <= k * oversample))
+                 .filter(F.col("__s") <= k * 3))
     exact = shortlist.select(
         "query_id", "neighbor_id",
         (dot(F.col("qv"), F.col("xv"))
@@ -848,7 +834,7 @@ def _nearest_code(subs: DataFrame, codebooks: DataFrame) -> DataFrame:
 
 
 def pq_codebooks(embeddings: DataFrame, m: int = 8, ksub: int = 16,
-                 n_iter: int = 3, id_col: str = "vec_id",
+                 n_iter: int = 3,
                  vec_col: str = "embedding",
                  portable: bool = False) -> DataFrame:
     """Train product-quantization codebooks: an L2 k-means of ``ksub``
@@ -868,22 +854,22 @@ def pq_codebooks(embeddings: DataFrame, m: int = 8, ksub: int = 16,
     k = m·ksub, and like it, a few rounds on a corpus SAMPLE is the
     production fit (the apply side never iterates)."""
     from .dedup import spread
-    e = spread(embeddings.select(id_col, as_double(F.col(vec_col))
+    e = spread(embeddings.select("vec_id", as_double(F.col(vec_col))
                                  .alias("v"))
                .filter(F.size("v") >= 1))
     subs = tracked_persist(
-        e.select(id_col, F.explode(_subvectors(F.col("v"), m)).alias("p"))
-        .select(id_col, "p.sub_id", "p.sv"))
+        e.select("vec_id", F.explode(_subvectors(F.col("v"), m)).alias("p"))
+        .select("vec_id", "p.sub_id", "p.sv"))
 
     # portable=True draws the init ordering from the md5-prefix family
     # so a DuckDB oracle can replay the whole subspace-Lloyd loop
     # (kmeans_centroids' rationale); xxhash64 stays the default
     if portable:
         from .sampling import hash_key
-        order_expr = hash_key(F.col(id_col))
+        order_expr = hash_key(F.col("vec_id"))
     else:
-        order_expr = F.xxhash64(F.col(id_col))
-    w = Window.partitionBy("sub_id").orderBy(order_expr, F.col(id_col))
+        order_expr = F.xxhash64(F.col("vec_id"))
+    w = Window.partitionBy("sub_id").orderBy(order_expr, F.col("vec_id"))
     cb = (subs.withColumn("__r", F.row_number().over(w))
           .filter(F.col("__r") <= ksub)
           .select("sub_id", (F.col("__r") - 1).cast("int").alias("code_id"),
@@ -921,34 +907,28 @@ def pq_codebooks(embeddings: DataFrame, m: int = 8, ksub: int = 16,
 
 
 def pq_encode(embeddings: DataFrame, codebooks: DataFrame, m: int = 8,
-              id_col: str = "vec_id",
               vec_col: str = "embedding") -> DataFrame:
     """Encode every vector as m small codes — nearest (L2) codebook
     entry per subspace, codes ordered by sub_id. The 16–64× ANN
     storage compression tier: an int8-per-subspace codes array
     replaces the float vector in the inverted lists. Output:
-    (id_col, codes array<int>)."""
-    e = embeddings.select(id_col, as_double(F.col(vec_col)).alias("v")) \
+    (vec_id, codes array<int>)."""
+    e = embeddings.select("vec_id", as_double(F.col(vec_col)).alias("v")) \
                   .filter(F.size("v") >= 1)
-    subs = (e.select(id_col,
+    subs = (e.select("vec_id",
                      F.explode(_subvectors(F.col("v"), m)).alias("p"))
-            .select(id_col, "p.sub_id", "p.sv"))
+            .select("vec_id", "p.sub_id", "p.sv"))
     # map-only argmin (r9, _nearest_code): no ksub× blowup, no shuffle
     # before the per-doc codes aggregate
     assigned = _nearest_code(subs,
                              codebooks.select("sub_id", "code_id", "cv"))
-    return (assigned.groupBy(id_col)
+    return (assigned.groupBy("vec_id")
             .agg(F.transform(
                 F.array_sort(F.collect_list(F.struct("sub_id", "code_id"))),
                 lambda s: s["code_id"]).alias("codes")))
 
 
 def ivf_topk_pq(embeddings: DataFrame, query_ids: list[int], k: int = 10,
-                m: int = 8, ksub: int = 32, n_centroids: int = 16,
-                n_probe: int = 8, oversample: int = 12, n_iter: int = 3,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                probe_oversample: int = 4,
-                coarse_iters: int = 3,
                 residual: bool = True,
                 rotate: bool = True,
                 portable: bool = False,
@@ -957,8 +937,10 @@ def ivf_topk_pq(embeddings: DataFrame, query_ids: list[int], k: int = 10,
     (ADC) scoring + exact float rerank — the standard 100 TB ANN
     compression stack (IVF-PQ): lists hold m codes per vector (vs d
     floats — 32× at d=64, m=8), candidates are scored from a per-query
-    lookup table of subspace partial dots, and only the k·oversample
-    best reach the float fetch + exact cosine.
+    lookup table of subspace partial dots, and only the k·12 best
+    reach the float fetch + exact cosine. Fixed sizes: 16 coarse lists
+    trained in 3 Lloyd rounds, 8 probes, m=8 subspaces of ksub=32 codes
+    (3 Lloyd rounds).
 
     RESIDUAL encoding (r8, VERDICT r7 #4) — the full IVFADC
     formulation: codes quantize x − c(x) (the vector minus its TRAINED
@@ -1001,7 +983,8 @@ def ivf_topk_pq(embeddings: DataFrame, query_ids: list[int], k: int = 10,
     candidates reach the shortlist (recall floor pinned in tests)."""
     from .pca import pca_rotation_balanced, project_embeddings
 
-    base = embeddings.select(id_col, as_double(F.col(vec_col)).alias("v"))
+    base = embeddings.select("vec_id",
+                             as_double(F.col("embedding")).alias("v"))
     base = tracked_persist(base.withColumn("norm", l2_norm(F.col("v"))))
 
     # TRAINED coarse quantizer (r6): with sampled centroids the probe
@@ -1014,62 +997,60 @@ def ivf_topk_pq(embeddings: DataFrame, query_ids: list[int], k: int = 10,
         # lifts the small-fixture init-draw floor; used by the
         # portable/oracle tier (ivf_topk_pq_portable)
         cent = kmeans_centroids_best_of(
-            embeddings, k=n_centroids, n_iter=coarse_iters,
-            restarts=coarse_restarts, id_col=id_col, vec_col=vec_col,
+            embeddings, k=16, n_iter=3,
+            restarts=coarse_restarts,
             portable=portable)
     else:
-        cent = kmeans_centroids(embeddings, k=n_centroids,
-                                n_iter=coarse_iters, id_col=id_col,
-                                vec_col=vec_col, portable=portable)
+        cent = kmeans_centroids(embeddings, k=16, n_iter=3,
+                                portable=portable)
     lists, probes = _ivf_lists_probes(
-        base, cent, query_ids, k, n_probe, probe_oversample, id_col, [])
+        base, cent, query_ids, k, 8, [])
 
     cl = F.broadcast(cent.select(F.col("centroid_id").alias("list_id"),
                                  F.col("cv").alias("lcv"),
                                  F.col("cnorm").alias("lnorm")))
     if residual:
         rsrc = (lists.join(cl, "list_id")
-                .select(id_col,
+                .select("vec_id",
                         F.zip_with("v", "lcv",
                                    lambda x, c: x - c).alias("rv0")))
     else:
-        rsrc = lists.select(id_col, F.col("v").alias("rv0"))
+        rsrc = lists.select("vec_id", F.col("v").alias("rv0"))
     if rotate:
-        rot = pca_rotation_balanced(rsrc, m, "rv0")
+        rot = pca_rotation_balanced(rsrc, 8, "rv0")
         zero = [0.0] * len(rot)  # uncentered: rotation must preserve dots
-        rx = (project_embeddings(rsrc, zero, rot, id_col, "rv0")
+        rx = (project_embeddings(rsrc, zero, rot, "rv0")
               .withColumnRenamed("proj", "rv"))
         # per-query side: the RAW query rotated through the
         # residual-fitted basis (R is orthonormal, so dot(q, r) =
         # dot(Rq, Rr) regardless of what R was fitted on)
         qrot = (project_embeddings(
-                    base.filter(F.col(id_col).isin(query_ids)),
-                    zero, rot, id_col, "v")
+                    base.filter(F.col("vec_id").isin(query_ids)),
+                    zero, rot, "v")
                 .withColumnRenamed("proj", "qrv"))
     else:
         # identity basis — no driver-side eigh anywhere in the plan
         # (the portable/oracle mode; see ivf_topk_pq_portable)
         rx = rsrc.withColumnRenamed("rv0", "rv")
-        qrot = (base.filter(F.col(id_col).isin(query_ids))
-                .select(id_col, F.col("v").alias("qrv")))
+        qrot = (base.filter(F.col("vec_id").isin(query_ids))
+                .select("vec_id", F.col("v").alias("qrv")))
     rx = tracked_persist(rx)
     cb = tracked_persist(
-        pq_codebooks(rx, m, ksub, n_iter, id_col, vec_col="rv",
-                     portable=portable))
-    codes = pq_encode(rx, cb, m, id_col, vec_col="rv")
-    qsubs = (probes.select(F.col(id_col).alias("query_id"),
+        pq_codebooks(rx, ksub=32, vec_col="rv", portable=portable))
+    codes = pq_encode(rx, cb, vec_col="rv")
+    qsubs = (probes.select(F.col("vec_id").alias("query_id"),
                            F.col("norm").alias("qnorm"))
              .dropDuplicates(["query_id"])
-             .join(qrot.select(F.col(id_col).alias("query_id"), "qrv"),
+             .join(qrot.select(F.col("vec_id").alias("query_id"), "qrv"),
                    "query_id")
              .select("query_id", "qnorm",
-                     F.explode(_subvectors(F.col("qrv"), m)).alias("p"))
+                     F.explode(_subvectors(F.col("qrv"), 8)).alias("p"))
              .select("query_id", "qnorm", "p.sub_id", "p.sv"))
     lut = (qsubs.join(F.broadcast(cb), "sub_id")
            .select("query_id", "qnorm", "sub_id", "code_id",
                    dot(F.col("sv"), F.col("cv")).alias("pdot")))
 
-    q = probes.select(F.col(id_col).alias("query_id"), "v", "norm",
+    q = probes.select(F.col("vec_id").alias("query_id"), "v", "norm",
                       "list_id") \
               .dropDuplicates(["query_id", "list_id"])
     # The lists store (codes, norm) — m code bytes plus ONE float per
@@ -1077,9 +1058,9 @@ def ivf_topk_pq(embeddings: DataFrame, query_ids: list[int], k: int = 10,
     # (quantization error confined to the dot term) and removes the
     # norm-reconstruction LUTs entirely; at 100 TB that's 4 bytes/row
     # against d*4 saved, the layout ScaNN/IP-serving indexes use.
-    c = (lists.select(F.col(id_col).alias("neighbor_id"), "list_id",
+    c = (lists.select(F.col("vec_id").alias("neighbor_id"), "list_id",
                       F.col("norm").alias("cnorm2"))
-         .join(codes.withColumnRenamed(id_col, "neighbor_id"),
+         .join(codes.withColumnRenamed("vec_id", "neighbor_id"),
                "neighbor_id"))
     cand = (c.join(F.broadcast(q.select("query_id", "list_id")), "list_id")
             .select("query_id", "neighbor_id", "list_id", "cnorm2",
@@ -1110,18 +1091,18 @@ def ivf_topk_pq(embeddings: DataFrame, query_ids: list[int], k: int = 10,
     sw = Window.partitionBy("query_id").orderBy(
         F.col("approx_cos").desc(), F.col("neighbor_id"))
     shortlist = (approx.withColumn("__s", F.row_number().over(sw))
-                 .filter(F.col("__s") <= k * oversample)
+                 .filter(F.col("__s") <= k * 12)
                  .select("query_id", "neighbor_id"))
 
     # float fetch for the O(k) shortlist only — the honest rerank I/O.
     # qv is restricted to the QUERY ids before the broadcast: the
     # unfiltered frame would broadcast the whole corpus (review r5).
-    qv = (base.filter(F.col(id_col).isin(query_ids))
-          .select(F.col(id_col).alias("query_id"),
+    qv = (base.filter(F.col("vec_id").isin(query_ids))
+          .select(F.col("vec_id").alias("query_id"),
                   F.col("v").alias("qv"), F.col("norm").alias("qnorm")))
-    nv = base.select(F.col(id_col).alias("neighbor_id"),
+    nv = base.select(F.col("vec_id").alias("neighbor_id"),
                      F.col("v").alias("cv2"), F.col("norm").alias("cnorm2"))
-    # broadcast the O(k·oversample·queries) shortlist too (guide §3):
+    # broadcast the O(k·12·queries) shortlist too (guide §3):
     # the float fetch is a lookup of a model-sized id set against the
     # corpus — without the hint the corpus gets exchanged by
     # neighbor_id to meet it.
@@ -1138,24 +1119,20 @@ def ivf_topk_pq(embeddings: DataFrame, query_ids: list[int], k: int = 10,
 
 # --- IVF index persistence: build once, serve many (r5b) -------------------
 
-def _assign_to_lists(embeddings: DataFrame, cent: DataFrame,
-                     id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> DataFrame:
+def _assign_to_lists(embeddings: DataFrame, cent: DataFrame) -> DataFrame:
     """Nearest-centroid list assignment (cosine argmax over the
     broadcast centroid table): (id, v, norm, list_id). Shared by the
     one-shot index build and the incremental append, so both produce
     IDENTICAL list content for the same centroids — pinned in
     tests/test_analytics (append == one-shot parity)."""
-    e = embeddings.select(id_col, as_double(F.col(vec_col)).alias("v"))
+    e = embeddings.select("vec_id", as_double(F.col("embedding")).alias("v"))
     e = e.withColumn("norm", l2_norm(F.col("v")))
     return (nearest_centroid(e, cent)
-            .select(id_col, "v", "norm",
+            .select("vec_id", "v", "norm",
                     F.col("centroid_id").alias("list_id")))
 
 
-def append_to_ivf_index(spark, path: str, new_embeddings: DataFrame,
-                        id_col: str = "vec_id",
-                        vec_col: str = "embedding") -> None:
+def append_to_ivf_index(spark, path: str, new_embeddings: DataFrame) -> None:
     """Incremental index maintenance: assign NEW vectors to the
     FROZEN stored centroids and APPEND them to the partitioned lists
     — today's ingest becomes searchable without rebuilding the index
@@ -1173,7 +1150,7 @@ def append_to_ivf_index(spark, path: str, new_embeddings: DataFrame,
     appends (same contract as any upsert-free log)."""
     cent = spark.read.parquet(f"{path}/centroids")
     _recover_list_sizes(spark, path)
-    lists = _assign_to_lists(new_embeddings, cent, id_col, vec_col)
+    lists = _assign_to_lists(new_embeddings, cent)
     # Intent marker BEFORE the lists append (r7c review fix): a crash
     # between the append committing and the sizes swap completing
     # leaves NO swap artifact — the sizes table is intact but
@@ -1236,9 +1213,7 @@ def _recover_list_sizes(spark, path: str) -> None:
 
 
 def save_ivf_index(embeddings: DataFrame, path: str,
-                   n_centroids: int = 16, kmeans_iters: int = 4,
-                   id_col: str = "vec_id",
-                   vec_col: str = "embedding") -> None:
+                   n_centroids: int = 16, kmeans_iters: int = 4) -> None:
     """Materialize a trained IVF index AT REST: Lloyd centroids,
     per-list sizes, and the inverted lists themselves, the lists
     directory-partitioned BY list_id — so a later probe of 4 lists
@@ -1252,9 +1227,8 @@ def save_ivf_index(embeddings: DataFrame, path: str,
     Layout: {path}/centroids (n rows), {path}/list_sizes (n rows),
     {path}/lists/list_id=*/ (corpus rows, vector+norm per id)."""
     cent = kmeans_centroids(embeddings, k=n_centroids,
-                            n_iter=kmeans_iters, id_col=id_col,
-                            vec_col=vec_col)
-    lists = _assign_to_lists(embeddings, cent, id_col, vec_col)
+                            n_iter=kmeans_iters)
+    lists = _assign_to_lists(embeddings, cent)
     cent.write.mode("overwrite").parquet(f"{path}/centroids")
     lists.write.mode("overwrite").partitionBy("list_id") \
         .parquet(f"{path}/lists")
@@ -1265,10 +1239,7 @@ def save_ivf_index(embeddings: DataFrame, path: str,
 
 
 def ivf_topk_from_index(spark, path: str, queries: DataFrame,
-                        k: int = 10, n_probe: int = 4,
-                        probe_oversample: int = 4,
-                        query_id_col: str = "query_id",
-                        vec_col: str = "embedding") -> DataFrame:
+                        k: int = 10, n_probe: int = 4) -> DataFrame:
     """Serve top-k from a saved index — queries arrive as their own
     frame (the serving reality: they were never in the corpus scan).
     Probe selection runs against the n_centroids-row centroid table
@@ -1282,9 +1253,8 @@ def ivf_topk_from_index(spark, path: str, queries: DataFrame,
     as ivf_topk."""
     cent = F.broadcast(spark.read.parquet(f"{path}/centroids"))
     sizes = F.broadcast(spark.read.parquet(f"{path}/list_sizes"))
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        as_double(F.col(vec_col)).alias("qv"))
+    q = queries.select("query_id",
+                       as_double(F.col("embedding")).alias("qv"))
     q = q.withColumn("qnorm", l2_norm(F.col("qv")))
 
     ranked = (q.crossJoin(cent)
@@ -1302,7 +1272,7 @@ def ivf_topk_from_index(spark, path: str, queries: DataFrame,
               .withColumn("__cum",
                           F.coalesce(F.sum("__sz").over(cum_w), F.lit(0)))
               .filter((F.col("__r") <= n_probe)
-                      | (F.col("__cum") < k * probe_oversample))
+                      | (F.col("__cum") < k * PROBE_OVERSAMPLE))
               .select("query_id", "qv", "qnorm",
                       F.col("centroid_id").alias("probe_list")))
 

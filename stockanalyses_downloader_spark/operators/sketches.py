@@ -135,9 +135,9 @@ HDR_M = 16          # sub-buckets per octave -> <= 1/m relative error
 HDR_SCALE = 100     # fixed-point cents: resolution floor of 0.01
 
 
-def hdr_bucket(value: Column, m: int = HDR_M) -> Column:
-    """Ordinal bucket id ``o = e*m + s`` for a positive value —
-    order-preserving (higher value => higher ``o``), so cumulative
+def hdr_bucket(value: Column) -> Column:
+    """Ordinal bucket id ``o = e*m + s`` (m = HDR_M) for a positive
+    value — order-preserving (higher value => higher ``o``), so cumulative
     sums over ``o`` walk the value axis. Values below 1/HDR_SCALE
     (k < 1) are the caller's to filter out (the fixture's prices sit
     orders of magnitude above the resolution floor).
@@ -151,27 +151,26 @@ def hdr_bucket(value: Column, m: int = HDR_M) -> Column:
     k = F.floor(value * HDR_SCALE).cast("long")
     e = (F.length(F.bin(k)) - 1).cast("long")
     p = F.pow(F.lit(2.0), e).cast("long")
-    s = F.floor((k - p) * m / p).cast("long")
-    return (e * m + s).cast("long")
+    s = F.floor((k - p) * HDR_M / p).cast("long")
+    return (e * HDR_M + s).cast("long")
 
 
-def hdr_bucket_value(o: Column, m: int = HDR_M) -> Column:
+def hdr_bucket_value(o: Column) -> Column:
     """Midpoint representative value of bucket ``o`` (inverse of
-    hdr_bucket up to the <=1/m bucket width): 2^e * (m + s + 0.5) /
-    (m * HDR_SCALE). Pure double arithmetic on exact integer inputs —
-    engine-identical."""
-    e = F.floor(o / m).cast("long")
-    s = (o - e * m).cast("long")
+    hdr_bucket up to the <=1/m bucket width, m = HDR_M):
+    2^e * (m + s + 0.5) / (m * HDR_SCALE). Pure double arithmetic on
+    exact integer inputs — engine-identical."""
+    e = F.floor(o / HDR_M).cast("long")
+    s = (o - e * HDR_M).cast("long")
     p = F.pow(F.lit(2.0), e)
-    return (p * (s + F.lit(m + 0.5)) / F.lit(float(m * HDR_SCALE)))
+    return (p * (s + F.lit(HDR_M + 0.5)) / F.lit(float(HDR_M * HDR_SCALE)))
 
 
-def hdr_build(values: DataFrame, value_col: str,
-              m: int = HDR_M) -> DataFrame:
-    """Histogram grid (o, c): at most m*64 rows no matter the corpus
+def hdr_build(values: DataFrame, value_col: str) -> DataFrame:
+    """Histogram grid (o, c): at most HDR_M*64 rows no matter the corpus
     size. Merging two grids is UNION ALL + groupBy-sum — same
     re-aggregation contract as countmin_merge."""
-    return hdr_build_grouped(values, [], value_col, m)
+    return hdr_build_grouped(values, [], value_col)
 
 
 def hdr_merge(*grids: DataFrame) -> DataFrame:
@@ -182,8 +181,7 @@ def hdr_merge(*grids: DataFrame) -> DataFrame:
     return out.groupBy("o").agg(F.sum("c").alias("c"))
 
 
-def hdr_quantiles(grid: DataFrame, qs: tuple[float, ...],
-                  m: int = HDR_M) -> DataFrame:
+def hdr_quantiles(grid: DataFrame, qs: tuple[float, ...]) -> DataFrame:
     """Quantile estimates from the grid: for each q, the midpoint of
     the bucket containing the ceil(q*N)-th smallest value (rank
     semantics of percentile_disc). Output (q, est, n_total). The
@@ -202,7 +200,7 @@ def hdr_quantiles(grid: DataFrame, qs: tuple[float, ...],
                      F.col("cum") >= F.ceil(F.col("q") * F.col("n_total")))
             .groupBy("q", "n_total").agg(F.min("o").alias("o")))
     return hits.select(
-        "q", hdr_bucket_value(F.col("o"), m).alias("est"),
+        "q", hdr_bucket_value(F.col("o")).alias("est"),
         F.col("n_total").cast("long").alias("n_total"))
 
 
@@ -270,21 +268,20 @@ def bloom_contains(bloom: DataFrame, probes: DataFrame, item_col: str,
 
 
 def hdr_build_grouped(values: DataFrame, group_cols: list[str],
-                      value_col: str, m: int = HDR_M) -> DataFrame:
+                      value_col: str) -> DataFrame:
     """Per-group histogram grids in one aggregate: (group_cols..., o,
-    c), at most m*64 rows PER GROUP. The grouped form of hdr_build —
+    c), at most HDR_M*64 rows PER GROUP. The grouped form of hdr_build —
     same bucketing, same merge-by-addition contract per group."""
     return (values
             .filter(F.floor(F.col(value_col) * HDR_SCALE) >= 1)
             .select(*group_cols,
-                    hdr_bucket(F.col(value_col), m).alias("o"))
+                    hdr_bucket(F.col(value_col)).alias("o"))
             .groupBy(*group_cols, "o")
             .agg(F.count("*").alias("c")))
 
 
 def hdr_quantiles_grouped(grid: DataFrame, group_cols: list[str],
-                          qs: tuple[float, ...],
-                          m: int = HDR_M) -> DataFrame:
+                          qs: tuple[float, ...]) -> DataFrame:
     """Per-group quantile estimates from a grouped grid: the same
     cumulative-walk rule as hdr_quantiles, windowed per group — so
     ONE pass answers every group's p50/p99 from bounded state
@@ -304,7 +301,7 @@ def hdr_quantiles_grouped(grid: DataFrame, group_cols: list[str],
             .groupBy(*group_cols, "q", "n_total")
             .agg(F.min("o").alias("o")))
     return hits.select(
-        *group_cols, "q", hdr_bucket_value(F.col("o"), m).alias("est"),
+        *group_cols, "q", hdr_bucket_value(F.col("o")).alias("est"),
         F.col("n_total").cast("long").alias("n_total"))
 
 
@@ -375,11 +372,11 @@ HLL_P = 8
 HLL_M = 1 << HLL_P  # 256 registers -> ~6.5% standard error
 
 
-def _hll_cell(item: Column, m: int) -> tuple[Column, Column]:
+def _hll_cell(item: Column) -> tuple[Column, Column]:
     """(register, rho) of one item under the portable hash."""
     h = F.md5(item.cast("string").cast("binary"))
     reg = (F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
-           % m).cast("int")
+           % HLL_M).cast("int")
     w = F.conv(F.substring(h, 9, 8), 16, 10).cast("long")
     rho = (F.when(w == 0, F.lit(33))
            .otherwise(F.lit(33) - F.length(F.bin(w)))).cast("int")
@@ -387,21 +384,20 @@ def _hll_cell(item: Column, m: int) -> tuple[Column, Column]:
 
 
 def hll_build_grouped(items: DataFrame, group_cols: list[str],
-                      item_col: str, m: int = HLL_M) -> DataFrame:
+                      item_col: str) -> DataFrame:
     """Per-group register grids (group_cols..., reg, max_rho): at most
-    m rows PER GROUP no matter how many distinct items. A register no
-    item hashed into is absent (implicit rho 0). Merging grids built
-    with the same m is UNION ALL + groupBy-MAX (hll_merge)."""
-    reg, rho = _hll_cell(F.col(item_col), m)
+    HLL_M rows PER GROUP no matter how many distinct items. A register
+    no item hashed into is absent (implicit rho 0). Merging grids is
+    UNION ALL + groupBy-MAX (hll_merge)."""
+    reg, rho = _hll_cell(F.col(item_col))
     return (items.select(*group_cols, reg.alias("reg"), rho.alias("rho"))
             .groupBy(*group_cols, "reg")
             .agg(F.max("rho").alias("max_rho")))
 
 
-def hll_build(items: DataFrame, item_col: str,
-              m: int = HLL_M) -> DataFrame:
+def hll_build(items: DataFrame, item_col: str) -> DataFrame:
     """Ungrouped register grid (reg, max_rho)."""
-    return hll_build_grouped(items, [], item_col, m)
+    return hll_build_grouped(items, [], item_col)
 
 
 def hll_merge(*grids: DataFrame) -> DataFrame:
@@ -414,13 +410,14 @@ def hll_merge(*grids: DataFrame) -> DataFrame:
     return out.groupBy("reg").agg(F.max("max_rho").alias("max_rho"))
 
 
-def hll_estimate_grouped(grid: DataFrame, group_cols: list[str],
-                         m: int = HLL_M) -> DataFrame:
+def hll_estimate_grouped(grid: DataFrame, group_cols: list[str]) -> DataFrame:
     """Cardinality estimate per group from a register grid: the
     standard HLL estimator with the linear-counting small-range
     correction. Output (group_cols..., est_distinct). Runs entirely
-    on the <= m-rows-per-group grid — no corpus rescans; libm ln()
-    confines this to the test-pinned tier (grid stays oracled)."""
+    on the <= m-rows-per-group grid (m = HLL_M) — no corpus rescans;
+    libm ln() confines this to the test-pinned tier (grid stays
+    oracled)."""
+    m = HLL_M
     alpha = 0.7213 / (1.0 + 1.079 / m)
     per = (grid.groupBy(*group_cols) if group_cols else grid.groupBy())
     agg = per.agg(
@@ -435,13 +432,12 @@ def hll_estimate_grouped(grid: DataFrame, group_cols: list[str],
     return agg.select(*group_cols, est.alias("est_distinct"))
 
 
-def hll_estimate(grid: DataFrame, m: int = HLL_M) -> DataFrame:
+def hll_estimate(grid: DataFrame) -> DataFrame:
     """Ungrouped estimate: 1 row (est_distinct)."""
-    return hll_estimate_grouped(grid, [], m)
+    return hll_estimate_grouped(grid, [])
 
 
-def hll_intersection_estimate(a: DataFrame, b: DataFrame,
-                              m: int = HLL_M) -> DataFrame:
+def hll_intersection_estimate(a: DataFrame, b: DataFrame) -> DataFrame:
     """Distinct-overlap estimate between two register grids via
     inclusion-exclusion: |A ∩ B| ≈ est(A) + est(B) − est(A ∪ B),
     where the union grid is just hll_merge (register MAX — exact
@@ -453,9 +449,9 @@ def hll_intersection_estimate(a: DataFrame, b: DataFrame,
     "how many users/tokens do these two days share" from stored
     per-day grids, no rescan of either day.
     Output 1 row: (est_a, est_b, est_union, est_intersection)."""
-    ea = hll_estimate(a, m).select(F.col("est_distinct").alias("est_a"))
-    eb = hll_estimate(b, m).select(F.col("est_distinct").alias("est_b"))
-    eu = hll_estimate(hll_merge(a, b), m).select(
+    ea = hll_estimate(a).select(F.col("est_distinct").alias("est_a"))
+    eb = hll_estimate(b).select(F.col("est_distinct").alias("est_b"))
+    eu = hll_estimate(hll_merge(a, b)).select(
         F.col("est_distinct").alias("est_union"))
     return (ea.crossJoin(eb).crossJoin(eu)
             .select("est_a", "est_b", "est_union",

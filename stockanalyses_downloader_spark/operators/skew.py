@@ -19,14 +19,14 @@ def _salt(cols: list[str], n_salts: int) -> Column:
     return F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(n_salts))
 
 
-def salted_sum(df: DataFrame, key: str, value: str, n_salts: int = 16,
-               salt_by: list[str] | None = None) -> DataFrame:
+def salted_sum(df: DataFrame, key: str, value: str,
+               n_salts: int = 16) -> DataFrame:
     """Two-phase aggregate: partial sums on (key, salt) spread one hot
     key over n_salts reducers; the final combine handles n_salts rows
-    per key. Decimal accumulation keeps the result identical to the
-    unsalted plan."""
+    per key. The salt hashes the summed value. Decimal accumulation
+    keeps the result identical to the unsalted plan."""
     dec = F.col(value).cast("decimal(30,10)")
-    partial = (df.withColumn("__salt", _salt(salt_by or [value], n_salts))
+    partial = (df.withColumn("__salt", _salt([value], n_salts))
                  .groupBy(key, "__salt")
                  .agg(F.sum(dec).alias("__part"), F.count("*").alias("__n")))
     return (partial.groupBy(key)
@@ -35,16 +35,15 @@ def salted_sum(df: DataFrame, key: str, value: str, n_salts: int = 16,
 
 
 def salt_replicate_join(facts: DataFrame, dim: DataFrame, key: str,
-                        n_salts: int = 8,
-                        fact_salt_by: list[str] | None = None) -> DataFrame:
+                        n_salts: int = 8) -> DataFrame:
     """Equi-join where one fact key is hot and the build side can't
     broadcast: replicate each dim row n_salts times, salt the facts
     deterministically, join on (key, salt). Row multiplicity is
     preserved exactly; dim replication is the (bounded) cost."""
     # salt must vary WITHIN a key (salting by the key itself would send
-    # the hot key to one reducer again) — default: hash of the full row
+    # the hot key to one reducer again): hash of the full row
     salted_facts = facts.withColumn(
-        "__salt", _salt(fact_salt_by or list(facts.columns), n_salts))
+        "__salt", _salt(list(facts.columns), n_salts))
     replicated = dim.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))
                             .cast("array<bigint>")))
@@ -70,24 +69,22 @@ def measure_key_skew(df: DataFrame, key: str) -> dict:
             "top_share": float(row["mx"]) / float(row["total"])}
 
 
-def choose_salt_factor(skew: dict, target_ratio: float = 4.0,
-                       max_salts: int = 64) -> int:
+def choose_salt_factor(skew: dict) -> int:
     """Pick n_salts from measured skew: 1 (no salting) while the
-    hottest key stays within target_ratio x the mean per-key count;
-    otherwise enough salts to bring the hot key's per-reducer slice
-    back under that bound, capped. The cap bounds dim replication in
-    salt_replicate_join; the ratio-4 default tolerates benign
+    hottest key stays within 4x the mean per-key count; otherwise
+    enough salts to bring the hot key's per-reducer slice back under
+    that bound, capped at 64. The cap bounds dim replication in
+    salt_replicate_join; the ratio 4 tolerates benign
     imbalance (salting has real cost — an extra combine or a
     replicated build side — and should not trigger on noise)."""
     ratio = skew["max"] / max(skew["mean"], 1.0)
-    if ratio <= target_ratio:
+    if ratio <= 4.0:
         return 1
     import math
-    return min(max_salts, math.ceil(ratio / target_ratio))
+    return min(64, math.ceil(ratio / 4.0))
 
 
-def auto_salted_sum(df: DataFrame, key: str, value: str,
-                    salt_by: list[str] | None = None) -> DataFrame:
+def auto_salted_sum(df: DataFrame, key: str, value: str) -> DataFrame:
     """Measure -> decide -> aggregate: the closed loop. Uniform keys
     run the plain two-phase aggregate (salting skipped — no wasted
     combine); a hot key gets exactly the salt factor its measured
@@ -100,4 +97,4 @@ def auto_salted_sum(df: DataFrame, key: str, value: str,
         return (df.groupBy(key)
                 .agg(F.sum(dec).cast("double").alias(f"sum_{value}"),
                      F.count("*").alias("n_rows")))
-    return salted_sum(df, key, value, n_salts=n, salt_by=salt_by)
+    return salted_sum(df, key, value, n_salts=n)

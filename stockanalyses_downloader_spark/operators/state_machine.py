@@ -36,8 +36,7 @@ def claim(jobs: DataFrame) -> DataFrame:
                CLAIMED).otherwise(F.col("action")))
 
 
-def apply_outcomes(jobs: DataFrame, outcomes: DataFrame,
-                   key: str = "downloader_jq_id") -> DataFrame:
+def apply_outcomes(jobs: DataFrame, outcomes: DataFrame) -> DataFrame:
     """Merge per-job fetch/publish outcomes into the action column.
 
     ``outcomes``: (key, fetch_ok boolean, publish_ok boolean). Jobs with
@@ -49,8 +48,8 @@ def apply_outcomes(jobs: DataFrame, outcomes: DataFrame,
     """
     # outcomes is fact-sized (one row per attempted job) — a plain
     # shuffle join on the job key; AQE picks the physical strategy.
-    o = outcomes.select(key, "fetch_ok", "publish_ok")
-    joined = jobs.join(o, key, "left")
+    o = outcomes.select("downloader_jq_id", "fetch_ok", "publish_ok")
+    joined = jobs.join(o, "downloader_jq_id", "left")
     return joined.withColumn(
         "action",
         F.when(F.col("fetch_ok").isNull(), F.col("action"))

@@ -56,13 +56,13 @@ def redact_pii(text: Column) -> Column:
     return out
 
 
-def with_pii_redaction(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def with_pii_redaction(docs: DataFrame) -> DataFrame:
     """Adds n_<kind> count columns and ``redacted`` text. spread()
     first (r11 rollout): one regexp scan per PII kind plus the
     chained redaction replaces — pure per-row CPU a narrow upstream
     would serialize."""
     from .dedup import spread
-    text = F.col(text_col)
+    text = F.col("text")
     counts = pii_counts(text)
     out = spread(docs)
     for kind in REDACTION_ORDER:
@@ -70,9 +70,8 @@ def with_pii_redaction(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return out.withColumn("redacted", redact_pii(text))
 
 
-def chunk_documents(docs: DataFrame, window: int = 64, stride: int = 48,
-                    text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def chunk_documents(docs: DataFrame, window: int = 64,
+                    stride: int = 48) -> DataFrame:
     """Overlapping token-window chunking — the RAG/packing prep step.
 
     Whitespace tokens; chunk i covers tokens
@@ -80,7 +79,7 @@ def chunk_documents(docs: DataFrame, window: int = 64, stride: int = 48,
     ``n_chunks = max(1, ceil((n_tokens - window) / stride) + 1)`` so
     the final (possibly partial) chunk always reaches the last token
     and every token belongs to >= 1 chunk. Output one row per chunk:
-    (id_col, chunk_id, start_token, n_chunk_tokens, chunk_text).
+    (doc_id, chunk_id, start_token, n_chunk_tokens, chunk_text).
 
     Per-row explode of slice arithmetic — no shuffle; chunk count per
     doc is data-proportional, so the explode's row amplification is
@@ -108,9 +107,9 @@ def chunk_documents(docs: DataFrame, window: int = 64, stride: int = 48,
     # per-chunk slice/join expressions are the per-row CPU stage
     from .dedup import spread
     ex = (spread(docs)
-          .withColumn("__toks", F.split(F.trim(F.col(text_col)), r"\s+"))
-          .select(id_col, F.explode(chunks).alias("c")))
+          .withColumn("__toks", F.split(F.trim(F.col("text")), r"\s+"))
+          .select("doc_id", F.explode(chunks).alias("c")))
     return ex.select(
-        id_col, "c.chunk_id", "c.start_token",
+        "doc_id", "c.chunk_id", "c.start_token",
         F.size("c.toks").alias("n_chunk_tokens"),
         F.array_join("c.toks", " ").alias("chunk_text"))

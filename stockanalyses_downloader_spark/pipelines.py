@@ -3,7 +3,7 @@ reference's two hard-wired pipelines (SURVEY.md §3):
 
   run_rest_batch    E2 (main.py:264-355): jobs -> filter/claim ->
                     parse -> dim resolve -> fetch -> validate -> mid ->
-                    enrich -> publish -> state writeback
+                    publish -> state writeback
   run_wss_stream    E3 (main.py:357-434): wire ticks -> positional
                     projection -> reverse ISIN lookup -> mid ->
                     foreachBatch publish
@@ -214,8 +214,7 @@ def run_corpus_ingest_stream(spark: SparkSession, src_dir: str,
 
 
 def incremental_quality_refresh(spark: SparkSession, corpus: DataFrame,
-                                results_path: str,
-                                weights=None) -> dict[str, int]:
+                                results_path: str) -> dict[str, int]:
     """Incremental corpus re-scoring (r5b): maintain an at-rest
     per-doc quality table that each refresh brings up to date by
     processing ONLY the delta — new and changed docs are scored,
@@ -235,12 +234,10 @@ def incremental_quality_refresh(spark: SparkSession, corpus: DataFrame,
     model-sized aggregate actions — documented driver work, the
     numbers every incremental job logs).
 
-    The scoring stage is quality_model with the frozen prior from
-    text_queries by default — swap ``weights`` for a trained model."""
+    The scoring stage is quality_model with the frozen prior
+    ``_QUALITY_W`` from text_queries."""
     from .operators import quality_model as qm
-
-    if weights is None:
-        from .queries.text_queries import _QUALITY_W as weights
+    from .queries.text_queries import _QUALITY_W
 
     new = corpus.select("doc_id", "text",
                         F.md5("text").alias("digest"))
@@ -249,7 +246,7 @@ def incremental_quality_refresh(spark: SparkSession, corpus: DataFrame,
         # surface_features keeps only (doc_id, x); carry the digest
         # back in by key — it's the diff key of the NEXT refresh
         s = qm.score_with_weights(
-            qm.surface_features(docs_with_digest), weights)
+            qm.surface_features(docs_with_digest), _QUALITY_W)
         # explicit aliases: s shares lineage with docs_with_digest
         # (self-join), so unqualified column refs are ambiguous
         dd = docs_with_digest.select("doc_id", "digest")

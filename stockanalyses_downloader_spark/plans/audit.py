@@ -18,10 +18,10 @@ from contextlib import redirect_stdout
 from pyspark.sql import DataFrame
 
 
-def explain_str(df: DataFrame, mode: str = "formatted") -> str:
+def explain_str(df: DataFrame) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
-        df.explain(mode=mode)
+        df.explain(mode="formatted")
     return buf.getvalue()
 
 
@@ -39,11 +39,9 @@ def assert_pushed_filters(df: DataFrame, *needles: str) -> str:
     return plan
 
 
-def assert_broadcast_join(df: DataFrame, n_expected: int = 1) -> str:
+def assert_broadcast_join(df: DataFrame) -> str:
     plan = explain_str(df)
-    n = plan.count("BroadcastHashJoin")
-    assert n >= n_expected, (
-        f"expected >= {n_expected} broadcast hash joins, found {n}:\n{plan}")
+    assert "BroadcastHashJoin" in plan, f"no broadcast hash join:\n{plan}"
     return plan
 
 

@@ -50,15 +50,14 @@ N_BUCKETS = 8
 
 def write_bucketed(df: DataFrame, table: str, keys: Sequence[str],
                    sort_cols: Sequence[str] | None = None,
-                   n_buckets: int = N_BUCKETS,
-                   mode: str = "overwrite") -> None:
+                   n_buckets: int = N_BUCKETS) -> None:
     """Persist ``df`` as a catalog table bucketed by ``keys`` (and
     optionally sorted within buckets). ``table`` may be
     ``db.table``; create the database with an explicit LOCATION first
     to control where files land."""
     one_file_per_bucket = df.repartition(n_buckets, *[df[k] for k in keys])
-    writer = (one_file_per_bucket.write.format("parquet").mode(mode)
-              .bucketBy(n_buckets, *keys))
+    writer = (one_file_per_bucket.write.format("parquet")
+              .mode("overwrite").bucketBy(n_buckets, *keys))
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table)
@@ -73,8 +72,7 @@ def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
 
 
 def write_partitioned(df: DataFrame, path: str,
-                      partition_cols: Sequence[str],
-                      mode: str = "overwrite") -> None:
+                      partition_cols: Sequence[str]) -> None:
     """Directory-partitioned parquet layout — the OTHER at-rest
     lever, orthogonal to bucketing: bucketing co-locates a JOIN key
     across files, directory partitioning prunes FILTER keys before a
@@ -89,7 +87,7 @@ def write_partitioned(df: DataFrame, path: str,
     kills listing time. Pruning is pinned in
     tests/test_bucketing.py::test_partitioned_layout_prunes_directories.
     """
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
 ZORDER_BITS = 16
@@ -145,8 +143,7 @@ def zorder_value(df: DataFrame, cols: Sequence[str],
 
 
 def write_zordered(df: DataFrame, path: str, cols: Sequence[str],
-                   n_files: int, bits: int = ZORDER_BITS,
-                   mode: str = "overwrite") -> None:
+                   n_files: int) -> None:
     """Write ``df`` as ``n_files`` parquet files range-partitioned on
     the Z-curve: each file covers one contiguous z-range, so its
     footer min/max on EVERY interleaved column is a tight box and a
@@ -155,7 +152,7 @@ def write_zordered(df: DataFrame, path: str, cols: Sequence[str],
     stats back and counts overlapping files vs a single-column sort).
     ``repartitionByRange`` samples the z distribution for balanced
     file sizes — the one shuffle, paid at write time."""
-    zdf = zorder_value(df, cols, bits)
+    zdf = zorder_value(df, cols)
     (zdf.repartitionByRange(n_files, "zvalue")
      .sortWithinPartitions("zvalue")
-     .write.mode(mode).parquet(path))
+     .write.mode("overwrite").parquet(path))

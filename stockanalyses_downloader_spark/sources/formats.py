@@ -84,14 +84,13 @@ def read_jsonl(spark: SparkSession, path: str,
     return parse_jsonl_lines(spark.read.text(path), schema)
 
 
-def read_csv(spark: SparkSession, path: str, schema: T.StructType,
-             header: bool = True, sep: str = ",",
-             quote: str = '"', escape: str = '"',
-             ) -> tuple[DataFrame, DataFrame]:
-    """CSV twin of :func:`read_jsonl` — same (good, dead) contract.
+def read_csv(spark: SparkSession, path: str,
+             schema: T.StructType) -> tuple[DataFrame, DataFrame]:
+    """CSV twin of :func:`read_jsonl` — same (good, dead) contract,
+    comma-separated with a header line.
 
-    ``header=True`` drops lines that MATCH the schema-derived header:
-    the bare form (``sep.join(field names)``), the all-quoted form
+    Header lines are dropped by MATCHING the schema-derived header:
+    the bare form (``",".join(field names)``), the all-quoted form
     (every name double-quoted — what Spark's own csv writer emits for
     quoted output), each with an optional trailing ``\\r`` (CRLF files
     read over a text source keep the carriage return on every line).
@@ -108,7 +107,7 @@ def read_csv(spark: SparkSession, path: str, schema: T.StructType,
 
     Quoting is RFC 4180: fields may be double-quoted, a quoted field
     may contain the separator, and a literal quote is written ``""``
-    (``escape`` defaults to the quote char — Spark's csv default of
+    (the escape is the quote char — Spark's csv default of
     backslash-escape silently returns RFC-quoted fields verbatim,
     quotes and all). Embedded NEWLINES inside quotes are the
     documented limitation of the text-read path: the line source
@@ -125,22 +124,20 @@ def read_csv(spark: SparkSession, path: str, schema: T.StructType,
     full = _with_corrupt_field(schema)
     lines = spark.read.text(path)
     stripped = F.regexp_replace(F.col("value"), "\r$", "")
-    if header:
-        names = schema.fieldNames()
-        forms = [sep.join(names),
-                 sep.join(f'"{n}"' for n in names)]
-        lines = lines.filter(~stripped.isin(*forms))
+    names = schema.fieldNames()
+    forms = [",".join(names), ",".join(f'"{n}"' for n in names)]
+    lines = lines.filter(~stripped.isin(*forms))
     ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
                     for f in full.fields)
-    opts = dict(_PARSE_OPTS, sep=sep, quote=quote, escape=escape)
+    opts = dict(_PARSE_OPTS, sep=",", quote='"', escape='"')
     return _split_parsed(lines, F.from_csv(stripped, ddl, opts), schema)
 
 
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_jsonl(df: DataFrame, path: str) -> None:
     """Line-JSON writer (interchange export; parquet stays the
     analytical format — this is for feeding external line-oriented
     consumers)."""
-    df.write.mode(mode).json(path)
+    df.write.mode("overwrite").json(path)
 
 
 def read_xml(spark: SparkSession, path: str, schema: T.StructType,

@@ -34,8 +34,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def register_views(spark: SparkSession, sf_dir: str,
-                   names: tuple[str, ...] = TABLE_NAMES) -> None:
+def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register each table as a temp view so operators can use spark.sql."""
-    for name in names:
+    for name in TABLE_NAMES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)

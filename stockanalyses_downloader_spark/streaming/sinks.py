@@ -27,6 +27,9 @@ from pyspark.sql import functions as F
 
 from ..sources import swap
 
+JOB_KEY = "downloader_jq_id"   # the jobs table key
+KL_THRESHOLD = 0.5   # drift_monitor_foreach_batch alert level
+
 
 class MessageQueueClient:
     """Connector seam: open once per partition, publish per row."""
@@ -58,8 +61,9 @@ class FileQueueClient(MessageQueueClient):
         self._fh.close()
 
 
-def publish_partition(rows: Iterator, client_factory: Callable[[], MessageQueueClient],
-                      message_col: str = "message") -> None:
+def publish_partition(rows: Iterator,
+                      client_factory: Callable[[], MessageQueueClient]
+                      ) -> None:
     """One connection per partition, reused for every row (the fix for
     the reference's per-message connect)."""
     client = client_factory()
@@ -68,7 +72,7 @@ def publish_partition(rows: Iterator, client_factory: Callable[[], MessageQueueC
         if not opened:
             client.open()
             opened = True
-        client.publish(row[message_col])
+        client.publish(row["message"])
     if opened:
         client.close()
 
@@ -96,7 +100,7 @@ def dedup_for_effective_exactly_once(df: DataFrame, key_cols: list[str],
     return df.withWatermark(ts_col, watermark).dropDuplicates(key_cols)
 
 
-def jobs_state_writeback(jobs_table_path: str, key: str = "downloader_jq_id"):
+def jobs_state_writeback(jobs_table_path: str):
     """K2: per-micro-batch job-state upsert. The jobs table is control
     plane (rows = in-flight jobs, not fact data), so a read-merge-
     rewrite per batch is proportionate; on a lakehouse this is a Delta
@@ -112,25 +116,26 @@ def jobs_state_writeback(jobs_table_path: str, key: str = "downloader_jq_id"):
     history to the current batch's keys."""
     def _writeback(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        updates = batch_df.select(key, "action").dropDuplicates([key])
+        updates = (batch_df.select(JOB_KEY, "action")
+                   .dropDuplicates([JOB_KEY]))
         out = updates
         if swap.recover(jobs_table_path):
             current = spark.read.parquet(jobs_table_path)
-            new = updates.select(key, F.col("action").alias("__new"))
-            merged = (current.join(new, key, "left")
+            new = updates.select(JOB_KEY, F.col("action").alias("__new"))
+            merged = (current.join(new, JOB_KEY, "left")
                       .withColumn("action",
                                   F.coalesce(F.col("__new"), F.col("action")))
                       .drop("__new"))
-            new_keys = updates.join(current.select(key), key, "left_anti")
+            new_keys = updates.join(current.select(JOB_KEY), JOB_KEY,
+                                    "left_anti")
             out = merged.unionByName(new_keys, allowMissingColumns=True)
         swap.replace_dir(jobs_table_path, out.write.mode("overwrite").parquet)
     return _writeback
 
 
 def publish_with_outcomes(messages: DataFrame,
-                          client_factory: Callable[[], MessageQueueClient],
-                          id_col: str = "downloader_jq_id",
-                          message_col: str = "message") -> DataFrame:
+                          client_factory: Callable[[], MessageQueueClient]
+                          ) -> DataFrame:
     """Publish partition-parallel AND report per-message success —
     the feedback edge the reference wires at main.py:339-345 (publish
     ok -> 1300, failure -> 1900).
@@ -149,7 +154,7 @@ def publish_with_outcomes(messages: DataFrame,
         opened = False
         for pdf in batches:
             oks = []
-            for msg in pdf[message_col]:
+            for msg in pdf["message"]:
                 try:
                     if not opened:
                         client.open()
@@ -158,24 +163,24 @@ def publish_with_outcomes(messages: DataFrame,
                     oks.append(True)
                 except Exception:
                     oks.append(False)
-            yield pd.DataFrame({id_col: pdf[id_col], "publish_ok": oks})
+            yield pd.DataFrame({"downloader_jq_id": pdf["downloader_jq_id"],
+                                "publish_ok": oks})
         if opened:
             client.close()
 
-    return messages.mapInPandas(_publish, f"{id_col} long, publish_ok boolean")
+    return messages.mapInPandas(
+        _publish, "downloader_jq_id long, publish_ok boolean")
 
 
-def parquet_sink(df: DataFrame, path: str, checkpoint: str,
-                 trigger_available_now: bool = True):
+def parquet_sink(df: DataFrame, path: str, checkpoint: str):
     """Batch-parity sink: append to a parquet table with checkpointed
-    progress (K1 as a table instead of a queue)."""
-    writer = (df.writeStream.format("parquet")
-              .option("path", path)
-              .option("checkpointLocation", checkpoint)
-              .outputMode("append"))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer
+    progress (K1 as a table instead of a queue), triggered
+    availableNow."""
+    return (df.writeStream.format("parquet")
+            .option("path", path)
+            .option("checkpointLocation", checkpoint)
+            .outputMode("append")
+            .trigger(availableNow=True))
 
 
 def cdc_materialized_view(table_path: str, key: str,
@@ -248,8 +253,6 @@ def maintenance_foreach_batch(path: str,
 
 def drift_monitor_foreach_batch(reference_grid_path: str,
                                 grids_path: str, alerts_path: str,
-                                vec_col: str = "embedding",
-                                kl_threshold: float = 0.5,
                                 label_col: Optional[str] = None) -> Callable:
     """Streaming drift ALERTING on the mergeable moment grids
     (VERDICT r8 #6) — the operational half of embedding_drift_report:
@@ -277,7 +280,7 @@ def drift_monitor_foreach_batch(reference_grid_path: str,
 
     Threshold intuition: for same-distribution batches the statistic
     hovers near 0 (sampling noise); a +3σ mean shift contributes
-    ~0.5·(9 + 9)/2 ≈ 4.5 per affected dimension, so the 0.5 default
+    ~0.5·(9 + 9)/2 ≈ 4.5 per affected dimension, so KL_THRESHOLD=0.5
     flags a 3σ shift on even a single dimension of a wide embedding
     while ignoring noise (pinned by the planted-shift stream test).
 
@@ -306,7 +309,7 @@ def drift_monitor_foreach_batch(reference_grid_path: str,
             return
         spark = batch_df.sparkSession
         grid_dir = f"{grids_path.rstrip('/')}/batch_id={batch_id}"
-        pca.moment_grid(batch_df, keys, vec_col) \
+        pca.moment_grid(batch_df, keys) \
             .write.mode("overwrite").parquet(grid_dir)
         per = (pca.moments_from_grid(spark.read.parquet(grid_dir))
                .withColumn("var", F.col("m2") - F.col("m") * F.col("m")))
@@ -334,18 +337,18 @@ def drift_monitor_foreach_batch(reference_grid_path: str,
         # rows flagged on the statistic, `new_label` rows flagged
         # because the baseline has never seen the label, `ok` rows
         # below threshold.
-        flagged = F.coalesce(F.col("sym_kl_diag") > kl_threshold,
+        flagged = F.coalesce(F.col("sym_kl_diag") > KL_THRESHOLD,
                              F.lit(True))
         alert = (per.join(F.broadcast(ref), keys + ["pos"], "left")
                  .groupBy(*keys)
                  .agg(F.max("n").alias("n_vecs"),
                       F.round(F.sum(tt), 6).alias("sym_kl_diag"))
                  .select(*keys, "n_vecs", "sym_kl_diag",
-                         F.lit(kl_threshold).alias("kl_threshold"),
+                         F.lit(KL_THRESHOLD).alias("kl_threshold"),
                          flagged.alias("flagged"),
                          F.when(F.col("sym_kl_diag").isNull(),
                                 F.lit("new_label"))
-                          .when(F.col("sym_kl_diag") > kl_threshold,
+                          .when(F.col("sym_kl_diag") > KL_THRESHOLD,
                                 F.lit("drift"))
                           .otherwise(F.lit("ok")).alias("reason")))
         alert.coalesce(1).write.mode("overwrite").parquet(
@@ -357,15 +360,12 @@ def parquet_sink_with_maintenance(df: DataFrame, path: str,
                                   checkpoint: str,
                                   target_bytes: int = 128 * 1024 * 1024,
                                   every_n_batches: int = 10,
-                                  min_files: int = 8,
-                                  trigger_available_now: bool = True):
+                                  min_files: int = 8):
     """parquet_sink plus in-line periodic compaction (see
     maintenance_foreach_batch)."""
-    writer = (df.writeStream
-              .foreachBatch(maintenance_foreach_batch(
-                  path, target_bytes, every_n_batches, min_files))
-              .option("checkpointLocation", checkpoint)
-              .outputMode("append"))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer
+    return (df.writeStream
+            .foreachBatch(maintenance_foreach_batch(
+                path, target_bytes, every_n_batches, min_files))
+            .option("checkpointLocation", checkpoint)
+            .outputMode("append")
+            .trigger(availableNow=True))

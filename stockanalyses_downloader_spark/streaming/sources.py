@@ -58,37 +58,30 @@ KAFKA_WIRE = T.StructType([
 ])
 
 
-def encode_kafka_fixture(ticks: DataFrame, topic: str = "ticks",
-                         key_col: str = "pair",
-                         ts_col: str = "ts") -> DataFrame:
+def encode_kafka_fixture(ticks: DataFrame) -> DataFrame:
     """Encode a tick frame into Kafka's record shape (the fixture
     producer): key = partition key bytes, value = the full row as
     JSON bytes. Keying by pair mirrors the production layout where a
     pair's ticks land in one Kafka partition (per-key ordering)."""
     return ticks.select(
-        F.encode(F.col(key_col), "utf-8").alias("key"),
+        F.encode(F.col("pair"), "utf-8").alias("key"),
         F.encode(F.to_json(F.struct(*ticks.columns)), "utf-8").alias("value"),
-        F.lit(topic).alias("topic"),
-        (F.abs(F.xxhash64(key_col)) % 8).cast("int").alias("partition"),
+        F.lit("ticks").alias("topic"),
+        (F.abs(F.xxhash64("pair")) % 8).cast("int").alias("partition"),
         F.monotonically_increasing_id().alias("offset"),
-        F.timestamp_seconds(ts_col).alias("timestamp"),
+        F.timestamp_seconds("ts").alias("timestamp"),
         F.lit(0).alias("timestampType"))
 
 
-def kafka_tick_stream(spark: SparkSession, path: str,
-                      max_files_per_trigger: int | None = None) -> DataFrame:
+def kafka_tick_stream(spark: SparkSession, path: str) -> DataFrame:
     """Kafka-shaped stream over a fixture directory. In production the
     body is ``spark.readStream.format("kafka").option(...)`` — same
     output schema, so decode_kafka_ticks and everything downstream are
     identical."""
-    reader = spark.readStream.schema(KAFKA_WIRE)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(path)
+    return spark.readStream.schema(KAFKA_WIRE).parquet(path)
 
 
-def decode_kafka_ticks(records: DataFrame,
-                       payload_schema: T.StructType = TICK_WSS_RAW) -> DataFrame:
+def decode_kafka_ticks(records: DataFrame) -> DataFrame:
     """from_json over the value column (S6's parse step,
     main.py:398-415's dict access made schema-checked): malformed
     payloads decode to NULL columns instead of killing the stream —
@@ -96,20 +89,20 @@ def decode_kafka_ticks(records: DataFrame,
     untrusted."""
     return (records
             .select(F.from_json(F.col("value").cast("string"),
-                                payload_schema).alias("r"))
+                                TICK_WSS_RAW).alias("r"))
             .select("r.*"))
 
 
-def rate_tick_stream(spark: SparkSession, rows_per_second: int = 100,
-                     n_pairs: int = 4) -> DataFrame:
+def rate_tick_stream(spark: SparkSession,
+                     rows_per_second: int = 100) -> DataFrame:
     """Rate-source ticks: deterministic synthetic bid/ask around a
-    drifting value, pair round-robined — the shape of TICK_WSS after
-    projection."""
+    drifting value, round-robined over four pairs — the shape of
+    TICK_WSS after projection."""
     rate = (spark.readStream.format("rate")
             .option("rowsPerSecond", str(rows_per_second)).load())
     v = (F.col("value") % 1000).cast("double") + 10.0
     return rate.select(
-        F.concat(F.lit("pair"), (F.col("value") % n_pairs).cast("string"))
+        F.concat(F.lit("pair"), (F.col("value") % 4).cast("string"))
          .alias("pair"),
         (v * 0.999).alias("bid"),
         (v * 1.001).alias("ask"),

@@ -92,16 +92,12 @@ class _PairStatsProcessor(StatefulProcessor):
     """Spark-4 ``transformWithState`` successor of ``_make_update`` —
     the same per-key running stats on the new arbitrary-state API:
     typed ValueState instead of a positional tuple schema string at
-    the call site, native per-state TTL instead of manually re-armed
-    ProcessingTimeTimeout, and a processor object whose lifecycle
-    (init/close) the engine owns."""
-
-    def __init__(self, ttl_ms: int | None = None):
-        self._ttl = ttl_ms
+    the call site, and a processor object whose lifecycle (init/close)
+    the engine owns. State is kept forever, like ``running_pair_stats``
+    without ``idle_timeout_ms``."""
 
     def init(self, handle) -> None:
-        self._stats = handle.getValueState(
-            "stats", _STATE_SCHEMA, ttlDurationMs=self._ttl)
+        self._stats = handle.getValueState("stats", _STATE_SCHEMA)
 
     def handleInputRows(self, key: tuple, rows, timerValues):
         (pair,) = key
@@ -134,27 +130,25 @@ class _PairStatsProcessor(StatefulProcessor):
         pass
 
 
-def running_pair_stats_tws(ticks: DataFrame, key: str = "pair",
-                           ttl_ms: int | None = None) -> DataFrame:
+def running_pair_stats_tws(ticks: DataFrame) -> DataFrame:
     """``running_pair_stats`` on the transformWithStateInPandas API
     (Spark 4 arbitrary-state operator — REQUIRES the RocksDB state
     store provider; the caller sets
     ``spark.sql.streaming.stateStore.providerClass``). Semantics are
     pinned equal to the applyInPandasWithState path in
-    tests/test_streaming.py; ``ttl_ms`` maps the idle-eviction
-    contract onto native state TTL."""
-    return (ticks.groupBy(key)
+    tests/test_streaming.py."""
+    return (ticks.groupBy("pair")
             .transformWithStateInPandas(
-                statefulProcessor=_PairStatsProcessor(ttl_ms),
+                statefulProcessor=_PairStatsProcessor(),
                 outputStructType=STATS_SCHEMA,
                 outputMode="update",
                 timeMode="none"))
 
 
-def running_pair_stats(ticks: DataFrame, key: str = "pair",
+def running_pair_stats(ticks: DataFrame,
                        idle_timeout_ms: int | None = None) -> DataFrame:
     """Streaming DataFrame in (pair, bid/ask/last_price/volume/ts) ->
-    one updated stats row per key per micro-batch (update output mode).
+    one updated stats row per pair per micro-batch (update output mode).
 
     ``idle_timeout_ms``: when set, per-key state is EVICTED after the
     key has been idle that long (ProcessingTimeTimeout) — the
@@ -162,7 +156,7 @@ def running_pair_stats(ticks: DataFrame, key: str = "pair",
     running totals for bounded backfills)."""
     timeout = (GroupStateTimeout.NoTimeout if idle_timeout_ms is None
                else GroupStateTimeout.ProcessingTimeTimeout)
-    return (ticks.groupBy(key)
+    return (ticks.groupBy("pair")
             .applyInPandasWithState(
                 _make_update(idle_timeout_ms),
                 outputStructType=STATS_SCHEMA,

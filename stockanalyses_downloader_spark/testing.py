@@ -50,11 +50,11 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
               .reset_index(drop=True))
 
 
-def _values_equal(a, b, rel: float = 1e-9) -> bool:
+def _values_equal(a, b) -> bool:
     if isinstance(a, float) or isinstance(b, float):
         if a is None or b is None or (isinstance(a, float) and math.isnan(a)):
             return (a is None or math.isnan(a)) and (b is None or math.isnan(b))
-        return math.isclose(float(a), float(b), rel_tol=rel, abs_tol=1e-9)
+        return math.isclose(float(a), float(b), rel_tol=1e-9, abs_tol=1e-9)
     return a == b
 
 

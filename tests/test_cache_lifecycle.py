@@ -165,3 +165,83 @@ def test_tracked_scope_releases_only_its_own(spark):
     assert outer.storageLevel.useMemory          # untouched
     caching.release_tracked()
     assert not outer.storageLevel.useMemory
+
+
+def test_tracked_scope_leaves_other_threads_frames(spark):
+    """A scope releases only the frames its own thread registered
+    inside it: a frame that another thread persists while the scope is
+    open stays persisted and tracked when the scope exits, and
+    concurrent scope exits lose no other thread's registration. Runs
+    no Spark job (persist is lazy; unpersist of an unmaterialized
+    frame only drops the registration)."""
+    import threading
+
+    b_in_scope, a_persisted = threading.Event(), threading.Event()
+    b_persisted, a_exited = threading.Event(), threading.Event()
+    frames, errors = {}, []
+
+    def thread_b():
+        try:
+            with caching.tracked_scope():
+                b_in_scope.set()
+                assert a_persisted.wait(30)
+                frames["b"] = caching.tracked_persist(spark.range(4))
+                b_persisted.set()
+                assert a_exited.wait(30)
+                frames["b_level"] = frames["b"].storageLevel.useMemory
+                frames["b_tracked"] = any(
+                    df is frames["b"] for df in caching._TRACKED)
+        except Exception as exc:  # noqa: BLE001 — reported below
+            errors.append(exc)
+            b_persisted.set()
+
+    tb = threading.Thread(target=thread_b)
+    tb.start()
+    assert b_in_scope.wait(30)
+    with caching.tracked_scope():
+        a = caching.tracked_persist(spark.range(3))
+        a_persisted.set()
+        assert b_persisted.wait(30)
+    a_exited.set()
+    tb.join(30)
+    assert not tb.is_alive()
+    assert not errors, errors
+    assert not a.storageLevel.useMemory          # A's scope released it
+    assert frames["b_level"] and frames["b_tracked"]
+    assert not any(df is frames["b"] for df in caching._TRACKED)
+
+    # Stress: more threads than cores, fine-grained switching. Scoped
+    # threads rewrite the registry on exit while unscoped threads
+    # append to it; a lost append would drop an unscoped frame.
+    import sys
+    scoped, unscoped = [], []
+
+    def worker(i):
+        try:
+            if i % 2:
+                for _ in range(3):
+                    unscoped.append(caching.tracked_persist(spark.range(i)))
+            else:
+                with caching.tracked_scope():
+                    for _ in range(3):
+                        scoped.append(caching.tracked_persist(spark.range(i)))
+        except Exception as exc:  # noqa: BLE001 — reported below
+            errors.append(exc)
+
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,))
+                   for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(old_interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    tracked = {id(df) for df in caching._TRACKED}
+    assert all(id(df) in tracked for df in unscoped)
+    assert not any(id(df) in tracked for df in scoped)
+    caching.release_tracked()

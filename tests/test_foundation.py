@@ -108,3 +108,18 @@ def test_schema_version_gate():
         pass
     else:
         raise AssertionError("expected RuntimeError for old schema")
+
+
+def test_every_defaulted_parameter_has_a_caller():
+    """Every defaulted parameter of a package top-level function is
+    passed by some caller in the package, tests, tools, perfbench,
+    bench.py or __spark_entry__.py (AST scan, no Spark). An option no
+    caller sets is a constant: fix it in the body instead. Allowed:
+    the deployment/injection points and the DuckDB oracle SQL
+    generators in queries/ (tools/option_census.py)."""
+    from tools.option_census import census, unallowed
+
+    _, unset = census()
+    rest = unallowed(unset)
+    assert not rest, "never-set defaulted parameters: " + ", ".join(
+        f"{rel}:{fn}({p})" for rel, fn, p in rest)
