@@ -429,8 +429,7 @@ def ngram_jaccard_pairs(docs: DataFrame, block_cols: list[str],
 
 
 def minhash_signatures(docs: DataFrame, n_hashes: int = 64,
-                       id_col: str = "doc_id", text_col: str = "text",
-                       n: int = 3) -> DataFrame:
+                       id_col: str = "doc_id", n: int = 3) -> DataFrame:
     """MinHash signature per doc: explode the shingle stream to
     (doc_id, md5_h31 base hash) rows, then reduce with one hash
     aggregate computing all ``n_hashes`` permutation minimums as
@@ -447,7 +446,7 @@ def minhash_signatures(docs: DataFrame, n_hashes: int = 64,
 
     Docs too short to shingle produce no exploded rows and drop out."""
     params = _mh_params(n_hashes)
-    ex = (_with_toks(spread(docs), text_col)
+    ex = (_with_toks(spread(docs), "text")
           .select(id_col,
                   F.explode(_shingles_from_toks(F.col("__toks"), n))
                   .alias("gram"))
