@@ -25,9 +25,13 @@ Invariants:
   (id, v, norm) projection tracked instead of unpersisting it:
   CacheManager keys cache entries by canonicalized plan, so an
   internal unpersist would also drop a caller's entry for the same
-  projection (``ivf_topk_pq`` persists that ``base`` before training).
-  The projection goes with the next release; a library caller that
-  fits many models outside the harness wraps each fit in
+  projection, which ``ivf_topk`` and ``ivf_topk_pq`` persist
+  (``similarity.vectors``) next to the lists ``similarity.build``
+  assigns. A fitted centroid frame is driver rows that any number of
+  probes share (``ann_recall_report`` fits each coarse quantizer
+  once). The
+  projection goes with the next release; a library caller that fits
+  many models outside the harness wraps each fit in
   ``tracked_scope()`` or leaves it to LRU eviction.
 - ``localCheckpoint`` frames (graph.py's iterative loops, the PQ
   codebooks) are not tracked: they HOLD the result data, so their

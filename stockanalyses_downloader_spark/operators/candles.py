@@ -26,22 +26,21 @@ from pyspark.sql import functions as F
 WEEK_US = 7 * 24 * 3600 * 1_000_000
 
 
-def ohlc_candles(ticks: DataFrame, key: str = "isin",
-                 width: str = "7 days") -> DataFrame:
-    """Tumbling OHLCV candles per key. Columns:
-    key, bucket_start, open, high, low, close, volume, n_ticks."""
+def ohlc_candles(ticks: DataFrame) -> DataFrame:
+    """Tumbling 7-day OHLCV candles per isin. Columns:
+    isin, bucket_start, open, high, low, close, volume, n_ticks."""
     # materialize the bucket as a column FIRST so the window and the
     # groupBy share one attribute -> Catalyst reuses a single shuffle
     # on (key, bucket) instead of re-exchanging per operator
-    ticks = ticks.withColumn("__w", F.window("ts", width))
-    w = (Window.partitionBy(key, "__w")
+    ticks = ticks.withColumn("__w", F.window("ts", "7 days"))
+    w = (Window.partitionBy("isin", "__w")
                .orderBy("ts", "tick_id")
                .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
     enriched = (ticks
                 .withColumn("__open", F.first("last_price").over(w))
                 .withColumn("__close", F.last("last_price").over(w)))
     return (enriched
-            .groupBy(key, "__w")
+            .groupBy("isin", "__w")
             .agg(F.min("__open").alias("open"),
                  F.max("last_price").alias("high"),
                  F.min("last_price").alias("low"),
@@ -49,7 +48,7 @@ def ohlc_candles(ticks: DataFrame, key: str = "isin",
                  F.sum(F.col("volume").cast("decimal(25,10)"))
                   .cast("double").alias("volume"),
                  F.count("*").alias("n_ticks"))
-            .select(key, F.col("__w.start").alias("bucket_start"),
+            .select("isin", F.col("__w.start").alias("bucket_start"),
                     "open", "high", "low", "close", "volume", "n_ticks"))
 
 

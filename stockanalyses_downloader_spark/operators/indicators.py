@@ -34,11 +34,9 @@ from pyspark.sql import functions as F
 _DEC = "decimal(30,10)"
 
 
-def with_rolling_indicators(ticks: DataFrame, price_col: str = "last_price",
-                            key: str = "isin", ts: str = "ts",
-                            tiebreak: str = "tick_id",
-                            n: int = 5) -> DataFrame:
-    """Append sma_n / std_n / rsi_n columns (NULL until the frame holds
+def with_rolling_indicators(ticks: DataFrame, n: int = 5) -> DataFrame:
+    """Append sma_n / std_n / rsi_n columns over ``last_price`` per
+    isin in (ts, tick_id) order (NULL until the frame holds
     n rows — a deterministic warm-up cutoff rather than noisy partial
     averages).
 
@@ -50,11 +48,10 @@ def with_rolling_indicators(ticks: DataFrame, price_col: str = "last_price",
     sliding decimal aggregates (plus one embedded lag per rsi sum
     occurrence) where 6 + one lag suffice. Arithmetic per row is
     unchanged; the hash-oracled output is identical."""
-    order = [F.col(ts), F.col(tiebreak)]
-    w = Window.partitionBy(key).orderBy(*order)
+    w = Window.partitionBy("isin").orderBy(F.col("ts"), F.col("tick_id"))
     frame = w.rowsBetween(-(n - 1), 0)
 
-    price = F.col(price_col)
+    price = F.col("last_price")
     # lag bound first: the rsi sums consume it, and binding keeps the
     # plan at two Window nodes (lag, then the six aggregates) sharing
     # one exchange + sort instead of re-extracting lag per occurrence
@@ -147,11 +144,9 @@ def with_anomaly_zscores(ticks: DataFrame, price_col: str = "last_price",
             .drop("__az_cnt", "__az_s1", "__az_s2"))
 
 
-def ema_by_key(ticks: DataFrame, price_col: str = "last_price",
-               key: str = "isin", ts: str = "ts",
-               tiebreak: str = "tick_id",
-               alpha: float = 0.2) -> DataFrame:
-    """Exponential moving average per key — the recurrence
+def ema_by_key(ticks: DataFrame, alpha: float = 0.2) -> DataFrame:
+    """Exponential moving average of ``last_price`` per isin in
+    (ts, tick_id) order — the recurrence
     s_t = alpha*x_t + (1-alpha)*s_{t-1} (s_1 = x_1) is inherently
     SEQUENTIAL per key: no window frame expresses it and the pow()
     closed form changes the float summation order. This is the
@@ -163,20 +158,20 @@ def ema_by_key(ticks: DataFrame, price_col: str = "last_price",
     property the repo's UDF policy exists to protect. State per key
     is one float; cost is one shuffle on the key.
 
-    Output: (key, tiebreak, ema)."""
+    Output: (isin, tick_id, ema)."""
     import pandas as pd
 
     a = float(alpha)
 
     def fold(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values([ts, tiebreak])
+        pdf = pdf.sort_values(["ts", "tick_id"])
         s = None
         out = []
-        for x in pdf[price_col].astype("float64"):
+        for x in pdf["last_price"].astype("float64"):
             s = x if s is None else a * x + (1.0 - a) * s
             out.append(s)
-        return pd.DataFrame({key: pdf[key], tiebreak: pdf[tiebreak],
-                             "ema": out})
+        return pd.DataFrame({"isin": pdf["isin"],
+                             "tick_id": pdf["tick_id"], "ema": out})
 
-    out_schema = f"{key} string, {tiebreak} long, ema double"
-    return ticks.groupBy(key).applyInPandas(fold, out_schema)
+    out_schema = "isin string, tick_id long, ema double"
+    return ticks.groupBy("isin").applyInPandas(fold, out_schema)

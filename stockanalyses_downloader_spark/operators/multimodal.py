@@ -464,21 +464,20 @@ def payload_cdc_chunks(assets: DataFrame) -> DataFrame:
                     "c.chunk_md5"))
 
 
-def chunk_overlap_pairs(assets: DataFrame, chunk_bytes: int = 32,
-                        min_shared: int = 1,
+def chunk_overlap_pairs(assets: DataFrame, min_shared: int = 1,
                         method: str = "fixed") -> DataFrame:
     """Binary near-dup pairs by shared content chunks: bucket-join on
     the chunk digest (the only shuffle is digest-width), count shared
     distinct chunks per asset pair, keep pairs with >= min_shared.
-    ``method``: "fixed" (aligned chunks — cheapest, but any byte
-    insertion shifts every later digest) or "cdc" (content-defined
-    cut points — shift-resilient; ``chunk_bytes`` is ignored, the cut
-    rule sets the mean chunk length). Output:
+    ``method``: "fixed" (aligned 32-byte chunks — cheapest, but any
+    byte insertion shifts every later digest) or "cdc" (content-defined
+    cut points — shift-resilient; the cut rule sets the mean chunk
+    length). Output:
     (id_a, id_b, n_shared_chunks)."""
     if method == "cdc":
         raw = payload_cdc_chunks(assets)
     else:
-        raw = payload_chunk_fingerprints(assets, chunk_bytes)
+        raw = payload_chunk_fingerprints(assets)
     fp = raw.select("asset_id", "chunk_md5").distinct()
     a = fp.select(F.col("asset_id").alias("id_a"), "chunk_md5")
     b = fp.select(F.col("asset_id").alias("id_b"), "chunk_md5")

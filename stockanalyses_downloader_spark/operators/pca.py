@@ -1,4 +1,4 @@
-"""Distributed PCA over an embedding column (X3 extension, round 4):
+"""Distributed PCA over an embedding column (X3 extension):
 exact covariance via moment aggregation, driver-side eigendecomposition
 of the d×d matrix (model-sized, like kmeans centroids / the BPE merge
 table), in-plan projection.
@@ -22,7 +22,7 @@ in whole-stage codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import spread
@@ -78,8 +78,8 @@ def embedding_covariance(embeddings: DataFrame,
     """Upper-triangle population covariance of the embedding
     dimensions: (dim_i, dim_j, cov) with 0-based dim_i <= dim_j,
     cov = E[x_i x_j] - E[x_i] E[x_j]. Zero-length vectors are dropped
-    (ADVICE r4: sequence(1, 0) runs DESCENDING, and element_at(v, 0)
-    errors under ANSI mode — and a 0-d vector contributes no moments
+    (sequence(1, 0) runs DESCENDING, and element_at(v, 0) errors
+    under ANSI mode — and a 0-d vector contributes no moments
     anyway).
 
     spread() first: the pair explode amplifies every row by d(d+1)/2
@@ -96,9 +96,9 @@ def embedding_covariance(embeddings: DataFrame,
                    / F.count("*")).alias("mu")))
 
     # second moments: upper-triangle products per row, pair-keyed agg.
-    # r14 (guide §4.1 — prefer codegen'd built-ins over interpreted
-    # higher-order functions): the pair stream is produced by TWO
-    # chained posexplode Generates — explode v to (i, x_i), then
+    # Codegen'd built-ins over interpreted higher-order functions:
+    # the pair stream is produced by TWO chained posexplode
+    # Generates — explode v to (i, x_i), then
     # explode slice(v, i+1, d-i) to (joff, x_j) with dim_j = i + joff
     # — instead of building a d(d+1)/2 struct array per row through
     # NESTED F.transform lambdas (interpreted, outside whole-stage
@@ -246,15 +246,15 @@ def project_embeddings(embeddings: DataFrame, means: list[float],
 def pca_ivf_topk(embeddings: DataFrame, query_ids: list[int],
                  k: int = 10) -> DataFrame:
     """IVF candidate generation in PCA space, exact full-dimension
-    rerank (VERDICT r4 #7) — the classic recall/cost trade: centroid
-    assignment, probing, and candidate scoring all run on 24 PCA
-    projections (2.7× narrower at d=64 — proportionally
-    less dot-product work and wire per candidate; measured recall@10
-    0.72/0.64 at sf0.001/sf0.01 vs untrained full-dim IVF's
-    0.62/0.62 at the same probe depth — the projection even denoises
-    on this corpus), then only the k·5 best per query fetch their
-    float vectors for exact cosine. Lists: 16 sampled centroids, 8
-    probes.
+    rerank — the classic recall/cost trade: centroid assignment,
+    probing, and candidate scoring all run on 24 PCA projections (2.7×
+    narrower at d=64 — proportionally less dot-product work and wire
+    per candidate; measured recall@10 0.72/0.64 at sf0.001/sf0.01 vs
+    untrained full-dim IVF's 0.62/0.62 at the same probe depth — the
+    projection even denoises on this corpus), then only the k·5 best
+    per query fetch their float vectors for exact cosine. Lists: 16
+    sampled centroids, 8 probes, through similarity's ``build`` and
+    ``probe``.
 
     The fit is ``pca_model`` (distributed moments, driver-side d×d
     eigh — a model-sized action by nature, like kmeans' convergence
@@ -266,8 +266,8 @@ def pca_ivf_topk(embeddings: DataFrame, query_ids: list[int],
     Output contract matches cosine_topk: (query_id, neighbor_id,
     cosine, rank), exact cosines; PCA only affects which candidates
     reach the shortlist (recall floor pinned in tests)."""
-    from .similarity import (_ivf_lists_probes, _sampled_centroids,
-                             as_double, dot, l2_norm)
+    from .similarity import (_cos, _rerank, build, l2_norm, probe,
+                             sampled_centroids, topk)
     from ..caching import tracked_persist
 
     means, comps = pca_model(embeddings, 24)
@@ -290,51 +290,20 @@ def pca_ivf_topk(embeddings: DataFrame, query_ids: list[int],
             .withColumn("fnorm", l2_norm(F.col("fv")))
             .select("vec_id", "v", "norm", "fv", "fnorm"))
 
-    # lists/probes see ONLY the projected vectors (carry=[]): the
-    # whole point is 24-wide inverted lists, so the d-dim floats
-    # must not ride through the assignment shuffle and the persisted
-    # lists (review r5) — the rerank fetches them by id instead: the
-    # query side from a broadcast-sized filtered lookup, the neighbor
-    # side for the O(k·5) shortlist only.
+    # the lists hold ONLY the projected vectors: the whole point is
+    # 24-wide inverted lists, so the d-dim floats must not ride
+    # through the assignment and the persisted lists — the rerank
+    # fetches them by id for the O(k·5) shortlist instead
     proj = e.select("vec_id", "v", "norm")
-    cent = _sampled_centroids(proj, 16)
-    lists, probes = _ivf_lists_probes(proj, cent, query_ids, k, 8, [])
-
-    q = probes.select(F.col("vec_id").alias("query_id"),
-                      F.col("v").alias("qv"), F.col("norm").alias("qnorm"),
-                      "list_id")
-    c = lists.select(F.col("vec_id").alias("neighbor_id"),
-                     F.col("v").alias("nv"), F.col("norm").alias("nnorm"),
-                     "list_id")
-    # broadcast the model-sized probes; no dedup — one list per
-    # vector, one probe row per (query, list), so the join cannot
-    # duplicate a pair (guide §3/§2.4, r13 optimization round; same
-    # argument as ivf_topk's removed no-op distinct)
-    approx = (c.join(F.broadcast(q), "list_id")
-              .select("query_id", "neighbor_id",
-                      (dot(F.col("qv"), F.col("nv"))
-                       / (F.col("qnorm") * F.col("nnorm")))
-                      .alias("approx_cos")))
-    sw = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cos").desc(), F.col("neighbor_id"))
-    shortlist = (approx.withColumn("__s", F.row_number().over(sw))
-                 .filter(F.col("__s") <= k * 5))
-
-    qf = (e.filter(F.col("vec_id").isin(query_ids))
-          .select(F.col("vec_id").alias("query_id"),
-                  F.col("fv").alias("qfv"),
-                  F.col("fnorm").alias("qfnorm")))
-    nv = e.select(F.col("vec_id").alias("neighbor_id"),
-                  F.col("fv").alias("cfv"), F.col("fnorm").alias("cfnorm"))
-    # broadcast the O(k·5·queries) shortlist (guide §3): the
-    # full-dimension fetch is a model-sized id lookup against the
-    # corpus — unhinted, the corpus gets exchanged by neighbor_id.
-    exact = (F.broadcast(shortlist).join(nv, "neighbor_id")
-             .join(F.broadcast(qf), "query_id")
-             .select("query_id", "neighbor_id",
-                     (dot(F.col("qfv"), F.col("cfv"))
-                      / (F.col("qfnorm") * F.col("cfnorm"))).alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id"))
-    return (exact.withColumn("rank", F.row_number().over(w))
-                 .filter(F.col("rank") <= k))
+    cent = sampled_centroids(proj)
+    lists, sizes = build(proj.filter(~F.col("vec_id").isin(query_ids)), cent)
+    pairs = probe(lists, sizes, cent,
+                  proj.filter(F.col("vec_id").isin(query_ids)), k, 8)
+    shortlist = topk(pairs.select(
+        "query_id", "neighbor_id",
+        _cos("qv", "cv2", "qnorm", "cnorm2").alias("approx_cos")),
+        k * 5, score="approx_cos")
+    full = e.select("vec_id", F.col("fv").alias("v"),
+                    F.col("fnorm").alias("norm"))
+    return _rerank(shortlist.select("query_id", "neighbor_id"), full,
+                   full.filter(F.col("vec_id").isin(query_ids)), k)

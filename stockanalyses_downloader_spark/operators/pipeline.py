@@ -115,16 +115,16 @@ def project_wss_tick(raw: DataFrame) -> DataFrame:
     )
 
 
-def latest_per_key(df: DataFrame, key: str, order: str = "ts",
+def latest_per_key(df: DataFrame, key: str,
                    tiebreak: str | None = None) -> DataFrame:
-    """Latest row per key (the 'current data' semantics of job action
+    """Latest row per key by ``ts`` (the 'current data' semantics of job action
     1000, README.md:5-10): row_number over a key-partitioned window.
 
     Scale note: one shuffle on the key; with AQE the per-key state is
     bounded by key cardinality, not input size, and heavily skewed keys
     split via adaptive skew-join handling."""
     from pyspark.sql import Window
-    order_cols = [F.col(order).desc()]
+    order_cols = [F.col("ts").desc()]
     if tiebreak:
         order_cols.append(F.col(tiebreak).desc())
     w = Window.partitionBy(key).orderBy(*order_cols)

@@ -29,29 +29,29 @@ from pyspark.sql import functions as F
 from . import asof
 
 
-def resample_ffill(ticks: DataFrame, key: str = "isin",
-                   ts: str = "ts", value_cols: list[str] | None = None,
+def resample_ffill(ticks: DataFrame, value_cols: list[str] | None = None,
                    interval_s: int = 60,
                    tolerance_s: float | None = None) -> DataFrame:
-    """(key, grid_ts, *value_cols): one row per key per grid instant
+    """(isin, grid_ts, *value_cols): one row per isin per grid instant
     between the key's first and last observation (instants floored to
     the interval), each carrying the most recent observation at or
     before it. Output is NULL-padded (``how='left'``) when tolerance
     cuts a stale fill."""
     value_cols = value_cols or ["last_price"]
-    span = (ticks.groupBy(key)
-            .agg(F.min(ts).alias("__t0"), F.max(ts).alias("__t1")))
+    span = (ticks.groupBy("isin")
+            .agg(F.min("ts").alias("__t0"), F.max("ts").alias("__t1")))
     step = F.expr(f"INTERVAL {int(interval_s)} SECONDS")
     floor0 = F.timestamp_seconds(
         (F.unix_timestamp("__t0") / interval_s).cast("long") * interval_s)
     floor1 = F.timestamp_seconds(
         (F.unix_timestamp("__t1") / interval_s).cast("long") * interval_s)
     grid = (span.select(
-        key, F.explode(F.sequence(floor0, floor1, step)).alias("grid_ts")))
+        "isin", F.explode(F.sequence(floor0, floor1, step))
+        .alias("grid_ts")))
     right = ticks.select(
-        key, F.col(ts),
+        "isin", F.col("ts"),
         *[F.col(c).alias(f"ff_{c}") for c in value_cols])
-    return asof.asof_join(grid, right, on=key, left_ts="grid_ts",
-                          right_ts=ts, how="left",
+    return asof.asof_join(grid, right, on="isin", left_ts="grid_ts",
+                          right_ts="ts", how="left",
                           direction="backward",
                           tolerance_s=tolerance_s)

@@ -46,7 +46,7 @@ def flagship_latest_mid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship: current (latest) mid-price quote per currency pair
     — scan -> filter -> broadcast join -> derive -> window top-1."""
     df = _resolved_ok_ticks(spark, sf_dir)
-    df = pipeline.latest_per_key(df, "pair", order="ts", tiebreak="tick_id")
+    df = pipeline.latest_per_key(df, "pair", tiebreak="tick_id")
     return df.select(*_MSG_COLS)
 
 
@@ -208,7 +208,7 @@ FROM base b JOIN {_DIM} d ON b.isin = d.isin
 def weekly_ohlc_candles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1: weekly OHLCV candles per ISIN over successful ticks."""
     t = pipeline.validate_http(synthetic.ticks(spark, sf_dir))
-    return candles.ohlc_candles(t, key="isin", width="7 days")
+    return candles.ohlc_candles(t)
 
 
 _WEEK_US = candles.WEEK_US
@@ -246,8 +246,7 @@ def ticks_asof_quotes(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.col("tick_id").alias("quote_id"),
                        F.col("last_price").alias("quote_price")))
     joined = asof_join(t.select("tick_id", "isin", "ts", "last_price"),
-                       quotes, on="isin", left_ts="ts",
-                       right_ts="quote_ts", how="inner")
+                       quotes, on="isin", right_ts="quote_ts")
     return joined.select(
         "tick_id", "isin", "ts", "last_price",
         "quote_id", "quote_price",
@@ -271,7 +270,7 @@ def ticks_asof_quotes_tolerant(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.col("tick_id").alias("quote_id"),
                        F.col("last_price").alias("quote_price")))
     joined = asof_join(t.select("tick_id", "isin", "ts", "last_price"),
-                       quotes, on="isin", left_ts="ts",
+                       quotes, on="isin",
                        right_ts="quote_ts", how="left",
                        tolerance_s=100_000)
     return joined.select("tick_id", "isin", "ts", "last_price",
@@ -485,7 +484,7 @@ def ticks_in_candle_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = (pipeline.validate_http(synthetic.ticks(spark, sf_dir))
          .select("tick_id", "isin", "ts", "last_price"))
     c = candles.ohlc_candles(pipeline.validate_http(
-        synthetic.ticks(spark, sf_dir)), key="isin", width="7 days")
+        synthetic.ticks(spark, sf_dir)))
     intervals = c.select(
         "isin", F.col("bucket_start").alias("win_start"),
         (F.col("bucket_start") + F.expr("INTERVAL 7 DAYS")).alias("win_end"),
@@ -493,7 +492,7 @@ def ticks_in_candle_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("low").alias("wk_low"), F.col("close").alias("wk_close"))
     rj = range_join(t, intervals, left_ts="ts",
                     right_start="win_start", right_end="win_end",
-                    keys=["isin"], bucket_width_s=86_400)
+                    keys=["isin"])
     return rj.select("tick_id", "isin", "ts", "last_price",
                      "wk_open", "wk_high", "wk_low", "wk_close")
 
@@ -542,9 +541,7 @@ def tick_rolling_indicators(spark: SparkSession, sf_dir: str) -> DataFrame:
     averages)."""
     from ..operators import indicators
     t = pipeline.validate_http(synthetic.ticks(spark, sf_dir))
-    out = indicators.with_rolling_indicators(
-        t, price_col="last_price", key="isin", ts="ts",
-        tiebreak="tick_id", n=5)
+    out = indicators.with_rolling_indicators(t)
     return out.select("isin", "tick_id", "ts", "last_price",
                       "sma_5", "std_5", "rsi_5")
 
@@ -595,9 +592,7 @@ def tick_price_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape as the indicators query."""
     from ..operators import indicators
     t = pipeline.validate_http(synthetic.ticks(spark, sf_dir))
-    out = indicators.with_anomaly_zscores(
-        t, price_col="last_price", key="isin", ts="ts",
-        tiebreak="tick_id", n=12, z_thresh=2.5)
+    out = indicators.with_anomaly_zscores(t)
     return out.select("isin", "tick_id", "ts", "last_price",
                       "zscore", "is_anomaly")
 
@@ -855,8 +850,7 @@ def tick_grid_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = pipeline.validate_http(synthetic.ticks(spark, sf_dir))
     return resample.resample_ffill(
         t.select("isin", "ts", "last_price"),
-        key="isin", ts="ts", value_cols=["last_price"],
-        interval_s=3600)
+        value_cols=["last_price"], interval_s=3600)
 
 
 _GRID_SQL = f"""
@@ -895,8 +889,7 @@ def tick_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-unverified-UDF policy."""
     from ..operators import indicators
     t = pipeline.validate_http(synthetic.ticks(spark, sf_dir))
-    return indicators.ema_by_key(t, price_col="last_price", key="isin",
-                                 ts="ts", tiebreak="tick_id", alpha=0.2)
+    return indicators.ema_by_key(t)
 
 
 _EMA_SQL = f"""
@@ -994,7 +987,7 @@ def isin_health_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("n_ticks"),
                  F.sum("brk").cast("long").alias("n_islands"),
                  (F.max("gap_us") / 3600000000.0).alias("max_gap_hours")))
-    an = indicators.with_anomaly_zscores(t, n=12, z_thresh=2.5)
+    an = indicators.with_anomaly_zscores(t)
     anomalies = (an.groupBy("isin")
                  .agg(F.sum(F.when(F.col("is_anomaly"), 1).otherwise(0))
                       .cast("long").alias("n_anomalies")))

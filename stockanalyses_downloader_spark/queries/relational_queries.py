@@ -1859,8 +1859,7 @@ def part_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _t(spark, sf_dir, "part").select("p_partkey", "p_name", "p_type")
     blk = F.element_at(F.split(F.col("p_name"), " "), -1)
     return (linkage.resolve_entities(p, "p_partkey", blk, "p_name",
-                                     agree_col="p_type",
-                                     threshold=0.8, w_name=0.7)
+                                     agree_col="p_type")
             .select("p_partkey", "p_name", "p_type",
                     "entity_id", "is_canonical"))
 

@@ -203,7 +203,7 @@ _EV_CTE = """ev AS (
 
 
 def _md5_sample_cte(src: str, n_centroids: int) -> str:
-    """SQL twin of _sampled_centroids(portable=True): md5-prefix
+    """SQL twin of sampled_centroids(portable=True): md5-prefix
     TakeOrdered over ``src`` (which must carry vec_id, v, norm)."""
     return f"""cent AS (
   SELECT vec_id AS centroid_id, v AS cv, norm AS cnorm
@@ -217,11 +217,11 @@ def _ivf_probe_ctes(src: str, cent: str, carry: tuple[str, ...] = (),
                     n_probe: int = 8, k: int = 10,
                     probe_oversample: int = 4) -> str:
     """assigned/lists/list_sizes/probe_ranked/probes — the SQL twin of
-    _ivf_lists_probes, shared by every oracled IVF tier (factored r7c
-    so a probe-rule fix can never desynchronize one oracle from the
-    Spark machinery). ``src`` rows carry (vec_id, v, norm, *carry);
-    ``carry`` columns ride into the lists, exactly like the operator's
-    carry seam."""
+    similarity.build + similarity.probe, shared by every oracled IVF
+    tier so a probe-rule fix can never desynchronize one oracle from
+    the Spark machinery. ``src`` rows carry (vec_id, v, norm, *carry);
+    ``carry`` columns ride into the lists, like the extra corpus
+    columns ``build`` keeps."""
     qids = ", ".join(map(str, _QUERY_IDS))
     cs = "".join(f", s.{c}" for c in carry)
     cl = "".join(f", {c}" for c in carry)
@@ -273,9 +273,9 @@ FROM ranked WHERE rank <= {k}
 def _ivf_topk_sql(n_centroids: int = 16, n_probe: int = 8,
                   k: int = 10, probe_oversample: int = 4) -> str:
     """DuckDB twin of the portable untrained-IVF pipeline. Mirrors
-    _sampled_centroids (md5-prefix TakeOrdered), _ivf_lists_probes
-    (argmin assignment, adaptive probe depth over the lists' own
-    sizes), and ivf_topk's exact rerank."""
+    sampled_centroids (md5-prefix TakeOrdered), build/probe (argmin
+    assignment, adaptive probe depth over the lists' own sizes), and
+    ivf_topk's exact rerank."""
     return (f"WITH {_EV_CTE}, {_md5_sample_cte('ev', n_centroids)}, "
             + _ivf_probe_ctes("ev", "cent", (), n_probe, k,
                               probe_oversample)
@@ -294,8 +294,10 @@ def ivf_topk_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist, exact rerank — hash-verifiable. Recall vs brute force
     stays pinned in tests; library default stays xxhash64."""
     e = load_table(spark, sf_dir, "embeddings")
+    cent = similarity.sampled_centroids(similarity.vectors(e),
+                                        portable=True)
     return similarity.ivf_topk_quantized(e, _QUERY_IDS, k=_TOPK,
-                                         portable=True)
+                                         centroids=cent)
 
 
 def _ivf_topk_quantized_sql(n_centroids: int = 16, n_probe: int = 8,
@@ -396,7 +398,7 @@ def ivf_topk_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     TRAINED MODEL and its serving together. Library default stays
     xxhash64; recall vs brute force pinned in tests."""
     e = load_table(spark, sf_dir, "embeddings")
-    cent = similarity.kmeans_centroids(e, k=16, n_iter=3, portable=True)
+    cent = similarity.kmeans_centroids(e, n_iter=3, portable=True)
     return similarity.ivf_topk(e, _QUERY_IDS, k=_TOPK, centroids=cent)
 
 
@@ -535,9 +537,10 @@ def ivf_topk_pq_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.84/0.86; floor raised to 0.80 in tests. Library default stays
     rotated + xxhash64 + single draw (``ivf_topk_pq``)."""
     e = load_table(spark, sf_dir, "embeddings")
+    cent = similarity.kmeans_centroids_best_of(e, n_iter=3, portable=True)
     return similarity.ivf_topk_pq(e, _QUERY_IDS, k=_TOPK,
                                   rotate=False, portable=True,
-                                  coarse_restarts=3)
+                                  centroids=cent)
 
 
 def _pq_subs_cte(rel: str, vec: str, m: int, keys: str) -> str:
@@ -561,8 +564,8 @@ def _ivf_topk_pq_portable_sql(m: int = 8, ksub: int = 32,
                               k: int = 10,
                               probe_oversample: int = 4,
                               tail: Optional[str] = None) -> str:
-    """DuckDB twin of ivf_topk_pq(rotate=False, portable=True,
-    coarse_restarts=3): the best-of-3 restart-selected kmeans chains
+    """DuckDB twin of ivf_topk_pq(rotate=False, portable=True) over
+    best-of-3 portable centroids: the restart-selected kmeans chains
     (_kmeans_best_of_ctes) + probe machinery, then the PQ training loop
     unrolled (cb0..cb{n_iter} — md5-prefix init per subspace, rank-1
     L2 assignment on sequential-fold distances, DECIMAL-exact means,
@@ -681,7 +684,7 @@ FROM rankedpq WHERE rank <= {k}""")
 def ngram_jaccard_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     return dedup.ngram_jaccard_pairs(d, block_cols=["lang", "source"],
-                                     n=3, threshold=0.3)
+                                     threshold=0.3)
 
 
 _JACCARD_SQL = r"""
@@ -724,7 +727,7 @@ def near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     pairs = dedup.ngram_jaccard_pairs(d, block_cols=["lang", "source"],
-                                      n=3, threshold=0.3)
+                                      threshold=0.3)
     return graph.dedup_keepers(d, pairs.select("id_a", "id_b"))
 
 
@@ -758,7 +761,7 @@ def near_dup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     pairs = dedup.ngram_jaccard_pairs(d, block_cols=["lang", "source"],
-                                      n=3, threshold=0.3)
+                                      threshold=0.3)
     return graph.dedup_keepers(d, pairs.select("id_a", "id_b"),
                                algorithm="star")
 
@@ -1184,8 +1187,7 @@ def multimodal_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture payload is the text's utf-8 bytes and the corpus is pure
     ASCII (byte offset == char offset, verified over all SFs)."""
     d = load_table(spark, sf_dir, "documents")
-    return multimodal.chunk_overlap_pairs(multimodal.docs_to_assets(d),
-                                          chunk_bytes=32, min_shared=1)
+    return multimodal.chunk_overlap_pairs(multimodal.docs_to_assets(d))
 
 
 _CHUNK_DEDUP_SQL = """
@@ -1454,20 +1456,28 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id"))
     qframe = spark.createDataFrame([(q,) for q in _QUERY_IDS],
                                    "query_id long")
+    # each coarse quantizer is fitted once and shared by every method
+    # that probes it
+    sample = similarity.sampled_centroids(similarity.vectors(e))
+    trained = similarity.kmeans_centroids(e, n_iter=3)
+    portable = similarity.kmeans_centroids_best_of(e, n_iter=3,
+                                                   portable=True)
     methods = {
-        "ivf": similarity.ivf_topk(e, _QUERY_IDS, k=_TOPK),
-        "ivf_trained": similarity.ivf_topk(
-            e, _QUERY_IDS, k=_TOPK,
-            centroids=similarity.kmeans_centroids(e, k=16, n_iter=3)),
+        "ivf": similarity.ivf_topk(e, _QUERY_IDS, k=_TOPK,
+                                   centroids=sample),
+        "ivf_trained": similarity.ivf_topk(e, _QUERY_IDS, k=_TOPK,
+                                           centroids=trained),
         "signlsh": similarity.signlsh_topk(e, _QUERY_IDS, k=_TOPK),
-        "ivf_quantized": similarity.ivf_topk_quantized(e, _QUERY_IDS,
-                                                       k=_TOPK),
-        "ivf_pq": similarity.ivf_topk_pq(e, _QUERY_IDS, k=_TOPK),
+        "ivf_quantized": similarity.ivf_topk_quantized(
+            e, _QUERY_IDS, k=_TOPK, centroids=sample),
+        "ivf_pq": similarity.ivf_topk_pq(e, _QUERY_IDS, k=_TOPK,
+                                         centroids=trained),
         "ivf_pq_raw": similarity.ivf_topk_pq(e, _QUERY_IDS, k=_TOPK,
-                                             residual=False),
+                                             residual=False,
+                                             centroids=trained),
         "ivf_pq_portable": similarity.ivf_topk_pq(
             e, _QUERY_IDS, k=_TOPK, rotate=False, portable=True,
-            coarse_restarts=3),
+            centroids=portable),
         "pca_ivf": pca.pca_ivf_topk(e, _QUERY_IDS, k=_TOPK),
     }
     reports = []
@@ -1507,9 +1517,10 @@ def retrieval_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     exact = similarity.cosine_topk(e, _QUERY_IDS, k=_TOPK) \
         .select("query_id", "neighbor_id")
+    cent = similarity.kmeans_centroids_best_of(e, n_iter=3, portable=True)
     approx = similarity.ivf_topk_pq(e, _QUERY_IDS, k=_TOPK,
                                     rotate=False, portable=True,
-                                    coarse_restarts=3) \
+                                    centroids=cent) \
         .select("query_id", "neighbor_id")
     qframe = spark.createDataFrame([(q,) for q in _QUERY_IDS],
                                    "query_id long")
@@ -1611,7 +1622,7 @@ def leakage_report(d: DataFrame) -> DataFrame:
     from ..operators import sampling
 
     pairs = dedup.ngram_jaccard_pairs(d, block_cols=["lang", "source"],
-                                      n=3, threshold=0.3)
+                                      threshold=0.3)
     splits = sampling.assign_splits(d.select("doc_id"), key="doc_id") \
                      .select("doc_id", "split")
     sa = splits.select(F.col("doc_id").alias("id_a"),
@@ -1662,7 +1673,7 @@ def split_leakage_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     pairs = dedup.ngram_jaccard_pairs(d, block_cols=["lang", "source"],
-                                      n=3, threshold=0.3)
+                                      threshold=0.3)
     splits = sampling.assign_splits(d.select("doc_id"), key="doc_id") \
                      .select("doc_id", "split")
     sa = splits.select(F.col("doc_id").alias("id_a"),
@@ -1737,7 +1748,7 @@ def near_dup_edit_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded edit-distance pass confirms)."""
     d = load_table(spark, sf_dir, "documents")
     pairs = dedup.ngram_jaccard_pairs(d, block_cols=["lang", "source"],
-                                      n=3, threshold=0.3)
+                                      threshold=0.3)
     prefix = F.substring(F.col("text"), 1, 200)
     ta = d.select(F.col("doc_id").alias("id_a"), prefix.alias("txt_a"))
     tb = d.select(F.col("doc_id").alias("id_b"), prefix.alias("txt_b"))
@@ -1786,7 +1797,7 @@ def global_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     The in-engine brute-force-crossJoin equality pin stays in tests."""
     from ..operators import dedup as dd
     d = load_table(spark, sf_dir, "documents")
-    return dd.jaccard_pairs_prefix_filter(d, n=3, threshold=0.5)
+    return dd.jaccard_pairs_prefix_filter(d)
 
 
 _GLOBAL_NEAR_DUP_SQL = r"""
@@ -1828,8 +1839,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain (label filter, dup-band filter, rank, raw cosine values)
     hash-verifies against DuckDB."""
     e = load_table(spark, sf_dir, "embeddings")
-    return similarity.hard_negative_topk(e, _QUERY_IDS, k=_TOPK,
-                                         dup_threshold=0.95)
+    return similarity.hard_negative_topk(e, _QUERY_IDS, k=_TOPK)
 
 
 _HARD_NEG_SQL = f"""

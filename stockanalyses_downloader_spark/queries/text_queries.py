@@ -262,8 +262,7 @@ def doc_rag_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     .chunk_documents) — the retrieval/packing prep step. One row per
     chunk with 1-based token offsets and the chunk text."""
     from ..operators import textprep
-    return textprep.chunk_documents(_docs(spark, sf_dir),
-                                    window=64, stride=48)
+    return textprep.chunk_documents(_docs(spark, sf_dir))
 
 
 _CHUNKS_SQL = r"""
@@ -867,7 +866,7 @@ def doc_bpe_tokenization(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned in tests/test_bpe.py."""
     from ..operators import bpe
     d = _docs(spark, sf_dir)
-    merges = _bpe_merges_for(spark, sf_dir, 16)
+    merges = _bpe_merges_for(spark, sf_dir)
     return bpe.bpe_token_counts(d, merges)
 
 
@@ -1705,7 +1704,7 @@ def quality_model_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
     feats = qm.surface_features(d).join(
         d.select("doc_id", (F.col("lang") == "en").alias("y")), "doc_id")
-    w = qm.train_logistic(feats, "y", n_iter=10, lr=1.0)
+    w = qm.train_logistic(feats, "y", n_iter=10)
     return spark.createDataFrame(
         [(i, name, float(wi)) for i, (name, wi) in
          enumerate(zip(qm.FEATURE_NAMES, w))],
@@ -2273,7 +2272,7 @@ def quality_model_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
               .join(d.select("doc_id",
                              (F.col("lang") == "en").cast("int").alias("y")),
                     "doc_id"))
-    return qm.roc_auc(scored, "logit", "y")
+    return qm.roc_auc(scored)
 
 
 def _auc_sql() -> str:
@@ -2933,7 +2932,7 @@ def bm25_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import bm25
     d = _docs(spark, sf_dir)
     q = spark.createDataFrame(_BM25_QUERIES, "query_id int, qtext string")
-    return bm25.bm25_topk(d, q, k=10, round_scores=6)
+    return bm25.bm25_topk(d, q, round_scores=6)
 
 
 def _bm25_topk_sql(k: int = 10, k1: float = 1.2, b: float = 0.75) -> str:
@@ -3339,10 +3338,9 @@ def dsir_selection_by_source(spark: SparkSession,
     # and scoring reads it back (see dsir_scores_by_group_from_occ).
     occ = tracked_persist(
         dsir.doc_gram_bucket_counts(d, carry_cols=("source",)))
-    llr = dsir.dsir_bucket_llr_by_group(occ, is_target,
-                                        group_col="source")
+    llr = dsir.dsir_bucket_llr_by_group(occ, is_target)
     scored = dsir.dsir_scores_by_group_from_occ(
-        occ.filter(~is_target), llr, group_col="source")
+        occ.filter(~is_target), llr)
     sel = dsir.dsir_select(scored, _DSIR_KEEP_FRACTION, ["source"])
     return sel.select("doc_id", "source", "n_grams", "score",
                       "rank", "kept")

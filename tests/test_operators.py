@@ -1949,6 +1949,77 @@ def test_ivf_index_save_load_serving(spark, tmp_path):
     assert recall >= 0.5, f"served-index recall collapsed: {recall}"
 
 
+def test_ivf_index_serves_the_in_memory_rows(spark, tmp_path):
+    """One probe path: an index saved from a corpus serves exactly the
+    (query_id, neighbor_id, cosine, rank) rows ivf_topk returns over
+    that corpus with the same centroids — the k-means 16x3 fit
+    save_ivf_index runs — and the same n_probe."""
+    from stockanalyses_downloader_spark.operators import similarity
+
+    e = load_table(spark, SF, "embeddings")
+    qids = [0, 1, 2, 3, 4]
+    corpus = e.filter(~F.col("vec_id").isin(qids))
+    cent = similarity.kmeans_centroids(corpus, k=16, n_iter=3)
+    in_memory = similarity.ivf_topk(e, qids, centroids=cent, n_probe=4)
+    path = str(tmp_path / "ivf_parity")
+    similarity.save_ivf_index(corpus, path, n_centroids=16, kmeans_iters=3)
+    queries = (e.filter(F.col("vec_id").isin(qids))
+               .select(F.col("vec_id").alias("query_id"), "embedding"))
+    at_rest = similarity.ivf_topk_from_index(spark, path, queries,
+                                             n_probe=4)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(
+            "query_id", "neighbor_id", "cosine", "rank").collect())
+
+    got = rows(at_rest)
+    assert len(got) == 10 * len(qids)
+    assert got == rows(in_memory)
+
+
+def test_ivf_index_rebuild_crash_keeps_the_served_index(
+        spark, tmp_path, monkeypatch):
+    """A rebuild that dies while writing its lists leaves the previous
+    index serving: save_ivf_index stages centroids, lists and sizes
+    together and swaps them in as one, so new centroids never sit
+    next to old lists, and the serve path sweeps the dead staging
+    dir."""
+    import os
+
+    import pytest
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from stockanalyses_downloader_spark.operators import similarity
+
+    e = load_table(spark, SF, "embeddings")
+    path = str(tmp_path / "ivf_rebuild")
+    similarity.save_ivf_index(e.filter(F.col("vec_id") < 250), path,
+                              n_centroids=16, kmeans_iters=3)
+    queries = (e.filter(F.col("vec_id") < 5)
+               .select(F.col("vec_id").alias("query_id"), "embedding"))
+
+    def served():
+        return sorted(tuple(r) for r in similarity.ivf_topk_from_index(
+            spark, path, queries).collect())
+
+    before = served()
+    real = DataFrameWriter.parquet
+
+    def crash_on_lists(self, p, *args, **kwargs):
+        if p.rstrip("/").endswith("/lists"):
+            raise RuntimeError("injected crash while writing the lists")
+        return real(self, p, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash_on_lists)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        similarity.save_ivf_index(e.filter(F.col("vec_id") >= 250), path,
+                                  n_centroids=16, kmeans_iters=3)
+    monkeypatch.undo()
+    assert served() == before
+    parent, name = os.path.split(path)
+    assert [d for d in os.listdir(parent) if d.startswith(name)] == [name]
+
+
 def test_prefix_filter_join_equals_bruteforce(spark):
     """The prefix-filter lemma end-to-end: the PPJoin-style global
     similarity join returns EXACTLY the pairs an all-pairs
@@ -2030,7 +2101,7 @@ def test_ivf_index_incremental_append(spark, tmp_path):
     append the other half against the FROZEN centroids. Pins:
     (1) appended list content is IDENTICAL to a one-shot assignment
     of the full corpus under the same centroids (shared
-    _assign_to_lists), (2) list_sizes was updated by addition and
+    ``similarity.build``), (2) list_sizes was updated by addition and
     matches the actual per-list counts, (3) an appended vector is
     immediately searchable (self-query top-1 = itself)."""
     from stockanalyses_downloader_spark.operators import similarity
@@ -2048,7 +2119,7 @@ def test_ivf_index_incremental_append(spark, tmp_path):
     got_assign = {(r["vec_id"], r["list_id"])
                   for r in lists.select("vec_id", "list_id").collect()}
     want_assign = {(r["vec_id"], r["list_id"])
-                   for r in similarity._assign_to_lists(e, cent)
+                   for r in similarity.build(similarity.vectors(e), cent)[0]
                    .select("vec_id", "list_id").collect()}
     assert got_assign == want_assign
     assert len(got_assign) == e.count()
@@ -2468,28 +2539,6 @@ def test_retrieval_quality_metric_bounds(spark):
             assert r["ndcg_at_k"] == 1.0  # perfect prefix
 
 
-def test_hard_negative_ivf_recall_and_contract(spark):
-    """The IVF-probed hard-negative path must keep the brute
-    variant's filter contract (different label, below the dup band)
-    and recover a healthy fraction of the true hard negatives with
-    untrained sampled centroids at n_probe=8/16 — the same regime as
-    test_ivf_recall_vs_bruteforce."""
-    e = load_table(spark, SF, "embeddings")
-    qids = [0, 1, 2, 3, 4]
-    exact = {(r["anchor_id"], r["neighbor_id"])
-             for r in similarity.hard_negative_topk(
-                 e, qids, k=10, dup_threshold=0.95).collect()}
-    approx_rows = similarity.hard_negative_topk_ivf(
-        e, qids, k=10, dup_threshold=0.95,
-        n_centroids=16, n_probe=8).collect()
-    for r in approx_rows:
-        assert r["neighbor_label"] != r["anchor_label"]
-        assert r["cosine"] < 0.95
-    approx = {(r["anchor_id"], r["neighbor_id"]) for r in approx_rows}
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.3, f"IVF hard-negative recall collapsed: {recall}"
-
-
 def test_split_leakage_repair_invariants(spark):
     """Repair must (a) only move non-train docs, (b) always move them
     TO train, (c) leave everyone else untouched, and (d) fire exactly
@@ -2518,8 +2567,6 @@ def test_ivf_index_append_survives_no_artifact_crash(spark, tmp_path):
     import os
 
     from stockanalyses_downloader_spark.operators import similarity
-    from stockanalyses_downloader_spark.operators.similarity import (
-        _assign_to_lists)
 
     e = load_table(spark, SF, "embeddings")
     half_a = e.filter(F.col("vec_id") < 200)
@@ -2533,8 +2580,9 @@ def test_ivf_index_append_survives_no_artifact_crash(spark, tmp_path):
     # process dies before the sizes swap — sizes table intact+stale
     open(os.path.join(path, ".sizes-pending-dead0001"), "w").close()
     cent = spark.read.parquet(f"{path}/centroids")
-    _assign_to_lists(half_b, cent).write.mode("append") \
-        .partitionBy("list_id").parquet(f"{path}/lists")
+    similarity.build(similarity.vectors(half_b), cent)[0] \
+        .write.mode("append").partitionBy("list_id") \
+        .parquet(f"{path}/lists")
     stale = {r["list_id"]: r["lsz"] for r in
              spark.read.parquet(f"{path}/list_sizes").collect()}
     assert sum(stale.values()) == half_a.count()  # stale, as injected
