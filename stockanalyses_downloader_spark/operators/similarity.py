@@ -120,11 +120,12 @@ def hard_negative_topk(embeddings: DataFrame, anchor_ids: list[int],
     Scale shape is identical to cosine_topk: the anchor set is
     model-sized and broadcast, the corpus is scanned once, and the
     per-anchor top-k is a partitioned window — no shuffle of the
-    corpus beyond the window's hash partition on anchor id. A corpus
-    too large to scan per anchor set swaps the brute scan for the IVF
-    ``build``/``probe`` pair (the neighbor labels ride the lists as an
-    extra column, the anchor labels join back on query_id) and keeps
-    the label/dup filters verbatim.
+    corpus beyond the window's hash partition on anchor id. No IVF
+    variant ships; a corpus too large to scan per anchor set would
+    swap the brute scan for the IVF ``build``/``probe`` pair (the
+    neighbor labels riding the lists as an extra column, the anchor
+    labels joined back on query_id) and keep the label/dup filters
+    verbatim.
 
     Output: anchor_id, anchor_label, neighbor_id, neighbor_label,
     cosine, rank."""

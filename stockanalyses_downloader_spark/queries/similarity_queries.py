@@ -286,7 +286,7 @@ def ivf_topk_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF over int8-quantized inverted lists (approx scoring on
     dequantized codes, exact float rerank of the oversampled
     shortlist) — the 4x-memory ANN storage shape at 100 TB. Fully
-    DuckDB-oracled since r7c: the portable md5 centroid sample (the
+    DuckDB-oracled: the portable md5 centroid sample (the
     only engine-bound step) plus the already-oracled quantization
     arithmetic (embedding_quantization_error pins codes/recon
     bit-for-bit, incl. round() parity) make the WHOLE tier —
@@ -376,8 +376,9 @@ def ivf_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def pca_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF candidate generation in PCA space (pca_k=24 of d=64),
-    exact full-dimension rerank — PCA composed into the ANN tier
-    (VERDICT r4 #7). Rows-only; recall floor pinned in tests
+    exact full-dimension rerank — PCA composed into the ANN tier.
+    Rows-only (the d×d eigh runs on the driver in numpy, which no SQL
+    engine replays); recall floor pinned in tests
     (ann_recall_report row ``pca_ivf``)."""
     e = load_table(spark, sf_dir, "embeddings")
     return pca.pca_ivf_topk(e, _QUERY_IDS, k=_TOPK)
@@ -385,8 +386,8 @@ def pca_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ivf_topk_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with k-means-trained centroids (3 Lloyd iterations) instead
-    of the hash sample — the production IVF shape. Fully DuckDB-oracled
-    since r7c: the FIXED-ITERATION training loop unrolls as chained
+    of the hash sample — the production IVF shape. Fully DuckDB-oracled:
+    the FIXED-ITERATION training loop unrolls as chained
     CTEs (the supplier_purchase_pagerank recipe), because every step
     is engine-portable — md5-prefix init ordering (portable mode),
     tie-broken assignment ranks on sequential-fold cosines, and
@@ -423,9 +424,9 @@ def _kmeans_cte_chain(n_centroids: int, n_iter: int,
     kmeans_centroids (md5-prefix TakeOrdered init with ``salt``
     appended exactly like sampling.hash_key; each Lloyd round = rank-1
     cosine assignment -> DECIMAL-exact elementwise means ->
-    keep-previous for empty clusters). Factored r8 so the trained-IVF
-    oracle and the portable IVF-PQ oracle share one copy (the r7c
-    probe-rule rationale); ``prefix`` (r9) lets several independently
+    keep-previous for empty clusters). One copy serves the trained-IVF
+    oracle and the portable IVF-PQ oracle, so both replay the same
+    fit; ``prefix`` lets several independently
     salted chains coexist for the restart-selection oracle. Emits a
     leading comma; callers prepend the ev CTE."""
     l2 = ("sqrt(list_reduce(list_transform({v}, x -> x * x), "
@@ -515,24 +516,23 @@ def _kmeans_best_of_ctes(n_centroids: int, n_iter: int,
 
 
 def ivf_topk_pq_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FULL IVFADC compression stack, fully DuckDB-oracled (r8):
+    """The FULL IVFADC compression stack, fully DuckDB-oracled:
     trained coarse quantizer (3 portable Lloyd rounds) -> per-list
     RESIDUALS -> product-quantization codebooks (3 more portable Lloyd
     rounds, jointly over the m subspaces) -> codes -> ADC scoring from
     the per-query LUT + the exact per-(query, probed-list) coarse dot
     -> stored-norm denominator -> shortlist -> exact rerank. Possible
-    because the r8 residual/stored-norm formulation removed every libm
+    because the residual/stored-norm formulation leaves no libm
     step from ADC: subtraction, squares, sequential-fold dots, DECIMAL
     partial sums and IEEE division only — so the oracle replays BOTH
     training loops and the whole serving path and the driver hash
     certifies the compressed index end to end. This portable tier runs
     UNROTATED (identity basis — the OPQ rotation is a driver-side
     eigh, the one engine-bound step of the default tier) with
-    md5-prefix init draws and, since r9 (VERDICT r8 #2), BEST-OF-3
-    restart selection on the coarse quantizer
-    (kmeans_centroids_best_of — the DECIMAL-exact inertia argmax, so
-    the pick itself oracles): the r8 single-draw recall dip at the
-    200-vector fixture (0.76, draw luck) is gone — measured
+    md5-prefix init draws and BEST-OF-3 restart selection on the
+    coarse quantizer (kmeans_centroids_best_of — the DECIMAL-exact
+    inertia argmax, so the pick itself oracles): a single md5 draw
+    reaches only 0.76 at the 200-vector fixture (draw luck) — measured
     recall-at-10 0.82/0.84 at sf0.001/sf0.01 vs the rotated default's
     0.84/0.86; floor raised to 0.80 in tests. Library default stays
     rotated + xxhash64 + single draw (``ivf_topk_pq``)."""
@@ -1503,7 +1503,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def retrieval_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-query HIT COUNTS of the portable IVFADC tier against the
-    exact brute-force top-k (VERDICT r9 #7): the recall numerator of
+    exact brute-force top-k: the recall numerator of
     ann_recall_report's ``ivf_pq_portable`` row, promoted to a fully
     hash-oracled entry. Both top-k sets are individually oracled
     (``ivf_topk_pq_portable``, ``cosine_topk_bruteforce``); this
