@@ -80,6 +80,10 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_session(f"cli:{args.query}")
     if args.sql is not None:
         from .sources.tables import register_views
+        # The table names are the SQL's contract; the views live in a
+        # session of the CLI's own (same SparkContext and cache), so
+        # none of them reaches the shared session.
+        spark = spark.newSession()
         register_views(spark, args.sf_dir)
         df = spark.sql(args.sql)
     else:

@@ -29,10 +29,13 @@ Invariants:
   (``similarity.vectors``) next to the lists ``similarity.build``
   assigns. A fitted centroid frame is driver rows that any number of
   probes share (``ann_recall_report`` fits each coarse quantizer
-  once). The
-  projection goes with the next release; a library caller that fits
-  many models outside the harness wraps each fit in
-  ``tracked_scope()`` or leaves it to LRU eviction.
+  once). The projection goes with the next release; a library caller
+  that fits many models outside the harness wraps each fit in
+  ``tracked_scope()`` or leaves it to LRU eviction. The at-rest IVF
+  writers do the former: ``similarity.save_ivf_index`` and
+  ``append_to_ivf_index`` each run in their own ``tracked_scope()``,
+  so the projection and the assigned lists are released once the
+  index write lands.
 - ``localCheckpoint`` frames (graph.py's iterative loops, the PQ
   codebooks) are not tracked: they HOLD the result data, so their
   blocks live as long as the result DataFrame and ContextCleaner frees

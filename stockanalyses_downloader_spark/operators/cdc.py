@@ -30,7 +30,7 @@ wire, and applying a day's changelog never rescans history.
 
 Applying the same changelog twice is idempotent (latest-change
 reduction is deterministic), which is what makes the daily job safely
-re-runnable — pinned in tests/test_cdc.py.
+re-runnable — pinned in tests/test_cdc_indicators.py.
 """
 
 from __future__ import annotations
@@ -78,54 +78,3 @@ def apply_changelog(base: DataFrame, changes: DataFrame, key: str,
         key,
         *[F.when(F.col("__chg").isNotNull(), F.col(f"__c_{p}"))
           .otherwise(F.col(p)).alias(p) for p in payload_cols])
-
-
-def apply_changelog_versioned(base: DataFrame, changes: DataFrame,
-                              key: str, seq_cols: Sequence[str],
-                              op_col: str,
-                              payload_cols: Sequence[str]) -> DataFrame:
-    """Cross-batch MERGE with stored versions and delete tombstones —
-    what ``apply_changelog`` (which trusts its changelog to be the
-    complete, final word on every key it mentions) cannot give a
-    STREAM: micro-batches arrive repeatedly (at-least-once replay)
-    and possibly out of order, so the snapshot must remember each
-    key's sequence and refuse regressions.
-
-    Rules:
-      * base carries (key, seq_cols, payload_cols, is_deleted);
-      * a change STRICTLY older than the stored version (tuple
-        comparison over seq_cols) is ignored — a replayed stale
-        batch is a no-op;
-      * a winning delete becomes a TOMBSTONE row (is_deleted=true),
-        not an absence: without it, replaying an old insert after
-        the delete would resurrect the key;
-      * reads go through ``visible()`` (filters tombstones).
-
-    Output: full versioned table (key, seq_cols, payload_cols,
-    is_deleted) — same schema as base, ready to swap in."""
-    latest = latest_changes(changes, key, seq_cols)
-    c = latest.select(
-        key,
-        *[F.col(s).alias(f"__cs_{s}") for s in seq_cols],
-        F.col(op_col).alias("__op"),
-        *[F.col(p).alias(f"__c_{p}") for p in payload_cols])
-    joined = base.join(c, [key], "full_outer")
-    base_seq = F.struct(*[F.col(s) for s in seq_cols])
-    chg_seq = F.struct(*[F.col(f"__cs_{s}") for s in seq_cols])
-    has_base = F.col(seq_cols[0]).isNotNull()
-    has_chg = F.col(f"__cs_{seq_cols[0]}").isNotNull()
-    chg_wins = has_chg & (~has_base | (chg_seq >= base_seq))
-    return joined.select(
-        key,
-        *[F.when(chg_wins, F.col(f"__cs_{s}")).otherwise(F.col(s))
-          .alias(s) for s in seq_cols],
-        *[F.when(chg_wins, F.col(f"__c_{p}")).otherwise(F.col(p))
-          .alias(p) for p in payload_cols],
-        F.when(chg_wins, F.col("__op").eqNullSafe(F.lit("D")))
-         .otherwise(F.coalesce(F.col("is_deleted"), F.lit(False)))
-         .alias("is_deleted"))
-
-
-def visible(versioned: DataFrame) -> DataFrame:
-    """The readable view of a versioned table: tombstones filtered."""
-    return versioned.filter(~F.col("is_deleted"))

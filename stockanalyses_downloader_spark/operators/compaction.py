@@ -2,8 +2,7 @@
 
 At 100 TB the dominant table-health problem isn't query shape, it's
 LAYOUT: streaming sinks (streaming/sinks.py), incremental appends
-(similarity.append_to_ivf_index, ivm refreshes), and per-micro-batch
-writes leave thousands of KB-sized files per table, and scan cost
+(similarity.append_to_ivf_index), and per-micro-batch writes leave thousands of KB-sized files per table, and scan cost
 becomes file-open-bound (a footer read + seek per file, a task per
 file) instead of byte-bound. The fix every lakehouse runs (Delta
 OPTIMIZE, Iceberg rewrite_data_files) is bin-packing compaction:
@@ -263,10 +262,10 @@ def compact_parquet(spark: SparkSession, path: str,
       commit that races the swap itself (the committer's rename
       targets a path whose parent was just displaced) fails with
       ENOENT and must retry — the standard at-least-once sink
-      contract; streaming/sinks.py's maintenance_foreach_batch
-      additionally SERIALIZES maintenance with its own query's
-      appends so the single-query case never even hits the retry
-      path. Files still being STAGED (hidden ``_temporary``/
+      contract; a caller that compacts from inside its own
+      foreachBatch SERIALIZES maintenance with its query's appends,
+      so the single-query case never even hits the retry path. Files
+      still being STAGED (hidden ``_temporary``/
       dot-files) are invisible to the listing and to the carry diff
       by the same rule parquet scans use. A CRASH between the swap
       and the carry diff is covered too (ADVICE r8): the planned-
@@ -280,8 +279,7 @@ def compact_parquet(spark: SparkSession, path: str,
     idempotent: if no bin holds more than one file there is nothing to
     do and the function returns without writing a byte — so periodic
     maintenance on an already-compacted table costs one metadata
-    listing, keeping the maintenance_foreach_batch contract (cost
-    proportional to churn). Single-file bins that ride along a real
+    listing (maintenance cost stays proportional to churn). Single-file bins that ride along a real
     rewrite are carried by hardlink when the filesystem allows it (the
     local analogue of a metadata-only move; falls back to copy)."""
     sweep_crash_artifacts(path)

@@ -35,8 +35,7 @@ from ..caching import tracked_persist
 # stable across runs — the test contract needs reproducibility.
 _MH_PRIME = (1 << 31) - 1
 _MH_SEED = 1234567
-# LSH geometry of minhash_lsh_pairs and the at-rest index: 64 hashes
-# in 16 bands of 4 rows.
+# LSH geometry of minhash_lsh_pairs: 64 hashes in 16 bands of 4 rows.
 MH_HASHES = 64
 MH_BANDS = 16
 
@@ -75,7 +74,7 @@ def _is_broadcast_hint(node) -> bool:
 # type cannot broadcast — e.g. the preserved (left) side of a LEFT
 # OUTER join, or either side of a FULL OUTER — is silently ignored by
 # the planner, which falls back to a shuffle join: that frame is
-# really shuffle-width (ADVICE r10 low #2).
+# really shuffle-width.
 _BUILD_RIGHT_TYPES = frozenset(
     {"Inner", "Cross", "LeftOuter", "LeftSemi", "LeftAnti"})
 _BUILD_LEFT_TYPES = frozenset({"Inner", "Cross", "RightOuter"})
@@ -96,12 +95,11 @@ def _join_probe_children(node, kids):
     the walk continues into the unambiguous probe child — otherwise
     (inner/cross, where Spark picks the build side by size estimate)
     BOTH children are returned and the caller takes the MIN of the
-    two subtree widths (ADVICE r11 low: summing let a many-file
-    broadcast dim mask a 1-file probe scan in exactly the shape the
-    r11 probe-subtree fix addressed; min keeps the narrow side
-    visible whichever child the planner ends up probing — erring
-    toward the repartition, the safe direction for the CPU-heavy
-    consumers spread() wraps)."""
+    two subtree widths (a sum would let a many-file broadcast dim
+    mask a 1-file probe scan; the min keeps the narrow side visible
+    whichever child the planner ends up probing — erring toward the
+    repartition, the safe direction for the CPU-heavy consumers
+    spread() wraps)."""
     if len(kids) != 2:
         return None
     jt = node.joinType().toString()
@@ -124,10 +122,9 @@ def _join_probe_children(node, kids):
 
 def _leaf_input_files(node) -> int:
     """File count behind one analyzed-plan leaf, mirroring the three
-    file-backed cases of ``Dataset.inputFiles`` (ADVICE r11 low: the
-    r11 walk only recognized V1 LogicalRelation leaves, so a DSv2 or
-    Hive scan silently stopped being widened — a behavior regression
-    vs the pre-r11 ``df.inputFiles()`` probe, which counted them):
+    file-backed cases of ``Dataset.inputFiles`` (a walk that knew only
+    V1 LogicalRelation leaves would silently stop widening DSv2 and
+    Hive scans, which ``df.inputFiles()`` counts):
 
       LogicalRelation        relation().inputFiles() (FileRelation)
       DataSourceV2Relation   table().fileIndex().inputFiles() — only
@@ -160,11 +157,11 @@ def _probe_width(jplan) -> int | None:
     expression-embedded subqueries). Returns ``None`` when the frame
     is already wide (an exchange-producing node on the probe path),
     else the input-file count of the PROBE subtree's file-backed
-    leaves. ADVICE r4: a node walk (vs the old toString() regex)
+    leaves. A node walk (unlike a regex over the plan string)
     naturally excludes scalar subqueries, which live in expressions,
     not children.
 
-    r10: a Join with an explicitly broadcast-hinted build side is NOT
+    A Join with an explicitly broadcast-hinted build side is NOT
     wide — no exchange; the output inherits the probe side's
     partitioning, so the walk continues into the probe children only
     (wide nodes INSIDE the broadcast subtree, e.g. the Aggregate
@@ -174,15 +171,15 @@ def _probe_width(jplan) -> int | None:
     yet, and assuming an exchange errs toward NOT adding a redundant
     repartition.
 
-    r11 (ADVICE r10 medium): the file count comes from THIS walk, not
-    ``df.inputFiles()`` — the Dataset-level listing counts leaves of
-    the WHOLE plan including broadcast build sides, so a 1-file probe
-    scan enriched by a parquet dim stored in >= defaultParallelism
-    files looked wide enough and the repartition was suppressed —
-    exactly the probe-stream starvation the r10 change set out to
-    fix. Skipping the hinted subtree keeps the count to the stream
-    the repartition would actually widen. r11 also gates the hint on
-    join type (see ``_join_probe_children``)."""
+    The file count comes from THIS walk, not ``df.inputFiles()``: the
+    Dataset-level listing counts leaves of the WHOLE plan including
+    broadcast build sides, so a 1-file probe scan enriched by a
+    parquet dim stored in >= defaultParallelism files would look wide
+    enough and the repartition would be suppressed, starving the
+    probe stream. Skipping the hinted subtree keeps the count to the
+    stream the repartition would actually widen. The hint only counts
+    where the join type lets Spark honor it (see
+    ``_join_probe_children``)."""
     files = 0
     stack = [jplan]
     while stack:
@@ -196,9 +193,9 @@ def _probe_width(jplan) -> int | None:
             if len(probe) == 2:
                 # both-hinted inner/cross: the planner picks the build
                 # side by size, so either child could be the probe.
-                # Take the MIN of the two subtree widths (ADVICE r11
-                # low: summing let a many-file broadcast dim mask a
-                # 1-file probe) — a wide (None) subtree is excluded
+                # Take the MIN of the two subtree widths (a sum would
+                # let a many-file broadcast dim mask a 1-file probe)
+                # — a wide (None) subtree is excluded
                 # because whichever side it is, it contributes an
                 # exchange only if probed; both wide => the output is
                 # exchange-partitioned either way => whole frame wide.
@@ -228,13 +225,12 @@ def spread(df: DataFrame) -> DataFrame:
     contains an exchange-producing node (join/aggregate/distinct/
     window/sort/repartition), the frame is as wide as the shuffle-
     partition setting and a repartition here would only add a
-    redundant exchange (the r3 shape: minhash's left-semi ``involved``
-    frame passed the inputFiles probe and got re-spread after its
-    semi-join shuffle). Detection and the width probe are one walk of
-    the analyzed plan's node tree (see ``_probe_width``): the file
-    count covers the PROBE subtree only — broadcast build sides are
-    excluded, so a many-file parquet dim can't mask a 1-file probe
-    scan (ADVICE r10).
+    redundant exchange (e.g. minhash's left-semi ``involved`` frame,
+    already shuffled by its semi-join). Detection and the width probe
+    are one walk of the analyzed plan's node tree (see
+    ``_probe_width``): the file count covers the PROBE subtree only —
+    broadcast build sides are excluded, so a many-file parquet dim
+    can't mask a 1-file probe scan.
 
     The file listing is driver-side metadata — no physical planning
     or RDD conversion. One file can still split into many read
@@ -267,8 +263,8 @@ def _shingles_from_toks(toks, n: int):
     a repeated subtree, and runtime subexpression elimination does
     NOT reach inside lambda functions — the slice's split would
     re-evaluate once per shingle POSITION, turning the per-doc cost
-    from O(chars) + W·O(slice) into W·O(chars) (r13, found by the
-    PPJoin re-curve: 3.2x on the corpus shingle pass)."""
+    from O(chars) + W·O(slice) into W·O(chars) (measured 3.2x on the
+    corpus shingle pass of jaccard_pairs_prefix_filter)."""
     grams = F.transform(
         F.sequence(F.lit(1), F.size(toks) - (n - 1)),
         lambda i: F.array_join(F.slice(toks, i, n), " "))
@@ -359,7 +355,7 @@ def ngram_jaccard_pairs(docs: DataFrame, block_cols: list[str],
       Pairs from routed blocks carry LSH's estimate-verified exact
       jaccard (same verify expression, over md5_h31 shingle sets)
       and form WITHIN blocks only (the block key rides in the band
-      bucket — r10), so downstream semantics match the exact path
+      bucket), so downstream semantics match the exact path
       modulo LSH recall and hash collisions. Setting it
       makes construction EAGER by one deliberate metadata-plane job
       (a column-pruned block-count aggregate deciding the routing);
@@ -377,7 +373,7 @@ def ngram_jaccard_pairs(docs: DataFrame, block_cols: list[str],
             docs.groupBy(*block_cols).agg(F.count("*").alias("__bn")))
         hot_keys = (sizes.filter(F.col("__bn") > max_block_size)
                     .select(*block_cols))
-        # metadata-plane decision (r10): |blocks| rows, model-sized
+        # metadata-plane decision: |blocks| rows, model-sized
         # by construction. When NOTHING is hot, the LSH subtree would
         # still schedule its whole empty-stage stack (signatures,
         # banding, distinct, two verify joins — measured ~4 s of
@@ -385,21 +381,21 @@ def ngram_jaccard_pairs(docs: DataFrame, block_cols: list[str],
         if not hot_keys.limit(1).take(1):
             # nothing downstream reuses the counts when no block is
             # hot — drop the cache now rather than letting it occupy
-            # memory until the harness's release sweep (ADVICE r10)
+            # memory until the harness's release sweep
             sizes.unpersist()
             max_block_size = None
     if max_block_size is not None:
-        # hot-block filter BEFORE the shingle projection (r10): the
+        # hot-block filter BEFORE the shingle projection: the
         # exact side never shingles the docs LSH will handle (the
         # filter is on the broadcast-joined count, so putting make()
         # above it would shingle every hot doc and discard the work)
         base = (base.join(F.broadcast(sizes), block_cols)
                 .filter(F.col("__bn") <= max_block_size).drop("__bn"))
         hot_docs = docs.join(F.broadcast(hot_keys), block_cols, "left_semi")
-        # bucket_cols = the blocking key (r10): candidates form only
-        # within a block, matching the exact path's contract — and the
-        # id_a join-back for block labels is now provably consistent
-        # (both ids share the block by construction)
+        # bucket_cols = the blocking key: candidates form only within
+        # a block, matching the exact path's contract — and the id_a
+        # join-back for block labels is provably consistent (both ids
+        # share the block by construction)
         lsh = minhash_lsh_pairs(hot_docs, threshold=threshold, n=n,
                                 bucket_cols=tuple(block_cols))
         lsh = lsh.join(docs.select(F.col("doc_id").alias("id_a"),
@@ -477,7 +473,7 @@ def minhash_lsh_pairs(docs: DataFrame,
     bounded constant per signature row), and the md5-31-bit shingle
     family for the exact verify.
 
-    ``bucket_cols`` (r10): extra doc columns appended to the band
+    ``bucket_cols``: extra doc columns appended to the band
     bucket key, so candidates only form WITHIN equal values — the
     within-block contract when LSH serves as the hot-block fallback
     of a blocked join (ngram_jaccard_pairs' max_block_size routing).
@@ -486,12 +482,10 @@ def minhash_lsh_pairs(docs: DataFrame,
     mislabeled with id_a's block), and bucket thinning (band buckets
     can't melt ACROSS hot blocks that happen to share signatures —
     e.g. templated boilerplate repeated per source)."""
-    # Banding is shared verbatim with the at-rest index
-    # (_banded_signatures) — probe-vs-one-shot parity holds by
-    # construction. The signature build ends in an aggregate, so the
-    # band expressions above it only re-slice the agg output — no
-    # re-evaluation hazard (unlike the old fold-based build, where a
-    # persist barrier was load-bearing against CollapseProject).
+    # The signature build ends in an aggregate, so the band
+    # expressions above it (_banded_signatures) only re-slice the agg
+    # output — no re-evaluation hazard, and no persist barrier is
+    # needed against CollapseProject (a fold-based build needed one).
     #
     # persist: banded feeds both sides of the self-join and cand feeds
     # three consumers — without it the signature build re-runs per
@@ -505,8 +499,8 @@ def minhash_lsh_pairs(docs: DataFrame,
     if bucket_cols:
         banded = banded.join(docs.select("doc_id", *bucket_cols), "doc_id")
     key = ["band_id", "band_hash", *bucket_cols]
-    # r14 (guide §2.4 — two operations keyed the same way share one
-    # exchange): repartition by the bucket key BEFORE the persist, so
+    # Two operations keyed the same way share one exchange:
+    # repartition by the bucket key BEFORE the persist, so
     # the cached frame's partitioning satisfies BOTH sides of the
     # band-bucket self-join — the join below runs exchange-free
     # instead of re-shuffling the banded frame twice (once per side).
@@ -538,24 +532,11 @@ def minhash_lsh_pairs(docs: DataFrame,
                 .filter(F.col("jaccard") >= threshold))
 
 
-# --- MinHash-LSH index at rest: build once, probe every ingest (r6) --------
-#
-# The incremental-dedup dual of save_ivf_index: a 100 TB corpus's
-# near-dup state lives AT REST as (bands, shingle sets, geometry), and
-# each day's ingest probes it — new-vs-corpus and new-vs-new pairs come
-# from joining the delta's bands against the stored band table, never
-# rescanning corpus text. Exactness contract: probing finds EXACTLY the
-# pairs involving a new doc that a one-shot minhash_lsh_pairs over
-# (corpus ∪ delta) would find (same hash family, same banding — pinned
-# in tests). novel_docs_vs_corpus covers the EXACT-dup incremental
-# tier; this is its near-dup sibling.
-
 def _banded_signatures(docs: DataFrame, n_hashes: int, bands: int,
                        id_col: str, n: int) -> DataFrame:
     """(id, band_id, band_hash) — the banding stage of
-    minhash_lsh_pairs, factored so the at-rest index and the one-shot
-    join share it verbatim (the parity pin depends on that). The band
-    key is the raw comma-joined signature slice."""
+    minhash_lsh_pairs. The band key is the raw comma-joined signature
+    slice."""
     r = n_hashes // bands
     sigs = minhash_signatures(docs, n_hashes, id_col, n=n)
 
@@ -572,119 +553,6 @@ def _banded_signatures(docs: DataFrame, n_hashes: int, bands: int,
                 b.alias("band_id"),
                 band_key(b).alias("band_hash")))).alias("band"))
     return banded.select(id_col, "band.band_id", "band.band_hash")
-
-
-_MH_FAMILY = "md5_h31"
-
-
-def _minhash_index_meta(spark, path: str) -> dict:
-    """The stored geometry, refusing an index built on another hash
-    family: its bands and shingle sets could never collide with or
-    verify against this tier's values, so mixing them would silently
-    return no pairs. Indexes written before the family column existed
-    record ``portable`` instead (true = md5_h31, false = xxhash64)."""
-    meta = spark.read.parquet(f"{path}/meta").collect()[0].asDict()
-    family = meta.get("hash_family") or (
-        _MH_FAMILY if meta.get("portable") else "xxhash64")
-    if family != _MH_FAMILY:
-        raise ValueError(
-            f"MinHash index at {path} uses hash family {family!r}; "
-            f"this engine reads only {_MH_FAMILY!r} — rebuild it with "
-            "save_minhash_index")
-    return meta
-
-
-def save_minhash_index(docs: DataFrame, path: str) -> None:
-    """Materialize the near-dup index AT REST: ``{path}/bands``
-    (id, band_id, band_hash), ``{path}/shingles`` (id, md5_h31
-    shingle set — what the exact-Jaccard verify needs, so probe never
-    touches corpus TEXT), and ``{path}/meta`` (geometry and hash
-    family — appends and probes read it, so a caller cannot silently
-    mismatch hash family or banding)."""
-    spark = docs.sparkSession
-    _banded_signatures(docs, MH_HASHES, MH_BANDS, "doc_id", 3) \
-        .write.mode("overwrite").parquet(f"{path}/bands")
-    _md5_shingles(docs, 3) \
-        .select("doc_id", "shingles") \
-        .write.mode("overwrite").parquet(f"{path}/shingles")
-    (spark.createDataFrame(
-        [(MH_HASHES, MH_BANDS, 3, _MH_FAMILY, "doc_id")],
-        "n_hashes int, bands int, n int, hash_family string, "
-        "id_col string")
-     .coalesce(1).write.mode("overwrite").parquet(f"{path}/meta"))
-
-
-def append_to_minhash_index(spark, path: str, new_docs: DataFrame) -> None:
-    """Incremental maintenance: band + shingle the delta under the
-    STORED geometry and append — today's ingest becomes probe-visible
-    without touching the existing index files. Caller owns id
-    uniqueness across appends (same contract as append_to_ivf_index)."""
-    meta = _minhash_index_meta(spark, path)
-    _banded_signatures(new_docs, meta["n_hashes"], meta["bands"],
-                       meta["id_col"], meta["n"]) \
-        .write.mode("append").parquet(f"{path}/bands")
-    _md5_shingles(new_docs, meta["n"]) \
-        .select(meta["id_col"], "shingles") \
-        .write.mode("append").parquet(f"{path}/shingles")
-
-
-def probe_minhash_index(spark, path: str, new_docs: DataFrame,
-                        threshold: float = 0.5) -> DataFrame:
-    """Near-dup pairs INVOLVING the delta — new-vs-corpus (the delta's
-    bands join the stored band table; the only corpus-sized work is
-    that band join plus a shingle semi-join fetch for verified
-    candidates) and new-vs-new (delta self-join). Returns (id_a, id_b,
-    jaccard), id-ordered; exactly the pairs a one-shot
-    minhash_lsh_pairs over (corpus ∪ delta) emits that involve a new
-    doc (parity-pinned).
-
-    Delta ids SHOULD be disjoint from the stored index (the
-    append_to_minhash_index contract). If a delta id does collide
-    with a stored id, the DELTA's shingles win deterministically
-    (the re-ingested text is treated as the current version); the
-    self-pair is excluded as always."""
-    meta = _minhash_index_meta(spark, path)
-    id_col = meta["id_col"]
-    new_banded = tracked_persist(_banded_signatures(
-        new_docs, meta["n_hashes"], meta["bands"], id_col, meta["n"]))
-    stored = spark.read.parquet(f"{path}/bands")
-    nb = new_banded.select(F.col(id_col).alias("new_id"),
-                           "band_id", "band_hash")
-    # new vs corpus: ids may interleave, normalize order after the join
-    vs_old = (nb.join(stored.withColumnRenamed(id_col, "old_id"),
-                      ["band_id", "band_hash"])
-              .filter(F.col("new_id") != F.col("old_id"))
-              .select(F.least("new_id", "old_id").alias("id_a"),
-                      F.greatest("new_id", "old_id").alias("id_b")))
-    nb2 = new_banded.select(F.col(id_col).alias("id_b"),
-                            "band_id", "band_hash")
-    vs_new = (nb.join(nb2, ["band_id", "band_hash"])
-              .filter(F.col("new_id") < F.col("id_b"))
-              .select(F.col("new_id").alias("id_a"), "id_b"))
-    cand = tracked_persist(vs_old.unionByName(vs_new).distinct())
-    cand_ids = (cand.select(F.col("id_a").alias(id_col))
-                .union(cand.select(F.col("id_b").alias(id_col)))
-                .distinct())
-    new_sh = _md5_shingles(new_docs, meta["n"]) \
-        .select(id_col, "shingles")
-    old_sh = spark.read.parquet(f"{path}/shingles")
-    # delta shingles take precedence on id collision (deterministic;
-    # see docstring) — anti-join the stored side instead of relying
-    # on dropDuplicates' arbitrary pick over the union
-    old_only = old_sh.join(new_sh.select(id_col), id_col, "left_anti")
-    sh = (new_sh.unionByName(old_only)
-          .join(cand_ids, id_col, "left_semi")
-          .dropDuplicates([id_col]))
-    pairs = (cand
-             .join(sh.select(F.col(id_col).alias("id_a"),
-                             F.col("shingles").alias("sh_a")), "id_a")
-             .join(sh.select(F.col(id_col).alias("id_b"),
-                             F.col("shingles").alias("sh_b")), "id_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(0.0)
-    return (pairs.select("id_a", "id_b", jac.alias("jaccard"))
-            .filter(F.col("jaccard") >= threshold))
 
 
 def simhash64(docs: DataFrame) -> DataFrame:
@@ -725,8 +593,8 @@ def simhash_near_pairs(docs: DataFrame, max_hamming: int = 8,
     fewer differing bits than chunks, so at least one chunk is
     untouched and the pair lands in a shared bucket — candidate
     recall is 1.0 for the requested radius, for ANY max_hamming up to
-    63. (The round-1 version fixed 4 x 16-bit chunks, which only
-    guarantees hamming <= 3; wider radii silently lost pairs.)
+    63. (Fixed 4 x 16-bit chunks would only guarantee hamming <= 3;
+    wider radii would silently lose pairs.)
 
     Hot-bucket behavior: radius 8 means 9 chunks of ~7 bits — at most
     ~128 distinct values per chunk, so on a low-entropy corpus the
@@ -803,8 +671,8 @@ def simhash_near_pairs(docs: DataFrame, max_hamming: int = 8,
 
 def jaccard_pairs_prefix_filter(docs: DataFrame, n: int = 3,
                                 threshold: float = 0.5) -> DataFrame:
-    """GLOBAL exact Jaccard join via prefix filtering (PPJoin-family,
-    r5b) — the scalable all-corpus similarity join when there is no
+    """GLOBAL exact Jaccard join via prefix filtering (PPJoin-family)
+    — the scalable all-corpus similarity join when there is no
     blocking key to hide behind (ngram_jaccard_pairs needs one; LSH
     trades exactness). Published basis: Chaudhuri et al., "A
     Primitive Operator for Similarity Joins" (ICDE'06) / Xiao et al.,
@@ -839,7 +707,7 @@ def jaccard_pairs_prefix_filter(docs: DataFrame, n: int = 3,
     The epsilon on the ceil keeps float rounding from over-pruning —
     exactness vs brute force stays pinned in tests."""
     # Emptiness pre-filter on the RAW text, not the derived shingles
-    # column (r13, found by the post-audit re-curve): a filter on
+    # column: a filter on
     # `size(shingles) > 0` lets PushDownPredicates substitute the
     # WHOLE shingle expression below spread()'s exchange — the
     # corpus's most expensive per-row stage re-ran on the narrow
@@ -855,7 +723,7 @@ def jaccard_pairs_prefix_filter(docs: DataFrame, n: int = 3,
     s = (with_hashed_shingles(spread(docs).filter(has_grams), n=n)
          .select("doc_id", "shingles"))
     s = tracked_persist(s)
-    # MEASURED NEGATIVE (r14): repartition("tok") to share one
+    # MEASURED NEGATIVE: repartition("tok") to share one
     # exchange between the df-count aggregate and the ordering join
     # (the prefix-stream trick below) REGRESSED the cell 2.03→2.62 s:
     # the aggregate's input only ever crosses the wire as map-side
@@ -874,7 +742,7 @@ def jaccard_pairs_prefix_filter(docs: DataFrame, n: int = 3,
                    lambda x: x["tok"]).alias("toks")))
     plen = (F.size("toks")
             - F.ceil(F.lit(threshold) * F.size("toks")) + 1).cast("int")
-    # r14 (guide §2.4): repartition the prefix stream by its join key
+    # Repartition the prefix stream by its join key
     # so BOTH sides of the token-bucket self-join hang off ONE
     # identical Exchange — ReusedExchange dedups it, the prefix
     # explode and its shuffle run once, and the join itself is

@@ -18,13 +18,10 @@ Design:
     crashed purge leaves the OLD table intact — erasure is
     re-runnable, never half-applied;
   * downstream keyed views are not rewritten but fed DELETE TOMBSTONES
-    (cdc.apply_changelog_versioned 'D' rows), so the CDC tier forgets
-    through its own merge path — and a later replay of old upserts
-    cannot resurrect the subject (the tombstone version test in
-    test_cdc_indicators.py is exactly this guarantee);
-  * derived AGGREGATES refresh via ivm.touched_groups partial
-    recompute — the erased rows' groups recompute, everything else
-    carries.
+    ('D' changelog rows for cdc.apply_changelog), so the CDC tier
+    forgets through its own merge path — and an old upsert replayed
+    in the same changelog cannot resurrect the subject (the
+    tombstone's sequence is the latest).
 
 The count audit (per table: dropped/kept) is DuckDB-oracled at the
 query level (forget_cascade_report) — the erasure math itself is
@@ -150,11 +147,11 @@ def audit(tables: dict[str, DataFrame],
 def tombstones(doomed_pks: DataFrame, key_col: str,
                seq_value, payload_cols: Sequence[str]) -> DataFrame:
     """DELETE changelog rows for the doomed keys, shaped for
-    cdc.apply_changelog_versioned: (key, seq, op='D', NULL payload).
-    Feeding these to the CDC tier makes every downstream keyed view
-    forget through its normal merge path — and the stored tombstone
-    blocks any replayed historical upsert from resurrecting the
-    subject."""
+    cdc.apply_changelog: (key, seq, op='D', NULL payload). Feeding
+    these to the CDC tier makes every downstream keyed view forget
+    through its normal merge path — and with ``seq_value`` above every
+    stored sequence, a replayed historical upsert in the same
+    changelog cannot resurrect the subject."""
     out = (doomed_pks.select(F.col(doomed_pks.columns[0]).alias(key_col))
            .withColumn("seq", F.lit(seq_value).cast("long"))
            .withColumn("op", F.lit("D")))

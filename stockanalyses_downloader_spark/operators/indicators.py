@@ -150,8 +150,7 @@ def ema_by_key(ticks: DataFrame, alpha: float = 0.2) -> DataFrame:
     s_t = alpha*x_t + (1-alpha)*s_{t-1} (s_1 = x_1) is inherently
     SEQUENTIAL per key: no window frame expresses it and the pow()
     closed form changes the float summation order. This is the
-    sanctioned Arrow escape hatch (applyInPandas — same policy tier
-    as the stateful processors): one grouped Arrow batch per key,
+    sanctioned Arrow escape hatch (applyInPandas): one grouped Arrow batch per key,
     a per-key Python fold whose expression order matches the
     DuckDB oracle's recursive fold EXACTLY — so even this
     pandas-backed operator is HASH-verified cross-engine, the

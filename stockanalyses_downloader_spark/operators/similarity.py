@@ -38,7 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from ..caching import tracked_persist
+from ..caching import tracked_persist, tracked_scope
 from ..sources import swap
 
 # IVF probing widens past n_probe until the probed lists hold at least
@@ -972,6 +972,7 @@ def ivf_topk_pq(embeddings: DataFrame, query_ids: list[int], k: int = 10,
 
 # --- IVF index at rest: build once, serve many ------------------------------
 
+@tracked_scope()
 def save_ivf_index(embeddings: DataFrame, path: str,
                    n_centroids: int = 16, kmeans_iters: int = 4) -> None:
     """Materialize a trained IVF index AT REST: Lloyd centroids,
@@ -989,7 +990,11 @@ def save_ivf_index(embeddings: DataFrame, path: str,
     three are written together into a staging dir and swapped in as
     one (``sources.swap``): overwriting them one by one lets a crash
     leave new centroids next to old lists, and probes would then
-    return wrong neighbors without any error."""
+    return wrong neighbors without any error.
+
+    Runs in its own ``tracked_scope()``: what the build persists (the
+    k-means fit's (id, v, norm) projection, the assigned lists) is
+    corpus-sized and has no reader once the index is on disk."""
     cent = kmeans_centroids(embeddings, k=n_centroids, n_iter=kmeans_iters)
     lists, sizes = build(vectors(embeddings), cent)
 
@@ -1002,6 +1007,7 @@ def save_ivf_index(embeddings: DataFrame, path: str,
     swap.replace_dir(path, write)
 
 
+@tracked_scope()
 def append_to_ivf_index(spark, path: str, new_embeddings: DataFrame) -> None:
     """Incremental index maintenance: assign NEW vectors to the
     FROZEN stored centroids and APPEND them to the partitioned lists
@@ -1017,7 +1023,9 @@ def append_to_ivf_index(spark, path: str, new_embeddings: DataFrame) -> None:
     assignment quality degrades as the corpus drifts from the
     training snapshot — rebuild (save_ivf_index) on a cadence chosen
     by drift, append in between. Caller owns id uniqueness across
-    appends (same contract as any upsert-free log)."""
+    appends (same contract as any upsert-free log). Runs in its own
+    ``tracked_scope()``, so the delta's persisted lists are released
+    once the append lands."""
     swap.recover(path)
     cent = spark.read.parquet(f"{path}/centroids")
     _recover_list_sizes(spark, path)

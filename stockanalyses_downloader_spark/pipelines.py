@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from .dims.currency import currency_dim
 from .operators import pipeline, state_machine
-from .sources import swap, ticker
+from .sources import ticker
 from .streaming import sinks
 
 
@@ -52,8 +52,8 @@ def run_rest_batch(spark: SparkSession, jobs: DataFrame,
 
     # persist: snapshots feed four consumers (publish, dead-letter,
     # outcomes, telemetry) — without the barrier each one re-runs the
-    # fetcher, i.e. re-downloads (round-1 defect). The snapshot batch
-    # is one row per in-flight job: always cacheable.
+    # fetcher, i.e. re-downloads every ticker. The snapshot batch is
+    # one row per in-flight job: always cacheable.
     snapshots = fetcher(ticker.build_ticker_urls(resolved)).persist(
         StorageLevel.MEMORY_AND_DISK)  # survive eviction: refetch = re-HTTP
     ok = pipeline.with_mid(pipeline.validate_http(snapshots))
@@ -64,7 +64,7 @@ def run_rest_batch(spark: SparkSession, jobs: DataFrame,
     # publish once, capture per-message success (publish_with_outcomes
     # is lazy; the persist + the telemetry aggregate below make the
     # queue client run exactly once)
-    # MEMORY_AND_DISK (ADVICE r4): the effective-exactly-once publish
+    # MEMORY_AND_DISK: the effective-exactly-once publish
     # guarantee rides on these blocks surviving from the stats action
     # to the writeback action — a memory-only block evicted under
     # pressure would recompute pub and re-fire the queue client,
@@ -211,82 +211,3 @@ def run_corpus_ingest_stream(spark: SparkSession, src_dir: str,
             .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
             .start())
-
-
-def incremental_quality_refresh(spark: SparkSession, corpus: DataFrame,
-                                results_path: str) -> dict[str, int]:
-    """Incremental corpus re-scoring (r5b): maintain an at-rest
-    per-doc quality table that each refresh brings up to date by
-    processing ONLY the delta — new and changed docs are scored,
-    disappeared docs' rows are removed, and unchanged docs (the
-    overwhelming majority of a 100 TB corpus between runs) are never
-    reprocessed OR rescanned past their digest. This is the
-    composition the snapshot-diff query exists for:
-
-        digests(new corpus) ⟗ digests(stored results)
-          -> added/changed  -> quality_model scoring (the expensive
-                               stage runs on the delta only)
-          -> removed        -> dropped
-          -> unchanged      -> carried over untouched
-
-    Crash safety: same swap and recovery (``sources.swap``) as the
-    streaming writeback sinks. Returns telemetry counts (three
-    model-sized aggregate actions — documented driver work, the
-    numbers every incremental job logs).
-
-    The scoring stage is quality_model with the frozen prior
-    ``_QUALITY_W`` from text_queries."""
-    from .operators import quality_model as qm
-    from .queries.text_queries import _QUALITY_W
-
-    new = corpus.select("doc_id", "text",
-                        F.md5("text").alias("digest"))
-
-    def _score(docs_with_digest: DataFrame) -> DataFrame:
-        # surface_features keeps only (doc_id, x); carry the digest
-        # back in by key — it's the diff key of the NEXT refresh
-        s = qm.score_with_weights(
-            qm.surface_features(docs_with_digest), _QUALITY_W)
-        # explicit aliases: s shares lineage with docs_with_digest
-        # (self-join), so unqualified column refs are ambiguous
-        dd = docs_with_digest.select("doc_id", "digest")
-        return (s.alias("s")
-                .join(dd.alias("d"),
-                      F.col("s.doc_id") == F.col("d.doc_id"))
-                .select(F.col("s.doc_id").alias("doc_id"),
-                        F.col("d.digest").alias("digest"),
-                        F.col("s.logit").alias("logit"),
-                        F.col("s.prob").alias("prob")))
-
-    if not swap.recover(results_path):
-        swap.replace_dir(results_path,
-                         _score(new).write.mode("overwrite").parquet)
-        n = spark.read.parquet(results_path).count()
-        return {"n_scored": n, "n_removed": 0, "n_carried": 0}
-
-    stored = spark.read.parquet(results_path)
-    old_digests = stored.select("doc_id",
-                                F.col("digest").alias("old_digest"))
-    joined = new.join(old_digests, "doc_id", "full_outer")
-    to_score = (joined.filter(
-        F.col("digest").isNotNull()
-        & (F.col("old_digest").isNull()
-           | (F.col("digest") != F.col("old_digest"))))
-        .select("doc_id", "text", "digest"))
-    removed_keys = joined.filter(F.col("digest").isNull()) \
-        .select("doc_id")
-    scored = _score(to_score)
-    scored = scored.persist(StorageLevel.MEMORY_AND_DISK)
-    n_scored = scored.count()
-    n_removed = removed_keys.count()
-
-    carried = (stored
-               .join(removed_keys, "doc_id", "left_anti")
-               .join(scored.select("doc_id"), "doc_id", "left_anti"))
-    merged = carried.unionByName(scored)
-
-    swap.replace_dir(results_path, merged.write.mode("overwrite").parquet)
-    scored.unpersist()
-    n_total = spark.read.parquet(results_path).count()
-    return {"n_scored": n_scored, "n_removed": n_removed,
-            "n_carried": n_total - n_scored}

@@ -612,13 +612,12 @@ FROM part GROUP BY p_brand
 
 def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate distinct users per event type on the PORTABLE HLL
-    grid (r8, VERDICT r7 #5): md5-register sketch state + the exact-
-    dyadic estimator, so the whole query is DuckDB-oracled (same
-    soundness argument as lang_distinct_token_estimates: raw path is
-    exact dyadic arithmetic, branch decision bit-identical, the
-    linear-counting ln absorbed by rounding LAST). The engine-native
-    approx_count_distinct variant stays as the pytest-pinned alternate
-    (approx_distinct_users_native)."""
+    grid: md5-register sketch state + the exact-dyadic estimator, so
+    the whole query is DuckDB-oracled (same soundness argument as
+    lang_distinct_token_estimates: raw path is exact dyadic
+    arithmetic, branch decision bit-identical, the linear-counting ln
+    absorbed by rounding LAST). Engine-native approx_count_distinct
+    state is engine-private, so it could not be oracled."""
     from ..operators import sketches
     ev = _t(spark, sf_dir, "events")
     grid = sketches.hll_build_grouped(ev, ["event_type"], "user_id")
@@ -628,17 +627,6 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("event_type",
                     F.round("est_distinct", 6).alias("approx_users"),
                     "n_events"))
-
-
-def approx_distinct_users_native(spark: SparkSession,
-                                 sf_dir: str) -> DataFrame:
-    """Engine-native HLL++ (approx_count_distinct) — kept OUT of the
-    registry (sketch internals are engine-private, the driver could
-    only rows-only it); its error band vs exact is pytest-pinned."""
-    ev = _t(spark, sf_dir, "events")
-    return (ev.groupBy("event_type")
-              .agg(F.approx_count_distinct("user_id").alias("approx_users"),
-                   F.count("*").alias("n_events")))
 
 
 def _approx_users_sql() -> str:
@@ -842,15 +830,14 @@ FROM orders GROUP BY o_orderstatus
 
 def approx_order_value_percentiles(spark: SparkSession,
                                    sf_dir: str) -> DataFrame:
-    """Sketch-based percentiles on the PORTABLE HDR grid (r8, VERDICT
-    r7 #5): per-status histogram grids (bounded mergeable state, one
-    pass, map-side combined, no per-group sort — the only shape that
-    survives a trillion-row group) walked to p50/p90/p99. The grid
-    and cumulative walk are pure integer/dyadic arithmetic, so the
-    whole query is DuckDB-oracled; the relative-error contract
-    (<= 1/16 by bucket construction) is pytest-pinned next to the
-    exact query. The engine-native approx_percentile variant stays as
-    the pytest-pinned alternate (..._native)."""
+    """Sketch-based percentiles on the PORTABLE HDR grid: per-status
+    histogram grids (bounded mergeable state, one pass, map-side
+    combined, no per-group sort — the only shape that survives a
+    trillion-row group) walked to p50/p90/p99. The grid and
+    cumulative walk are pure integer/dyadic arithmetic, so the whole
+    query is DuckDB-oracled (engine-native approx_percentile state is
+    engine-private); the relative-error contract (<= 1/16 by bucket
+    construction) is pytest-pinned next to the exact query."""
     from ..operators import sketches
     o = _t(spark, sf_dir, "orders")
     grid = sketches.hdr_build_grouped(o, ["o_orderstatus"],
@@ -865,22 +852,6 @@ def approx_order_value_percentiles(spark: SparkSession,
                  F.max(F.when(F.col("q") == 0.99, F.col("est")))
                  .alias("p99"),
                  F.max("n_total").cast("long").alias("n_orders")))
-
-
-def approx_order_value_percentiles_native(spark: SparkSession,
-                                          sf_dir: str) -> DataFrame:
-    """Engine-native ``approx_percentile`` (accuracy 10000) — kept OUT
-    of the registry (KLL-sketch internals are engine-private); its
-    rank-error band vs the exact query is pytest-pinned."""
-    o = _t(spark, sf_dir, "orders")
-    return (o.groupBy("o_orderstatus")
-             .agg(F.approx_percentile("o_totalprice", F.lit(0.5),
-                                      F.lit(10000)).alias("p50"),
-                  F.approx_percentile("o_totalprice", F.lit(0.9),
-                                      F.lit(10000)).alias("p90"),
-                  F.approx_percentile("o_totalprice", F.lit(0.99),
-                                      F.lit(10000)).alias("p99"),
-                  F.count("*").alias("n_orders")))
 
 
 _APPROX_PCTL_SQL = """
@@ -980,11 +951,10 @@ FROM events GROUP BY event_type
 """
 
 
-
 def join_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-key skew diagnosis (r5 ops tier — the query an engineer
-    runs BEFORE choosing a salting factor / AQE skew threshold for
-    the orders⋈lineitem join, operators/skew.py's knobs): per-key row
+    """Join-key skew diagnosis (the query an engineer runs BEFORE
+    choosing a salting factor / AQE skew threshold for the
+    orders⋈lineitem join): per-key row
     counts on the probe side reduced to one distribution row —
     distinct keys, max/mean per-key count, p99, and the heaviest
     key's share of all rows. A max≫p99 or top1_share in the percents

@@ -547,17 +547,17 @@ GROUP BY ex.doc_id
 
 def lang_distinct_token_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct-token cardinality per language via the TWO-LEVEL
-    mergeable-sketch path, now on the PORTABLE HLL grid (r8, VERDICT
-    r7 #5): per-(lang, source) register grids first, then re-merged up
-    to lang by register MAX — the 100 TB pattern where sketches are
-    materialized per partition/day and re-aggregated at query time
-    WITHOUT rescanning tokens (exact count_distinct cannot merge:
-    distinct sets don't add). Fully DuckDB-oracled: register MAX is
-    associative, so the two-level merge provably (and now
+    mergeable-sketch path on the PORTABLE HLL grid: per-(lang,
+    source) register grids first, then re-merged up to lang by
+    register MAX — the 100 TB pattern where sketches are materialized
+    per partition/day and re-aggregated at query time WITHOUT
+    rescanning tokens (exact count_distinct cannot merge: distinct
+    sets don't add). Fully DuckDB-oracled: register MAX is
+    associative, so the two-level merge provably (and
     hash-certifiably) equals the single-pass grid — the mergeability
-    contract itself is what the oracle certifies. The Datasketches
-    binary variant (lang_distinct_token_sketch_native) stays as the
-    pytest-pinned engine-native alternate."""
+    contract itself is what the oracle certifies. Binary
+    Datasketches state is engine-private, so it could not be
+    oracled."""
     from ..operators import sketches
     d = _docs_spread(spark, sf_dir)
     ex = d.select("lang", "source",
@@ -574,27 +574,6 @@ def lang_distinct_token_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.round("est_distinct", 6)
                     .alias("approx_distinct_tokens"),
                     "n_tokens"))
-
-
-def lang_distinct_token_sketch_native(spark: SparkSession,
-                                      sf_dir: str) -> DataFrame:
-    """The engine-native variant: Datasketches HLL (Spark 3.5+ hll_*
-    functions), per-(lang, source) sketches unioned up to lang with
-    ``hll_union_agg``. Kept OUT of the registry (binary sketch state
-    is engine-private, so the driver could only rows-only it) as the
-    pytest-pinned alternate — tests pin its fixture-exactness and its
-    error band vs exact at real cardinality."""
-    d = _docs_spread(spark, sf_dir)
-    ex = d.select("lang", "source",
-                  F.explode(F.split(F.lower(F.trim(F.col("text"))),
-                                    r"\s+")).alias("token"))
-    per_source = (ex.groupBy("lang", "source")
-                  .agg(F.hll_sketch_agg("token").alias("sk"),
-                       F.count("*").alias("n_tok")))
-    return (per_source.groupBy("lang")
-            .agg(F.hll_sketch_estimate(F.hll_union_agg("sk"))
-                 .alias("approx_distinct_tokens"),
-                 F.sum("n_tok").alias("n_tokens")))
 
 
 def _sketch_two_level_sql() -> str:

@@ -8,9 +8,9 @@ number of buckets by key and each bucket lands in its own file set;
 any later equi-join or groupBy on the bucket key reads co-located
 buckets and Catalyst drops the Exchange on both sides (pinned in
 tests/test_bucketing.py — the physical plan's SortMergeJoin has no
-shuffle under it). This is the at-rest equivalent of the
-repartition-reuse pattern in operators/skew.py, and the batch
-counterpart of Kafka's keyed partitions.
+shuffle under it). This is the at-rest equivalent of repartitioning
+once and reusing the partitioned frame, and the batch counterpart of
+Kafka's keyed partitions.
 
 Spark specifics encoded here:
 

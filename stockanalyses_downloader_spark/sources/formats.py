@@ -1,12 +1,12 @@
-"""Schema-explicit file-format sources (JSONL / CSV) with dead-letter
-routing for malformed records.
+"""Schema-explicit JSONL source with dead-letter routing for malformed
+records.
 
 The reference ingests JSON over HTTP and trusts it blindly
 (reference bitstamp/client.py:40 feeds ``resp.json()`` straight into
 dict access; a malformed payload kills the worker). The batch analogue
-of that feed is newline-delimited JSON / CSV at rest — the formats
-large corpora actually arrive in before they're columnarized. These
-readers make the trust boundary explicit:
+of that feed is newline-delimited JSON at rest — the format large
+corpora actually arrive in before they're columnarized. The reader
+makes the trust boundary explicit:
 
 - schemas are ALWAYS explicit (never ``inferSchema``: a schema pass
   over 100 TB doubles the read, and inferred types drift run-to-run);
@@ -18,9 +18,9 @@ readers make the trust boundary explicit:
   corpus bugs become model bugs.
 
 Mechanically: the file is read as TEXT and parsed with
-``from_json`` / ``from_csv``, not with the JSON/CSV file sources.
-Two reasons. (1) The file sources forbid plans that reference only
-the internal corrupt-record column (SPARK-21610) — exactly the plan a
+``from_json``, not with the JSON file source. Two reasons. (1) The
+file sources forbid plans that reference only the internal
+corrupt-record column (SPARK-21610) — exactly the plan a
 dead-letter consumer builds (``dead.count()``, write raw lines out),
 and the documented workaround is ``cache()``, which is not a thing
 you do to a 100 TB scan. (2) The text read keeps the offending line
@@ -84,110 +84,8 @@ def read_jsonl(spark: SparkSession, path: str,
     return parse_jsonl_lines(spark.read.text(path), schema)
 
 
-def read_csv(spark: SparkSession, path: str,
-             schema: T.StructType) -> tuple[DataFrame, DataFrame]:
-    """CSV twin of :func:`read_jsonl` — same (good, dead) contract,
-    comma-separated with a header line.
-
-    Header lines are dropped by MATCHING the schema-derived header:
-    the bare form (``",".join(field names)``), the all-quoted form
-    (every name double-quoted — what Spark's own csv writer emits for
-    quoted output), each with an optional trailing ``\\r`` (CRLF files
-    read over a text source keep the carriage return on every line).
-    Per-file positional header skipping isn't expressible over a text
-    read, so matching is by CONTENT — which means a DATA line
-    byte-identical to one of those header forms is also dropped.
-    Loud example: with schema ``(name string, note string)`` a real
-    data row ``name,note`` is indistinguishable from the header and
-    silently lost. If header-like data rows are possible, write the
-    files headerless (or with a typed schema, where the header line
-    fails the cast and routes to ``dead`` anyway — the drop here only
-    protects all-string schemas, the one shape that would otherwise
-    let a header parse as data).
-
-    Quoting is RFC 4180: fields may be double-quoted, a quoted field
-    may contain the separator, and a literal quote is written ``""``
-    (the escape is the quote char — Spark's csv default of
-    backslash-escape silently returns RFC-quoted fields verbatim,
-    quotes and all). Embedded NEWLINES inside quotes are the
-    documented limitation of the text-read path: the line source
-    splits on \\n before the parser sees quotes, so such a record
-    arrives as two fragments (typed schemas route them to ``dead``;
-    use the native multiLine csv source if quoted newlines are
-    expected — and lose the verbatim dead-letter contract).
-
-    CRLF files need no special handling — the text source recognizes
-    \\r\\n as a line terminator and strips it — but lines built from
-    OTHER sources (a Kafka value column) can still carry a trailing
-    \\r, so the parse runs on the \\r-stripped line while dead-letter
-    lines stay verbatim."""
-    full = _with_corrupt_field(schema)
-    lines = spark.read.text(path)
-    stripped = F.regexp_replace(F.col("value"), "\r$", "")
-    names = schema.fieldNames()
-    forms = [",".join(names), ",".join(f'"{n}"' for n in names)]
-    lines = lines.filter(~stripped.isin(*forms))
-    ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                    for f in full.fields)
-    opts = dict(_PARSE_OPTS, sep=",", quote='"', escape='"')
-    return _split_parsed(lines, F.from_csv(stripped, ddl, opts), schema)
-
-
 def write_jsonl(df: DataFrame, path: str) -> None:
     """Line-JSON writer (interchange export; parquet stays the
     analytical format — this is for feeding external line-oriented
     consumers)."""
     df.write.mode("overwrite").json(path)
-
-
-def read_xml(spark: SparkSession, path: str, schema: T.StructType,
-             row_tag: str) -> tuple[DataFrame, DataFrame]:
-    """XML sibling of :func:`read_jsonl` — same ``(good, dead)``
-    contract over Spark 4's NATIVE xml source (rowTag element =
-    record).
-
-    Three documented deltas from the JSONL/CSV text-read path, all
-    forced by the format: (1) XML records span lines, so there is no
-    line-oriented byte-verbatim raw to preserve — dead rows carry the
-    source's corrupt-record column (the offending element as the
-    parser saw it) instead of an untouched input line; (2) the parse
-    runs in the file source itself rather than a ``from_*`` expression
-    (Spark ships no ``from_xml``-over-text equivalent that splits
-    multi-line elements); (3) because of (2), SPARK-21610 DOES apply:
-    ANY plan whose only scan-referenced column is the corrupt one —
-    ``dead.count()``, ``dead.select(CORRUPT_COL)``, even a bare
-    ``good.count()`` (its filter references the corrupt column) — is
-    refused by the source. The two sides sidestep it differently:
-    ``good`` (the full-size side, which must stay LAZY) carries a
-    no-op anchor conjunct in its filter that references a schema
-    column — ``coalesce(length(cast(c as string)), 0) >= 0`` is
-    always true, costs one expression, and is opaque enough that the
-    optimizer cannot prune the column away; ``dead`` (the
-    malformed-fraction side) is returned PERSISTED, so its one
-    materializing scan references every column and later corrupt-only
-    plans read the cache. (A DROPMALFORMED second read is NOT
-    equivalent: the XML source only drops structurally-broken
-    elements under it and keeps type violations as nulled fields —
-    measured, and why the anchor approach is used instead.)
-
-    Schemas stay ALWAYS explicit, same rationale as the module
-    docstring; a record is dead if any field violates the schema's
-    types (PERMISSIVE parse surfaces it through the corrupt field)."""
-    from ..caching import tracked_persist
-
-    names = [f.name for f in schema.fields]
-    full = _with_corrupt_field(schema)
-    df = (spark.read.format("xml")
-          .option("rowTag", row_tag)
-          .option("mode", "PERMISSIVE")
-          .option("columnNameOfCorruptRecord", CORRUPT_COL)
-          .schema(full)
-          .load(path))
-    anchor = F.coalesce(F.length(F.col(names[0]).cast("string")),
-                        F.lit(0)) >= 0
-    good = df.filter(F.col(CORRUPT_COL).isNull() & anchor) \
-             .select(*names)
-    dead = tracked_persist(
-        df.filter(F.col(CORRUPT_COL).isNotNull())
-        .select(*names, F.col(CORRUPT_COL)))
-    return good, dead

@@ -245,3 +245,29 @@ def test_tracked_scope_leaves_other_threads_frames(spark):
     assert all(id(df) in tracked for df in unscoped)
     assert not any(id(df) in tracked for df in scoped)
     caching.release_tracked()
+
+
+def test_ivf_index_writers_release_their_persists(spark, tmp_path):
+    """save_ivf_index and append_to_ivf_index persist corpus-sized
+    frames (the k-means fit's (id, v, norm) projection, the assigned
+    lists) that nothing reads once the index is on disk. After a save
+    followed by an append, the tracked registry is back at its
+    pre-call length and no persisted RDD outlives the calls (compared
+    by RDD id, so blocks the cleaner frees meanwhile don't count)."""
+    from pyspark.sql import functions as F
+
+    from stockanalyses_downloader_spark.operators import similarity
+    from stockanalyses_downloader_spark.sources.tables import load_table
+
+    def persisted_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    e = load_table(spark, SF_SMALL, "embeddings")
+    path = str(tmp_path / "ivf")
+    n_tracked, before = len(caching._TRACKED), persisted_ids()
+    similarity.save_ivf_index(e.filter(F.col("vec_id") < 250), path,
+                              n_centroids=8, kmeans_iters=2)
+    similarity.append_to_ivf_index(spark, path,
+                                   e.filter(F.col("vec_id") >= 250))
+    assert len(caching._TRACKED) == n_tracked
+    assert persisted_ids() - before == set()

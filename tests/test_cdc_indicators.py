@@ -178,61 +178,6 @@ def test_indicators_partition_by_key_no_cross_isin_bleed(spark):
         [True] * 4 + [False] * 2)
 
 
-def _vbase(spark, rows):
-    return spark.createDataFrame(
-        rows, "k long, seq long, state string, is_deleted boolean")
-
-
-def _vchanges(spark, rows):
-    return spark.createDataFrame(
-        rows, "k long, seq long, op string, state string")
-
-
-def _vapply(base, changes):
-    return cdc.apply_changelog_versioned(base, changes, "k", ["seq"],
-                                         "op", ["state"])
-
-
-def test_versioned_cdc_refuses_stale_changes(spark):
-    """A change with a LOWER sequence than the stored version is a
-    no-op (replayed old batch); an equal sequence rewrites the same
-    value (idempotent); a higher sequence wins."""
-    base = _vbase(spark, [(1, 5, "v5", False)])
-    out = {r["k"]: (r["seq"], r["state"], r["is_deleted"]) for r in
-           _vapply(base, _vchanges(spark, [(1, 3, "U", "old")]))
-           .collect()}
-    assert out[1] == (5, "v5", False)          # stale refused
-
-    out = {r["k"]: (r["seq"], r["state"]) for r in
-           _vapply(base, _vchanges(spark, [(1, 5, "U", "v5")]))
-           .collect()}
-    assert out[1] == (5, "v5")                 # equal-seq idempotent
-
-    out = {r["k"]: (r["seq"], r["state"]) for r in
-           _vapply(base, _vchanges(spark, [(1, 9, "U", "v9")]))
-           .collect()}
-    assert out[1] == (9, "v9")                 # newer wins
-
-
-def test_versioned_cdc_tombstone_blocks_resurrection(spark):
-    """A delete leaves a TOMBSTONE row; a replayed older insert
-    cannot resurrect the key; a genuinely NEWER insert can."""
-    base = _vbase(spark, [(1, 2, "alive", False)])
-    tomb = _vapply(base, _vchanges(spark, [(1, 4, "D", None)]))
-    t = tomb.collect()[0]
-    assert t["is_deleted"] and t["seq"] == 4
-    assert cdc.visible(tomb).count() == 0
-
-    # replayed old insert (seq 1 < 4): stays deleted
-    still = _vapply(tomb, _vchanges(spark, [(1, 1, "I", "zombie")]))
-    assert cdc.visible(still).count() == 0
-
-    # newer insert (seq 6 > 4): key comes back
-    back = _vapply(tomb, _vchanges(spark, [(1, 6, "I", "reborn")]))
-    got = cdc.visible(back).collect()
-    assert len(got) == 1 and got[0]["state"] == "reborn"
-
-
 def test_resample_ffill_grid_and_tolerance(spark):
     """resample_ffill: grid spans floor(min)..floor(max) per key,
     each instant carries the last tick at or before it, instants

@@ -63,11 +63,20 @@ def test_heartbeat_listener_collects(spark, tmp_path):
     assert "instance_id" in mf.columns
 
 
-def test_cli_sql_mode(capsys):
+def test_cli_sql_mode(spark, capsys):
+    """--sql runs over the table names, and the temp views it
+    registers stay in the CLI's own session: the shared session's
+    catalog holds no new temp view after main() returns."""
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables()
+                if t.isTemporary}
+
+    before = temp_views()
     rc = main(["--sql", "SELECT count(*) AS n FROM region",
                "--sf-dir", "/root/testdata/sf0.001"])
     assert rc == 0
     assert "5" in capsys.readouterr().out
+    assert temp_views() == before
 
 
 def test_metrics_parquet_listener_durable(spark, tmp_path):

@@ -1,9 +1,8 @@
 """Right-to-be-forgotten cascade (operators/forget): zero-trace purge
-across the FK graph, atomic rewrite, idempotent re-run, tombstones
-that block resurrection in the CDC tier, and IVM partial refresh of a
-derived aggregate. The cascade COUNT math is DuckDB-oracled at the
-query level (forget_cascade_report); these tests own the side
-effects."""
+across the FK graph, atomic rewrite, idempotent re-run, and tombstones
+that block resurrection in the CDC merge. The cascade COUNT math is
+DuckDB-oracled at the query level (forget_cascade_report); these tests
+own the side effects."""
 
 from __future__ import annotations
 
@@ -11,7 +10,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from stockanalyses_downloader_spark.operators import cdc, forget, ivm
+from stockanalyses_downloader_spark.operators import cdc, forget
 from stockanalyses_downloader_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -145,72 +144,26 @@ def test_execute_forget_depth2_cascade_purges_grandchildren(spark,
 
 
 def test_forget_tombstones_block_resurrection_in_cdc_view(spark):
-    """The CDC-tier leg: erasure emits 'D' tombstones; the versioned
-    merge removes the subject from the visible view AND a replay of
-    an OLD upsert for that key cannot bring it back."""
+    """The CDC-tier leg: erasure emits 'D' tombstones; the changelog
+    merge removes the subject, and a replayed OLD upsert for that key
+    in the same changelog cannot bring it back (the tombstone's higher
+    sequence wins the latest-change reduction)."""
     base = spark.createDataFrame(
-        [(1, 10, "a", False), (2, 10, "b", False), (3, 10, "c", False)],
-        "user_id long, seq long, profile string, is_deleted boolean")
+        [(1, "a"), (2, "b"), (3, "c")], "user_id long, profile string")
     doomed = spark.createDataFrame([(2,)], "user_id long")
     tomb = forget.tombstones(doomed, "user_id", seq_value=99,
                              payload_cols=["profile"])
-    v1 = cdc.apply_changelog_versioned(
-        base, tomb, "user_id", ["seq"], "op", ["profile"])
-    assert {r["user_id"] for r in cdc.visible(v1).collect()} == {1, 3}
-    # stored tombstone row remembers seq 99
-    t = [r for r in v1.collect() if r["user_id"] == 2][0]
-    assert t["is_deleted"] and t["seq"] == 99
+    v1 = cdc.apply_changelog(base, tomb, "user_id", ["seq"], "op",
+                             ["profile"])
+    assert {r["user_id"] for r in v1.collect()} == {1, 3}
 
     # a replayed historical upsert (seq 10 < 99) is refused
     replay = spark.createDataFrame(
         [(2, 10, "U", "b")], "user_id long, seq long, op string, "
                              "profile string")
-    v2 = cdc.apply_changelog_versioned(
-        v1, replay, "user_id", ["seq"], "op", ["profile"])
-    assert {r["user_id"] for r in cdc.visible(v2).collect()} == {1, 3}
-
-
-def test_forget_refreshes_derived_aggregate_partially(spark, tmp_path):
-    """The IVM leg: a stored per-mktsegment aggregate refreshes via
-    touched_groups after erasure — only the subjects' groups
-    recompute (pinned by handing refresh_groups a source PRUNED to
-    those groups), and the refreshed state equals a full recompute
-    over the purged table."""
-    customers = _tables(spark)["customer"]
-    specs = [("total_bal", "sum", "c_acctbal"), ("n", "count", None)]
-    table = str(tmp_path / "seg_agg.parquet")
-    ivm.agg_state(customers, ["c_mktsegment"], specs) \
-        .write.parquet(table)
-
-    subjects = spark.createDataFrame([(0,), (13,)], "c_custkey long")
-    doomed = forget.doomed_keys({"customer": customers}, "customer",
-                                "c_custkey", subjects, [])
-    purged = forget.purge({"customer": customers}, doomed,
-                          {"customer": "c_custkey"})["customer"]
-
-    # erasure-as-changelog: before-image groups of the erased keys
-    changes = customers.join(
-        F.broadcast(subjects), "c_custkey", "semi").select("c_mktsegment")
-    touched = ivm.touched_groups(customers,
-                                 customers.join(F.broadcast(subjects),
-                                                "c_custkey", "semi")
-                                 .select("c_custkey", "c_mktsegment"),
-                                 "c_custkey", ["c_mktsegment"])
-    n_touched = touched.count()
-    assert 0 < n_touched < customers.select("c_mktsegment").distinct().count() \
-        or n_touched <= 5  # tiny fixture may touch all 5 segments
-    pruned_source = purged.join(F.broadcast(touched), ["c_mktsegment"],
-                                "semi")
-    ivm.refresh_groups(spark, table, pruned_source, touched,
-                       ["c_mktsegment"], specs)
-
-    got = {r["c_mktsegment"]: (str(r["total_bal"]), r["n"])
-           for r in spark.read.parquet(table).collect()}
-    want = {r["c_mktsegment"]: (str(r["total_bal"]), r["n"])
-            for r in ivm.agg_state(purged, ["c_mktsegment"],
-                                   specs).collect()}
-    assert got == want
-    assert changes.count() > 0
+    v2 = cdc.apply_changelog(base, replay.unionByName(tomb), "user_id",
+                             ["seq"], "op", ["profile"])
+    assert {r["user_id"] for r in v2.collect()} == {1, 3}
 
 
 def test_execute_forget_recovers_old_backup_after_crash(spark,

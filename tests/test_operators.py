@@ -127,54 +127,6 @@ def test_minhash_portable_mode_planted_dups_and_pair_parity(spark):
     assert all(math.isclose(lsh[p], exact[p], abs_tol=1e-9) for p in lsh)
 
 
-def test_minhash_index_probe_matches_one_shot(spark, tmp_path):
-    """At-rest near-dup index (r6): build on the corpus, probe a delta
-    containing near-dup copies of corpus docs AND of each other. Pins:
-    (1) probe output == the pairs involving a delta doc that a
-    ONE-SHOT minhash_lsh_pairs over (corpus ∪ delta) emits — same
-    hash family, same banding, same verify, bit-equal jaccards;
-    (2) every planted cross-batch dup is found; (3) appending the
-    delta then probing a second delta sees the first one's docs."""
-    corpus = load_table(spark, SF, "documents").limit(40)
-    delta = (load_table(spark, SF, "documents").limit(20)
-             .select((F.col("doc_id") + 1_000_000).alias("doc_id"),
-                     F.concat("text", F.lit(" zz")).alias("text"),
-                     "lang", "source", "n_chars"))
-    path = str(tmp_path / "mh_idx")
-    dedup.save_minhash_index(corpus, path)
-
-    probed = dedup.probe_minhash_index(spark, path, delta, threshold=0.5)
-    got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in probed.collect()}
-
-    union = corpus.unionByName(delta)
-    one_shot = dedup.minhash_lsh_pairs(union, threshold=0.5)
-    new_ids = {r["doc_id"] for r in delta.select("doc_id").collect()}
-    want = {(r["id_a"], r["id_b"]): r["jaccard"]
-            for r in one_shot.collect()
-            if r["id_a"] in new_ids or r["id_b"] in new_ids}
-    assert got == want
-
-    planted = {(r["doc_id"], r["doc_id"] + 1_000_000)
-               for r in corpus.limit(20).collect()}
-    assert planted - set(got) == set(), "cross-batch planted dups missed"
-
-    # append delta, probe a twin of delta doc 1_000_000 — must match
-    # the APPENDED doc too, proving the index grew
-    dedup.append_to_minhash_index(spark, path, delta)
-    probe2 = (delta.limit(1)
-              .select((F.col("doc_id") + 2_000_000).alias("doc_id"),
-                      "text", "lang", "source", "n_chars"))
-    got2 = {(r["id_a"], r["id_b"]) for r in
-            dedup.probe_minhash_index(spark, path, probe2,
-                                      threshold=0.5).collect()}
-    first_delta_id = min(new_ids)
-    # twin id = first_delta_id + 2_000_000; it must match BOTH the
-    # original corpus doc and the appended delta doc
-    assert (first_delta_id, first_delta_id + 2_000_000) in got2
-    assert (first_delta_id - 1_000_000,
-            first_delta_id + 2_000_000) in got2
-
-
 def test_simhash_planted_near_dups(spark):
     """The md5 hi/lo fingerprint family (the oracled simhash_near_pairs
     path) finds the planted near-dups."""
@@ -2404,91 +2356,6 @@ def test_container_geometry_parsers_units_and_fuzz():
         assert _png_geometry(png[:cut]) is None
     for cut in (0, 1, 2, 3, 5, 10):
         assert _jpeg_geometry(jpg[:cut]) is None
-
-
-def test_minhash_probe_id_collision_prefers_delta(spark, tmp_path):
-    """ADVICE r6: a delta doc_id colliding with a stored id must use
-    the DELTA's shingles deterministically (re-ingested text is the
-    current version) — not an arbitrary dropDuplicates pick. Setup:
-    store doc 1 with text A; probe a delta that re-ingests doc 1 with
-    completely different text B alongside doc 900001 = near-dup of B.
-    The (1, 900001) pair must verify with B-vs-B' jaccard (high);
-    under the old arbitrary pick it could compute A-vs-B' (near 0)
-    depending on partitioning. Run the probe twice: identical
-    output."""
-    corpus = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta",
-          "en", "s1", 40),
-         (2, "one two three four five six seven eight nine",
-          "en", "s1", 40)],
-        "doc_id long, text string, lang string, source string, n_chars int")
-    path = str(tmp_path / "mh_collide")
-    dedup.save_minhash_index(corpus, path)
-
-    text_b = "red orange yellow green blue indigo violet ultraviolet"
-    delta = spark.createDataFrame(
-        [(1, text_b, "en", "s1", 40),
-         (900001, text_b + " xx", "en", "s1", 44)],
-        "doc_id long, text string, lang string, source string, n_chars int")
-
-    runs = [
-        {(r["id_a"], r["id_b"]): r["jaccard"]
-         for r in dedup.probe_minhash_index(spark, path, delta,
-                                            threshold=0.5).collect()}
-        for _ in range(2)
-    ]
-    assert runs[0] == runs[1], "probe output is partitioning-dependent"
-    got = runs[0]
-    assert (1, 900001) in got, got
-    # B vs B+' share all but the boundary shingles -> jaccard well
-    # above the threshold; A vs B' would share zero shingles
-    assert got[(1, 900001)] >= 0.5
-
-
-def test_minhash_index_rejects_foreign_hash_family(spark, tmp_path):
-    """The index meta records its hash family, and append/probe refuse
-    an index built on another one — its bands could never collide with
-    md5_h31 bands, so mixing would silently find no pairs. Covers both
-    meta layouts: an explicit ``hash_family`` column and the older
-    ``portable`` flag (false = xxhash64 family: rejected; true = the
-    md5_h31 family: still readable)."""
-    import pytest
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta",
-          "en", "s1", 40)],
-        "doc_id long, text string, lang string, source string, n_chars int")
-    twin = docs.select((F.col("doc_id") + 1).alias("doc_id"),
-                       F.concat("text", F.lit(" zz")).alias("text"),
-                       "lang", "source", "n_chars")
-    path = str(tmp_path / "mh_family")
-    dedup.save_minhash_index(docs, path)
-    assert spark.read.parquet(f"{path}/meta").first()["hash_family"] \
-        == "md5_h31"
-
-    def write_meta(rows, schema):
-        (spark.createDataFrame(rows, schema)
-         .write.mode("overwrite").parquet(f"{path}/meta"))
-
-    for rows, schema in (
-            ([(64, 16, 3, False, "doc_id")],
-             "n_hashes int, bands int, n int, portable boolean, "
-             "id_col string"),
-            ([(64, 16, 3, "xxhash64", "doc_id")],
-             "n_hashes int, bands int, n int, hash_family string, "
-             "id_col string")):
-        write_meta(rows, schema)
-        with pytest.raises(ValueError, match="xxhash64"):
-            dedup.append_to_minhash_index(spark, path, twin)
-        with pytest.raises(ValueError, match="xxhash64"):
-            dedup.probe_minhash_index(spark, path, twin, threshold=0.5)
-
-    write_meta([(64, 16, 3, True, "doc_id")],
-               "n_hashes int, bands int, n int, portable boolean, "
-               "id_col string")
-    got = {(r["id_a"], r["id_b"]) for r in
-           dedup.probe_minhash_index(spark, path, twin,
-                                     threshold=0.5).collect()}
-    assert got == {(1, 2)}
 
 
 def test_hard_negative_contract(spark):

@@ -185,47 +185,3 @@ def test_kafka_shaped_stream_matches_batch(spark, tmp_path):
     want = sorted((r["pair"], round(r["ts"], 6), round(r["mid"], 9))
                   for r in batch.collect())
     assert got == want and len(got) == raw.count()
-
-
-def test_incremental_quality_refresh_processes_delta_only(spark, tmp_path):
-    """The incremental-refresh contract: run 1 scores everything;
-    run 2 on the SAME corpus scores nothing; run 3 on a mutated
-    corpus (drops, edits, additions) scores exactly |added|+|changed|,
-    removes exactly the dropped rows, and the final table equals a
-    from-scratch recompute on the new corpus."""
-    from stockanalyses_downloader_spark import pipelines
-    from stockanalyses_downloader_spark.operators import quality_model as qm
-    from stockanalyses_downloader_spark.queries.text_queries import (
-        _QUALITY_W)
-    from pyspark.sql import functions as F
-
-    docs = [(i, f"clean readable prose number {i} " * (2 + i % 3))
-            for i in range(40)]
-    corpus1 = spark.createDataFrame(docs, "doc_id long, text string")
-    path = str(tmp_path / "scores")
-
-    t1 = pipelines.incremental_quality_refresh(spark, corpus1, path)
-    assert t1 == {"n_scored": 40, "n_removed": 0, "n_carried": 0}
-
-    t2 = pipelines.incremental_quality_refresh(spark, corpus1, path)
-    assert t2 == {"n_scored": 0, "n_removed": 0, "n_carried": 40}
-
-    # mutate: drop ids 0-4 (removed), edit ids 10-14 (changed),
-    # add ids 100-102 (added)
-    docs3 = ([d for d in docs if d[0] >= 5 and not 10 <= d[0] <= 14]
-             + [(i, f"EDITED text for {i} " * 4) for i in range(10, 15)]
-             + [(100 + j, f"brand new doc {j} " * 5) for j in range(3)])
-    corpus3 = spark.createDataFrame(docs3, "doc_id long, text string")
-    t3 = pipelines.incremental_quality_refresh(spark, corpus3, path)
-    assert t3 == {"n_scored": 8, "n_removed": 5, "n_carried": 30}
-
-    got = {(r["doc_id"], r["digest"], r["logit"], r["prob"])
-           for r in spark.read.parquet(path).collect()}
-    scores = {r["doc_id"]: (r["logit"], r["prob"])
-              for r in qm.score_with_weights(
-                  qm.surface_features(corpus3), _QUALITY_W).collect()}
-    digests = {r["doc_id"]: r["d"] for r in
-               corpus3.select("doc_id",
-                              F.md5("text").alias("d")).collect()}
-    expected = {(k, digests[k], *scores[k]) for k in scores}
-    assert got == expected

@@ -155,138 +155,6 @@ def test_serialize_message_roundtrip(spark):
         assert abs(payload["mid"] - row["mid"]) < 1e-12
 
 
-def test_stateful_running_pair_stats(spark, tmp_path):
-    """applyInPandasWithState accumulates across micro-batches: two
-    batches of the same pairs end in combined totals."""
-    from pyspark.sql import functions as F
-    from stockanalyses_downloader_spark.streaming import stateful
-
-    ticks = pipeline.with_mid(pipeline.validate_http(
-        synthetic.ticks(spark, SF)))
-    named = pipeline.resolve_pair(ticks, currency_dim(spark)) \
-        .select("pair", "bid", "ask", "last_price", "volume", "ts")
-    src = str(tmp_path / "state_src")
-    # two files -> maxFilesPerTrigger=1 forces >= 2 micro-batches
-    named.filter(F.col("pair") < "m").coalesce(1).write.parquet(src)
-    named.filter(F.col("pair") >= "m").coalesce(1).write.mode("append").parquet(src)
-
-    stream = sources.file_tick_stream(spark, src, schema=named.schema,
-                                      max_files_per_trigger=1)
-    stats = stateful.running_pair_stats(stream)
-    q = _run_available_now(
-        stats.writeStream.format("memory").queryName("pairstats")
-        .outputMode("update").trigger(availableNow=True))
-    rows = spark.sql("SELECT * FROM pairstats").collect()
-    q.stop()
-
-    # latest state row per pair must equal the batch aggregate
-    latest = {}
-    for r in rows:
-        latest[r["pair"]] = r  # memory sink appends updates in batch order
-    expected = {r["pair"]: r for r in
-                named.groupBy("pair").agg(
-                    F.count("*").alias("n"),
-                    F.min("last_price").alias("mn"),
-                    F.max("last_price").alias("mx")).collect()}
-    assert set(latest) == set(expected)
-    for pair, exp in expected.items():
-        got = latest[pair]
-        assert got["n_ticks"] == exp["n"]
-        assert got["min_price"] == exp["mn"]
-        assert got["max_price"] == exp["mx"]
-
-
-def test_stateful_idle_state_eviction(spark, tmp_path):
-    """ProcessingTimeTimeout evicts idle keys (the unbounded-key-
-    universe guard): pair A's state, idle for > idle_timeout_ms while
-    batch 2 carries only pair B, is REMOVED — when A returns in batch
-    3 its running count restarts from zero instead of resuming. The
-    NoTimeout control run on the same files keeps cumulative state
-    (3 -> 7), pinning that the eviction is the timeout's doing."""
-    import time
-    from datetime import datetime
-    from stockanalyses_downloader_spark.streaming import stateful
-
-    schema = ("pair string, bid double, ask double, last_price double, "
-              "volume double, ts timestamp")
-
-    def mk(pair, n, minute):
-        return spark.createDataFrame(
-            [(pair, 1.0, 2.0, float(i + 1), 1.0,
-              datetime(2024, 1, 1, 0, minute, i)) for i in range(n)],
-            schema)
-
-    src = str(tmp_path / "evict_src")
-    # three files -> maxFilesPerTrigger=1 -> three ordered micro-batches
-    mk("aaa", 3, 0).coalesce(1).write.parquet(src)
-    time.sleep(0.2)  # distinct mtimes pin file-source batch order
-    mk("bbb", 2, 1).coalesce(1).write.mode("append").parquet(src)
-    time.sleep(0.2)
-    mk("aaa", 4, 2).coalesce(1).write.mode("append").parquet(src)
-
-    def run(name, idle_timeout_ms, done=None):
-        stream = sources.file_tick_stream(
-            spark, src,
-            schema=spark.createDataFrame([], schema).schema,
-            max_files_per_trigger=1)
-        stats = stateful.running_pair_stats(
-            stream, idle_timeout_ms=idle_timeout_ms)
-        q = (stats.writeStream.format("memory").queryName(name)
-             .outputMode("update").trigger(availableNow=True)
-             .option("checkpointLocation", str(tmp_path / name))
-             .start())
-        if done is None:
-            q.awaitTermination(120)
-        else:
-            # availableNow + ProcessingTimeTimeout never self-
-            # terminates (after the last data batch Spark keeps
-            # scheduling empty timeout batches, ~0.6 s each, total
-            # state 0 — observed batchId 195 before the old fixed
-            # 120 s awaitTermination gave up; 137 s of suite wall for
-            # a 10 s scenario). Poll the sink for the rows the
-            # assertions need and stop the query then: a WRONG result
-            # (e.g. state survived eviction -> n_ticks 7) never
-            # satisfies the predicate, so failure still surfaces —
-            # after the same 120 s ceiling as before. Once it matches,
-            # let one more micro-batch complete AFTER the batch that
-            # wrote the matching rows, so a late wrong update (e.g.
-            # ('aaa', 7)) lands in the sink before the stop.
-            def last_batch():
-                return (q.lastProgress or {}).get("batchId", -1)
-
-            deadline = time.time() + 120
-            while q.isActive and time.time() < deadline:
-                if done(spark.sql(
-                        f"SELECT pair, n_ticks FROM {name}").collect()):
-                    # the matching rows came from a batch no older
-                    # than last_batch() + 1; wait past it
-                    settled = last_batch() + 2
-                    while (q.isActive and time.time() < deadline
-                           and last_batch() < settled):
-                        time.sleep(0.2)
-                    break
-                time.sleep(0.5)
-        q.stop()
-        return spark.sql(f"SELECT pair, n_ticks FROM {name}").collect()
-
-    # control: NoTimeout -> cumulative across the idle gap
-    control = run("evict_off", None)
-    assert sorted((r.pair, r.n_ticks) for r in control if r.pair == "aaa") \
-        == [("aaa", 3), ("aaa", 7)]
-
-    # eviction: 1 ms idle timeout expires during batch 2 (wall-clock
-    # between micro-batches >> 1 ms) -> batch-3 state starts fresh
-    want = {("aaa", 3), ("aaa", 4), ("bbb", 2)}
-    evicted = run("evict_on", 1,
-                  done=lambda rows: want <= {(r.pair, r.n_ticks)
-                                             for r in rows})
-    a_rows = sorted((r.pair, r.n_ticks) for r in evicted if r.pair == "aaa")
-    assert a_rows == [("aaa", 3), ("aaa", 4)], a_rows
-    # untouched keys stay correct
-    assert [(r.pair, r.n_ticks) for r in evicted if r.pair == "bbb"] \
-        == [("bbb", 2)]
-
-
 def test_streaming_session_windows_match_batch(spark, tmp_path):
     """Native session_window sessionization: the SAME groupBy binds to
     a stream (complete mode, bounded source) and emits sessions
@@ -745,71 +613,6 @@ def test_streaming_scd2_enrichment_matches_batch(spark, tmp_path):
     assert got == batch
 
 
-def test_cdc_materialized_view_stream(spark, tmp_path):
-    """Streaming MERGE materialized view (r5b): change records arrive
-    across micro-batches with OUT-OF-ORDER sequences (a later batch
-    carries an older change) and delete-then-reinsert; the versioned
-    + tombstoned snapshot must equal one apply_changelog over the
-    full log, and a FULL REPLAY of the stream onto the
-    already-materialized table must converge (stale changes refused
-    by stored sequence, deletes held by tombstones) — the
-    at-least-once story plain per-batch MERGE cannot survive."""
-    from stockanalyses_downloader_spark.operators import cdc
-    from stockanalyses_downloader_spark.streaming import sinks
-
-    rows = [
-        # (k, seq, op, state) — 3 files = 3 micro-batches of 4
-        (1, 1, "I", "a1"), (2, 1, "I", "b1"),
-        (3, 1, "I", "c1"), (4, 1, "I", "d1"),
-        (2, 3, "U", "b3"), (3, 2, "D", None),
-        (5, 1, "I", "e1"), (1, 2, "U", "a2"),
-        (2, 2, "U", "b2_late"),   # arrives AFTER seq 3: must lose
-        (4, 2, "D", None), (4, 3, "I", "d3"),  # delete then re-insert
-        (6, 1, "D", None),        # delete of never-seen key: tombstone
-    ]
-    src = str(tmp_path / "changes")
-    for b in range(3):
-        spark.createDataFrame(rows[b * 4:(b + 1) * 4],
-                              "k long, seq long, op string, state string") \
-            .coalesce(1).write.mode("append").parquet(src)
-
-    def run_stream(ck):
-        sink = sinks.cdc_materialized_view(table, "k", ["seq"], "op",
-                                           ["state"])
-        q = (spark.readStream
-             .schema("k long, seq long, op string, state string")
-             .option("maxFilesPerTrigger", "1").parquet(src)
-             .writeStream.foreachBatch(sink)
-             .option("checkpointLocation", str(tmp_path / ck))
-             .trigger(availableNow=True).start())
-        assert q.awaitTermination(120)
-
-    table = str(tmp_path / "mv")
-    run_stream("ck")
-    got = {r["k"]: r["state"] for r in
-           cdc.visible(spark.read.parquet(table)).collect()}
-
-    all_changes = spark.createDataFrame(
-        rows, "k long, seq long, op string, state string")
-    empty = all_changes.select("k", "state").filter(F.lit(False))
-    expected = {r["k"]: r["state"] for r in
-                cdc.apply_changelog(empty, all_changes, "k",
-                                    ["seq", "op"],
-                                    "op", ["state"]).collect()}
-    assert got == expected
-    assert got == {1: "a2", 2: "b3", 4: "d3", 5: "e1"}  # 3,6 deleted
-    # tombstones persist in the versioned table itself
-    stored = {r["k"] for r in spark.read.parquet(table).collect()}
-    assert stored == {1, 2, 3, 4, 5, 6}
-
-    # full replay from a FRESH checkpoint onto the existing table:
-    # stale batches are refused, final state identical
-    run_stream("ck2")
-    again = {r["k"]: r["state"] for r in
-             cdc.visible(spark.read.parquet(table)).collect()}
-    assert again == expected
-
-
 def test_rocksdb_state_store_matches_default(spark, tmp_path):
     """Production state backend: the same watermarked streaming
     dedup runs on the RocksDB state store provider (bounded JVM heap
@@ -852,74 +655,6 @@ def test_rocksdb_state_store_matches_default(spark, tmp_path):
              "RocksDBStateStoreProvider")
     rocks_keys = run(rocks, "dedup_rocks")
     assert rocks_keys == default_keys == set(range(7))
-
-
-def test_transformwithstate_matches_applyinpandaswithstate(spark, tmp_path):
-    """The Spark-4 transformWithStateInPandas processor produces
-    EXACTLY the final per-pair stats of the applyInPandasWithState
-    path on the same two-micro-batch feed — the old and new
-    arbitrary-state APIs pinned equal before any migration.
-    transformWithState requires the RocksDB state store provider
-    (set per query start, restored after).
-
-    ENVIRONMENT GATE: transformWithState's Python driver worker
-    speaks a protobuf protocol to the JVM; this container ships no
-    ``protobuf`` wheel (and installs are off), so the query start
-    crashes with STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE.
-    Skip cleanly when the dependency is absent — the operator code
-    itself is API-complete and the applyInPandasWithState sibling
-    carries the verified per-key-state contract (ST6)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState python worker needs protobuf; "
-               "not shipped in this container")
-    from stockanalyses_downloader_spark.streaming import stateful
-
-    ticks = pipeline.with_mid(pipeline.validate_http(
-        synthetic.ticks(spark, SF)))
-    named = pipeline.resolve_pair(ticks, currency_dim(spark)) \
-        .select("pair", "bid", "ask", "last_price", "volume", "ts")
-    src = str(tmp_path / "tws_src")
-    named.filter(F.col("pair") < "m").coalesce(1).write.parquet(src)
-    named.filter(F.col("pair") >= "m").coalesce(1) \
-        .write.mode("append").parquet(src)
-
-    def final_stats(make_stats, name, provider=None):
-        saved = spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass", None)
-        if provider:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", provider)
-        try:
-            stream = sources.file_tick_stream(
-                spark, src, schema=named.schema, max_files_per_trigger=1)
-            q = _run_available_now(
-                make_stats(stream).writeStream.format("memory")
-                .queryName(name).outputMode("update")
-                .option("checkpointLocation", str(tmp_path / f"ck_{name}"))
-                .trigger(availableNow=True))
-            rows = spark.sql(f"SELECT * FROM {name}").collect()
-            q.stop()
-        finally:
-            if saved is None:
-                spark.conf.unset(
-                    "spark.sql.streaming.stateStore.providerClass")
-            else:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", saved)
-        latest = {}
-        for r in rows:  # memory sink appends updates in batch order
-            latest[r["pair"]] = (r["n_ticks"], r["total_volume"],
-                                 r["last_price"], r["min_price"],
-                                 r["max_price"])
-        return latest
-
-    rocks = ("org.apache.spark.sql.execution.streaming.state."
-             "RocksDBStateStoreProvider")
-    old = final_stats(stateful.running_pair_stats, "st_old")
-    new = final_stats(stateful.running_pair_stats_tws, "st_new",
-                      provider=rocks)
-    assert new == old and len(new) > 0
 
 
 def test_drop_duplicates_within_watermark_bounds_state(spark, tmp_path):
@@ -972,104 +707,6 @@ def test_drop_duplicates_within_watermark_bounds_state(spark, tmp_path):
     assert sum(1 for k, t in out if k == 1 and t == base) == 1
     assert any(k == 1 and t > base for k, t in out)
     assert sum(1 for k, _ in out if k == 2) == 1
-
-
-def test_streaming_anomaly_flags_match_batch(spark, tmp_path):
-    """The stateful streaming anomaly detector equals the batch
-    window operator ACROSS a micro-batch boundary: the rolling
-    per-key price buffer carries over, so a tick early in batch 2
-    scores against ticks from batch 1 — what a per-batch window
-    could never see. zscores agree to 1e-9 (batch path accumulates
-    in decimal, stream path in python floats — same values, last-ulp
-    freedom), flags agree exactly."""
-    from stockanalyses_downloader_spark.operators import indicators
-    from stockanalyses_downloader_spark.streaming import stateful
-
-    ticks = (pipeline.validate_http(synthetic.ticks(spark, SF))
-             .select("isin", "tick_id", "ts", "last_price"))
-    # deterministic 2-batch split along event time: batch files are
-    # written in order and consumed one per availableNow cycle
-    cut = ticks.approxQuantile("tick_id", [0.5], 0.0)[0]
-    src = str(tmp_path / "an_src")
-    sink = str(tmp_path / "an_sink")
-    ck = str(tmp_path / "an_ck")
-    for part in (ticks.filter(F.col("tick_id") <= cut),
-                 ticks.filter(F.col("tick_id") > cut)):
-        part.coalesce(1).write.mode("append").parquet(src)
-        stream = (spark.readStream.schema(ticks.schema).parquet(src))
-        q = (stateful.streaming_anomaly_flags(stream, n=12, z_thresh=2.5)
-             .writeStream.format("parquet")
-             .option("path", sink).option("checkpointLocation", ck)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        q.stop()
-
-    got = {r["tick_id"]: (r["zscore"], r["is_anomaly"])
-           for r in spark.read.parquet(sink).collect()}
-    want = {r["tick_id"]: (r["zscore"], r["is_anomaly"])
-            for r in indicators.with_anomaly_zscores(
-                ticks, n=12, z_thresh=2.5).collect()}
-    assert set(got) == set(want) and len(got) > 900
-    n_flagged = 0
-    for tid, (wz, wf) in want.items():
-        gz, gf = got[tid]
-        if wz is None:
-            assert gz is None and gf is None
-        else:
-            assert gz is not None and abs(gz - wz) < 1e-9
-            assert gf == wf
-            n_flagged += 1 if wf else 0
-    assert n_flagged > 0    # non-vacuous: real anomalies exist
-
-
-def test_parquet_sink_with_maintenance_compacts_inline(spark, tmp_path):
-    """The maintenance sink appends every micro-batch and periodically
-    compacts the table in-line: all rows survive, and the final file
-    count is far below one-file-per-batch because the compactor ran
-    between appends (foreachBatch serialization makes the swap safe)."""
-    from stockanalyses_downloader_spark.operators import compaction
-    from stockanalyses_downloader_spark.streaming import sinks
-
-    src_dir = tmp_path / "src"
-    out = str(tmp_path / "table")
-    ckpt = str(tmp_path / "ckpt")
-    for f in range(9):
-        spark.range(f * 10, f * 10 + 10) \
-            .withColumn("payload", F.md5(F.col("id").cast("string"))) \
-            .coalesce(1).write.mode("append").parquet(str(src_dir))
-
-    stream = (spark.readStream
-              .schema("id long, payload string")
-              .option("maxFilesPerTrigger", "1")
-              .parquet(str(src_dir)))
-    q = sinks.parquet_sink_with_maintenance(
-        stream, out, ckpt,
-        target_bytes=64 * 1024 * 1024,
-        every_n_batches=4, min_files=2).start()
-    assert q.awaitTermination(120)
-
-    got = spark.read.parquet(out)
-    assert sorted(r["id"] for r in got.collect()) == list(range(90))
-    n_files = len(compaction.list_data_files(out))
-    # 9 appended batches; compaction fired at batch 4 and 8, so the
-    # tail holds: (compacted file) + appends since the last compaction
-    assert n_files <= 3, n_files
-
-
-def test_maintenance_foreach_batch_skips_small_tables(spark, tmp_path):
-    """Below min_files the maintenance callback must not rewrite
-    anything — maintenance cost stays proportional to churn."""
-    from stockanalyses_downloader_spark.operators import compaction
-    from stockanalyses_downloader_spark.streaming import sinks
-
-    out = str(tmp_path / "t")
-    hook = sinks.maintenance_foreach_batch(out, every_n_batches=1,
-                                           min_files=50)
-    for b in range(4):
-        hook(spark.range(b * 5, b * 5 + 5).coalesce(1), b)
-    files = compaction.list_data_files(out)
-    assert len(files) == 4            # nothing was compacted
-    assert all("compacted-" not in f for f, _ in files)
 
 
 def test_streaming_dsir_scoring_matches_batch(spark, tmp_path):
@@ -1156,159 +793,3 @@ def test_streaming_moment_grids_merge_to_batch(spark, tmp_path):
                 for r in pca.moment_grid(spark.read.parquet(src),
                                          ["label"]).collect()}
     assert merged == one_shot and len(one_shot) == 3 * 6
-
-
-def test_drift_monitor_flags_planted_shift_in_its_batch(spark, tmp_path):
-    """Streaming drift ALERTING (VERDICT r8 #6,
-    sinks.drift_monitor_foreach_batch): batches drawn from the
-    reference distribution pass silently; the batch carrying a
-    planted +3-sigma mean shift is flagged IN that batch — and the
-    per-batch KL table plus the per-batch grid store both persist.
-    Batch order is pinned by file mtimes (the file source's order)."""
-    import time
-
-    from stockanalyses_downloader_spark.operators import pca
-    from stockanalyses_downloader_spark.streaming import sinks
-
-    d = 8
-
-    def vecs(lo, hi, shift=0.0):
-        # deterministic quasi-uniform draws in [0, 1): sigma ~ 0.29,
-        # so shift=0.87 is a +3-sigma mean shift on every dimension
-        return [(i, [((i * 37 + k * 11) % 97) / 97.0 + shift
-                     for k in range(d)]) for i in range(lo, hi)]
-
-    schema = "vec_id long, embedding array<double>"
-    ref_path = str(tmp_path / "ref_grid")
-    pca.moment_grid(
-        spark.createDataFrame(vecs(0, 300), schema), []) \
-        .write.parquet(ref_path)
-
-    src = str(tmp_path / "src")
-    for j, (lo, hi, shift) in enumerate([(300, 500, 0.0),
-                                         (500, 700, 0.0),
-                                         (700, 900, 0.0),
-                                         (900, 1100, 0.87)]):
-        (spark.createDataFrame(vecs(lo, hi, shift), schema)
-         .coalesce(1).write.mode("append").parquet(src))
-        time.sleep(0.2)   # distinct mtimes pin file-source batch order
-
-    grids, alerts = str(tmp_path / "grids"), str(tmp_path / "alerts")
-    monitor = sinks.drift_monitor_foreach_batch(ref_path, grids, alerts)
-    q = (spark.readStream.schema(schema)
-         .option("maxFilesPerTrigger", 1).parquet(src)
-         .writeStream.foreachBatch(monitor)
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    got = {r["batch_id"]: r for r in spark.read.parquet(alerts).collect()}
-    assert sorted(got) == [0, 1, 2, 3]            # per-batch KL persisted
-    assert all(got[b]["n_vecs"] == 200 for b in got)
-    assert [b for b in sorted(got) if got[b]["flagged"]] == [3]
-    assert got[3]["sym_kl_diag"] > 10 * got[3]["kl_threshold"]
-    for b in (0, 1, 2):                           # no flags before
-        assert got[b]["sym_kl_diag"] < got[b]["kl_threshold"]
-
-    # the grid STORE kept one mergeable grid per batch: merging them
-    # equals the one-shot grid over the whole stream (drift-over-time
-    # without rescans)
-    stored = spark.read.parquet(grids)
-    assert stored.select("batch_id").distinct().count() == 4
-    merged = {r["pos"]: (r["n"], r["sx"], r["sxx"]) for r in
-              pca.merge_moment_grids(stored.drop("batch_id"), [])
-              .collect()}
-    one_shot = {r["pos"]: (r["n"], r["sx"], r["sxx"]) for r in
-                pca.moment_grid(spark.read.parquet(src), []).collect()}
-    assert merged == one_shot
-
-    # replay idempotence: re-running a batch overwrites its own
-    # partition instead of duplicating grid rows or alert rows
-    monitor(spark.createDataFrame(vecs(900, 1100, 0.87), schema), 3)
-    assert spark.read.parquet(alerts).count() == 4
-    assert spark.read.parquet(grids).count() == 4 * d
-
-    # empty micro-batch: a no-op, not an all-NULL alert row (ADVICE r9)
-    monitor(spark.createDataFrame([], schema), 7)
-    assert spark.read.parquet(alerts).count() == 4
-    assert not os.path.exists(os.path.join(grids, "batch_id=7"))
-
-
-def test_drift_monitor_per_label_flags_only_shifted_source(spark,
-                                                           tmp_path):
-    """Per-label drift alerting (VERDICT r9 #6,
-    drift_monitor_foreach_batch(label_col=...)): a +3-sigma shift
-    planted in ONE source flags that source's row only — the corpus
-    average can't hide it and the healthy sources don't false-alarm.
-    A label absent from the reference grid (brand-new source) is
-    flagged with a NULL statistic."""
-    import time
-
-    from stockanalyses_downloader_spark.operators import pca
-    from stockanalyses_downloader_spark.streaming import sinks
-
-    d = 8
-
-    def vecs(lo, hi, label, shift=0.0):
-        return [(i, [((i * 37 + k * 11) % 97) / 97.0 + shift
-                     for k in range(d)], label)
-                for i in range(lo, hi)]
-
-    schema = "vec_id long, embedding array<double>, src string"
-    ref_path = str(tmp_path / "ref_grid")
-    pca.moment_grid(
-        spark.createDataFrame(vecs(0, 300, "web") + vecs(0, 300, "code"),
-                              schema), ["src"]) \
-        .write.parquet(ref_path)
-
-    src = str(tmp_path / "src")
-    # batch 0: both sources healthy; batch 1: "code" drifts +3 sigma
-    # while "web" stays healthy and a never-baselined "pdf" appears
-    (spark.createDataFrame(vecs(300, 500, "web") + vecs(300, 500, "code"),
-                           schema)
-     .coalesce(1).write.mode("append").parquet(src))
-    time.sleep(0.2)
-    (spark.createDataFrame(vecs(500, 700, "web")
-                           + vecs(500, 700, "code", 0.87)
-                           + vecs(500, 560, "pdf"), schema)
-     .coalesce(1).write.mode("append").parquet(src))
-
-    grids, alerts = str(tmp_path / "grids"), str(tmp_path / "alerts")
-    monitor = sinks.drift_monitor_foreach_batch(ref_path, grids, alerts,
-                                                label_col="src")
-    q = (spark.readStream.schema(schema)
-         .option("maxFilesPerTrigger", 1).parquet(src)
-         .writeStream.foreachBatch(monitor)
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    got = {(r["batch_id"], r["src"]): r
-           for r in spark.read.parquet(alerts).collect()}
-    assert sorted(got) == [(0, "code"), (0, "web"),
-                           (1, "code"), (1, "pdf"), (1, "web")]
-    # healthy rows everywhere except the planted (1, code) + new (1, pdf)
-    flagged = {k for k, r in got.items() if r["flagged"]}
-    assert flagged == {(1, "code"), (1, "pdf")}
-    # self-describing reason codes (VERDICT r10 #6): consumers read
-    # `reason`, never NULL-ordering semantics
-    assert {k: r["reason"] for k, r in got.items()} == {
-        (0, "code"): "ok", (0, "web"): "ok",
-        (1, "code"): "drift", (1, "pdf"): "new_label",
-        (1, "web"): "ok"}
-    assert got[(1, "code")]["sym_kl_diag"] > \
-        10 * got[(1, "code")]["kl_threshold"]
-    assert got[(1, "pdf")]["sym_kl_diag"] is None   # no baseline
-    assert got[(1, "web")]["sym_kl_diag"] < \
-        got[(1, "web")]["kl_threshold"]
-    assert got[(1, "web")]["n_vecs"] == 200
-
-    # the label-keyed grid store still merges to the one-shot grid
-    stored = spark.read.parquet(grids)
-    merged = {(r["src"], r["pos"]): (r["n"], r["sx"], r["sxx"]) for r in
-              pca.merge_moment_grids(stored.drop("batch_id"),
-                                     ["src"]).collect()}
-    one_shot = {(r["src"], r["pos"]): (r["n"], r["sx"], r["sxx"]) for r in
-                pca.moment_grid(spark.read.parquet(src),
-                                ["src"]).collect()}
-    assert merged == one_shot

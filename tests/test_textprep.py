@@ -154,40 +154,6 @@ def test_substring_dup_is_shift_resilient(spark, off_a, off_b):
     assert out[2]["n_shared_windows"] == 0
 
 
-def test_hll_sketch_union_tracks_exact(spark):
-    """The two-level sketch path (per-source hll_sketch_agg ->
-    hll_union_agg at lang level) must track exact count_distinct
-    within HLL's error band (default lgConfigK=12 -> ~1.6% relative
-    stderr; assert 5% = ~3 sigma) at a cardinality where HLL actually
-    approximates, and must be EXACT on the tiny fixture vocab."""
-    from stockanalyses_downloader_spark.queries.text_queries import (
-        lang_distinct_token_sketch_native)
-
-    # fixture: tiny vocab -> sketch is exact
-    got = {r["lang"]: r for r in
-           lang_distinct_token_sketch_native(
-               spark, "/root/testdata/sf0.001").collect()}
-    from stockanalyses_downloader_spark.sources.tables import load_table
-    d = load_table(spark, "/root/testdata/sf0.001", "documents")
-    exact = {r["lang"]: r["x"] for r in
-             d.select("lang", F.explode(F.split(F.lower(F.trim(
-                 F.col("text"))), r"\s+")).alias("t"))
-             .groupBy("lang").agg(F.countDistinct("t").alias("x"))
-             .collect()}
-    for lang, x in exact.items():
-        assert got[lang]["approx_distinct_tokens"] == x
-
-    # synthetic 60k-distinct stream split across 8 "sources": the
-    # union must estimate the global cardinality, not sum the parts
-    big = spark.range(60_000).select(
-        (F.col("id") % 8).cast("string").alias("source"),
-        F.concat(F.lit("tok"), F.col("id")).alias("token"))
-    sk = (big.groupBy("source").agg(F.hll_sketch_agg("token").alias("sk")))
-    est = sk.agg(F.hll_sketch_estimate(
-        F.hll_union_agg("sk")).alias("e")).first()["e"]
-    assert abs(est - 60_000) / 60_000 < 0.05, est
-
-
 def test_surprisal_flags_rare_tokens(spark):
     """A doc of hapaxes must score a higher mean inverse frequency
     than a doc of corpus-dominant tokens."""

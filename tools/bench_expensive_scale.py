@@ -180,32 +180,6 @@ def bench_entity_resolution(spark, factor: int) -> dict:
             "wall_s": round(time.perf_counter() - t0, 2)}
 
 
-def bench_index_probe(spark, factor: int) -> dict:
-    """Probe cost vs CORPUS size at a FIXED delta: build the at-rest
-    LSH index on the blown-up corpus (outside the timer — that's the
-    nightly build), then time probing a constant 100-doc delta. A
-    delta-proportional probe shows near-flat wall as the corpus grows;
-    corpus-proportional work would scale with the factor."""
-    import tempfile
-
-    from tools.bench_dedup_scale import blow_up
-    base = load_table(spark, SF_DIR, "documents")
-    corpus = blow_up(base, factor)
-    n = corpus.count()
-    path = tempfile.mkdtemp() + "/mh_idx"
-    dedup.save_minhash_index(corpus, path)
-    delta = (base.limit(100)
-             .select((F.col("doc_id") + 500_000_000).alias("doc_id"),
-                     F.concat("text", F.lit(" zz")).alias("text"),
-                     "lang", "source", "n_chars"))
-    t0 = time.perf_counter()
-    pairs = dedup.probe_minhash_index(spark, path, delta, threshold=0.3)
-    n_out = pairs.count()
-    return {"query": "probe_minhash_index", "factor": factor,
-            "rows_in": n, "rows_out": n_out,
-            "wall_s": round(time.perf_counter() - t0, 2)}
-
-
 def _doc_copies_disjoint_blocks(spark, factor: int):
     """factor-1 copies of documents in DISJOINT (lang, source) blocks
     (source suffixed per copy): per-block density stays constant while
@@ -344,7 +318,6 @@ def bench_trained_ivf(spark, factor: int) -> dict:
     return {"query": "ivf_topk_trained", "factor": factor,
             "rows_in": n, "rows_out": n_out,
             "wall_s": round(time.perf_counter() - t0, 2)}
-
 
 
 def bench_dsir(spark, factor: int) -> dict:
@@ -506,7 +479,6 @@ BENCHES = {
     "lift": bench_lift,
     "countmin": bench_countmin,
     "er": bench_entity_resolution,
-    "probe": bench_index_probe,
     # r7 additions (VERDICT r6 #6): the remaining >2 s bench tier
     "leakage": bench_split_leakage,
     "bloom": bench_bloom_decon,
