@@ -148,3 +148,23 @@ def test_jsonl_writer_round_trips(spark, tmp_path):
     a = {(r["tick_id"], r["isin"], r["last_price"]) for r in good.collect()}
     b = {(r["tick_id"], r["isin"], r["last_price"]) for r in src.collect()}
     assert a == b
+
+
+def test_measure_key_skew_empty_frame(spark, tmp_path):
+    """Empty probe side: the registry's skew measurement returns one
+    row with zero keys and NULL statistics (no division by zero under
+    ANSI, no crash on the NULL max) instead of failing before an
+    engineer can read it."""
+    from stockanalyses_downloader_spark.queries.relational_queries import (
+        join_key_skew_report)
+    from stockanalyses_downloader_spark.schemas import TABLES
+
+    spark.createDataFrame([], TABLES["lineitem"]).write.parquet(
+        str(tmp_path / "lineitem.parquet"))
+    rows = join_key_skew_report(spark, str(tmp_path)).collect()
+    assert len(rows) == 1
+    r = rows[0].asDict()
+    assert r["n_keys"] == 0
+    assert {k: v for k, v in r.items() if k != "n_keys"} == {
+        "n_rows": None, "max_n": None, "mean_n": None, "p99_n": None,
+        "top1_share": None}

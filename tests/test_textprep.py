@@ -154,6 +154,45 @@ def test_substring_dup_is_shift_resilient(spark, off_a, off_b):
     assert out[2]["n_shared_windows"] == 0
 
 
+def test_hll_sketch_union_tracks_exact(spark, sf_dir):
+    """The two-level sketch path (per-source portable HLL grids ->
+    register-MAX merge at lang level) must track exact count_distinct
+    within the grid's error band (m = 256 registers -> ~6.5% relative
+    stderr; 3 sigma is ~20%), and the merge must estimate the UNION of
+    the parts, not their sum."""
+    from stockanalyses_downloader_spark.operators import sketches
+    from stockanalyses_downloader_spark.queries.text_queries import (
+        lang_distinct_token_sketch)
+    from stockanalyses_downloader_spark.sources.tables import load_table
+
+    band = 3 * 1.04 / math.sqrt(sketches.HLL_M)
+    got = {r["lang"]: r["approx_distinct_tokens"] for r in
+           lang_distinct_token_sketch(spark, sf_dir).collect()}
+    d = load_table(spark, sf_dir, "documents")
+    exact = {r["lang"]: r["x"] for r in
+             d.select("lang", F.explode(F.split(F.lower(F.trim(
+                 F.col("text"))), r"\s+")).alias("t"))
+             .groupBy("lang").agg(F.countDistinct("t").alias("x"))
+             .collect()}
+    assert set(got) == set(exact)
+    for lang, x in exact.items():
+        assert abs(got[lang] - x) <= band * x, (lang, got[lang], x)
+
+    # 30k distinct tokens over 7 "sources", each token in two of them:
+    # the parts sum to ~60k, the union is 30k
+    big = spark.range(60_000).select(
+        (F.col("id") % 7).cast("string").alias("source"),
+        F.concat(F.lit("tok"), F.col("id") % 30_000).alias("token"))
+    per_source = sketches.hll_build_grouped(big, ["source"], "token")
+    merged = per_source.groupBy("reg").agg(
+        F.max("max_rho").alias("max_rho"))
+    est = sketches.hll_estimate(merged).first()["est_distinct"]
+    assert abs(est - 30_000) / 30_000 < band, est
+    # register MAX is associative: the merge equals the one-pass grid
+    whole = sketches.hll_build(big, "token")
+    assert sorted(merged.collect()) == sorted(whole.collect())
+
+
 def test_surprisal_flags_rare_tokens(spark):
     """A doc of hapaxes must score a higher mean inverse frequency
     than a doc of corpus-dominant tokens."""
